@@ -610,8 +610,9 @@ object ScalingBench {
          |WHOLE life (the steady-state per-run dedup cost at this
          |history scale is the `dedupeng9` row, not this one).
          |
-         |MICRO-RUN WINDOW BATCHING (VERDICT r04 #1 — `runMain
-         |graft.tools.E2EAB 3 32`, one JVM, rep-wise round-robin so every
+         |MICRO-RUN WINDOW BATCHING (VERDICT r04 #1 — measured with the
+         |since-removed graft.tools.E2EAB A/B tool; `perfbench/` is now the
+         |repo's A/B harness. One JVM, rep-wise round-robin so every
          |config sees the same co-tenant minutes): toy config (16×100,
          |budget 200) medians over 3 reps — 121 urls/s with sequential
          |commit prepares, 146 with AQE per-run, 181 with concurrent

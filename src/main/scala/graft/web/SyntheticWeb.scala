@@ -165,15 +165,18 @@ class SyntheticWeb(val cfg: WebConfig) extends Serializable {
 object SyntheticWeb {
   private val PageRe = "^http://host-([0-9]{3})\\.test/page/([0-9]+)".r
 
-  /** `%0<w>d` for non-negative longs, without java.util.Formatter. */
+  /** `%0<w>d` without java.util.Formatter. As in the Formatter form, the
+    * width counts a minus sign and the zeros go after it (-5 → "-05"). */
   private[web] def pad(v: Long, w: Int): String = {
     val s = java.lang.Long.toString(v)
     if (s.length >= w) s
     else {
+      val sign = if (v < 0) 1 else 0
       val sb = new java.lang.StringBuilder(w)
+      sb.append(s, 0, sign)
       var i = s.length
       while (i < w) { sb.append('0'); i += 1 }
-      sb.append(s).toString
+      sb.append(s, sign, s.length).toString
     }
   }
 

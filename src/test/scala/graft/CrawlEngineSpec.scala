@@ -520,10 +520,81 @@ class CrawlEngineSpec extends AnyFunSuite {
       "no fold compaction commit — bloomCommitEvery cadence broken")
     assert(!e.bloomidx.snapshots.exists(n => e.bloomidx.kindOf(n) == "append"),
       "sliced regime still appends per-run index deltas")
+    // the image-id index runs the same schedule over ~1400 ids against
+    // the same 4 × 64-key floor: growth, no appends. (Its fold never
+    // fires here: each even run either outgrew the geometry or added no
+    // ids — the next test pins the image fold cadence.)
+    val imgGeoms = e.imgidx.snapshots.flatMap(n =>
+      e.imgidx.metricOf(n, "expected_per_bucket").map(_.toLong))
+    assert(imgGeoms.distinct.size >= 2,
+      s"no geometry growth across imgidx commits: $imgGeoms")
+    assert(!e.imgidx.snapshots.exists(n => e.imgidx.kindOf(n) == "append"),
+      "sliced image regime appends per-run index deltas")
     // image payload table exact under the sliced image index too
     val ids = e.imageTable().get.select("image_id").as[String].collect()
     assert(ids.length == ids.distinct.length)
     assert(ids.toSet == o.imagesCaptions.keySet.toSet)
+  }
+
+  test("image-id index in the SLICED regime: delta-fold compaction at bloomCommitEvery, no appends, payloads exact") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // the resize test's web, with a floor (4 × 512 keys) that already
+    // holds its ~1400 ids: no resize pre-empts the fold, so every even
+    // run with new ids since the base's covers marker folds them in
+    val wideCfg = WebConfig(nHosts = 2, pagesPerHost = 700, hotFactor = 1,
+      failPct = 0, imagesPerPage = 1, linksPerPage = 6)
+    val wideWeb = new SyntheticWeb(wideCfg)
+    val wideBudget = 400
+    val o = new OracleCrawler(wideWeb, wideBudget, maxRetries)
+    o.seed(wideWeb.seeds)
+    o.crawlAll()
+    val root = Files.createTempDirectory("crawl-imgfold").toString
+    val e = new CrawlEngine(TestSpark.spark,
+      CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
+        useBloom = true, bloomBuckets = 4, bloomSlices = 2, bloomCommitEvery = 2,
+        scanProbeMinSeen = 0L, bloomCapacityFloor = 512L),
+      new SyntheticFetcher(wideCfg), wideWeb.robots)
+    e.seed(wideWeb.seeds)
+    e.crawlAll()
+    val kinds = e.imgidx.snapshots.map(n =>
+      (e.imgidx.kindOf(n), e.imgidx.metricOf(n, "compaction"), e.imgidx.coversOf(n)))
+    val folds = e.imgidx.snapshots.filter(n =>
+      e.imgidx.metricOf(n, "compaction").contains(1.0))
+    assert(folds.nonEmpty, s"no imgidx fold compaction commit: $kinds")
+    // each fold is a covers-marked base at an even run
+    folds.foreach { n =>
+      assert(e.imgidx.kindOf(n) == "base" && e.imgidx.coversOf(n).nonEmpty, s"fold $n: $kinds")
+      assert(e.imgidx.metricOf(n, "run").exists(_.toLong % 2 == 0), s"fold $n off cadence: $kinds")
+    }
+    assert(!e.imgidx.snapshots.exists(n => e.imgidx.kindOf(n) == "append"),
+      s"sliced image regime appends per-run index deltas: $kinds")
+    val imgs = e.imageTable().get.select("image_id", "caption")
+      .as[(String, String)].collect()
+    assert(imgs.length == imgs.map(_._1).distinct.length, "image fold duplicated rows")
+    assert(imgs.toMap == o.imagesCaptions.toMap, "image fold diverged the payload table")
+  }
+
+  test("image dedup entering the scan-probe regime at a commit stays exact") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // scanProbeMinSeen = 1: the first payload commit moves the image-id
+    // set from the plain anti-join into the Bloom regime, with no blocks
+    // loaded and no hashes collected for that batch. The next dedup must
+    // build its blocks from the committed table — blocks folded from the
+    // empty batch alone would call every committed id definitely-new,
+    // and ids reused across pages would be stored twice.
+    val root = Files.createTempDirectory("crawl-imgcross").toString
+    val e = new CrawlEngine(TestSpark.spark,
+      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
+        useBloom = true, bloomBuckets = 8, scanProbeMinSeen = 1L),
+      new SyntheticFetcher(webCfg), web.robots)
+    e.seed(web.seeds)
+    e.crawlAll()
+    val ids = e.imageTable().get.select("image_id").as[String].collect()
+    val dups = ids.length - ids.distinct.length
+    assert(dups == 0, s"regime crossover stored $dups image rows twice")
+    assert(ids.toSet == oracle.imagesCaptions.keySet.toSet)
   }
 
   test("resume from last committed snapshot equals uninterrupted run") {

@@ -1,6 +1,5 @@
 package graft
 
-import graft.frontier.CuckooFilter
 import graft.urlkit.UrlKit
 import org.scalacheck.{Gen, Prop, Properties}
 
@@ -45,36 +44,6 @@ object UrlKitProps extends Properties("UrlKit") {
     Prop.forAll(Gen.alphaNumStr, Gen.alphaNumStr) { (a, b) =>
       (UrlKit.xxhash64(a) == UrlKit.xxhash64(a)) &&
         (a == b || UrlKit.xxhash64(s"p:$a") != UrlKit.xxhash64(s"p:$b"))
-    }
-}
-
-object CuckooProps extends Properties("CuckooFilter") {
-
-  property("no false negatives after inserts") =
-    Prop.forAll(Gen.listOf(Gen.long)) { keys =>
-      val distinct = keys.distinct.take(500)
-      val cf = CuckooFilter.create(2048)
-      val inserted = distinct.filter(cf.insert)
-      inserted.forall(cf.mightContain)
-    }
-
-  property("delete removes and never breaks other kept keys' membership") =
-    Prop.forAll(Gen.listOf(Gen.long)) { keys =>
-      val distinct = keys.distinct.take(300)
-      val cf = CuckooFilter.create(2048)
-      val inserted = distinct.filter(cf.insert)
-      val (del, keep) = inserted.splitAt(inserted.size / 2)
-      del.foreach(cf.delete)
-      keep.forall(cf.mightContain)
-    }
-
-  property("serialization round-trip preserves membership") =
-    Prop.forAll(Gen.listOf(Gen.long)) { keys =>
-      val distinct = keys.distinct.take(200)
-      val cf = CuckooFilter.create(1024)
-      val inserted = distinct.filter(cf.insert)
-      val back = CuckooFilter.deserialize(cf.serialize())
-      inserted.forall(back.mightContain)
     }
 }
 

@@ -14,6 +14,8 @@ class SyntheticWebSpec extends AnyFunSuite {
     (0 until 16).foreach(i => assert(web.hostName(i) == f"host-$i%03d.test"))
     // out-of-range fallback keeps the %03d form (no truncation past 3 digits)
     assert(web.hostName(1234) == f"host-${1234}%03d.test")
+    // negative indices: the sign counts toward the width, zeros follow it
+    Seq(-5, -1234).foreach(i => assert(web.hostName(i) == f"host-$i%03d.test"))
   }
 
   test("imageIdsOf matches the %08d reference") {
