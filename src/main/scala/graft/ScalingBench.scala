@@ -482,15 +482,15 @@ object ScalingBench {
          |survivors are small.
          |
          |Round-3 deltas: the per-run dedup plan is now ADAPTIVE — below
-         |`scanProbeMinSeen` attempts the legacy conditional anti-join
-         |(zero extra jobs per run), above it the new SCAN-PROBE plan
+         |`scanProbeMinSeen` attempts an exact anti-join with no Bloom
+         |state (zero extra jobs per run), above it the new SCAN-PROBE plan
          |(`dedupscan` row): Bloom verdicts checkpoint, survivors
          |broadcast into a semi-join against a column-pruned, footer-stats
          |file-skipped SCAN of the bucket-clustered seen table — the crawl
          |history is never shuffled per micro-run, for the URL frontier
          |and the image-id payload dedup alike. The dedupscan row pays the
          |plan's fixed jobs on a small batch, which is exactly why the
-         |engine keeps the legacy plan below the threshold; its value is
+         |engine keeps the anti-join below the threshold; its value is
          |that its cost is O(batch + pruned scan), independent of the
          |shuffle of a 10^10-row history (the dedupxl row is the
          |genuinely-large-seen regime). A dir-per-commit Hive-partitioned

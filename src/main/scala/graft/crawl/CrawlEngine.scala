@@ -25,7 +25,6 @@ final case class CrawlConfig(
     tableRoot: String,
     politeness: Politeness = Politeness(),
     maxRetries: Int = 3,
-    useBloom: Boolean = true,
     bloomBuckets: Int = 16,
     maxRuns: Int = 64,
     bloomCommitEvery: Int = 4,
@@ -44,12 +43,12 @@ final case class CrawlConfig(
     bloomSlices: Int = 1,
     maxBroadcastBytes: Long = 512L * 1024 * 1024,
     /** Seen-set size (attempt rows, estimated from commit manifests)
-      * above which dedup switches from the legacy conditional anti-join
-      * to the SCAN-PROBE plan. Below it the seen side is small enough
-      * that one shuffle costs less than the scan-probe's fixed per-run
-      * jobs (checkpoint + survivor count) — measured on micro-run
-      * crawls; above it the O(history) exchange is the thing that must
-      * never happen. */
+      * above which dedup switches from the exact anti-join (no Bloom
+      * state) to the SCAN-PROBE plan. Below it the seen side is small
+      * enough that one shuffle costs less than the scan-probe's fixed
+      * per-run jobs (checkpoint + survivor count) — measured on
+      * micro-run crawls; above it the O(history) exchange is the thing
+      * that must never happen. */
     scanProbeMinSeen: Long = 8L * 1024 * 1024,
     /** Geometry floor: smallest expected-keys-per-bucket a Bloom block is
       * ever built for. Production keeps the legacy-compatible default
@@ -450,9 +449,9 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
           size(regexp_extract_all(col("body"), lit("<a href=\"([^\"]*)\""), lit(1))))
           .otherwise(0)).cast("long"), lit(0L)).as("links"))
       // this window's distinct hashes, for driver-side incremental Bloom
-      // maintenance — BROADCAST REGIME ONLY (windows are politeness-
-      // budget-bounded, well inside what that regime already implies the
-      // driver can hold). The sliced regime maintains its index
+      // maintenance — BROADCAST SCAN-PROBE REGIME ONLY (windows are
+      // politeness-budget-bounded, well inside what that regime already
+      // implies the driver can hold). The sliced regime maintains its index
       // distributively and must not ship every window's hash set to the
       // driver it exists to keep out of the loop.
       val collectHashes = urlSeen.wantsHashes

@@ -538,28 +538,25 @@ object BloomDedup {
   /** Candidates NOT in the seen set. `candidates` must carry `url_hash`;
     * rows are returned with their original columns. */
   def dedup(candidates: DataFrame, seen: DataFrame, bloomIndex: Option[DataFrame],
-            numBuckets: Int = 64, repartitionByBucket: Boolean = false): DataFrame =
+            numBuckets: Int = 64): DataFrame =
     bloomIndex match {
       case None =>
         // no distinct on the right side: left_anti is set-semantics on the
         // probe already — a distinct would only add a full shuffle
         candidates.join(seen.select("url_hash"), Seq("url_hash"), "left_anti")
       case Some(idx) =>
-        dedupWithBlocks(candidates, seen, collectBlocks(idx), numBuckets, repartitionByBucket)
+        dedupWithBlocks(candidates, seen, collectBlocks(idx), numBuckets)
     }
 
-  /** Same as [[dedup]] with a pre-collected block map (the engine keeps
-    * blocks incrementally maintained between micro-runs). */
+  /** Same as [[dedup]] with a pre-collected block map. */
   def dedupWithBlocks(candidates: DataFrame, seen: DataFrame,
-                      blocks: Map[Int, Array[Byte]], numBuckets: Int,
-                      repartitionByBucket: Boolean = false): DataFrame =
-    dedupCore(candidates, seen, blocks, numBuckets, repartitionByBucket)._1
+                      blocks: Map[Int, Array[Byte]], numBuckets: Int): DataFrame =
+    dedupCore(candidates, seen, blocks, numBuckets)._1
 
   /** [[dedupWithBlocks]] plus the broadcast handle, so slice-wise callers
     * can destroy each slice's blocks once its action completes. */
   private def dedupCore(candidates: DataFrame, seen: DataFrame,
-                        blocks: Map[Int, Array[Byte]], numBuckets: Int,
-                        repartitionByBucket: Boolean = false)
+                        blocks: Map[Int, Array[Byte]], numBuckets: Int)
       : (DataFrame, org.apache.spark.broadcast.Broadcast[Map[Int, Array[Byte]]]) = {
     val seenKeys = seen.select("url_hash") // no distinct: see dedup() note
     val outCols = candidates.columns
@@ -578,13 +575,7 @@ object BloomDedup {
     // index small again) — see SnapshotTable bucketing notes.
     val bc = spark.sparkContext.broadcast(blocks)
 
-    // optional bucket-alignment (hash-range locality for downstream
-    // bucket-partitioned sinks; the test itself no longer needs it)
-    val candIn =
-      if (repartitionByBucket)
-        candidates.repartition(pmod(col("url_hash"), lit(numBuckets)).cast("int"))
-      else candidates
-    val flagged = candIn.withColumn("__maybe",
+    val flagged = candidates.withColumn("__maybe",
       graft.functions.BloomMightContain(epoch, bc,
         pmod(col("url_hash"), lit(numBuckets)).cast("int"), col("url_hash")))
 
@@ -593,27 +584,33 @@ object BloomDedup {
     // survives without probing the seen side; only fpp·|candidates|
     // + true duplicates hit the exact set. One scan of the candidate
     // subtree (no union → no double compute).
-    //
-    // The seen side is explicitly BROADCAST while its optimizer-estimated
-    // key bytes fit [[AntiBroadcastBytes]] (guide §3.1: the 10 MB auto
-    // threshold is far below what a key-only build side affords, and a
-    // sort-merge anti shuffles AND sorts every candidate — measured 2.3x
-    // slower at 4M candidates vs 2M seen keys). Past the bound the
-    // planner keeps its own choice (sort-merge at true scale).
-    val seenK = seenKeys.withColumnRenamed("url_hash", "__seen_hash")
-    val seenEst = seenK.queryExecution.optimizedPlan.stats.sizeInBytes
-    val seenSide = if (seenEst <= AntiBroadcastBytes) broadcast(seenK) else seenK
+    val seenSide = antiJoinSide(seenKeys.withColumnRenamed("url_hash", "__seen_hash"))
     val out = flagged.join(seenSide,
         col("url_hash") === col("__seen_hash") && col("__maybe"), "left_anti")
       .select(outCols.map(col): _*)
     (out, bc)
   }
 
-  /** Estimated-bytes bound under which [[dedupCore]]'s exact anti-join
-    * broadcasts its key-only seen side instead of leaving the strategy
-    * to the 10 MB auto threshold. 64 MB of 8-byte keys ≈ 8M seen rows —
-    * a hash relation every executor holds comfortably; beyond it the
-    * planner's sort-merge keeps memory bounded. Override with
+  /** The key-only seen side of an exact anti-join, hinted BROADCAST while
+    * its optimizer-estimated bytes fit [[AntiBroadcastBytes]] (guide §3.1:
+    * the 10 MB auto threshold is far below what a key-only build side
+    * affords, and a sort-merge anti shuffles AND sorts every candidate —
+    * measured 2.3x slower at 4M candidates vs 2M seen keys). Past the
+    * bound, or when the session turned broadcasts off
+    * (`spark.sql.autoBroadcastJoinThreshold` < 0), the planner keeps its
+    * own choice (sort-merge at true scale). */
+  private[frontier] def antiJoinSide(seenKeys: DataFrame): DataFrame = {
+    val conf = seenKeys.sparkSession.sessionState.conf
+    val est = seenKeys.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (conf.autoBroadcastJoinThreshold >= 0 && est <= AntiBroadcastBytes) broadcast(seenKeys)
+    else seenKeys
+  }
+
+  /** Estimated-bytes bound under which [[antiJoinSide]] broadcasts a
+    * key-only seen side instead of leaving the strategy to the 10 MB auto
+    * threshold. 64 MB of 8-byte keys ≈ 8M seen rows — a hash relation
+    * every executor holds comfortably; beyond it the planner's sort-merge
+    * keeps memory bounded. Override with
     * -Dgraft.dedup.antiBroadcastBytes= for other executor sizings. */
   private val AntiBroadcastBytes: BigInt =
     BigInt(sys.props.get("graft.dedup.antiBroadcastBytes").map(_.toLong)

@@ -7,18 +7,18 @@ import org.apache.spark.sql.functions._
 
 /** One key's seen set: the committed `table` of keys, its Bloom index
   * table `idx`, and the regime state machine that dedups candidates
-  * against them — small-table anti-join, broadcast Bloom (conditional
-  * anti-join or scan-probe), or sliced beyond-broadcast (NOTES.md r01 #1).
+  * against them — small-table exact anti-join, broadcast Bloom
+  * scan-probe, or sliced beyond-broadcast scan-probe (NOTES.md r01 #1).
   * [[graft.crawl.CrawlEngine]] holds one per key: URL hashes
   * (fetchlog/bloomidx) and image ids (images/imgidx).
   *
   * `key` is the EXACT join identity. `url_hash` is its own prefilter hash;
   * any other key is prefiltered on `xxhash64(key)` and still joins on the
   * key itself, so a 64-bit collision can never drop a genuinely-new row.
-  * The conditional anti-join ([[BloomDedup.dedupWithBlocks]]) is exact
-  * only when the key is its own hash, so below `scanProbeMinSeen` a
-  * hash-keyed set dedups through its standing blocks (zero extra jobs)
-  * while any other key takes a plain anti-join and keeps no blocks.
+  * Below `scanProbeMinSeen` (outside the sliced regime) both keys take a
+  * plain exact anti-join and hold NO Bloom state — a prefilter saves no
+  * probe while the seen side is broadcast or sort-merged anyway; a set
+  * crossing the threshold builds its blocks from the committed table.
   *
   * `snapshotCol` names the index column recording the `table` snapshot a
   * block covers. `checkpoint`: broadcast-regime blocks are written to
@@ -43,8 +43,6 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
   // scan-probe once a history exchange would dominate
   private var rowsEst: Long = table.totalRows
   private def scanProbeRegime: Boolean = rowsEst >= cfg.scanProbeMinSeen
-  // whether the broadcast regime dedups through standing blocks
-  private def usesBlocks: Boolean = keyIsHash || scanProbeRegime
 
   // true once the sliced (beyond-broadcast) regime governs dedup + index
   // maintenance — configured up front, auto-flipped when the broadcast
@@ -53,8 +51,7 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
   // fresh engine resuming a flipped root goes straight to the sliced
   // path instead of re-entering the broadcast guard and pulling the full
   // index onto the driver (a driver OOM at the scale that caused the flip)
-  private var sliced: Boolean =
-    cfg.useBloom && (cfg.bloomSlices > 1 || idx.latestCovers.nonEmpty)
+  private var sliced: Boolean = cfg.bloomSlices > 1 || idx.latestCovers.nonEmpty
 
   // ---- Bloom index GEOMETRY (VERDICT r03 #1/#2) -----------------------
   // derived from the manifest-based estimate on BloomGeometry's doubling
@@ -280,34 +277,31 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     * once done.
     *
     * Both Bloom regimes route the exact probe through the SCAN-PROBE
-    * plan (BloomDedup.dedupScan) once the set is past scanProbeMinSeen:
-    * the Bloom verdicts checkpoint eagerly, survivors broadcast, and the
-    * seen side is a column-pruned, bucket-partition-pruned SCAN — never
-    * shuffled. Per-run dedup cost stops scaling with the shuffle of
-    * history (VERDICT r02 #1). Below it the anti-join embeds in the
-    * consumers' own actions — zero extra jobs. */
+    * plan (BloomDedup.dedupScan): the Bloom verdicts checkpoint eagerly,
+    * survivors broadcast, and the seen side is a column-pruned,
+    * bucket-partition-pruned SCAN — never shuffled. Per-run dedup cost
+    * stops scaling with the shuffle of history (VERDICT r02 #1). Below
+    * scanProbeMinSeen the exact anti-join embeds in the consumers' own
+    * actions — zero extra jobs. */
   def dedup(df: DataFrame): (DataFrame, () => Unit) = seenKeys match {
     case None => (df, () => ())
-    case Some(seen) if !cfg.useBloom || (!sliced && !usesBlocks) =>
-      (df.join(seen.select(key), Seq(key), "left_anti"), () => ())
+    case Some(seen) if !sliced && !scanProbeRegime =>
+      (df.join(BloomDedup.antiJoinSide(seen.select(key)), Seq(key), "left_anti"), () => ())
     case Some(seen) =>
       val cand = if (keyIsHash) df else df.withColumn("url_hash", hash)
       val viaBroadcast =
         if (sliced) None
-        else broadcastBlocksOrFlip(seen).map { bs =>
-          if (!scanProbeRegime)
-            (BloomDedup.dedupWithBlocks(cand, seen, bs, geom.indexBuckets), () => ())
-          else BloomDedup.dedupScan(cand, seen, bs, geom.indexBuckets, joinKey = key,
-            storageBuckets = cfg.bloomBuckets)
-        }
+        else broadcastBlocksOrFlip(seen).map(bs =>
+          BloomDedup.dedupScan(cand, seen, bs, geom.indexBuckets, joinKey = key,
+            storageBuckets = cfg.bloomBuckets))
       val (out, cleanup) = viaBroadcast.getOrElse(slicedDedup(cand, seen))
       (if (keyIsHash) out else out.drop("url_hash"), cleanup)
   }
 
   /** Whether [[afterCommit]] folds driver-side key hashes: the broadcast
-    * regime's standing blocks are maintained from each run's batch, which
-    * the caller must collect BEFORE the commit. */
-  def wantsHashes: Boolean = cfg.useBloom && !sliced && usesBlocks
+    * scan-probe regime's standing blocks are maintained from each run's
+    * batch, which the caller must collect BEFORE the commit. */
+  def wantsHashes: Boolean = !sliced && scanProbeRegime
 
   /** Index maintenance right after `table`'s commit of run `runId`, which
     * added `added` rows whose prefilter hashes are `hashes` (empty unless

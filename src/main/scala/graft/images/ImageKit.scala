@@ -115,17 +115,25 @@ object ImageKit {
   }
 
   /** Decode any supported byte payload back to RGB. */
-  def decode(bytes: Array[Byte]): Decoded = {
-    val img = ImageIO.read(new ByteArrayInputStream(bytes))
+  def decode(bytes: Array[Byte]): Decoded = rgbOf(ImageIO.read(new ByteArrayInputStream(bytes)))
+
+  /** Packed `0xRRGGBB` pixels of `img`, row-major. */
+  private[graft] def rgbOf(img: BufferedImage): Decoded = {
     val w = img.getWidth; val h = img.getHeight
+    val raster = img.getRaster
+    def bytes = raster.getDataBuffer.asInstanceOf[java.awt.image.DataBufferByte].getData
     img.getType match {
       // fast path for the two layouts the JDK codecs actually produce
       // here (PNG/JPEG RGB → 3BYTE_BGR): read the backing byte raster
       // directly instead of per-pixel ColorModel conversion via getRGB.
       // sRGB, no alpha, so the packed value is the same (r<<16|g<<8|b).
-      case BufferedImage.TYPE_3BYTE_BGR =>
-        val data = img.getRaster.getDataBuffer
-          .asInstanceOf[java.awt.image.DataBufferByte].getData
+      // PACKED rasters only: a sub-image or padded scanline shares a
+      // larger buffer whose rows do not start at 3*w*y.
+      case BufferedImage.TYPE_3BYTE_BGR if bytes.length == 3 * w * h &&
+          raster.getMinX == 0 && raster.getMinY == 0 &&
+          raster.getSampleModel.asInstanceOf[java.awt.image.ComponentSampleModel]
+            .getScanlineStride == 3 * w =>
+        val data = bytes
         val out = new Array[Int](w * h)
         var i = 0
         var j = 0

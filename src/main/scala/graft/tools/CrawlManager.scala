@@ -58,12 +58,11 @@ object CrawlManager {
     val regime =
       if (bloomidx.latestCovers.nonEmpty) "SLICED (beyond-broadcast)" else "broadcast"
     sb ++= s"Dedup regime: $regime\n"
-    bloomidx.latestSnapshot.foreach { n =>
-      for (b <- bloomidx.metricOf(n, "index_buckets");
-           c <- bloomidx.metricOf(n, "expected_per_bucket"))
-        sb ++= f"URL index geometry: ${b.toLong} buckets x ${c.toLong} keys " +
-          f"(capacity ${b.toLong * c.toLong}%,d)\n"
-    }
+    // below scanProbeMinSeen the URL set holds no Bloom state to checkpoint
+    val geometry = for (n <- bloomidx.latestSnapshot; b <- bloomidx.metricOf(n, "index_buckets");
+                        c <- bloomidx.metricOf(n, "expected_per_bucket"))
+      yield f"${b.toLong} buckets x ${c.toLong} keys (capacity ${b.toLong * c.toLong}%,d)"
+    sb ++= s"URL index geometry: ${geometry.getOrElse("none checkpointed")}\n"
     Tables.foreach { t =>
       val st = table(root, t)
       val head = st.latestSnapshot.map(_.toString).getOrElse("-")

@@ -85,7 +85,7 @@ class AuxSpec extends AnyFunSuite {
     val web = new SyntheticWeb(webCfg)
     val root = java.nio.file.Files.createTempDirectory("mgr").toString
     val e = new CrawlEngine(TestSpark.spark,
-      CrawlConfig(root, Politeness(perHostBudget = 6), useBloom = true, bloomBuckets = 4),
+      CrawlConfig(root, Politeness(perHostBudget = 6), bloomBuckets = 4),
       new SyntheticFetcher(webCfg), web.robots)
     e.seed(web.seeds)
     val stats = e.crawlAll()

@@ -22,9 +22,11 @@ class CrawlEngineSpec extends AnyFunSuite {
   private val budget = 8
   private val maxRetries = 3
 
-  private def newEngine(root: String, useBloom: Boolean = true): CrawlEngine =
+  private def newEngine(root: String,
+                        scanProbeMinSeen: Long = CrawlConfig("").scanProbeMinSeen): CrawlEngine =
     new CrawlEngine(TestSpark.spark,
-      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries, useBloom, bloomBuckets = 8),
+      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries, bloomBuckets = 8,
+        scanProbeMinSeen = scanProbeMinSeen),
       new SyntheticFetcher(webCfg), web.robots)
 
   private def runOracle(): OracleCrawler = {
@@ -123,7 +125,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("crawl-salted").toString
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = budget, hostSalts = 4),
-        maxRetries, useBloom = true, bloomBuckets = 8),
+        maxRetries, bloomBuckets = 8),
       new SyntheticFetcher(webCfg), web.robots)
     e.seed(web.seeds)
     e.crawlAll()
@@ -145,16 +147,27 @@ class CrawlEngineSpec extends AnyFunSuite {
     spark2.conf.set("spark.sql.shuffle.partitions", "7")
     val root = Files.createTempDirectory("crawl-partinv").toString
     val e = new CrawlEngine(spark2,
-      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries, useBloom = true, bloomBuckets = 8),
+      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries, bloomBuckets = 8),
       new SyntheticFetcher(webCfg), web.robots)
     e.seed(web.seeds)
     e.crawlAll()
     assert(e.seenSet() == engine.seenSet(), "partitioning changed the seen set")
   }
 
+  test("below scanProbeMinSeen both seen sets hold no Bloom state: no index snapshots, state exact") {
+    // the toy crawl never leaves the small regime at the default
+    // threshold: its exact anti-join needs no blocks, so neither index
+    // table may be written (no checkpoint, no flush on drain)
+    assert(engine.bloomidx.snapshots.isEmpty,
+      s"bloomidx written below scanProbeMinSeen: ${engine.bloomidx.snapshots}")
+    assert(engine.imgidx.snapshots.isEmpty,
+      s"imgidx written below scanProbeMinSeen: ${engine.imgidx.snapshots}")
+    assert(engine.seenSet() == oracle.seenSet)
+  }
+
   test("bloom and exact-only dedup paths produce identical state") {
     val root2 = Files.createTempDirectory("crawl-nobloom").toString
-    val e2 = newEngine(root2, useBloom = false)
+    val e2 = newEngine(root2, scanProbeMinSeen = 0L)
     e2.seed(web.seeds)
     e2.crawlAll()
     assert(e2.seenSet() == engine.seenSet())
@@ -166,7 +179,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("crawl-sliced").toString
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        useBloom = true, bloomBuckets = 8, bloomSlices = 2),
+        bloomBuckets = 8, bloomSlices = 2),
       new SyntheticFetcher(webCfg), web.robots)
     e.seed(web.seeds)
     e.crawlAll()
@@ -192,7 +205,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val before = e.fetchlog.read().get.count()
     val e2 = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        useBloom = true, bloomBuckets = 8, bloomSlices = 2),
+        bloomBuckets = 8, bloomSlices = 2),
       new SyntheticFetcher(webCfg), web.robots)
     e2.crawlAll()
     assert(e2.fetchlog.read().get.count() == before, "sliced resume refetched")
@@ -211,7 +224,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     // BOTH the URL frontier and the image-id payload dedup
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        useBloom = true, bloomBuckets = 8, maxBroadcastBytes = 1024L,
+        bloomBuckets = 8, maxBroadcastBytes = 1024L,
         scanProbeMinSeen = 0L),
       new SyntheticFetcher(webCfg), web.robots)
     e.seed(web.seeds)
@@ -250,7 +263,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     // and collect the full index onto the driver
     val resumed = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        useBloom = true, bloomBuckets = 8, maxBroadcastBytes = 1024L,
+        bloomBuckets = 8, maxBroadcastBytes = 1024L,
         scanProbeMinSeen = 0L),
       new SyntheticFetcher(webCfg), web.robots)
     assert(resumed.slicedRegimeActive,
@@ -269,7 +282,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     // sliced regime (covers markers must survive merge commits because
     // they compare against latestDataSnapshot, not latestSnapshot)
     def cfg = CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-      useBloom = true, bloomBuckets = 8, bloomSlices = 2, compactEvery = 2,
+      bloomBuckets = 8, bloomSlices = 2, compactEvery = 2,
       scanProbeMinSeen = 0L)
     val e = new CrawlEngine(TestSpark.spark, cfg, new SyntheticFetcher(webCfg), web.robots)
     e.seed(web.seeds)
@@ -294,10 +307,11 @@ class CrawlEngineSpec extends AnyFunSuite {
   test("stale bloom index (crash between fetchlog and bloomidx commits) forces rebuild, state still exact") {
     val root = Files.createTempDirectory("crawl-stalebloom").toString
     // bloomCommitEvery = 1 so run 2 definitely checkpointed the index —
-    // the crash we simulate is losing that checkpoint
+    // the crash we simulate is losing that checkpoint. scanProbeMinSeen
+    // = 0: only the scan-probe regime keeps a Bloom index at all
     val e1 = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        useBloom = true, bloomBuckets = 8, bloomCommitEvery = 1),
+        bloomBuckets = 8, bloomCommitEvery = 1, scanProbeMinSeen = 0L),
       new SyntheticFetcher(webCfg), web.robots)
     e1.seed(web.seeds)
     assert(e1.runOnce().isDefined && e1.runOnce().isDefined)
@@ -305,7 +319,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val lastBloom = e1.bloomidx.latestSnapshot.get
     java.nio.file.Files.delete(java.nio.file.Paths.get(
       root, "bloomidx", "commits", f"v$lastBloom%06d.json"))
-    val e2 = newEngine(root) // must detect the mismatch and rebuild
+    val e2 = newEngine(root, scanProbeMinSeen = 0L) // must detect the mismatch and rebuild
     e2.crawlAll()
     assert(e2.seenSet() == engine.seenSet(), "stale-bloom resume diverged")
   }
@@ -348,7 +362,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("crawl-deep").toString
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = deepBudget), maxRetries,
-        useBloom = true, bloomBuckets = 8),
+        bloomBuckets = 8),
       new SyntheticFetcher(deepCfg), deepWeb.robots)
     e.seed(deepWeb.seeds)
     e.crawlAll()
@@ -394,7 +408,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     // one batch — the catch-up contract under batching has its own test.
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
-        useBloom = true, bloomBuckets = buckets, scanProbeMinSeen = 0L,
+        bloomBuckets = buckets, scanProbeMinSeen = 0L,
         bloomCapacityFloor = floor, windowsPerRun = 1),
       new SyntheticFetcher(wideCfg), wideWeb.robots)
     e.seed(wideWeb.seeds)
@@ -441,7 +455,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     // a fresh engine resumes with the persisted geometry and drains clean
     val e2 = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
-        useBloom = true, bloomBuckets = buckets, scanProbeMinSeen = 0L,
+        bloomBuckets = buckets, scanProbeMinSeen = 0L,
         bloomCapacityFloor = floor),
       new SyntheticFetcher(wideCfg), wideWeb.robots)
     assert(e2.urlIndexGeometry.capacityPerBucket == storedCap,
@@ -466,7 +480,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("crawl-resize-batched").toString
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
-        useBloom = true, bloomBuckets = buckets, scanProbeMinSeen = 0L,
+        bloomBuckets = buckets, scanProbeMinSeen = 0L,
         bloomCapacityFloor = floor, windowsPerRun = 3),
       new SyntheticFetcher(wideCfg), wideWeb.robots)
     e.seed(wideWeb.seeds)
@@ -502,7 +516,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("crawl-resize-sliced").toString
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
-        useBloom = true, bloomBuckets = 4, bloomSlices = 2, bloomCommitEvery = 2,
+        bloomBuckets = 4, bloomSlices = 2, bloomCommitEvery = 2,
         scanProbeMinSeen = 0L, bloomCapacityFloor = 64L),
       new SyntheticFetcher(wideCfg), wideWeb.robots)
     e.seed(wideWeb.seeds)
@@ -552,7 +566,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("crawl-imgfold").toString
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
-        useBloom = true, bloomBuckets = 4, bloomSlices = 2, bloomCommitEvery = 2,
+        bloomBuckets = 4, bloomSlices = 2, bloomCommitEvery = 2,
         scanProbeMinSeen = 0L, bloomCapacityFloor = 512L),
       new SyntheticFetcher(wideCfg), wideWeb.robots)
     e.seed(wideWeb.seeds)
@@ -583,11 +597,12 @@ class CrawlEngineSpec extends AnyFunSuite {
     // loaded and no hashes collected for that batch. The next dedup must
     // build its blocks from the committed table — blocks folded from the
     // empty batch alone would call every committed id definitely-new,
-    // and ids reused across pages would be stored twice.
+    // and ids reused across pages would be stored twice. The URL set
+    // crosses the same way at the first fetchlog commit.
     val root = Files.createTempDirectory("crawl-imgcross").toString
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        useBloom = true, bloomBuckets = 8, scanProbeMinSeen = 1L),
+        bloomBuckets = 8, scanProbeMinSeen = 1L),
       new SyntheticFetcher(webCfg), web.robots)
     e.seed(web.seeds)
     e.crawlAll()
@@ -595,6 +610,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val dups = ids.length - ids.distinct.length
     assert(dups == 0, s"regime crossover stored $dups image rows twice")
     assert(ids.toSet == oracle.imagesCaptions.keySet.toSet)
+    assert(e.seenSet() == oracle.seenSet, "URL regime crossover diverged the seen set")
   }
 
   test("resume from last committed snapshot equals uninterrupted run") {
@@ -625,7 +641,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("crawl-waves").toString
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        useBloom = true, bloomBuckets = 8, windowsPerRun = 3),
+        bloomBuckets = 8, windowsPerRun = 3),
       new SyntheticFetcher(webCfg), web.robots)
     e.seed(web.seeds)
     val stats = e.crawlAll()
@@ -664,7 +680,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("crawl-waves-resume").toString
     def mk(k: Int) = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        useBloom = true, bloomBuckets = 8, windowsPerRun = k),
+        bloomBuckets = 8, windowsPerRun = k),
       new SyntheticFetcher(webCfg), web.robots)
     val e1 = mk(2)
     e1.seed(web.seeds)

@@ -9,10 +9,11 @@ import java.nio.file.{Files, Paths}
   * template/detail.html must equal the 133-key data/detail.json record
   * exactly, and the typed coercion must convert the money/date examples
   * the fixture calls out. */
-class DetailParserSpec extends AnyFunSuite {
+class DetailParserSpec extends AnyFunSuite with GoldenFixtureReport {
 
   private val htmlPath = Paths.get("/root/reference/template/detail.html")
   private val jsonPath = Paths.get("/root/reference/data/detail.json")
+  protected def goldenFiles = Seq(htmlPath, jsonPath)
 
   private lazy val golden: Map[String, String] = {
     val s = new String(Files.readAllBytes(jsonPath), "UTF-8")

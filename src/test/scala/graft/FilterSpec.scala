@@ -278,10 +278,31 @@ class FilterSpec extends AnyFunSuite {
     val viaBloom = BloomDedup.dedup(cand, seen, Some(idx), numBuckets = 8)
       .select("url_hash").as[Long].collect().sorted
     assert(viaBloom.toSeq == exact.toSeq)
+  }
 
-    // repartition-by-bucket path (the huge-index plan) agrees too
-    val viaRepart = BloomDedup.dedup(cand, seen, Some(idx), numBuckets = 8,
-      repartitionByBucket = true).select("url_hash").as[Long].collect().sorted
-    assert(viaRepart.toSeq == exact.toSeq)
+  test("bloom dedup honours autoBroadcastJoinThreshold = -1: exact, no broadcast anti-join") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    val seenHashes = (1 to 2000).map(_ => rnd.nextLong()).distinct
+    val candHashes = (seenHashes.take(800) ++ (1 to 1500).map(_ => rnd.nextLong())).distinct
+    val seen = seenHashes.toDF("url_hash")
+    val cand = candHashes.map(h => (h, s"u$h")).toDF("url_hash", "url")
+    val exact = cand.join(seen, Seq("url_hash"), "left_anti")
+      .select("url_hash").as[Long].collect().sorted
+    val idx = BloomDedup.buildIndex(seen, numBuckets = 8, expectedPerBucket = 1024)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val out = BloomDedup.dedup(cand, seen, Some(idx), numBuckets = 8)
+      assert(out.select("url_hash").as[Long].collect().sorted.toSeq == exact.toSeq)
+      val plan = out.queryExecution.executedPlan.toString
+      assert("BroadcastHashJoin[^\n]*LeftAnti".r.findFirstIn(plan).isEmpty,
+        s"broadcast anti-join forced with broadcasts disabled:\n$plan")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }

@@ -76,6 +76,21 @@ class ImageKitSpec extends AnyFunSuite {
     }
   }
 
+  test("a padded 3BYTE_BGR raster (sub-image) decodes to the getRGB pixels") {
+    val bgr = java.awt.image.BufferedImage.TYPE_3BYTE_BGR
+    val img = ids.iterator
+      .map(id => javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(ImageKit.generate(id)._1)))
+      .find(_.getType == bgr).get
+    val (w, h) = (img.getWidth - 2, img.getHeight - 2)
+    // shares the parent's buffer: rows are 3*(w+2) bytes apart, starting 1 row + 1 pixel in
+    val sub = img.getSubimage(1, 1, w, h)
+    assert(sub.getType == bgr)
+    val ref = sub.getRGB(0, 0, w, h, null, 0, w).map(_ & 0xFFFFFF)
+    val got = ImageKit.rgbOf(sub)
+    assert(got.w == w && got.h == h)
+    assert(java.util.Arrays.equals(got.rgb, ref), "padded raster read as if packed")
+  }
+
   test("phash is stable under jpeg re-encode and separates distinct images") {
     val id = ids.find(ImageKit.fmt(_) == "jpeg").get
     val (bytes, w, h, _) = ImageKit.generate(id)

@@ -9,9 +9,10 @@ import java.nio.file.{Files, Paths}
   * runtime — reference/template/table.html is the same one-resultbox page
   * the reference's parser was built against (fpds_enhanced_extractor.py:
   * 204-276). */
-class PageParserSpec extends AnyFunSuite {
+class PageParserSpec extends AnyFunSuite with GoldenFixtureReport {
 
   private val tablePath = Paths.get("/root/reference/template/table.html")
+  protected def goldenFiles = Seq(tablePath)
   private def tableHtml: String = new String(Files.readAllBytes(tablePath), "UTF-8")
 
   test("golden table.html: resultbox fields match the reference field set") {
