@@ -18,9 +18,10 @@ import org.apache.spark.storage.StorageLevel
   * switch to a length-prefixed digit string; depth-20 BFS frontiers are
   * beyond any real crawl's politeness budget anyway.
   *
-  * `bloomCommitEvery` / `compactEvery`: the bloomidx checkpoint and the
-  * pending-table compaction are batched — a crash between batch points
-  * costs a (tested) rebuild on resume, never correctness. */
+  * `bloomCommitEvery` / `compactEvery`: the Bloom index delta fold and
+  * the pending-table compaction are batched — between batch points the
+  * recent deltas are read exactly, and a crash costs at most a (tested)
+  * rebuild on resume, never correctness. */
 final case class CrawlConfig(
     tableRoot: String,
     politeness: Politeness = Politeness(),
@@ -29,18 +30,10 @@ final case class CrawlConfig(
     maxRuns: Int = 64,
     bloomCommitEvery: Int = 4,
     compactEvery: Int = 8,
-    /** > 1 switches the seen-set dedup to the BEYOND-BROADCAST regime:
-      * the Bloom index lives in the bloomidx table (maintained by
-      * distributed merge, never collected whole) and candidates dedup in
-      * `bloomSlices` hash-range slices, so peak driver/executor index
-      * memory is |index|/slices — the 10^10-seen-key path. Must divide
-      * bloomBuckets. 1 = driver-broadcast regime (right up to ~10^9),
-      * with an AUTOMATIC flip to the sliced regime the first time the
-      * standing block map exceeds `maxBroadcastBytes` — a crawl that
-      * outgrows the driver switches without intervention (the sliced
-      * side rebuilds its table-resident index from the seen set once,
-      * the same tested path as any stale-index resume). */
-    bloomSlices: Int = 1,
+    /** Per-slice broadcast budget: the table-resident Bloom index is
+      * broadcast in the fewest hash-range slices whose share fits it —
+      * one slice while the whole index does — so peak driver/executor
+      * index memory is |index|/slices, the 10^10-seen-key path. */
     maxBroadcastBytes: Long = 512L * 1024 * 1024,
     /** Seen-set size (attempt rows, estimated from commit manifests)
       * above which dedup switches from the exact anti-join (no Bloom
@@ -87,8 +80,6 @@ final case class CrawlConfig(
       * Batched ≡ oracle at w=3 is pinned by CrawlEngineSpec. Set 1 to
       * restore reference-equivalent one-window replay granularity. */
     windowsPerRun: Int = 3) {
-  require(bloomSlices >= 1 && bloomBuckets % bloomSlices == 0,
-    s"bloomSlices $bloomSlices must divide bloomBuckets $bloomBuckets")
   // a broadcast map/slice that cannot fit the executor block cache
   // degenerates the Bloom test to repeated deserializations — validate
   // the sizing invariant ONLY against an EXPLICIT cache-budget property:
@@ -208,21 +199,18 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
   // the two seen sets (see SeenSet). URL hashes are their own join key;
   // the payload table's image ids join exactly, prefiltered on
   // xxhash64(image_id) (VERDICT r02 "What's wrong" #4 — the image dedup
-  // was the last per-run O(history) scan). Image blocks are session
-  // state: a restart rebuilds them from one image_id column scan.
+  // was the last per-run O(history) scan).
   private val urlSeen = new SeenSet(spark, cfg, fetchlog, bloomidx, "url_hash",
-    "fetchlog_snapshot", checkpoint = true)
+    "fetchlog_snapshot")
   private val imageSeen = new SeenSet(spark, cfg, images, imgidx, "image_id",
-    "images_snapshot", checkpoint = false)
+    "images_snapshot")
 
   /** The URL index geometry in force (test/observability hook). */
   def urlIndexGeometry: BloomGeometry = urlSeen.geometry
 
-  /** Which dedup regime governs (test/observability hook). */
-  def slicedRegimeActive: Boolean = urlSeen.slicedActive
-
-  /** Which image-dedup regime governs (test/observability hook). */
-  def imageSlicedRegimeActive: Boolean = imageSeen.slicedActive
+  /** Hash-range slices the URL index broadcasts in (test/observability
+    * hook). */
+  def urlIndexSlices: Int = urlSeen.sliceCount
 
   def currentDelayMs: Double = pol.clampedDelay
 
@@ -424,8 +412,7 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
     // run. The fetchlog's `run` column records the GLOBAL WINDOW id, so
     // per-window crawl order stays comparable 1:1 with the reference.
     final case class WaveOut(results: DataFrame, newLinks: DataFrame,
-                             nScheduled: Long, nOk: Long, links: Long,
-                             hashes: Seq[Long])
+                             nScheduled: Long, nOk: Long, links: Long)
     val waves = scala.collection.mutable.ArrayBuffer.empty[WaveOut]
     val waveCleanups = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
     val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -440,7 +427,7 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
       // (fpds_high_performance.py:292-313 `_update_progress` analogue) —
       // no separate counting job over the results
       val obs = new org.apache.spark.sql.Observation(s"fetch-${System.nanoTime()}")
-      val baseAggs = Seq(
+      val aggs = Seq(
         count(lit(1)).as("n"),
         coalesce(sum(when(col("status") === 200, 1L).otherwise(0L)), lit(0L)).as("ok"),
         // total outlinks on fetched pages, counted in the same pass the
@@ -448,16 +435,6 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
         coalesce(sum(when(col("status") === 200,
           size(regexp_extract_all(col("body"), lit("<a href=\"([^\"]*)\""), lit(1))))
           .otherwise(0)).cast("long"), lit(0L)).as("links"))
-      // this window's distinct hashes, for driver-side incremental Bloom
-      // maintenance — BROADCAST SCAN-PROBE REGIME ONLY (windows are
-      // politeness-budget-bounded, well inside what that regime already
-      // implies the driver can hold). The sliced regime maintains its index
-      // distributively and must not ship every window's hash set to the
-      // driver it exists to keep out of the loop.
-      val collectHashes = urlSeen.wantsHashes
-      val aggs =
-        if (collectHashes) baseAggs :+ collect_set(col("url_hash")).as("hashes")
-        else baseAggs
       val results = FetchStage.run(scheduled, fetcher, pol.hostSalts).toDF()
         .observe(obs, aggs.head, aggs.tail: _*)
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -469,10 +446,6 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
         persisted += results
         val nOkW = observed("ok").asInstanceOf[Long]
         val linksW = observed("links").asInstanceOf[Long]
-        val hashesW: Seq[Long] =
-          if (collectHashes)
-            observed("hashes").asInstanceOf[scala.collection.Seq[Long]].toSeq
-          else Seq.empty
         // outlinks of THIS window → candidate frontier rows, deduped
         // within the window (min-seq ≡ the oracle's first-discovery-wins
         // in canonical order), vs the live pending view, vs the keys
@@ -532,7 +505,7 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
         // limiter — the next window's delay plan sees this window's rates
         val successRate = nOkW.toDouble / nSched
         pol = Scheduler.nextDelay(pol, successRate, 1.0 - successRate)
-        waves += WaveOut(results, newLinks, nSched, nOkW, linksW, hashesW)
+        waves += WaveOut(results, newLinks, nSched, nOkW, linksW)
       }
       wave += 1
     }
@@ -542,16 +515,15 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
     val nOk = waves.map(_.nOk).sum
     val nFail = nScheduled - nOk
     val totalLinks = waves.map(_.links).sum
-    val runHashes: Seq[Long] = waves.flatMap(_.hashes).toSeq
 
     // fetchlog rows: `run` carries the GLOBAL WINDOW id (the reference-
     // equivalent micro-run counter — resumed from the windows_total
     // manifest metric, falling back to the append-commit count for
     // pre-window roots). `bucket` is a CLUSTERED DATA column
-    // (bucketSalted: each file spans 1-2 buckets), so the sliced
-    // regime's per-slice seen reads and the scan-probe's touched-bucket
-    // restriction push a plain IN(bucket,…) filter that skips whole
-    // files via footer min/max stats — while the read stays ONE
+    // (bucketSalted: each file spans 1-2 buckets), so the scan-probe's
+    // per-slice seen reads and touched-bucket restriction push a plain
+    // IN(bucket,…) filter that skips whole files via footer min/max
+    // stats — while the read stays ONE
     // multi-path parquet relation (the dir-per-commit Hive layout
     // measured ~2× e2e in per-run planning).
     val windowBase = windowCount
@@ -607,23 +579,11 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
     // filter skips whole files via footer stats, while reads stay ONE
     // multi-path relation (a Hive-partitioned dir-per-commit layout was
     // measured to cost more in per-micro-run union planning than its
-    // partition pruning saved). The batch is persisted so the Bloom
-    // maintenance below reads ids from cache instead of regenerating
-    // payloads.
+    // partition pruning saved). Persisted: bucketSalted's range sampling
+    // pass must not regenerate the payloads.
     val imageRowsB = imageRows.withColumn("bucket",
       pmod(xxhash64(col("image_id")), lit(cfg.bloomBuckets)).cast("int"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // broadcast image regime: collect the new id hashes BEFORE the
-    // commit (it also warms the write-side cache). The post-commit Bloom
-    // fold must be infallible once the manifest exists — a Spark collect
-    // failing AFTER the commit would leave stale in-memory blocks that
-    // mark the just-committed ids definitely-new on a same-session
-    // retry (the sliced regime is immune: its imgidx covers marker is
-    // validated durably and a mismatch forces a rebuild).
-    val imageIdHashes: Array[Long] =
-      if (imageSeen.wantsHashes)
-        imageRowsB.select(xxhash64(col("image_id"))).as[Long].collect()
-      else Array.emptyLongArray
     // new frontier rows: every window's deduped discoveries. Cross-wave
     // duplicates are structurally excluded — wave w's discoveries were
     // deduped against pend_w (which carries every earlier wave's) and
@@ -657,9 +617,7 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
 
     val nNewImages = images.commitPrepared(Await.result(imgPrep, Duration.Inf),
       Map("run" -> runId.toDouble), skipIfEmpty = true).rows // count via footers
-    // Bloom maintenance IMMEDIATELY after the commit, before any other
-    // fallible step (see the pre-commit collect above)
-    imageSeen.afterCommit(runId, nNewImages, imageIdHashes)
+    imageSeen.afterCommit(runId, nNewImages)
     imageRowsB.unpersist()
     imgCleanup()
 
@@ -688,10 +646,7 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
 
     // completion marker — LAST (see class doc)
     fetchlog.commitPrepared(Await.result(logPrep, Duration.Inf), baseMetrics)
-    // Bloom maintenance from THIS run's urls (on the driver already, from
-    // the fetch observation); a crash between bloomidx checkpoints costs
-    // the (tested) rebuild, never correctness
-    urlSeen.afterCommit(runId, nScheduled, runHashes)
+    urlSeen.afterCommit(runId, nScheduled)
 
     // pending compaction: fold base + deltas into a fresh base so later
     // derived reads stay O(live + deltas-since), not O(delta history)
@@ -738,8 +693,7 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
       totalLinks - nNewCand, pol.clampedDelay))
   }
 
-  /** Crawl until drained (or the safety cap). Flushes the bloomidx
-    * checkpoint at the end so a later resume skips the rebuild. */
+  /** Crawl until drained (or the safety cap). */
   def crawlAll(onRun: (RunStats, Double) => Unit = (_, _) => ()): Seq[RunStats] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[RunStats]
     var continue = true
@@ -752,7 +706,6 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
         case None => continue = false
       }
     }
-    urlSeen.flush()
     out.toSeq
   }
 

@@ -89,26 +89,6 @@ object BloomDedup {
     override def outputEncoder = Encoders.BINARY
   }
 
-  /** Driver-side incremental block maintenance: hash a micro-run's batch
-    * (already on the driver via the fetch pass's `observe`) into the
-    * standing block map — zero extra Spark jobs per run. Buckets/params
-    * must match [[buildIndex]]'s (`pmod` ≡ floorMod; same expected/fpp so
-    * rebuilt and incrementally-built blocks mergeInPlace-compatibly). */
-  def addHashes(blocks: Map[Int, Array[Byte]], hashes: Iterable[Long], numBuckets: Int,
-                expectedPerBucket: Long = 1L << 16, fpp: Double = 0.01): Map[Int, Array[Byte]] = {
-    val touched = scala.collection.mutable.HashMap.empty[Int, BloomFilter]
-    hashes.foreach { h =>
-      val b = java.lang.Math.floorMod(h, numBuckets.toLong).toInt
-      val bf = touched.getOrElseUpdate(b,
-        blocks.get(b).map(x => BloomFilter.readFrom(new ByteArrayInputStream(x)))
-          .getOrElse(BloomFilter.create(expectedPerBucket, fpp)))
-      bf.putLong(h)
-    }
-    blocks ++ touched.map { case (b, bf) =>
-      val o = new ByteArrayOutputStream(); bf.writeTo(o); b -> o.toByteArray
-    }
-  }
-
   /** Merge an index table that may hold several block rows per bucket
     * (e.g. one appended per micro-run) into one block per bucket. */
   def mergeIndex(idxRows: DataFrame): DataFrame = {
@@ -167,8 +147,8 @@ object BloomDedup {
   }
 
   /** Distributively fold raw key hashes into an existing block table —
-    * the sliced regime's compaction primitive (VERDICT r03 #1): per-run
-    * delta blocks built at the standing index's geometry would each be
+    * the index's compaction primitive (VERDICT r03 #1): per-run delta
+    * blocks built at the standing index's geometry would each be
     * full-index-sized (bit arrays are capacity-sized, not key-sized), and
     * blocks of DIFFERENT geometry refuse mergeInPlace — so recent keys
     * are folded in as raw hashes instead. The index bytes never transit
@@ -436,7 +416,7 @@ object BloomDedup {
     val before = sc.getPersistentRDDs.keySet
     // owned broadcasts (the per-call dedupScan path) are destroyed in a
     // finally: a task failure inside the eager checkpoint must not pin a
-    // flip-point-sized (≤ maxBroadcastBytes) block broadcast. STANDING
+    // budget-sized (≤ maxBroadcastBytes) block broadcast. STANDING
     // handles outlive the call by design — only the bloom test inside
     // this checkpoint reads the broadcast, so the owner may destroy it
     // any time after this call returns, even with probe frames pending.

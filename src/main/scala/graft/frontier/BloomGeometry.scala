@@ -6,16 +6,16 @@ package graft.frontier
   *
   * VERDICT r03 #1: the engine used to build every block at a FIXED
   * 65,536 expected keys/bucket, so past ~1-2M seen URLs the prefilter
-  * saturated (fpp→1) and the broadcast→sliced auto-flip could never fire
-  * from genuine growth (bit arrays never grow). Geometry is now DERIVED
+  * saturated (fpp→1) and the slice count could never grow with the
+  * crawl (bit arrays never grow). Geometry is now DERIVED
   * from the seen-set estimate on a doubling schedule:
   *
   *  - capacity per bucket doubles while a block stays under
   *    `maxBlockBytes` (so fpp stays at the 1% target as the crawl grows);
   *  - past that, the BUCKET COUNT doubles instead (VERDICT r03 #2: a
   *    10^10-key index at 16 buckets is ~750 MB per block — nothing the
-  *    sliced regime could subdivide; growing buckets keeps every block
-  *    individually broadcastable and gives [[CrawlEngine]]'s slicesFor a
+  *    slices could subdivide; growing buckets keeps every block
+  *    individually broadcastable and gives [[SeenSet]]'s slice count a
   *    fitting divisor at any scale).
   *
   * Doubling means O(log seen) rebuilds over a crawl's lifetime, each via
@@ -66,13 +66,13 @@ object BloomGeometry {
     BloomGeometry(buckets.toInt, cap)
   }
 
-  /** Smallest divisor of the geometry's bucket count (≥2) whose
-    * per-slice block share fits `maxBroadcastBytes`, bottoming out at
-    * one bucket per slice — which always fits when the geometry was
-    * built with `maxBlockBytes ≤ maxBroadcastBytes` (the engine uses
-    * budget/4). */
+  /** Smallest divisor of the geometry's bucket count whose per-slice
+    * block share fits `maxBroadcastBytes` — 1 when the whole index fits —
+    * bottoming out at one bucket per slice, which always fits when the
+    * geometry was built with `maxBlockBytes ≤ maxBroadcastBytes` (the
+    * engine uses budget/4). */
   def slicesFitting(g: BloomGeometry, maxBroadcastBytes: Long): Int = {
-    val needed = math.max(2L,
+    val needed = math.max(1L,
       (g.totalBytes + maxBroadcastBytes - 1) / maxBroadcastBytes)
     (needed.min(g.indexBuckets.toLong).toInt to g.indexBuckets)
       .find(g.indexBuckets % _ == 0).getOrElse(g.indexBuckets)

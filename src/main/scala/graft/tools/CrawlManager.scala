@@ -55,14 +55,16 @@ object CrawlManager {
         at.map(t => s", committed at ${java.time.Instant.ofEpochMilli(t)}").getOrElse("") + ")\n"
     }
     val bloomidx = table(root, "bloomidx")
-    val regime =
-      if (bloomidx.latestCovers.nonEmpty) "SLICED (beyond-broadcast)" else "broadcast"
-    sb ++= s"Dedup regime: $regime\n"
-    // below scanProbeMinSeen the URL set holds no Bloom state to checkpoint
+    // only covers-marked bases are a usable index; below scanProbeMinSeen
+    // the URL set writes none
+    val plan = bloomidx.latestCovers
+      .map(c => s"Bloom scan-probe (URL index covers fetchlog v$c)")
+      .getOrElse("exact anti-join (no URL index)")
+    sb ++= s"Dedup plan: $plan\n"
     val geometry = for (n <- bloomidx.latestSnapshot; b <- bloomidx.metricOf(n, "index_buckets");
                         c <- bloomidx.metricOf(n, "expected_per_bucket"))
       yield f"${b.toLong} buckets x ${c.toLong} keys (capacity ${b.toLong * c.toLong}%,d)"
-    sb ++= s"URL index geometry: ${geometry.getOrElse("none checkpointed")}\n"
+    sb ++= s"URL index geometry: ${geometry.getOrElse("none")}\n"
     Tables.foreach { t =>
       val st = table(root, t)
       val head = st.latestSnapshot.map(_.toString).getOrElse("-")

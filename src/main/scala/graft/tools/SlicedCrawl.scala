@@ -10,25 +10,25 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
 
-/** FULL `crawlAll` loop with the SLICED dedup regime ACTIVE at bench
-  * scale (VERDICT r04 #5: `dedupeng9` proved `dedupFrontier` at 10^9,
-  * but no complete fetch → parse → payload → fold → compaction loop had
-  * run with the sliced regime governing).
+/** FULL `crawlAll` loop with a MULTI-SLICE URL index at bench scale
+  * (VERDICT r04 #5: `dedupeng9` proved `dedupFrontier` at 10^9, but no
+  * complete fetch → parse → payload → fold → compaction loop had run
+  * with the index split into several broadcast slices).
   *
   * Setup: a root pre-seeded with a 1.34×10^8-attempt fetchlog HISTORY
   * (full engine schema + layout, built once and reused), crawled with a
-  * 32 MB broadcast budget so the engine's own estimate (~160 MB of
-  * index) routes it to the sliced regime ORGANICALLY — the same
-  * estimated-bytes flip as at 10^9 keys under the default budget, at a
-  * scale this sandbox can crawl end-to-end in minutes. The engine then:
+  * 32 MB per-slice broadcast budget so the engine's own estimate
+  * (~160 MB of index) splits the index into several slices — the same
+  * estimated-bytes slice count as at 10^9 keys under the default budget,
+  * at a scale one box can crawl end-to-end in minutes. The engine then:
   * rebuilds the table-resident index DISTRIBUTIVELY at its own geometry,
   * crawls the synthetic web through per-slice probe scans, FOLDS the
   * accumulated fetchlog delta into the index base every
-  * `bloomCommitEvery` runs (CrawlEngine's sliced maintenance path), and
+  * `bloomCommitEvery` runs (SeenSet's delta fold), and
   * bin-packs commit dirs at `compactEvery` cadence.
   *
   * Invariant check: the same web crawled on a FRESH root (default
-  * config, broadcast regime) must fetch EXACTLY the same distinct URL
+  * config, exact anti-join) must fetch EXACTLY the same distinct URL
   * set — the seeded history is disjoint from the web, so the sliced
   * machinery must not change one scheduling or dedup decision.
   *
@@ -108,8 +108,8 @@ object SlicedCrawl {
     ensureSeededRoot(spark, root, nSeen, buckets = 16)
 
     // 32 MB budget: geomFor(1.34e8) estimates ~160 MB of index, so the
-    // engine routes to the sliced regime BEFORE any driver collect —
-    // the same organic flip as 10^9 keys under the default 512 MB
+    // engine broadcasts it in several slices — the same slice planning
+    // as 10^9 keys under the default 512 MB
     val cfg = CrawlConfig(root, Politeness(perHostBudget = budget, hostSalts = 4),
       maxBroadcastBytes = 32L * 1024 * 1024, bloomCommitEvery = 4, compactEvery = 8)
     val engine = new CrawlEngine(spark, cfg, new SyntheticFetcher(webCfg), web.robots)
@@ -124,7 +124,7 @@ object SlicedCrawl {
         .withColumn("url_hash", xxhash64(col("url"))))
     warmOut.count(); warmCleanup()
     println(f"SLICED_CRAWL index ready in ${(System.nanoTime() - warm0) / 1e9}%.1f s " +
-      s"(slicedActive=${engine.slicedRegimeActive}, geom=${engine.urlIndexGeometry})")
+      s"(urlIndexSlices=${engine.urlIndexSlices}, geom=${engine.urlIndexGeometry})")
 
     val t0 = System.nanoTime()
     val stats = engine.crawlAll()
@@ -132,7 +132,7 @@ object SlicedCrawl {
     val fetched = stats.map(_.scheduled).sum
     println(f"SLICED_CRAWL runs=${stats.size} fetched=$fetched " +
       f"rate=${fetched / secs}%.1f urls/s wall=$secs%.1f s " +
-      s"slicedActive=${engine.slicedRegimeActive}")
+      s"urlIndexSlices=${engine.urlIndexSlices}")
 
     // fold/covers evidence: the bloomidx manifest trail
     val idx = engine.bloomidx
@@ -143,7 +143,7 @@ object SlicedCrawl {
         s"buckets=${idx.metricOf(n, "index_buckets")}")
     }
 
-    // invariant: same web on a fresh root (default broadcast config) must
+    // invariant: same web on a fresh root (default config) must
     // fetch the same distinct URL set — seeded history is disjoint
     import spark.implicits._
     val crawled = engine.fetchlog.read().get.filter(col("run") > 0)

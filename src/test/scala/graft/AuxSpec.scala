@@ -94,7 +94,7 @@ class AuxSpec extends AnyFunSuite {
     // everything below is metadata-only: no SparkSession touch
     val status = graft.tools.CrawlManager.status(root)
     assert(status.contains(s"Completed runs: ${stats.size}"))
-    assert(status.contains("Dedup regime: broadcast"))
+    assert(status.contains("Dedup plan: exact anti-join (no URL index)"))
     assert(status.contains("URL index geometry"))
     assert(status.contains("fetchlog"))
     val metrics = graft.tools.CrawlManager.metrics(root)

@@ -157,7 +157,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   test("below scanProbeMinSeen both seen sets hold no Bloom state: no index snapshots, state exact") {
     // the toy crawl never leaves the small regime at the default
     // threshold: its exact anti-join needs no blocks, so neither index
-    // table may be written (no checkpoint, no flush on drain)
+    // table may be written
     assert(engine.bloomidx.snapshots.isEmpty,
       s"bloomidx written below scanProbeMinSeen: ${engine.bloomidx.snapshots}")
     assert(engine.imgidx.snapshots.isEmpty,
@@ -179,10 +179,12 @@ class CrawlEngineSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("crawl-sliced").toString
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        bloomBuckets = 8, bloomSlices = 2),
+        bloomBuckets = 8, maxBroadcastBytes = 400L * 1024, scanProbeMinSeen = 0L),
       new SyntheticFetcher(webCfg), web.robots)
     e.seed(web.seeds)
     e.crawlAll()
+    // 8 × 65,536-key blocks (~78.5 KB each) need 2 slices of a 400 KB budget
+    assert(e.urlIndexSlices == 2)
     assert(e.seenSet() == engine.seenSet(), "sliced dedup changed the seen set")
     val imgs = e.imageTable().get.select("image_id", "phash")
       .as[(String, Long)].collect().toMap
@@ -205,73 +207,91 @@ class CrawlEngineSpec extends AnyFunSuite {
     val before = e.fetchlog.read().get.count()
     val e2 = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        bloomBuckets = 8, bloomSlices = 2),
+        bloomBuckets = 8, maxBroadcastBytes = 400L * 1024, scanProbeMinSeen = 0L),
       new SyntheticFetcher(webCfg), web.robots)
     e2.crawlAll()
     assert(e2.fetchlog.read().get.count() == before, "sliced resume refetched")
   }
 
-  test("auto-flip: outgrowing the broadcast budget switches to the sliced regime mid-crawl, state still exact") {
+  test("one bucket per slice (1 KB budget): URL and image indexes exact, resume clean") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val root = Files.createTempDirectory("crawl-autoflip").toString
-    // a budget every real block map exceeds (one block is ~78KB) forces
-    // the flip on the first maintenance pass; the rest of the crawl runs
-    // in the sliced regime and must still match the oracle's seen set
-    // scanProbeMinSeen = 0 forces the scan-probe regime from the start
-    // (toy tables would otherwise stay on the small-table legacy plan),
-    // so this test covers: broadcast scan-probe → flip → sliced, for
-    // BOTH the URL frontier and the image-id payload dedup
-    val e = new CrawlEngine(TestSpark.spark,
-      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        bloomBuckets = 8, maxBroadcastBytes = 1024L,
-        scanProbeMinSeen = 0L),
-      new SyntheticFetcher(webCfg), web.robots)
+    val root = Files.createTempDirectory("crawl-tinybudget").toString
+    // a 1 KB budget no ~78 KB block fits: both indexes broadcast one
+    // bucket per slice. scanProbeMinSeen = 0 puts the URL frontier and
+    // the image-id payload dedup on the scan-probe plan from first use
+    def cfg = CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
+      bloomBuckets = 8, maxBroadcastBytes = 1024L, scanProbeMinSeen = 0L)
+    val e = new CrawlEngine(TestSpark.spark, cfg, new SyntheticFetcher(webCfg), web.robots)
     e.seed(web.seeds)
     e.crawlAll()
+    assert(e.urlIndexSlices == 8)
     assert(e.seenSet() == engine.seenSet(), "auto-flip diverged the seen set")
-    // evidence the sliced bookkeeping took over: bloomidx commits carry
-    // covers markers (broadcast-mode checkpoints never do)
-    assert(e.bloomidx.latestCovers.nonEmpty,
-      "no covers-marked bloomidx commit — the flip never happened")
-    // the flip CARRIES the standing broadcast-regime blocks into the
-    // table — no commit in the bloomidx history may be an O(seen) rebuild
-    val manifests = java.nio.file.Files.list(
-        java.nio.file.Paths.get(root, "bloomidx", "commits")).iterator()
-    val texts = scala.jdk.CollectionConverters.IteratorHasAsScala(manifests).asScala
-      .map(p => new String(java.nio.file.Files.readAllBytes(p))).toSeq
-    assert(texts.exists(_.contains("\"carried\"")), "no carried-blocks base commit")
-    assert(!texts.exists(_.contains("\"rebuild\"")),
-      "flip fell back to the O(seen) index rebuild instead of carrying blocks")
-    // the 1KB budget also flips the IMAGE-id Bloom to its sliced regime
-    // after the first payload commit (the URL flip's twin): blocks carried
-    // into imgidx (never an O(ids) rebuild), payload table still exact
     val ids = e.imageTable().get.select("image_id").as[String].collect()
     assert(ids.length == ids.distinct.length, "sliced image dedup duplicated rows")
     assert(ids.toSet == oracle.imagesCaptions.keySet.toSet)
-    assert(e.imageSlicedRegimeActive, "image regime never flipped")
-    assert(e.imgidx.latestCovers.nonEmpty, "no covers-marked imgidx commit")
-    val imgManifests = java.nio.file.Files.list(
-        java.nio.file.Paths.get(root, "imgidx", "commits")).iterator()
-    val imgTexts = scala.jdk.CollectionConverters.IteratorHasAsScala(imgManifests)
-      .asScala.map(p => new String(java.nio.file.Files.readAllBytes(p))).toSeq
-    assert(imgTexts.exists(_.contains("\"carried\"")), "no carried image-blocks base")
-    assert(!imgTexts.exists(_.contains("\"rebuild\"")),
-      "image flip fell back to an O(ids) rebuild instead of carrying blocks")
-    // a FRESH engine on the flipped root must detect the regime from
-    // durable state (covers marker) — not re-enter the broadcast guard
-    // and collect the full index onto the driver
-    val resumed = new CrawlEngine(TestSpark.spark,
-      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        bloomBuckets = 8, maxBroadcastBytes = 1024L,
-        scanProbeMinSeen = 0L),
-      new SyntheticFetcher(webCfg), web.robots)
-    assert(resumed.slicedRegimeActive,
-      "resume on a flipped root re-entered the broadcast regime")
-    assert(resumed.imageSlicedRegimeActive,
-      "resume on a flipped root re-entered the broadcast IMAGE regime")
-    resumed.crawlAll() // drained: must not refetch or diverge
+    // both indexes live in their tables as covers-marked bases only
+    for (idx <- Seq(e.bloomidx, e.imgidx)) {
+      val head = idx.latestSnapshot.get
+      assert(idx.kindOf(head) == "base" && idx.coversOf(head).nonEmpty,
+        s"index head v$head is not a covers-marked base")
+    }
+    // a FRESH engine on the crawled root trusts both bases: it drains
+    // without refetching and without rebuilding either index
+    val before = e.fetchlog.read().get.count()
+    val rebuilds = () => Seq(e.bloomidx, e.imgidx).map(idx =>
+      idx.snapshots.count(n => idx.metricOf(n, "rebuild").contains(1.0)))
+    val rebuildsBefore = rebuilds()
+    val resumed = new CrawlEngine(TestSpark.spark, cfg, new SyntheticFetcher(webCfg), web.robots)
+    resumed.crawlAll()
+    assert(resumed.fetchlog.read().get.count() == before, "resume refetched")
+    // a dedup pass reads the URL index whatever the drain derived
+    val probe = spark.range(16)
+      .select(concat(lit("http://fresh.test/"), col("id").cast("string")).as("url"))
+      .withColumn("url_hash", xxhash64(col("url")))
+    val (out, cleanup) = resumed.dedupFrontier(probe)
+    assert(out.count() == 16, "fresh keys dropped by the resumed dedup")
+    cleanup()
+    assert(rebuilds() == rebuildsBefore, "resume rebuilt an index it should have trusted")
     assert(resumed.seenSet() == engine.seenSet(), "flipped-root resume diverged")
+  }
+
+  test("the URL index is table-resident from first use; covers-less index snapshots are never trusted") {
+    val root = Files.createTempDirectory("crawl-idxbase").toString
+    val e1 = newEngine(root, scanProbeMinSeen = 0L)
+    e1.seed(web.seeds)
+    // run 1 dedups against an empty fetchlog; run 2's dedup is the
+    // index's first use and writes it as a covers-marked base
+    assert(e1.runOnce().isDefined && e1.runOnce().isDefined)
+    val first = e1.bloomidx.latestSnapshot.get
+    assert(e1.bloomidx.kindOf(first) == "base", s"bloomidx v$first is not a base")
+    val covers = e1.bloomidx.coversOf(first)
+    assert(covers.isDefined, s"bloomidx v$first has no covers marker")
+    assert(graft.tools.CrawlManager.status(root).contains(
+      s"Dedup plan: Bloom scan-probe (URL index covers fetchlog v${covers.get})"))
+    // plant a covers-less append shaped like an old block-map checkpoint:
+    // blocks tagged with the head snapshot, `covers_fetchlog_snapshot` and
+    // geometry as metrics, but no covers marker in the manifest
+    val head = e1.fetchlog.latestDataSnapshot.get
+    val planted = e1.bloomidx.read().get.select("bucket", "bloom")
+      .withColumn("fetchlog_snapshot", lit(head))
+    e1.bloomidx.commit(planted, Map("covers_fetchlog_snapshot" -> head.toDouble,
+      "index_buckets" -> e1.urlIndexGeometry.indexBuckets.toDouble,
+      "expected_per_bucket" -> e1.urlIndexGeometry.capacityPerBucket.toDouble),
+      None, coalesceTo = 1)
+    assert(e1.bloomidx.latestCovers.isEmpty)
+    assert(graft.tools.CrawlManager.status(root).contains(
+      "Dedup plan: exact anti-join (no URL index)"))
+    val plantedV = e1.bloomidx.latestSnapshot.get
+    // a fresh engine must rebuild rather than read the planted blocks
+    val e2 = newEngine(root, scanProbeMinSeen = 0L)
+    e2.crawlAll()
+    val rebuilt = e2.bloomidx.snapshots.filter(n => n > plantedV &&
+      e2.bloomidx.metricOf(n, "rebuild").contains(1.0))
+    assert(rebuilt.nonEmpty, s"no rebuild after the covers-less snapshot v$plantedV")
+    rebuilt.foreach(n =>
+      assert(e2.bloomidx.kindOf(n) == "base" && e2.bloomidx.coversOf(n).nonEmpty))
+    assert(e2.seenSet() == oracle.seenSet, "covers-less index resume diverged")
   }
 
   test("bin-pack merges during the crawl: state exact, sliced covers survive, resume clean") {
@@ -282,11 +302,12 @@ class CrawlEngineSpec extends AnyFunSuite {
     // sliced regime (covers markers must survive merge commits because
     // they compare against latestDataSnapshot, not latestSnapshot)
     def cfg = CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-      bloomBuckets = 8, bloomSlices = 2, compactEvery = 2,
+      bloomBuckets = 8, maxBroadcastBytes = 400L * 1024, compactEvery = 2,
       scanProbeMinSeen = 0L)
     val e = new CrawlEngine(TestSpark.spark, cfg, new SyntheticFetcher(webCfg), web.robots)
     e.seed(web.seeds)
     e.crawlAll()
+    assert(e.urlIndexSlices == 2)
     assert(e.fetchlog.snapshots.exists(id => e.fetchlog.kindOf(id) == "merge"),
       "no merge commit ever happened — cadence broken")
     assert(e.seenSet() == engine.seenSet(), "bin-packing diverged the seen set")
@@ -306,9 +327,11 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   test("stale bloom index (crash between fetchlog and bloomidx commits) forces rebuild, state still exact") {
     val root = Files.createTempDirectory("crawl-stalebloom").toString
-    // bloomCommitEvery = 1 so run 2 definitely checkpointed the index —
-    // the crash we simulate is losing that checkpoint. scanProbeMinSeen
-    // = 0: only the scan-probe regime keeps a Bloom index at all
+    // bloomCommitEvery = 1 so run 2 definitely folded its keys into the
+    // index — the crash we simulate is losing that fold commit; the
+    // older base then covers an earlier snapshot and the lost keys ride
+    // the exact recent-delta anti-join. scanProbeMinSeen = 0: only the
+    // scan-probe regime keeps a Bloom index at all
     val e1 = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
         bloomBuckets = 8, bloomCommitEvery = 1, scanProbeMinSeen = 0L),
@@ -426,11 +449,11 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(storedCap > floor, s"persisted capacity $storedCap never grew past the floor")
 
     // fpp evidence (the saturation this fixes was fpp→1): fresh keys
-    // against the ENGINE-built, end-of-crawl-flushed blocks must read
+    // against the ENGINE-built blocks of the latest index base must read
     // "maybe seen" at ~the 1% build target, not ≈ 100%
     val idxBuckets = e.bloomidx.metricOf(lastIdx, "index_buckets").get.toInt
-    // broadcast-regime bloomidx accumulates one checkpoint per flush;
-    // only the LATEST (max fetchlog_snapshot) is the standing index
+    // the latest base is the standing index (it carries the max
+    // fetchlog_snapshot)
     val idxAll = e.bloomidx.read().get
     val lastSnap = idxAll.agg(org.apache.spark.sql.functions.max("fetchlog_snapshot"))
       .as[Long].collect().head
@@ -516,7 +539,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("crawl-resize-sliced").toString
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
-        bloomBuckets = 4, bloomSlices = 2, bloomCommitEvery = 2,
+        bloomBuckets = 4, bloomCommitEvery = 2,
         scanProbeMinSeen = 0L, bloomCapacityFloor = 64L),
       new SyntheticFetcher(wideCfg), wideWeb.robots)
     e.seed(wideWeb.seeds)
@@ -566,7 +589,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("crawl-imgfold").toString
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
-        bloomBuckets = 4, bloomSlices = 2, bloomCommitEvery = 2,
+        bloomBuckets = 4, bloomCommitEvery = 2,
         scanProbeMinSeen = 0L, bloomCapacityFloor = 512L),
       new SyntheticFetcher(wideCfg), wideWeb.robots)
     e.seed(wideWeb.seeds)
@@ -593,12 +616,11 @@ class CrawlEngineSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     // scanProbeMinSeen = 1: the first payload commit moves the image-id
-    // set from the plain anti-join into the Bloom regime, with no blocks
-    // loaded and no hashes collected for that batch. The next dedup must
-    // build its blocks from the committed table — blocks folded from the
-    // empty batch alone would call every committed id definitely-new,
-    // and ids reused across pages would be stored twice. The URL set
-    // crosses the same way at the first fetchlog commit.
+    // set from the plain anti-join into the Bloom regime with no index
+    // yet. The next dedup must build its index from the committed table —
+    // an index missing those ids would call them definitely-new, and ids
+    // reused across pages would be stored twice. The URL set crosses the
+    // same way at the first fetchlog commit.
     val root = Files.createTempDirectory("crawl-imgcross").toString
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,

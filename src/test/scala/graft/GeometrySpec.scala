@@ -29,6 +29,8 @@ class GeometrySpec extends AnyFunSuite {
         s"est=$est: per-slice ${g.totalBytes / slices} exceeds budget $budget " +
           s"(geometry $g, $slices slices)")
     }
+    // an index that fits the budget whole broadcasts as ONE slice
+    assert(BloomGeometry.slicesFitting(BloomGeometry.forEstimate(100000L, 16, maxBlock), budget) == 1)
   }
 
   test("doubling schedule: growth rebuild count is logarithmic in the seen set") {
