@@ -1,12 +1,12 @@
 package graft.crawl
 
 import graft.fetch.{FetchStage, Fetcher}
-import graft.frontier.{BloomGeometry, Politeness, Scheduler, SeenSet}
+import graft.frontier.{BloomDedup, BloomGeometry, Politeness, Scheduler, SeenSet}
 import graft.functions.UrlFunctions._
 import graft.images.ImageKit
 import graft.model._
 import graft.table.SnapshotTable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -57,9 +57,16 @@ final case class CrawlConfig(
       * broadcast dims), so AQE has nothing load-bearing to decide per
       * run. Re-enable for deployments whose per-run batches are large
       * enough (≥ millions of rows) that skew/coalesce re-planning pays.
-      * Only the per-run path is affected — the session's setting is
-      * restored after each run, so one-time rebuilds/compactions driven
-      * outside runOnce keep the session default. */
+      *
+      * It is one key of the engine's fixed per-run SQL conf overlay; the
+      * other two turn code generation off (whole-stage codegen, and the
+      * Janino-compiled projection/predicate/ordering factories), because
+      * on kilobyte batches compiling costs more than it saves and a run
+      * needs more classes than Spark's 100-entry code cache holds (see
+      * [[CrawlEngine.runOnce]]). Only `seed` and `runOnce` run under the
+      * overlay; each key is restored afterwards, so queries, benches and
+      * everything driven outside the engine's runs keep the session
+      * default. */
     adaptivePerRun: Boolean = false,
     /** Politeness windows (waves) batched per engine run (VERDICT r04 #1
       * lever (b)): the per-run fixed cost — 3 table writes + manifests +
@@ -247,8 +254,9 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
         col("bucket"), hash)
         .sortWithinPartitions(col("bucket"), hash)
 
-  /** Seed the frontier (run 0 commit). Seed i gets seq = i+1, depth 0. */
-  def seed(urls: Seq[String]): Unit = {
+  /** Seed the frontier (run 0 commit). Seed i gets seq = i+1, depth 0.
+    * Runs under the per-run conf, like runOnce. */
+  def seed(urls: Seq[String]): Unit = underRunConf {
     val rows = urls.zipWithIndex.map { case (u, i) =>
       val cu = graft.urlkit.UrlKit.canonicalize(u)
       FrontierEntry(cu, graft.urlkit.UrlKit.xxhash64(cu),
@@ -259,13 +267,16 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
       Map("n_seeds" -> rows.size.toDouble), Some("seq"))
   }
 
-  /** Retryable successor rows from attempt rows: failed below the retry
-    * cap spawns (attempt+1) in the pending shape. THE retry predicate —
-    * pendingMaterialized and rebuildPending must agree or the derived
-    * pending set silently diverges from the rebuild path. */
+  /** THE retry predicate over attempt rows: failed below the retry cap.
+    * pendingMaterialized and rebuildPending must agree on it or the
+    * derived pending set silently diverges from the rebuild path. */
+  private val retryable: Column =
+    (col("status") === 500 || col("status") === 0) && col("attempt") < cfg.maxRetries
+
+  /** Retryable successor rows from attempt rows: each [[retryable]] row
+    * spawns (attempt+1) in the pending shape. */
   private def retryRows(attempts: DataFrame): DataFrame =
-    attempts.filter((col("status") === 500 || col("status") === 0) &&
-        col("attempt") < cfg.maxRetries)
+    attempts.filter(retryable)
       .select(col("url"), col("url_hash"), col("host"),
         url_path(col("url")).as("path"), lit(0.0).as("priority"),
         col("depth"), col("seq"), (col("attempt") + 1).as("attempt"))
@@ -294,9 +305,15 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
     val (deduped, cleanup) = urlSeen.dedup(fUnique)
     val newPart = deduped.withColumn("attempt", lit(1))
       .select(PendingCols.map(col): _*)
+    // latest attempt per hash, over only the hashes holding a retryable
+    // row — a hash whose latest attempt is retryable holds one, so the
+    // semi-join is exact, and the window shuffles those few hashes'
+    // rows instead of the whole attempt history
     val retryPart = fetchlog.read().map { log =>
+      val retryHashes = BloomDedup.keyJoinSide(log.filter(retryable).select("url_hash"))
       val w = Window.partitionBy(col("url_hash")).orderBy(desc("attempt"))
-      retryRows(log.withColumn("__rn", row_number().over(w))
+      retryRows(log.join(retryHashes, Seq("url_hash"), "left_semi")
+        .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn"))
     }
     (retryPart.map(newPart.unionByName(_)).getOrElse(newPart), cleanup)
@@ -368,19 +385,47 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
     }
   }
 
-  /** One micro-run; None when the frontier is drained. Wraps the run in
-    * the configured per-run AQE mode (see CrawlConfig.adaptivePerRun),
-    * restoring the session's setting afterwards. */
-  def runOnce(): Option[RunStats] = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key, "true")
-    val want = cfg.adaptivePerRun.toString
-    if (prev == want) runOnceInner()
-    else {
-      spark.conf.set(key, want)
-      try runOnceInner() finally spark.conf.set(key, prev)
+  /** The SQL conf every engine run executes under (runOnce, seed). */
+  private val runConf = Seq(
+    "spark.sql.adaptive.enabled" -> cfg.adaptivePerRun.toString,
+    "spark.sql.codegen.wholeStage" -> "false",
+    // internal SQLConf: projections, predicates and orderings take
+    // Spark's interpreted evaluators (CrawlEngineSpec pins that no run
+    // after the second compiles a class)
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** Runs `body` under [[runConf]], then restores each key as the caller
+    * had it: an explicit value is set back, an unset key is unset. */
+  private def underRunConf[T](body: => T): T = {
+    val explicit = spark.conf.getAll
+    val prev = runConf.map { case (k, _) => k -> explicit.get(k) }
+    runConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** One micro-run; None when the frontier is drained.
+    *
+    * The run executes interpreted, under [[runConf]]: no whole-stage
+    * code generation, and Spark's interpreted projections, predicates and
+    * orderings instead of Janino-compiled ones. A micro-run moves
+    * kilobytes, so compiling a class costs more than the class ever saves;
+    * and a run's plans need more distinct classes than Spark's static
+    * 100-entry code cache (`spark.sql.codegen.cache.maxEntries`) holds,
+    * so with code generation on, every run evicted and recompiled the
+    * previous run's classes (about 900 compiles per cold crawl, a quarter
+    * of its wall time). Interpreted, a crawl compiles a handful of classes
+    * in its first two runs and in its first compacting run (the range
+    * partitioner's orderings, which Spark generates in every factory
+    * mode), and none after. AQE follows CrawlConfig
+    * .adaptivePerRun. Plans, jobs and outputs are the same either way;
+    * only how they execute changes. Each key is restored afterwards, so
+    * queries, benches and dedupFrontier/seenSet callers keep the session
+    * default. */
+  def runOnce(): Option[RunStats] = underRunConf(runOnceInner())
 
   private def runOnceInner(): Option[RunStats] = {
     // persist: the pending set is DERIVED now (base + deltas + two
@@ -565,8 +610,8 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
       .as[(String, String)]
       .mapPartitions { it =>
         it.map { case (id, caption) =>
-          val (bytes, w, h, f) = ImageKit.generate(id)
-          ImageCaptionRow(id, bytes, w, h, f, caption, ImageKit.phash(bytes))
+          val p = ImageKit.payload(id)
+          ImageCaptionRow(id, p.bytes, p.w, p.h, p.fmt, caption, p.phash)
         }
       }.toDF()
     // repartition, NOT a commit-side coalesce: coalesce would pull the

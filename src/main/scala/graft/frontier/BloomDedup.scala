@@ -564,29 +564,30 @@ object BloomDedup {
     // survives without probing the seen side; only fpp·|candidates|
     // + true duplicates hit the exact set. One scan of the candidate
     // subtree (no union → no double compute).
-    val seenSide = antiJoinSide(seenKeys.withColumnRenamed("url_hash", "__seen_hash"))
+    val seenSide = keyJoinSide(seenKeys.withColumnRenamed("url_hash", "__seen_hash"))
     val out = flagged.join(seenSide,
         col("url_hash") === col("__seen_hash") && col("__maybe"), "left_anti")
       .select(outCols.map(col): _*)
     (out, bc)
   }
 
-  /** The key-only seen side of an exact anti-join, hinted BROADCAST while
-    * its optimizer-estimated bytes fit [[AntiBroadcastBytes]] (guide §3.1:
-    * the 10 MB auto threshold is far below what a key-only build side
-    * affords, and a sort-merge anti shuffles AND sorts every candidate —
-    * measured 2.3x slower at 4M candidates vs 2M seen keys). Past the
-    * bound, or when the session turned broadcasts off
+  /** The key-only side of an exact anti- or semi-join (the seen set of a
+    * dedup, the retryable hashes of a pending rebuild), hinted BROADCAST
+    * while its optimizer-estimated bytes fit [[AntiBroadcastBytes]]
+    * (guide §3.1: the 10 MB auto threshold is far below what a key-only
+    * build side affords, and a sort-merge anti shuffles AND sorts every
+    * candidate — measured 2.3x slower at 4M candidates vs 2M seen keys).
+    * Past the bound, or when the session turned broadcasts off
     * (`spark.sql.autoBroadcastJoinThreshold` < 0), the planner keeps its
     * own choice (sort-merge at true scale). */
-  private[frontier] def antiJoinSide(seenKeys: DataFrame): DataFrame = {
+  private[graft] def keyJoinSide(seenKeys: DataFrame): DataFrame = {
     val conf = seenKeys.sparkSession.sessionState.conf
     val est = seenKeys.queryExecution.optimizedPlan.stats.sizeInBytes
     if (conf.autoBroadcastJoinThreshold >= 0 && est <= AntiBroadcastBytes) broadcast(seenKeys)
     else seenKeys
   }
 
-  /** Estimated-bytes bound under which [[antiJoinSide]] broadcasts a
+  /** Estimated-bytes bound under which [[keyJoinSide]] broadcasts a
     * key-only seen side instead of leaving the strategy to the 10 MB auto
     * threshold. 64 MB of 8-byte keys ≈ 8M seen rows — a hash relation
     * every executor holds comfortably; beyond it the planner's sort-merge

@@ -193,7 +193,7 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
   def dedup(df: DataFrame): (DataFrame, () => Unit) = seenKeys match {
     case None => (df, () => ())
     case Some(seen) if !scanProbeRegime =>
-      (df.join(BloomDedup.antiJoinSide(seen.select(key)), Seq(key), "left_anti"), () => ())
+      (df.join(BloomDedup.keyJoinSide(seen.select(key)), Seq(key), "left_anti"), () => ())
     case Some(seen) =>
       val cand = if (keyIsHash) df else df.withColumn("url_hash", hash)
       val (out, cleanup) = slicedDedup(cand, seen)

@@ -140,6 +140,10 @@ object BloomRuntime {
   * duplicate fetches) and reaches the generated code via the references
   * array, NOT as a spliced literal — a changing literal would change the
   * generated source on every rebuild and pay a fresh janino compile.
+  *
+  * Both paths are live: engine runs execute with code generation off
+  * (CrawlEngine.runOnce) and take `eval`; benches and queries take the
+  * generated code.
   */
 case class BloomMightContain(
     epoch: Long,

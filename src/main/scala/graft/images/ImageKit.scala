@@ -114,6 +114,23 @@ object ImageKit {
     (encode(pixels(imageId, w, h), w, h, f), w, h, f)
   }
 
+  /** A stored payload: `generate`'s bytes, dims and format, plus `rgb`,
+    * the pixels a decoder reads back from `bytes`. */
+  final case class Payload(bytes: Array[Byte], w: Int, h: Int, fmt: String, rgb: Array[Int]) {
+    /** Equals `ImageKit.phash(bytes)`. */
+    def phash: Long = phashOfPixels(rgb, w, h)
+  }
+
+  /** `generate` plus the decoded pixels. PNG is lossless, so its decoded
+    * pixels are the generated ones and only JPEG pays a decode. */
+  def payload(imageId: String): Payload = {
+    val (w, h) = dims(imageId)
+    val f = fmt(imageId)
+    val px = pixels(imageId, w, h)
+    val bytes = encode(px, w, h, f)
+    Payload(bytes, w, h, f, if (f == "png") px else decode(bytes).rgb)
+  }
+
   /** Decode any supported byte payload back to RGB. */
   def decode(bytes: Array[Byte]): Decoded = rgbOf(ImageIO.read(new ByteArrayInputStream(bytes)))
 

@@ -579,8 +579,9 @@ object TrainingData {
   /** Multimodal binary-payload pipeline: deterministic image bytes as an
     * opaque binary column with typed metadata, then decode + feature
     * extraction (mean brightness, phash) in a batched partition pass —
-    * the Scala analogue of a mapInPandas image stage. The decode is real
-    * (javax.imageio); at cluster scale the same shape holds with the
+    * the Scala analogue of a mapInPandas image stage. JPEG decodes for
+    * real (javax.imageio); lossless PNG reads its generated pixels
+    * (ImageKit.payload); at cluster scale the same shape holds with the
     * bytes column read from the payload table. */
   def q33MultimodalFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -590,11 +591,10 @@ object TrainingData {
     e.select("vec_id", "image_id").as[(Long, String)]
       .mapPartitions { it =>
         it.map { case (vecId, id) =>
-          val (bytes, w, h, fmt) = ImageKit.generate(id)
-          val d = ImageKit.decode(bytes)
-          val brightness = d.rgb.map(p =>
-            (((p >> 16) & 0xFF) + ((p >> 8) & 0xFF) + (p & 0xFF)) / 3.0).sum / d.rgb.length
-          (vecId, id, fmt, w, h, bytes.length, ImageKit.phash(bytes),
+          val p = ImageKit.payload(id)
+          val brightness = p.rgb.map(px =>
+            (((px >> 16) & 0xFF) + ((px >> 8) & 0xFF) + (px & 0xFF)) / 3.0).sum / p.rgb.length
+          (vecId, id, p.fmt, p.w, p.h, p.bytes.length, p.phash,
             math.round(brightness * 100.0) / 100.0)
         }
       }

@@ -1,12 +1,13 @@
 package graft
 
 import graft.crawl.{CrawlConfig, CrawlEngine}
-import graft.fetch.SyntheticFetcher
+import graft.fetch.{Fetcher, SyntheticFetcher}
 import graft.frontier.Politeness
 import graft.images.ImageKit
 import graft.oracle.OracleCrawler
-import graft.web.{SyntheticWeb, WebConfig}
-import org.apache.spark.sql.functions.{col, concat, lit, xxhash64}
+import graft.web.{FetchResponse, SyntheticWeb, WebConfig}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, concat, lit, row_number, xxhash64}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -633,6 +634,104 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(dups == 0, s"regime crossover stored $dups image rows twice")
     assert(ids.toSet == oracle.imagesCaptions.keySet.toSet)
     assert(e.seenSet() == oracle.seenSet, "URL regime crossover diverged the seen set")
+  }
+
+  test("pending rebuild over a history with retryable latest attempts stays exact") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val root = Files.createTempDirectory("crawl-rebuild-retry").toString
+    val e1 = newEngine(root)
+    e1.seed(web.seeds)
+    assert(e1.runOnce().isDefined && e1.runOnce().isDefined)
+    // the cut must hold a hash whose latest attempt is retryable, or the
+    // rebuild's retry term has nothing to find
+    val latest = Window.partitionBy(col("url_hash")).orderBy(col("attempt").desc)
+    val retryableLatest = e1.fetchlog.read().get
+      .withColumn("rn", row_number().over(latest)).filter(col("rn") === 1)
+      .filter(col("status").isin(0, 500) && col("attempt") < maxRetries).count()
+    assert(retryableLatest > 0, "no retryable latest attempt at the cut — raise failPct")
+    // lose every pending base: the next run must rebuild from first principles
+    e1.pending.snapshots.foreach { n =>
+      Files.delete(java.nio.file.Paths.get(root, "pending", "commits", f"v$n%06d.json"))
+    }
+    val e2 = newEngine(root)
+    e2.crawlAll()
+    assert(e2.pending.snapshots.exists(e2.pending.metricOf(_, "rebuild").contains(1.0)),
+      "no rebuild base was committed")
+    assert(e2.seenSet() == oracle.seenSet, "rebuilt pending set diverged from the oracle")
+    def maxAttempts(e: CrawlEngine): Map[String, Int] =
+      e.fetchlog.read().get.groupBy("url").agg(org.apache.spark.sql.functions.max("attempt"))
+        .as[(String, Int)].collect().toMap
+    assert(maxAttempts(e2) == maxAttempts(engine), "rebuild changed the retry history")
+  }
+
+  test("warm micro-runs compile no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val root = Files.createTempDirectory("crawl-nocodegen").toString
+    // one window per run: enough runs to see warm ones. compactEvery = 2:
+    // run 2 compacts, so by then every run path has run once — a first
+    // compaction compiles its range-partitioning orderings, which Spark
+    // generates whatever the factory mode — and the warm runs below
+    // include compacting and bin-packing ones
+    val e = new CrawlEngine(TestSpark.spark,
+      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries, bloomBuckets = 8,
+        windowsPerRun = 1, compactEvery = 2),
+      new SyntheticFetcher(webCfg), web.robots)
+    e.seed(web.seeds)
+    assert(e.runOnce().isDefined && e.runOnce().isDefined)
+    val compiledAfterRun2 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    var runs = 2
+    while (e.runOnce().isDefined) runs += 1
+    assert(runs >= 4, s"crawl drained after $runs runs")
+    val compiledAtDrain = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(compiledAtDrain == compiledAfterRun2,
+      s"runs 3..$runs compiled ${compiledAtDrain - compiledAfterRun2} classes")
+    assert(e.pending.snapshots.count(e.pending.metricOf(_, "compaction").contains(1.0)) >= 2,
+      "no compacting run among the warm ones")
+    assert(e.seenSet() == oracle.seenSet)
+  }
+
+  test("seed and runOnce restore the caller's SQL conf, also when the fetcher throws") {
+    val spark = TestSpark.spark
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage",
+      "spark.sql.codegen.factoryMode")
+    def explicitNow = keys.map(k => k -> spark.conf.getAll.get(k)).toMap
+    def shownNow = keys.map(k => k -> spark.conf.get(k)).toMap
+    val failing = new Fetcher {
+      override def fetch(url: String, attempt: Int): FetchResponse =
+        throw new IllegalStateException("fetcher down")
+    }
+    val saved = explicitNow
+    try {
+      // a caller that set explicit values (none of them the engine's), then
+      // one that left every key at its default
+      for (explicit <- Seq(Some(Seq("true", "true", "CODEGEN_ONLY")), None)) {
+        explicit match {
+          case Some(vs) => keys.zip(vs).foreach { case (k, v) => spark.conf.set(k, v) }
+          case None => keys.foreach(spark.conf.unset)
+        }
+        val (explicitBefore, shownBefore) = (explicitNow, shownNow)
+        def unchanged(step: String): Unit = {
+          assert(explicitNow == explicitBefore, s"after $step ($explicit)")
+          assert(shownNow == shownBefore, s"after $step ($explicit)")
+        }
+        val e = newEngine(Files.createTempDirectory("crawl-conf").toString)
+        e.seed(web.seeds)
+        unchanged("seed")
+        assert(e.runOnce().isDefined)
+        unchanged("runOnce")
+        val broken = new CrawlEngine(spark,
+          CrawlConfig(Files.createTempDirectory("crawl-conf-fail").toString,
+            Politeness(perHostBudget = budget), maxRetries, bloomBuckets = 8),
+          failing, web.robots)
+        broken.seed(web.seeds)
+        intercept[Exception](broken.runOnce())
+        unchanged("a throwing runOnce")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("resume from last committed snapshot equals uninterrupted run") {

@@ -91,6 +91,19 @@ class ImageKitSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(got.rgb, ref), "padded raster read as if packed")
   }
 
+  test("payload equals generate byte for byte and its phash equals phash(bytes) bit for bit") {
+    val many = (0 until 2000).map(i => f"img-$i%08d")
+    val fmts = many.map { id =>
+      val (bytes, w, h, f) = ImageKit.generate(id)
+      val p = ImageKit.payload(id)
+      assert(java.util.Arrays.equals(p.bytes, bytes) && p.w == w && p.h == h && p.fmt == f,
+        s"payload differs from generate for $id")
+      assert(p.phash == ImageKit.phash(bytes), s"phash differs for $id ($f)")
+      f
+    }
+    assert(fmts.contains("png") && fmts.contains("jpeg"))
+  }
+
   test("phash is stable under jpeg re-encode and separates distinct images") {
     val id = ids.find(ImageKit.fmt(_) == "jpeg").get
     val (bytes, w, h, _) = ImageKit.generate(id)

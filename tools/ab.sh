@@ -1,0 +1,82 @@
+#!/usr/bin/env bash
+# Interleaved A/B of the benchmark: a base revision against the working tree.
+#
+#   tools/ab.sh <rev> <workload> <seed...>
+#   tools/ab.sh HEAD~1 crawl-deep 21 22 23
+#
+# <rev> is exported (git archive) into $AB_DIR/base; the working tree,
+# uncommitted edits included, is the "head" side. Each side builds into its
+# own CARGO_TARGET_DIR ($AB_DIR/base-build, $AB_DIR/head-build), so neither
+# recompiles the other's classes and each keeps its own history fixtures.
+# Per seed, both sides run `perfbench/run.py --trace 0` once, one after the
+# other; the side that goes first alternates from seed to seed, so slow
+# drift of a shared host does not favour either side.
+#
+# Prints one line per invocation and, at the end, the per-metric medians of
+# both sides with the relative change. Every invocation runs for
+# BENCHMARK.json's run_seconds. Work directory: $AB_DIR (default
+# ${TMPDIR:-/tmp}/graft-ab), reused, so unchanged builds and fixtures are
+# not redone.
+set -euo pipefail
+
+if [ $# -lt 3 ]; then
+  sed -n '2,19p' "$0" | sed 's/^# \{0,1\}//'
+  exit 2
+fi
+rev=$1; workload=$2; shift 2
+repo=$(git rev-parse --show-toplevel)
+ab=${AB_DIR:-${TMPDIR:-/tmp}/graft-ab}
+seconds=$(python3 -c 'import json, sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
+  "$repo/BENCHMARK.json")
+results=$ab/results.jsonl
+
+mkdir -p "$ab"
+rm -rf "$ab/base"
+mkdir "$ab/base"
+git -C "$repo" archive "$(git -C "$repo" rev-parse --verify "$rev^{commit}")" | tar -x -C "$ab/base"
+: > "$results"
+
+# run_side <side> <seed>: one invocation; prints its line, records its result
+run_side() {
+  local side=$1 seed=$2 root last log=$ab/$1-seed$2.log
+  if [ "$side" = base ]; then root=$ab/base; else root=$repo; fi
+  : > "$log"
+  if ! last=$(cd "$root" && CARGO_TARGET_DIR=$ab/$side-build \
+      python3 perfbench/run.py --workload "$workload" --seed "$seed" \
+        --seconds "$seconds" --trace 0 2>>"$log" | tee -a "$log" | tail -n 1); then
+    echo "seed=$seed side=$side: run failed, see $log" >&2
+    exit 1
+  fi
+  python3 - "$side" "$seed" "$last" "$results" <<'PY'
+import json, sys
+side, seed, line, results = sys.argv[1], int(sys.argv[2]), sys.argv[3], sys.argv[4]
+r = json.loads(line)
+r["metrics"] = {k: v["value"] for k, v in r["metrics"].items()}
+r.update(side=side, seed=seed)
+with open(results, "a") as f:
+    f.write(json.dumps(r) + "\n")
+m = " ".join(f"{k}={v:.2f}" for k, v in sorted(r["metrics"].items()))
+print(f"seed={seed} side={side} {m} failed={r['failed']}/{r['attempted']}")
+PY
+}
+
+i=0
+for seed in "$@"; do
+  if [ $((i % 2)) -eq 0 ]; then order="base head"; else order="head base"; fi
+  for side in $order; do run_side "$side" "$seed"; done
+  i=$((i + 1))
+done
+
+python3 - "$results" "$rev" "$workload" <<'PY'
+import json, statistics, sys
+rows = [json.loads(l) for l in open(sys.argv[1])]
+print(f"{sys.argv[3]}: base={sys.argv[2]} vs head=working tree, {len(rows) // 2} pair(s)")
+for k in sorted(rows[0]["metrics"]):
+    med = {s: statistics.median(r["metrics"][k] for r in rows if r["side"] == s)
+           for s in ("base", "head")}
+    rel = (med["head"] / med["base"] - 1) * 100 if med["base"] else float("nan")
+    print(f"  {k}: median base {med['base']:.2f} head {med['head']:.2f} ({rel:+.1f}%)")
+for s in ("base", "head"):
+    print(f"  {s} failed/attempted: {sum(r['failed'] for r in rows if r['side'] == s)}"
+          f"/{sum(r['attempted'] for r in rows if r['side'] == s)}")
+PY
