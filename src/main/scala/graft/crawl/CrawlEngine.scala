@@ -219,8 +219,6 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
     * hook). */
   def urlIndexSlices: Int = urlSeen.sliceCount
 
-  def currentDelayMs: Double = pol.clampedDelay
-
   /** Bucket-clustered RANGE repartition (NOTES r02 #3): each written
     * file then spans a narrow CONTIGUOUS bucket range (usually one
     * bucket), so a pushed IN(bucket,…) filter skips whole files via

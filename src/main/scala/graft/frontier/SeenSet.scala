@@ -141,15 +141,19 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
   private def indexRows(seen: DataFrame): DataFrame = {
     val head = table.latestDataSnapshot.getOrElse(0L)
     val stored = storedGeom
-    val coversOk = idx.latestCovers.exists(_ <= head)
-    val geomOk = stored.exists(_.totalCapacity >= rowsEst)
-    if (!coversOk || !geomOk) {
+    if (!usableBase(head, stored)) {
       geom = geomFor(rowsEst)
       idx.commitBase(sliceClustered(buildIndex(seen).withColumn(snapshotCol, lit(head))),
         Map("rebuild" -> 1.0) ++ geomMetrics, covers = Some(head))
     } else stored.foreach(g => geom = g)
     idx.read().get.select("bucket", "bloom")
   }
+
+  /** Whether the index's latest commit is a base the dedup may trust at
+    * table head `head`: it covers a snapshot ≤ the head, and its `stored`
+    * geometry holds the current estimate. */
+  private def usableBase(head: Long, stored: => Option[BloomGeometry]): Boolean =
+    idx.latestCovers.exists(_ <= head) && stored.exists(_.totalCapacity >= rowsEst)
 
   /** Scan-probe over the table-resident index: each hash-range slice's
     * standing blocks broadcast once per index version (peak index memory
@@ -215,8 +219,7 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     // into blocks the very next dedup's geometry check would discard
     rowsEst += added
     val head = table.latestDataSnapshot.getOrElse(0L)
-    if (scanProbeRegime && runId % cfg.bloomCommitEvery == 0 &&
-        idx.latestCovers.exists(_ <= head) && storedGeom.exists(_.totalCapacity >= rowsEst)) {
+    if (scanProbeRegime && runId % cfg.bloomCommitEvery == 0 && usableBase(head, storedGeom)) {
       table.readBetween(idx.latestCovers.get, head).foreach { recent =>
         val folded = BloomDedup.foldHashes(
           BloomDedup.mergeIndex(idx.read().get.select("bucket", "bloom")),

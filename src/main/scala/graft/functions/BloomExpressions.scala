@@ -133,7 +133,9 @@ object BloomRuntime {
 /** `bloom_might_contain(bucket, hash)` over a broadcast Bloom-block map —
   * a native, whole-stage-codegen Catalyst expression. The candidate side
   * stays a single narrow codegen'd stage: no join with the index, no
-  * per-row byte movement; the generated code calls [[BloomRuntime.test]].
+  * per-row byte movement; the generated code calls
+  * [[BloomRuntime.testCounting]], which counts each positive verdict into
+  * `survivorAcc` (the scan-probe's survivor count).
   *
   * `epoch` uniquely identifies the built index: it keys the executor-side
   * cache (stale blocks across rebuilds would cause false negatives ⇒
@@ -148,7 +150,7 @@ object BloomRuntime {
 case class BloomMightContain(
     epoch: Long,
     blocks: Broadcast[Map[Int, Array[Byte]]],
-    survivorAcc: Option[LongAccumulator],
+    survivorAcc: LongAccumulator,
     left: Expression,
     right: Expression) extends BinaryExpression {
 
@@ -163,12 +165,8 @@ case class BloomMightContain(
     val b = left.eval(input)
     val h = right.eval(input)
     if (b == null || h == null) false
-    else survivorAcc match {
-      case Some(acc) =>
-        BloomRuntime.testCounting(epoch, b.asInstanceOf[Int], h.asInstanceOf[Long], blocks, acc)
-      case None =>
-        BloomRuntime.test(epoch, b.asInstanceOf[Int], h.asInstanceOf[Long], blocks)
-    }
+    else BloomRuntime.testCounting(epoch, b.asInstanceOf[Int], h.asInstanceOf[Long], blocks,
+      survivorAcc)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -178,16 +176,10 @@ case class BloomMightContain(
       "java.lang.Long")
     val bcRef = ctx.addReferenceObj("bloomBlocks", blocks,
       "org.apache.spark.broadcast.Broadcast")
-    val call = survivorAcc match {
-      case Some(acc) =>
-        val accRef = ctx.addReferenceObj("bloomAcc", acc,
-          "org.apache.spark.util.LongAccumulator")
-        s"graft.functions.BloomRuntime.testCounting(" +
-          s"$epochRef.longValue(), ${bucketGen.value}, ${hashGen.value}, $bcRef, $accRef)"
-      case None =>
-        s"graft.functions.BloomRuntime.test(" +
-          s"$epochRef.longValue(), ${bucketGen.value}, ${hashGen.value}, $bcRef)"
-    }
+    val accRef = ctx.addReferenceObj("bloomAcc", survivorAcc,
+      "org.apache.spark.util.LongAccumulator")
+    val call = s"graft.functions.BloomRuntime.testCounting(" +
+      s"$epochRef.longValue(), ${bucketGen.value}, ${hashGen.value}, $bcRef, $accRef)"
     ev.copy(
       code = code"""
         ${bucketGen.code}
@@ -203,13 +195,8 @@ case class BloomMightContain(
 }
 
 object BloomMightContain {
-  def apply(epoch: Long, blocks: Broadcast[Map[Int, Array[Byte]]],
-            bucket: Column, hash: Column): Column =
-    Bridge.column(BloomMightContain(epoch, blocks, None,
-      Bridge.expression(bucket), Bridge.expression(hash)))
-
   def counting(epoch: Long, blocks: Broadcast[Map[Int, Array[Byte]]],
                acc: LongAccumulator, bucket: Column, hash: Column): Column =
-    Bridge.column(BloomMightContain(epoch, blocks, Some(acc),
+    Bridge.column(BloomMightContain(epoch, blocks, acc,
       Bridge.expression(bucket), Bridge.expression(hash)))
 }

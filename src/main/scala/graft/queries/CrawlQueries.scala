@@ -56,8 +56,11 @@ object CrawlQueries {
       |  FROM orders)
       |GROUP BY host ORDER BY host""".stripMargin
 
-  /** J4/north-rule dedup: candidates ∖ seen through the REAL Bloom
-    * prefilter + exact anti-join pipeline; oracle = NOT EXISTS. */
+  /** J4/north-rule dedup: candidates ∖ seen through the library's
+    * [[BloomDedup.dedup]]; oracle = NOT EXISTS. At this seen size the
+    * key-only seen side fits a broadcast, so the library takes the exact
+    * broadcast anti-join and never reads the Bloom index (the scan-probe
+    * only pays once the seen side would otherwise be exchanged). */
   def q17FrontierDedup(spark: SparkSession, dir: String): DataFrame = {
     // distinct on the two SOURCE integers, not the synthesized strings
     // (guide §2.3, shuffle fewer bytes): the URL is a bijection of
@@ -84,9 +87,7 @@ object CrawlQueries {
       .withColumn("url_hash", xxhash64(col("url")))
     val o = Tables.load(spark, dir, "orders")
     // same source-integer distinct as the candidate side (the seen URL
-    // is a bijection of (o_custkey % 20, o_orderkey)); this subtree is
-    // computed twice per run — once for the index build, once for the
-    // anti-join probe broadcast — so halving its work pays double
+    // is a bijection of (o_custkey % 20, o_orderkey))
     val seen = o.filter(col("o_orderkey") % 5 === 0)
       .select((col("o_custkey") % 20).as("hk"), col("o_orderkey")).distinct()
       .select(concat(lit("http://host-"), lpad(col("hk").cast("string"), 3, "0"),

@@ -215,15 +215,6 @@ class SnapshotTable(spark: => SparkSession, root: String,
     commitKind(df, metrics, seqCol, coalesceTo, "base", None, covers,
       partitionBy = partitionBy)
 
-  /** Append, returning the committed row count (from footers) too.
-    * `skipIfEmpty`: when the write turns out to hold 0 rows, reclaim the
-    * data dir and commit nothing — keeps micro-run tail commits from
-    * growing the table's dir list (each read unions every committed dir). */
-  def commitCounted(df: DataFrame, metrics: Map[String, Double], seqCol: Option[String] = None,
-                    coalesceTo: Int = 0, skipIfEmpty: Boolean = false,
-                    partitionBy: Seq[String] = Nil): CommitResult =
-    commitKind(df, metrics, seqCol, coalesceTo, "append", None, None, skipIfEmpty, partitionBy)
-
   /** Bin-pack compaction (the Iceberg rewrite-data-files analogue): the
     * OLDEST ≥2 (≤ maxDirs) unmerged append dirs since the last base are
     * rewritten into ONE merge commit, which supersedes them for reads at
@@ -288,13 +279,6 @@ class SnapshotTable(spark: => SparkSession, root: String,
       merges = Some(candidates), mergeLevel = level).id)
   }
 
-  /** Append with a `covers` staleness marker. */
-  def commitCovering(df: DataFrame, metrics: Map[String, Double], covers: Long,
-                     seqCol: Option[String] = None, coalesceTo: Int = 0,
-                     skipIfEmpty: Boolean = false, partitionBy: Seq[String] = Nil): CommitResult =
-    commitKind(df, metrics, seqCol, coalesceTo, "append", None, Some(covers), skipIfEmpty,
-      partitionBy)
-
   /** Write `df`'s data files for the next snapshot id, without the
     * manifest. Returns footer-derived row count + lineage; pair with
     * [[commitPrepared]] to publish. */
@@ -326,12 +310,12 @@ class SnapshotTable(spark: => SparkSession, root: String,
 
   private def commitKind(df: DataFrame, metrics: Map[String, Double], seqCol: Option[String],
                          coalesceTo: Int, kind: String, deleteKeys: Option[DataFrame],
-                         covers: Option[Long], skipIfEmpty: Boolean = false,
+                         covers: Option[Long],
                          partitionBy: Seq[String] = Nil,
                          merges: Option[Seq[Long]] = None,
                          mergeLevel: Int = 1): CommitResult =
     publish(prepare(df, seqCol, coalesceTo, partitionBy), metrics, kind, deleteKeys,
-      covers, skipIfEmpty, merges, mergeLevel)
+      covers, skipIfEmpty = false, merges, mergeLevel)
 
   private def publish(p: Prepared, metrics: Map[String, Double], kind: String,
                       deleteKeys: Option[DataFrame], covers: Option[Long],

@@ -305,4 +305,54 @@ class FilterSpec extends AnyFunSuite {
       case None => spark.conf.unset(key)
     }
   }
+
+  test("bloom dedup past the broadcast bound takes the scan-probe and equals the exact anti-join") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, concat, lit, xxhash64}
+    def key(c: org.apache.spark.sql.Column) = xxhash64(concat(lit("u"), c.cast("string")))
+    // 2,000 seen keys under a ~75.5 MB optimizer estimate: without CBO a
+    // Filter keeps its child's size, so the 9M-row range sets the
+    // estimate past the 64 MB bound under which dedup stays exact
+    val seen = spark.range(0, 9L << 20).filter(col("id") < 2000)
+      .select(key(col("id")).as("url_hash"))
+    assert(seen.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(64L << 20))
+    val cand = spark.range(0, 3000)
+      .select(key(col("id")).as("url_hash"), concat(lit("u"), col("id").cast("string")).as("url"))
+    val exact = cand.join(seen, Seq("url_hash"), "left_anti")
+      .select("url_hash").as[Long].collect().sorted.toSeq
+    assert(exact.size == 1000)
+    val idx = BloomDedup.buildIndex(seen, numBuckets = 8, expectedPerBucket = 1024)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = BloomDedup.dedup(cand, seen, Some(idx), numBuckets = 8)
+    // the scan-probe checkpoints its Bloom verdicts eagerly; the exact
+    // anti-join persists nothing
+    val created = sc.getPersistentRDDs.keySet -- before
+    try {
+      assert(created.nonEmpty, "no verdict checkpoint: dedup did not take the scan-probe")
+      assert(out.select("url_hash").as[Long].collect().sorted.toSeq == exact)
+    } finally created.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
+  }
+
+  test("dedupSliced with scanProbe = false releases every slice's checkpoint before returning") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    val seenHashes = (1 to 4000).map(_ => rnd.nextLong()).distinct
+    val candHashes = (seenHashes.take(1500) ++ (1 to 3000).map(_ => rnd.nextLong())).distinct
+    val seen = seenHashes.toDF("url_hash")
+    val cand = candHashes.map(h => (h, s"u$h")).toDF("url_hash", "url")
+    val exact = cand.join(seen, Seq("url_hash"), "left_anti").count()
+    val idxRows = BloomDedup.buildIndex(seen, 16, expectedPerBucket = 1024)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs
+    var kept = 0L
+    val cleanup = BloomDedup.dedupSliced(cand, seen, idxRows, 16, 4) { (_, df) =>
+      kept += df.count()
+    }
+    assert(sc.getPersistentRDDs == before, "a slice checkpoint outlived dedupSliced")
+    assert(kept == exact)
+    cleanup()
+  }
 }
