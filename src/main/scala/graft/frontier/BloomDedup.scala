@@ -13,17 +13,17 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
   * (`bucket = pmod(url_hash, numBuckets)`), built distributively with an
   * [[Aggregator]] over `spark-sketch`'s BloomFilter. The Bloom test is
   * only a prefilter in front of the exact seen set (SURVEY.md §7.4), and
-  * it only pays where it keeps the seen side from being exchanged, so
-  * [[dedup]] picks one of two exact plans by the seen side's size:
+  * it only pays where it keeps the seen side from being exchanged:
   *
-  *   - while the key-only seen side fits a broadcast
-  *     ([[AntiBroadcastBytes]]): a plain anti-join against it
-  *     ([[keyJoinSide]]) — the index is never read;
-  *   - beyond it: the scan-probe ([[dedupScan]]) — Bloom verdicts for
-  *     every candidate (the blocks broadcast once per executor, tested in
-  *     a narrow projection), then only the "might contain" survivors —
+  *   - [[dedup]] is a plain exact anti-join ([[keyJoinSide]]: the seen
+  *     keys broadcast while they fit [[AntiBroadcastBytes]], the
+  *     planner's own join beyond) — its index argument is never read;
+  *   - [[dedupScan]] is the scan-probe — Bloom verdicts for every
+  *     candidate (the blocks broadcast once per executor, tested in a
+  *     narrow projection), then only the "might contain" survivors —
   *     fpp·|candidates| + true duplicates — probe a pruned SCAN of the
-  *     seen set, which is never shuffled.
+  *     seen set, which is never shuffled. The engine's [[SeenSet]] takes
+  *     it above its `scanProbeMinSeen`.
   *
   * Beyond a driver-sized index, [[dedupSliced]] runs the scan-probe per
   * hash-range slice of the index.
@@ -505,25 +505,15 @@ object BloomDedup {
     }
 
   /** Candidates NOT in the seen set. `candidates` must carry `url_hash`;
-    * rows are returned with their original columns. While the key-only
-    * seen side fits [[AntiBroadcastBytes]] (or there is no index) this is
-    * an exact anti-join through [[keyJoinSide]] and `bloomIndex` is never
-    * read; beyond it, the [[dedupScan]] plan over the collected index.
-    * The scan-probe's candidate checkpoint is then left to Spark's
-    * ContextCleaner: the returned frame reads it, so it may only go once
-    * the frame is unreachable. */
+    * rows are returned with their original columns. An exact anti-join
+    * through [[keyJoinSide]]; `bloomIndex` and `numBuckets` are not read
+    * (the scan-probe is [[dedupScan]]; no workload has yet measured where
+    * it beats this plan for a one-shot batch). */
   def dedup(candidates: DataFrame, seen: DataFrame, bloomIndex: Option[DataFrame],
-            numBuckets: Int = 64): DataFrame = {
+            numBuckets: Int = 64): DataFrame =
     // no distinct on the right side: left_anti is set-semantics on the
     // probe already — a distinct would only add a full shuffle
-    val seenKeys = seen.select("url_hash")
-    bloomIndex match {
-      case Some(idx) if !fitsBroadcast(seenKeys) =>
-        dedupScan(candidates, seen, collectBlocks(idx), numBuckets)._1
-      case _ =>
-        candidates.join(keyJoinSide(seenKeys), Seq("url_hash"), "left_anti")
-    }
-  }
+    candidates.join(keyJoinSide(seen.select("url_hash")), Seq("url_hash"), "left_anti")
 
   /** The key-only side of an exact anti- or semi-join (the seen set of a
     * dedup, the retryable hashes of a pending rebuild), hinted BROADCAST
@@ -534,14 +524,12 @@ object BloomDedup {
     * Past the bound, or when the session turned broadcasts off
     * (`spark.sql.autoBroadcastJoinThreshold` < 0), the planner keeps its
     * own choice (sort-merge at true scale). */
-  private[graft] def keyJoinSide(seenKeys: DataFrame): DataFrame =
-    if (seenKeys.sparkSession.sessionState.conf.autoBroadcastJoinThreshold >= 0 &&
-        fitsBroadcast(seenKeys)) broadcast(seenKeys)
+  private[graft] def keyJoinSide(seenKeys: DataFrame): DataFrame = {
+    val conf = seenKeys.sparkSession.sessionState.conf
+    val est = seenKeys.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (conf.autoBroadcastJoinThreshold >= 0 && est <= AntiBroadcastBytes) broadcast(seenKeys)
     else seenKeys
-
-  /** Whether `keys`' optimizer-estimated bytes fit [[AntiBroadcastBytes]]. */
-  private def fitsBroadcast(keys: DataFrame): Boolean =
-    keys.queryExecution.optimizedPlan.stats.sizeInBytes <= AntiBroadcastBytes
+  }
 
   /** Estimated-bytes bound under which [[keyJoinSide]] broadcasts a
     * key-only seen side instead of leaving the strategy to the 10 MB auto

@@ -57,10 +57,9 @@ object CrawlQueries {
       |GROUP BY host ORDER BY host""".stripMargin
 
   /** J4/north-rule dedup: candidates ∖ seen through the library's
-    * [[BloomDedup.dedup]]; oracle = NOT EXISTS. At this seen size the
-    * key-only seen side fits a broadcast, so the library takes the exact
-    * broadcast anti-join and never reads the Bloom index (the scan-probe
-    * only pays once the seen side would otherwise be exchanged). */
+    * [[BloomDedup.dedup]]; oracle = NOT EXISTS. The library's exact
+    * anti-join never reads the Bloom index, and at this seen size the
+    * key-only seen side fits a broadcast. */
   def q17FrontierDedup(spark: SparkSession, dir: String): DataFrame = {
     // distinct on the two SOURCE integers, not the synthesized strings
     // (guide §2.3, shuffle fewer bytes): the URL is a bijection of

@@ -306,14 +306,14 @@ class FilterSpec extends AnyFunSuite {
     }
   }
 
-  test("bloom dedup past the broadcast bound takes the scan-probe and equals the exact anti-join") {
+  test("bloom dedup past the broadcast bound stays exact: index unread, nothing persisted") {
     val spark = TestSpark.spark
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, concat, lit, xxhash64}
     def key(c: org.apache.spark.sql.Column) = xxhash64(concat(lit("u"), c.cast("string")))
     // 2,000 seen keys under a ~75.5 MB optimizer estimate: without CBO a
     // Filter keeps its child's size, so the 9M-row range sets the
-    // estimate past the 64 MB bound under which dedup stays exact
+    // estimate past the 64 MB bound under which the seen keys broadcast
     val seen = spark.range(0, 9L << 20).filter(col("id") < 2000)
       .select(key(col("id")).as("url_hash"))
     assert(seen.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(64L << 20))
@@ -322,17 +322,14 @@ class FilterSpec extends AnyFunSuite {
     val exact = cand.join(seen, Seq("url_hash"), "left_anti")
       .select("url_hash").as[Long].collect().sorted.toSeq
     assert(exact.size == 1000)
-    val idx = BloomDedup.buildIndex(seen, numBuckets = 8, expectedPerBucket = 1024)
+    // not an index at all: reading it (collectBlocks) would fail
+    val notAnIndex = spark.range(1).toDF("x")
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = BloomDedup.dedup(cand, seen, Some(idx), numBuckets = 8)
-    // the scan-probe checkpoints its Bloom verdicts eagerly; the exact
-    // anti-join persists nothing
-    val created = sc.getPersistentRDDs.keySet -- before
-    try {
-      assert(created.nonEmpty, "no verdict checkpoint: dedup did not take the scan-probe")
-      assert(out.select("url_hash").as[Long].collect().sorted.toSeq == exact)
-    } finally created.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
+    val before = sc.getPersistentRDDs
+    val out = BloomDedup.dedup(cand, seen, Some(notAnIndex), numBuckets = 8)
+    assert(out.select("url_hash").as[Long].collect().sorted.toSeq == exact)
+    assert(!out.queryExecution.executedPlan.toString.contains("bloom_might_contain"))
+    assert(sc.getPersistentRDDs == before, "dedup left a persisted frame behind")
   }
 
   test("dedupSliced with scanProbe = false releases every slice's checkpoint before returning") {
