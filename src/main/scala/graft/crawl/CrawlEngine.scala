@@ -180,16 +180,6 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
 
   private val robotsDf = robotsRules.toDF()
   private var pol: Politeness = cfg.politeness
-  // micro-run batches produce many small shuffles: let AQE coalesce them
-  // to size rather than spreading every exchange across max parallelism
-  // (the Spark-recommended setting for latency-sensitive small stages;
-  // at cluster scale advisory-size coalescing is what you want anyway)
-  spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-  // point-lookup probes (BloomDedup.dedupScan plan 2) push literal
-  // IN(url_hash, …) lists into the parquet scan; Spark's default
-  // threshold (10) would rewrite them to a min/max RANGE — useless over
-  // uniform hashes. Must exceed dedupScan's pointLookupMaxRows.
-  spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "2048")
   // global politeness-window counter: the fetchlog `run` column carries
   // the WINDOW id (the reference-equivalent micro-run counter), not the
   // commit id — with windowsPerRun > 1 one commit spans several windows.
@@ -386,6 +376,16 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
   /** The SQL conf every engine run executes under (runOnce, seed). */
   private val runConf = Seq(
     "spark.sql.adaptive.enabled" -> cfg.adaptivePerRun.toString,
+    // micro-run batches produce many small shuffles: let AQE coalesce them
+    // to size rather than spreading every exchange across max parallelism
+    // (the Spark-recommended setting for latency-sensitive small stages;
+    // at cluster scale advisory-size coalescing is what you want anyway)
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+    // point-lookup probes (BloomDedup.dedupScan plan 2) push literal
+    // IN(url_hash, …) lists into the parquet scan; Spark's default
+    // threshold (10) would rewrite them to a min/max RANGE — useless over
+    // uniform hashes. Must exceed dedupScan's pointLookupMaxRows.
+    "spark.sql.parquet.pushdown.inFilterThreshold" -> "2048",
     "spark.sql.codegen.wholeStage" -> "false",
     // internal SQLConf: projections, predicates and orderings take
     // Spark's interpreted evaluators (CrawlEngineSpec pins that no run

@@ -23,10 +23,17 @@ final class DomNode(
   def classes: Set[String] =
     attrs.getOrElse("class", "").split("\\s+").filter(_.nonEmpty).toSet
 
-  /** All descendants in document order (excluding text nodes). */
-  def descendants: Iterator[DomNode] =
-    children.iterator.flatMap(c =>
-      if (c.isText) Iterator.empty else Iterator(c) ++ c.descendants)
+  /** All descendants in document order (excluding text nodes). Walks an
+    * explicit stack, so nesting depth is bounded by the heap, not the
+    * thread's stack. */
+  def descendants: Iterator[DomNode] = new Iterator[DomNode] {
+    private val pending = mutable.Stack.empty[DomNode]
+    pushChildren(DomNode.this)
+    private def pushChildren(n: DomNode): Unit =
+      n.children.reverseIterator.filterNot(_.isText).foreach(pending.push)
+    def hasNext: Boolean = pending.nonEmpty
+    def next(): DomNode = { val n = pending.pop(); pushChildren(n); n }
+  }
 
   def findAll(tagName: String): Seq[DomNode] =
     descendants.filter(_.tag == tagName).toSeq
@@ -42,13 +49,14 @@ final class DomNode(
     * NBSP), not Java trim (ASCII-only). */
   def strippedText: String = {
     val sb = new StringBuilder
-    def walk(n: DomNode): Unit = {
+    val pending = mutable.Stack(this)
+    while (pending.nonEmpty) {
+      val n = pending.pop()
       if (n.isText) {
         val t = MiniDom.pyStrip(n.textContent)
         if (t.nonEmpty) sb.append(t)
-      } else n.children.foreach(walk)
+      } else n.children.reverseIterator.foreach(pending.push)
     }
-    walk(this)
     sb.toString
   }
 }

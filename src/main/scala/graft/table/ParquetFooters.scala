@@ -33,9 +33,8 @@ object ParquetFooters {
 
   private val conf = new Configuration()
 
-  /** Stats for every part-file under `dir` — RECURSIVE, so Hive-style
-    * partitioned commits (`bucket=K/part-*.parquet`) get per-file lineage
-    * too. Sorted by path relative to `dir`. */
+  /** Stats for every part-file under `dir`, sorted by path relative to
+    * `dir`. */
   def stats(dir: Path, seqCol: Option[String]): Seq[FileStats] = {
     if (!Files.isDirectory(dir)) return Seq.empty
     val stream = Files.walk(dir)

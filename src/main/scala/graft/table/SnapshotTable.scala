@@ -4,7 +4,11 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Snapshot-committed Parquet table: the offline stand-in for an Iceberg
   * table (SURVEY.md §7.4 — no Iceberg jar ships in /opt/spark/jars).
@@ -12,13 +16,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Layout:
   * {{{
   *   <root>/data/commit-<N>/part-*.parquet     // data files per commit
-  *   <root>/deletes/commit-<N>/part-*.parquet  // equality-delete keys (optional)
   *   <root>/commits/v<N>.json                  // manifest (atomic rename)
   * }}}
   *
-  * Commit protocol: data (and delete) files are fully written first, then
-  * the manifest is staged to `commits/.tmp-v<N>.json` and atomically renamed
-  * to `v<N>.json`. A crash between the two leaves orphan data dirs that no
+  * Commit protocol: data files are fully written first, then the manifest
+  * is staged to `commits/.tmp-v<N>.json` and atomically renamed to
+  * `v<N>.json`. A crash between the two leaves orphan data dirs that no
   * manifest references — readers only union data dirs of committed
   * manifests, so reads are snapshot-isolated and resume is "read the last
   * committed snapshot" (north rule: resumable from checkpoint). Each
@@ -26,23 +29,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (north rule: per-partition lineage + metrics per commit), computed from
   * the written files' parquet FOOTERS on the driver — a metadata-only read,
   * no Spark job per commit (real Iceberg records the same stats in its
-  * manifests the same way).
+  * manifests the same way). Every metadata method reads a manifest back
+  * as one [[SnapshotTable.Manifest]] record.
   *
-  * Three commit kinds (Iceberg merge-on-read emulation):
+  * Three commit kinds:
   *  - '''append''' — adds rows; a snapshot is the union of appends.
-  *  - '''delta''' — append + equality-delete keys in one manifest
-  *    (Iceberg v2 equality deletes). A delete key row removes every earlier
-  *    appended row matching it on ALL key columns. Callers must key deletes
-  *    so a deleted row is never re-appended under the same key — then
-  *    global set semantics (∪appends ∖ ∪deletes) equal the per-commit
-  *    fold. This is the general-purpose API (pinned by the spec's model
-  *    check); the crawl engine's pending table goes one step further and
-  *    never writes deletes at all — its `(url_hash, attempt)` delete keys
-  *    are derivable from the fetchlog, so the read side anti-joins that
-  *    instead (CrawlEngine.pendingMaterialized).
   *  - '''base''' — a compaction: rewrites the full table state; readers
-  *    anchor at the latest base ≤ the requested snapshot and apply only
-  *    later deltas. Bounds merge-on-read cost to O(base + deltas-since).
+  *    anchor at the latest base ≤ the requested snapshot and union only
+  *    the commits after it. Bounds read cost to O(base + appends-since).
+  *  - '''merge''' — a bin-pack: rewrites older data dirs into one without
+  *    changing the table's content ([[mergeAppends]], [[mergeMerges]]).
   */
 class SnapshotTable(spark: => SparkSession, root: String,
                     writeOptions: Map[String, String] = Map.empty) {
@@ -52,19 +48,12 @@ class SnapshotTable(spark: => SparkSession, root: String,
   // `writeOptions` ride every data write (e.g. parquet column bloom
   // filters for point-probed key columns — SnapshotTable.bloomFilterFor)
 
-  import SnapshotTable.{CommitResult, Prepared}
+  import SnapshotTable.{CommitResult, Manifest, Prepared}
 
   private def commitsDir: Path = Paths.get(root, "commits")
   private def dataDir(n: Long): Path = Paths.get(root, "data", f"commit-$n%06d")
-  private def deleteDir(n: Long): Path = Paths.get(root, "deletes", f"commit-$n%06d")
 
   private val ManifestRe = "^v([0-9]{6})\\.json$".r
-  private val KindRe = "\"kind\":\"([a-z]+)\"".r
-  private val CoversRe = "\"covers\":(-?[0-9]+)".r
-  private val HasDeletesRe = "\"delete_dir\":".r
-  private val PartitionByRe = "\"partition_by\":\\[([^\\]]*)\\]".r
-  private val MergesRe = "\"merges\":\\[([^\\]]*)\\]".r
-  private val MergeLevelRe = "\"level\":([0-9]+)".r
 
   /** Ids of committed snapshots, ascending. */
   def snapshots: Seq[Long] = {
@@ -79,64 +68,43 @@ class SnapshotTable(spark: => SparkSession, root: String,
 
   def latestSnapshot: Option[Long] = snapshots.lastOption
 
-  /** Latest snapshot that ADDED data (append/delta) — merge and base
-    * commits rewrite existing rows without changing table content, so
-    * staleness markers (`covers`) that certify content coverage compare
-    * against THIS head: an index covering the last data commit still
-    * covers the table after a bin-pack merge. */
-  def latestDataSnapshot: Option[Long] =
-    snapshots.filter(id => { val k = kindOf(id); k == "append" || k == "delta" }).lastOption
+  /** Snapshot `n`'s manifest, read from `commits/v<N>.json`. */
+  def manifest(n: Long): Manifest =
+    SnapshotTable.readManifest(n, commitsDir.resolve(f"v$n%06d.json"))
 
-  /** Data-dir ids superseded by a merge commit ≤ n (their rows live in
-    * the merge commit's dir from n on; originals stay on disk for time
-    * travel — a production table service would expire them). */
-  private def mergedAway(n: Long): Set[Long] =
-    snapshots.filter(id => id <= n && kindOf(id) == "merge")
-      .flatMap(id => MergesRe.findFirstMatchIn(manifestText(id)).map(_.group(1)))
-      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong)).toSet
+  /** Ids of the snapshots that ADDED data (append commits), ascending. */
+  def dataSnapshots: Seq[Long] = snapshots.filter(kindOf(_) == "append")
 
-  private def manifestText(n: Long): String =
-    new String(Files.readAllBytes(commitsDir.resolve(f"v$n%06d.json")), StandardCharsets.UTF_8)
+  /** Latest snapshot that ADDED data — merge and base commits rewrite
+    * existing rows without changing table content, so staleness markers
+    * (`covers`) that certify content coverage compare against THIS head:
+    * an index covering the last data commit still covers the table after
+    * a bin-pack merge. */
+  def latestDataSnapshot: Option[Long] = dataSnapshots.lastOption
 
-  /** Commit kind of snapshot `n` ("append" when the field is absent —
-    * pre-v2 manifests). */
-  def kindOf(n: Long): String =
-    KindRe.findFirstMatchIn(manifestText(n)).map(_.group(1)).getOrElse("append")
+  /** Data-dir ids superseded by the merge commits among `ms` (their rows
+    * live in the merge commit's dir from then on; originals stay on disk
+    * for time travel — a production table service would expire them). */
+  private def mergedAway(ms: Seq[Manifest]): Set[Long] =
+    ms.filter(_.kind == "merge").flatMap(_.merges).toSet
+
+  /** The manifests from the latest base among `ms` on (all of them when
+    * there is no base): the commits a read at the last of `ms` unions. */
+  private def sinceBase(ms: Seq[Manifest]): Seq[Manifest] =
+    ms.drop(math.max(0, ms.lastIndexWhere(_.kind == "base")))
+
+  /** Commit kind of snapshot `n`: append, base or merge. */
+  def kindOf(n: Long): String = manifest(n).kind
 
   /** The `covers` staleness marker of snapshot `n`, when recorded. */
-  def coversOf(n: Long): Option[Long] =
-    CoversRe.findFirstMatchIn(manifestText(n)).map(_.group(1).toLong)
+  def coversOf(n: Long): Option[Long] = manifest(n).covers
 
   /** `covers` of the latest snapshot (None when the table is empty or the
     * latest commit carries no marker). */
   def latestCovers: Option[Long] = latestSnapshot.flatMap(coversOf)
 
-  /** A metric recorded in snapshot `n`'s manifest (None when absent).
-    * Metric names must not collide with top-level manifest fields —
-    * callers use distinctive keys (e.g. "expected_per_bucket"). */
-  def metricOf(n: Long, key: String): Option[Double] =
-    // a full JSON-number pattern: the old char-class ([0-9.eE+]) had no
-    // '-' INSIDE it, so a negative exponent (4.9E-4) matched as "4.9E"
-    // and .toDouble threw (ADVICE r04 — latent for any sub-1e-3 metric)
-    s""""$key":(-?[0-9]+(?:\\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)""".r
-      .findFirstMatchIn(manifestText(n))
-      .map(_.group(1).toDouble)
-
-  /** Hive-style partition columns of snapshot `n`'s data layout (empty =
-    * flat). */
-  def partitionSchemeOf(n: Long): Seq[String] =
-    PartitionByRe.findFirstMatchIn(manifestText(n))
-      .map(_.group(1).split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty))
-      .getOrElse(Seq.empty)
-
-  /** The table's partition layout (from the latest commit; empty = flat).
-    * Spark cannot union flat and `col=value/` dirs in one read, so the
-    * layout is a TABLE property: the first commit fixes it and later
-    * commits follow it regardless of what the caller requests (a resume
-    * on an old flat-layout root keeps writing flat). */
-  def partitionScheme: Seq[String] =
-    latestSnapshot.map(partitionSchemeOf).getOrElse(Seq.empty)
+  /** A metric recorded in snapshot `n`'s manifest (None when absent). */
+  def metricOf(n: Long, key: String): Option[Double] = manifest(n).metrics.get(key)
 
   /** Read the table at the latest committed snapshot (None when empty). */
   def read(): Option[DataFrame] = readAt(latestSnapshot.getOrElse(-1L))
@@ -148,72 +116,43 @@ class SnapshotTable(spark: => SparkSession, root: String,
   // commit by ANOTHER SnapshotTable instance or process on the same root
   // advances the head, which invalidates this instance's cached shape on
   // its next read instead of pinning the first-seen schema for the
-  // instance's lifetime. Flat layouts only.
-  private var cachedSchema: Option[(Long, org.apache.spark.sql.types.StructType)] = None
+  // instance's lifetime.
+  private var cachedSchema: Option[(Long, StructType)] = None
   // all-nullable: a commit's tight nullability must not reject older
   // commits' null cells when the cached shape is applied to a union read
-  private def nullable(s: org.apache.spark.sql.types.StructType) =
-    org.apache.spark.sql.types.StructType(s.fields.map(_.copy(nullable = true)))
+  private def nullable(s: StructType) = StructType(s.fields.map(_.copy(nullable = true)))
 
-  /** One frame over `dirs`: a single multi-path scan for flat layouts;
-    * per-dir scans unioned for partitioned ones (Spark refuses sibling
-    * base paths that each carry `col=value/` subdirs in one scan —
-    * CONFLICTING_DIRECTORY_STRUCTURES). Partition pruning still applies
-    * inside every member scan of the union. */
-  private def readDirs(dirs: Seq[String], head: Long): DataFrame =
-    if (partitionScheme.isEmpty) cachedSchema match {
-      case Some((h, s)) if h == head => spark.read.schema(s).parquet(dirs: _*)
-      case _ =>
-        val df = spark.read.parquet(dirs: _*)
-        cachedSchema = Some((head, nullable(df.schema)))
-        df
-    }
-    else dirs.map(d => spark.read.parquet(d)).reduce(_.unionByName(_))
+  /** One multi-path scan over `dirs`. */
+  private def readDirs(dirs: Seq[String], head: Long): DataFrame = cachedSchema match {
+    case Some((h, s)) if h == head => spark.read.schema(s).parquet(dirs: _*)
+    case _ =>
+      val df = spark.read.parquet(dirs: _*)
+      cachedSchema = Some((head, nullable(df.schema)))
+      df
+  }
 
   /** Read the table as of snapshot `n` (time travel): anchor at the latest
-    * base ≤ n, union data dirs in [anchor, n], anti-join delete keys in
-    * (anchor, n]. */
+    * base ≤ n and union the live data dirs in [anchor, n]. */
   def readAt(n: Long): Option[DataFrame] = {
     val all = snapshots
     val head = all.lastOption.getOrElse(-1L)
-    val ids = all.filter(_ <= n)
-    if (ids.isEmpty) return None
-    val anchor = ids.filter(kindOf(_) == "base").lastOption.getOrElse(Long.MinValue)
+    val ms = all.filter(_ <= n).map(manifest)
     // bin-packed dirs are replaced by their merge commit's dir as of the
     // merge; reading at an earlier snapshot still sees the originals
-    val packed = mergedAway(n)
-    val live = ids.filter(id => id >= anchor && !packed.contains(id))
-    val dataDirs = live.map(dataDir).filter(Files.isDirectory(_)).map(_.toString)
-    if (dataDirs.isEmpty) return None
-    val data = readDirs(dataDirs, head)
-    val delDirs = live.filter(_ > anchor)
-      .filter(id => HasDeletesRe.findFirstIn(manifestText(id)).isDefined)
-      .map(deleteDir).filter(Files.isDirectory(_)).map(_.toString)
-    if (delDirs.isEmpty) Some(data)
-    else {
-      val dels = spark.read.parquet(delDirs: _*)
-      Some(data.join(dels, dels.columns.toSeq, "left_anti"))
-    }
+    val packed = mergedAway(ms)
+    val dataDirs = sinceBase(ms).map(_.id).filterNot(packed)
+      .map(dataDir).filter(Files.isDirectory(_)).map(_.toString)
+    if (dataDirs.isEmpty) None else Some(readDirs(dataDirs, head))
   }
 
   /** Append `df` as a new snapshot; returns the snapshot id (compat API). */
-  def commit(df: DataFrame, metrics: Map[String, Double], seqCol: Option[String] = None,
-             coalesceTo: Int = 0, partitionBy: Seq[String] = Nil): Long =
-    commitKind(df, metrics, seqCol, coalesceTo, "append", None, None,
-      partitionBy = partitionBy).id
-
-  /** Append + equality-deletes under ONE manifest (Iceberg v2 delta). */
-  def commitDelta(append: DataFrame, deleteKeys: DataFrame, metrics: Map[String, Double],
-                  seqCol: Option[String] = None, coalesceTo: Int = 0,
-                  covers: Option[Long] = None): CommitResult =
-    commitKind(append, metrics, seqCol, coalesceTo, "delta", Some(deleteKeys), covers)
+  def commit(df: DataFrame, metrics: Map[String, Double], seqCol: Option[String] = None): Long =
+    publish(prepare(df, seqCol), metrics, "append", None).id
 
   /** Compaction: rewrite the full table state as a new base snapshot. */
   def commitBase(df: DataFrame, metrics: Map[String, Double], seqCol: Option[String] = None,
-                 coalesceTo: Int = 0, covers: Option[Long] = None,
-                 partitionBy: Seq[String] = Nil): CommitResult =
-    commitKind(df, metrics, seqCol, coalesceTo, "base", None, covers,
-      partitionBy = partitionBy)
+                 covers: Option[Long] = None): CommitResult =
+    publish(prepare(df, seqCol), metrics, "base", covers)
 
   /** Bin-pack compaction (the Iceberg rewrite-data-files analogue): the
     * OLDEST ≥2 (≤ maxDirs) unmerged append dirs since the last base are
@@ -228,25 +167,12 @@ class SnapshotTable(spark: => SparkSession, root: String,
     * re-clusters the rewritten rows (e.g. by bucket). Returns the merge
     * snapshot id, or None when fewer than two dirs qualify. */
   def mergeAppends(maxDirs: Int, transform: DataFrame => DataFrame = identity,
-                   metrics: Map[String, Double] = Map.empty): Option[Long] = {
-    val anchor = latestBase.getOrElse(Long.MinValue)
-    val packed = mergedAway(latestSnapshot.getOrElse(0L))
-    val candidates = snapshots
-      .filter(id => id >= anchor && !packed.contains(id) && kindOf(id) == "append")
-      .filter(id => Files.isDirectory(dataDir(id)))
-      .take(maxDirs)
-    if (candidates.size < 2) return None
-    val df = transform(readDirs(candidates.map(dataDir(_).toString),
-      latestSnapshot.getOrElse(-1L)))
-    Some(commitKind(df, metrics, None, 0, "merge", None, None,
-      merges = Some(candidates)).id)
-  }
+                   metrics: Map[String, Double] = Map.empty): Option[Long] =
+    pack(1, 2, maxDirs, transform, metrics)
 
   /** Bin-pack level of merge snapshot `n` (1 when the field is absent —
     * pre-level manifests; 0 for non-merge commits). */
-  def mergeLevelOf(n: Long): Int =
-    if (kindOf(n) != "merge") 0
-    else MergeLevelRe.findFirstMatchIn(manifestText(n)).map(_.group(1).toInt).getOrElse(1)
+  def mergeLevelOf(n: Long): Int = manifest(n).level
 
   /** HIGHER-level bin-pack: rewrite the oldest `maxDirs` un-packed
     * level-(`level`−1) merge dirs into ONE level-`level` merge commit.
@@ -266,80 +192,61 @@ class SnapshotTable(spark: => SparkSession, root: String,
                   level: Int = 2): Option[Long] = {
     require(maxDirs >= 2, s"maxDirs $maxDirs must be >= 2")
     require(level >= 2, s"level $level must be >= 2")
-    val anchor = latestBase.getOrElse(Long.MinValue)
-    val packed = mergedAway(latestSnapshot.getOrElse(0L))
-    val candidates = snapshots
-      .filter(id => id >= anchor && !packed.contains(id) && mergeLevelOf(id) == level - 1)
-      .filter(id => Files.isDirectory(dataDir(id)))
-      .take(maxDirs)
-    if (candidates.size < maxDirs) return None
-    val df = transform(readDirs(candidates.map(dataDir(_).toString),
-      latestSnapshot.getOrElse(-1L)))
-    Some(commitKind(df, metrics, None, 0, "merge", None, None,
-      merges = Some(candidates), mergeLevel = level).id)
+    pack(level, maxDirs, maxDirs, transform, metrics)
+  }
+
+  /** Rewrite the oldest ≤ `maxDirs` un-packed dirs of the level below
+    * `level` (appends for level 1) since the last base into one
+    * level-`level` merge commit, when at least `minDirs` qualify. */
+  private def pack(level: Int, minDirs: Int, maxDirs: Int, transform: DataFrame => DataFrame,
+                   metrics: Map[String, Double]): Option[Long] = {
+    val ms = snapshots.map(manifest)
+    val packed = mergedAway(ms)
+    def isSource(m: Manifest): Boolean =
+      if (level == 1) m.kind == "append" else m.kind == "merge" && m.level == level - 1
+    val candidates = sinceBase(ms).filter(m => !packed(m.id) && isSource(m)).map(_.id)
+      .filter(id => Files.isDirectory(dataDir(id))).take(maxDirs)
+    if (candidates.size < minDirs) return None
+    val df = transform(readDirs(candidates.map(dataDir(_).toString), ms.last.id))
+    Some(publish(prepare(df), metrics, "merge", None, merges = candidates, mergeLevel = level).id)
   }
 
   /** Write `df`'s data files for the next snapshot id, without the
     * manifest. Returns footer-derived row count + lineage; pair with
     * [[commitPrepared]] to publish. */
-  def prepare(df: DataFrame, seqCol: Option[String] = None, coalesceTo: Int = 0,
-              partitionBy: Seq[String] = Nil): Prepared = {
+  def prepare(df: DataFrame, seqCol: Option[String] = None, coalesceTo: Int = 0): Prepared = {
     val id = latestSnapshot.getOrElse(0L) + 1L
     val out = dataDir(id)
-    // the table's existing layout wins over the caller's request — one
-    // read unions every live data dir, and Spark cannot mix flat and
-    // partitioned dirs in a single scan (see partitionScheme)
-    val scheme = if (id == 1L) partitionBy else partitionSchemeOf(latestSnapshot.get)
     val toWrite = if (coalesceTo > 0) df.coalesce(coalesceTo) else df
     // "overwrite": a dir at this id can only be a crashed run's orphan
     // (no manifest references it — see class doc), so reclaiming it is safe
-    val writer = toWrite.write.options(writeOptions).mode("overwrite")
-    if (scheme.nonEmpty) writer.partitionBy(scheme: _*).parquet(out.toString)
-    else writer.parquet(out.toString)
+    toWrite.write.options(writeOptions).mode("overwrite").parquet(out.toString)
     // lineage from the committed files' footers (metadata only — no job)
     val stats = ParquetFooters.stats(out, seqCol)
-    Prepared(id, stats.map(_.rows).sum, scheme, stats,
-      if (scheme.isEmpty) Some(nullable(toWrite.schema)) else None)
+    Prepared(id, stats.map(_.rows).sum, stats, nullable(toWrite.schema))
   }
 
   /** Publish the manifest of a [[prepare]]d snapshot. `skipIfEmpty` with
     * zero rows reclaims the data dir and commits nothing. */
   def commitPrepared(p: Prepared, metrics: Map[String, Double],
                      covers: Option[Long] = None, skipIfEmpty: Boolean = false): CommitResult =
-    publish(p, metrics, "append", None, covers, skipIfEmpty, None, 1)
-
-  private def commitKind(df: DataFrame, metrics: Map[String, Double], seqCol: Option[String],
-                         coalesceTo: Int, kind: String, deleteKeys: Option[DataFrame],
-                         covers: Option[Long],
-                         partitionBy: Seq[String] = Nil,
-                         merges: Option[Seq[Long]] = None,
-                         mergeLevel: Int = 1): CommitResult =
-    publish(prepare(df, seqCol, coalesceTo, partitionBy), metrics, kind, deleteKeys,
-      covers, skipIfEmpty = false, merges, mergeLevel)
+    publish(p, metrics, "append", covers, skipIfEmpty)
 
   private def publish(p: Prepared, metrics: Map[String, Double], kind: String,
-                      deleteKeys: Option[DataFrame], covers: Option[Long],
-                      skipIfEmpty: Boolean, merges: Option[Seq[Long]],
-                      mergeLevel: Int): CommitResult = {
+                      covers: Option[Long], skipIfEmpty: Boolean = false,
+                      merges: Seq[Long] = Nil, mergeLevel: Int = 1): CommitResult = {
     val id = p.id
     val out = dataDir(id)
-    val scheme = p.scheme
-    val stats = p.stats
     val rows = p.rows
-    if (rows == 0 && skipIfEmpty && deleteKeys.isEmpty) {
+    if (rows == 0 && skipIfEmpty) {
       deleteRecursively(out)
       return CommitResult(latestSnapshot.getOrElse(0L), 0L)
     }
     // the write defines the current shape — cached only once the
     // manifest is certain to land (a SKIPPED empty commit must not key
     // the cache to an id that never becomes the head)
-    p.schema.foreach(s => cachedSchema = Some((id, s)))
-    val delDirJson = deleteKeys.map { dk =>
-      val dd = deleteDir(id)
-      dk.coalesce(1).write.mode("overwrite").parquet(dd.toString)
-      s""","delete_dir":"${dd.toString}""""
-    }.getOrElse("")
-    val lineage = stats.zipWithIndex.map { case (s, i) =>
+    cachedSchema = Some((id, p.schema))
+    val lineage = p.stats.zipWithIndex.map { case (s, i) =>
       val mn = s.minSeq.map(_.toString).getOrElse("null")
       val mx = s.maxSeq.map(_.toString).getOrElse("null")
       s"""{"partition_id":$i,"n_rows":${s.rows},"min_seq":$mn,"max_seq":$mx}"""
@@ -348,15 +255,13 @@ class SnapshotTable(spark: => SparkSession, root: String,
     val metricsJson = (metrics + ("n_rows" -> rows.toDouble)).toSeq.sortBy(_._1)
       .map { case (k, v) => s""""${k}":$v""" }.mkString("{", ",", "}")
     val coversJson = covers.map(c => s""","covers":$c""").getOrElse("")
-    val mergesJson = merges
-      .map(ids => s""","merges":[${ids.mkString(",")}],"level":$mergeLevel""").getOrElse("")
-    val partJson =
-      if (scheme.isEmpty) ""
-      else scheme.map(c => s""""$c"""").mkString(""","partition_by":[""", ",", "]")
+    val mergesJson =
+      if (kind != "merge") ""
+      else s""","merges":[${merges.mkString(",")}],"level":$mergeLevel"""
     val manifest =
       s"""{"snapshot_id":$id,
          |"kind":"$kind",
-         |"data_dir":"${out.toString}"$delDirJson$coversJson$partJson$mergesJson,
+         |"data_dir":"${out.toString}"$coversJson$mergesJson,
          |"committed_at_ms":${System.currentTimeMillis()},
          |"metrics":$metricsJson,
          |"lineage":[${lineage.mkString(",")}]}""".stripMargin
@@ -378,37 +283,27 @@ class SnapshotTable(spark: => SparkSession, root: String,
 
   /** Data appended in snapshots (a, b] only — the incremental read for
     * callers tracking their own watermark (e.g. attempts since the last
-    * pending compaction). Only append/delta commits qualify: merge and
-    * base commits rewrite EXISTING rows (counting their dirs would
-    * duplicate appends already seen); their originals stay on disk, so
-    * the incremental contract is unaffected by bin-packing. None when
-    * no data dirs exist in the range. */
+    * pending compaction). Only append commits qualify: merge and base
+    * commits rewrite EXISTING rows (counting their dirs would duplicate
+    * appends already seen); their originals stay on disk, so the
+    * incremental contract is unaffected by bin-packing. None when no
+    * data dirs exist in the range. */
   def readBetween(a: Long, b: Long): Option[DataFrame] = {
-    val all = snapshots
-    val dirs = all.filter(id => id > a && id <= b)
-      .filter(id => { val k = kindOf(id); k == "append" || k == "delta" })
+    val dirs = dataSnapshots.filter(id => id > a && id <= b)
       .map(dataDir).filter(Files.isDirectory(_)).map(_.toString)
     if (dirs.isEmpty) None
-    else Some(readDirs(dirs, all.lastOption.getOrElse(-1L)))
+    else Some(readDirs(dirs, latestSnapshot.getOrElse(-1L)))
   }
 
   /** Latest base (compaction) snapshot id ≤ the head, when one exists. */
   def latestBase: Option[Long] = snapshots.filter(kindOf(_) == "base").lastOption
 
-  private val NRowsRe = "\"n_rows\":(-?[0-9]+(?:\\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)".r
-
   /** Total committed rows since the last base — a manifest-derived
     * cardinality estimate (metadata only, no job). Merge commits rewrite
-    * rows already counted by their sources, so they are skipped.
-    * Slightly OVER-counts live rows when delta deletes exist; callers
-    * use it as a regime threshold, where over-counting errs toward the
-    * scale-safe plan. */
-  def totalRows: Long = {
-    val anchor = latestBase.getOrElse(Long.MinValue)
-    snapshots.filter(id => id >= anchor && kindOf(id) != "merge").map(id =>
-      NRowsRe.findFirstMatchIn(manifestText(id))
-        .map(_.group(1).toDouble.toLong).getOrElse(0L)).sum
-  }
+    * rows already counted by their sources, so they are skipped. */
+  def totalRows: Long =
+    sinceBase(snapshots.map(manifest)).filter(_.kind != "merge")
+      .map(_.metrics.get("n_rows").fold(0L)(_.toLong)).sum
 
   private def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) {
@@ -439,9 +334,45 @@ object SnapshotTable {
     * order (CrawlEngine: images → frontier → fetchlog, the completion
     * marker last). At most one prepare may be outstanding per table:
     * the snapshot id is allocated at prepare time. */
-  final case class Prepared(id: Long, rows: Long, scheme: Seq[String],
-                            stats: Seq[ParquetFooters.FileStats],
-                            schema: Option[org.apache.spark.sql.types.StructType])
+  final case class Prepared(id: Long, rows: Long, stats: Seq[ParquetFooters.FileStats],
+                            schema: StructType)
+
+  /** One snapshot's manifest as a record. `kind` reads "append" and a
+    * merge's `level` reads 1 when the field is absent (manifests written
+    * before either existed); `level` is 0 for every kind but merge. */
+  final case class Manifest(id: Long, kind: String, covers: Option[Long], merges: Seq[Long],
+                            level: Int, committedAtMs: Option[Long],
+                            metrics: Map[String, Double])
+
+  // metrics are rendered with Double.toString, which writes NaN and
+  // Infinity for non-finite values
+  private val Json = JsonMapper.builder().enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS).build()
+
+  private val Fields = Set("snapshot_id", "kind", "data_dir", "covers", "merges", "level",
+    "committed_at_ms", "metrics", "lineage")
+
+  /** Parse snapshot `n`'s manifest `file`. Fails, naming the file, on a
+    * field outside [[Fields]] and on an unknown kind: the retired
+    * equality-delete and partitioned layouts each wrote a field of their
+    * own, and reading those manifests as plain appends would return wrong
+    * rows. */
+  private def readManifest(n: Long, file: Path): Manifest = {
+    def fail(why: String, cause: Throwable = null): Nothing =
+      throw new IllegalStateException(s"manifest $file: $why", cause)
+    val node = try Json.readTree(Files.readAllBytes(file))
+    catch { case e: JsonProcessingException => fail("not valid JSON", e) }
+    node.properties.asScala.map(_.getKey).find(!Fields(_))
+      .foreach(f => fail(s"unsupported field $f"))
+    val kind = Option(node.get("kind")).fold("append")(_.asText)
+    if (!Set("append", "base", "merge")(kind)) fail(s"unsupported kind $kind")
+    def long(field: String): Option[Long] = Option(node.get(field)).map(_.asLong)
+    Manifest(n, kind, long("covers"),
+      Option(node.get("merges")).toSeq.flatMap(_.asScala.map(_.asLong)),
+      if (kind == "merge") long("level").fold(1)(_.toInt) else 0,
+      long("committed_at_ms"),
+      Option(node.get("metrics")).toSeq.flatMap(_.properties.asScala)
+        .filter(_.getValue.isNumber).map(e => e.getKey -> e.getValue.asDouble).toMap)
+  }
 
   /** Parquet write options for POINT-PROBED key tables (VERDICT r04 #3).
     *

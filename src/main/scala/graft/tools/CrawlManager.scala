@@ -41,18 +41,14 @@ object CrawlManager {
     sb ++= s"=== Crawl status: $root ===\n"
     if (!Files.isDirectory(Paths.get(root))) return sb.append("no such root\n").toString
     val log = table(root, "fetchlog")
-    val runs = log.snapshots.filter(id => { val k = log.kindOf(id); k == "append" || k == "delta" })
+    val runs = log.dataSnapshots
     val state =
       if (runs.isEmpty) "seeded (no completed run)"
       else "idle/crashed-or-drained (resume-safe: last committed snapshot is the checkpoint)"
     sb ++= s"State: $state\n"
     runs.lastOption.foreach { last =>
-      val at = "\"committed_at_ms\":([0-9]+)".r
-        .findFirstMatchIn(new String(Files.readAllBytes(
-          Paths.get(root, "fetchlog", "commits", f"v$last%06d.json"))))
-        .map(_.group(1).toLong)
-      sb ++= s"Completed runs: ${runs.size} (last snapshot $last" +
-        at.map(t => s", committed at ${java.time.Instant.ofEpochMilli(t)}").getOrElse("") + ")\n"
+      sb ++= s"Completed runs: ${runs.size} (last snapshot $last" + log.manifest(last).committedAtMs
+        .map(t => s", committed at ${java.time.Instant.ofEpochMilli(t)}").getOrElse("") + ")\n"
     }
     val bloomidx = table(root, "bloomidx")
     // only covers-marked bases are a usable index; below scanProbeMinSeen
@@ -82,7 +78,7 @@ object CrawlManager {
     val sb = new StringBuilder
     sb ++= s"=== Crawl metrics: $root ===\n"
     val log = table(root, "fetchlog")
-    val runs = log.snapshots.filter(id => { val k = log.kindOf(id); k == "append" || k == "delta" })
+    val runs = log.dataSnapshots
     if (runs.isEmpty) return sb.append("no completed runs\n").toString
     def sumMetric(key: String): Double =
       runs.flatMap(n => log.metricOf(n, key)).sum
@@ -94,11 +90,7 @@ object CrawlManager {
     sb ++= f"New images: ${sumMetric("new_images").toLong}%,d\n"
     sb ++= f"New candidates: ${sumMetric("new_candidates").toLong}%,d  " +
       f"(links seen ${sumMetric("links_seen").toLong}%,d, dedup-dropped ${sumMetric("dedup_dropped").toLong}%,d)\n"
-    val times = runs.flatMap { n =>
-      "\"committed_at_ms\":([0-9]+)".r.findFirstMatchIn(
-        new String(Files.readAllBytes(Paths.get(root, "fetchlog", "commits", f"v$n%06d.json"))))
-        .map(_.group(1).toLong)
-    }
+    val times = runs.flatMap(log.manifest(_).committedAtMs)
     if (times.size >= 2) {
       val secs = (times.max - times.min) / 1000.0
       if (secs > 0)
@@ -112,7 +104,7 @@ object CrawlManager {
   /** `journalctl -n` analogue: the last `n` runs' metric lines. */
   def logs(root: String, n: Int): String = {
     val log = table(root, "fetchlog")
-    val runs = log.snapshots.filter(id => { val k = log.kindOf(id); k == "append" || k == "delta" })
+    val runs = log.dataSnapshots
     runs.takeRight(n).map { id =>
       val line = Seq("scheduled", "fetched_ok", "failed", "new_images",
         "new_candidates", "delay_ms")

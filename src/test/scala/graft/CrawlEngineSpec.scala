@@ -276,10 +276,9 @@ class CrawlEngineSpec extends AnyFunSuite {
     val head = e1.fetchlog.latestDataSnapshot.get
     val planted = e1.bloomidx.read().get.select("bucket", "bloom")
       .withColumn("fetchlog_snapshot", lit(head))
-    e1.bloomidx.commit(planted, Map("covers_fetchlog_snapshot" -> head.toDouble,
+    e1.bloomidx.commit(planted.coalesce(1), Map("covers_fetchlog_snapshot" -> head.toDouble,
       "index_buckets" -> e1.urlIndexGeometry.indexBuckets.toDouble,
-      "expected_per_bucket" -> e1.urlIndexGeometry.capacityPerBucket.toDouble),
-      None, coalesceTo = 1)
+      "expected_per_bucket" -> e1.urlIndexGeometry.capacityPerBucket.toDouble))
     assert(e1.bloomidx.latestCovers.isEmpty)
     assert(graft.tools.CrawlManager.status(root).contains(
       "Dedup plan: exact anti-join (no URL index)"))
@@ -694,7 +693,8 @@ class CrawlEngineSpec extends AnyFunSuite {
   test("seed and runOnce restore the caller's SQL conf, also when the fetcher throws") {
     val spark = TestSpark.spark
     val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage",
-      "spark.sql.codegen.factoryMode")
+      "spark.sql.codegen.factoryMode", "spark.sql.adaptive.coalescePartitions.parallelismFirst",
+      "spark.sql.parquet.pushdown.inFilterThreshold")
     def explicitNow = keys.map(k => k -> spark.conf.getAll.get(k)).toMap
     def shownNow = keys.map(k => k -> spark.conf.get(k)).toMap
     val failing = new Fetcher {
@@ -705,7 +705,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     try {
       // a caller that set explicit values (none of them the engine's), then
       // one that left every key at its default
-      for (explicit <- Seq(Some(Seq("true", "true", "CODEGEN_ONLY")), None)) {
+      for (explicit <- Seq(Some(Seq("true", "true", "CODEGEN_ONLY", "true", "10")), None)) {
         explicit match {
           case Some(vs) => keys.zip(vs).foreach { case (k, v) => spark.conf.set(k, v) }
           case None => keys.foreach(spark.conf.unset)
@@ -716,6 +716,7 @@ class CrawlEngineSpec extends AnyFunSuite {
           assert(shownNow == shownBefore, s"after $step ($explicit)")
         }
         val e = newEngine(Files.createTempDirectory("crawl-conf").toString)
+        unchanged("construct")
         e.seed(web.seeds)
         unchanged("seed")
         assert(e.runOnce().isDefined)

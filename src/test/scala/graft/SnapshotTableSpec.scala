@@ -32,47 +32,22 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(t.latestSnapshot.contains(1L))
   }
 
-  test("delta commits: equality-deletes remove earlier rows; same-commit appends survive") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val t = new SnapshotTable(spark, tmpDir())
-    t.commit(Seq((10L, 1, "a"), (20L, 1, "b"), (30L, 1, "c")).toDF("url_hash", "attempt", "v"),
-      Map.empty)
-    // delete (10,1) and (20,1); append (20,2) under the same manifest —
-    // the (hash, attempt) keying means the appended row is NOT deleted
-    val r = t.commitDelta(
-      append = Seq((20L, 2, "b2")).toDF("url_hash", "attempt", "v"),
-      deleteKeys = Seq((10L, 1), (20L, 1)).toDF("url_hash", "attempt"),
-      metrics = Map.empty, covers = Some(7L))
-    assert(r.id == 2 && r.rows == 1)
-    val got = t.read().get.select("url_hash", "attempt").as[(Long, Int)].collect().toSet
-    assert(got == Set((30L, 1), (20L, 2)))
-    assert(t.coversOf(2).contains(7L) && t.latestCovers.contains(7L))
-    // time travel to before the delta still sees all three originals
-    assert(t.readAt(1).get.count() == 3)
-  }
-
   test("base commit (compaction) anchors reads; later deltas still apply; time travel preserved") {
     val spark = TestSpark.spark
     import spark.implicits._
     val t = new SnapshotTable(spark, tmpDir())
     t.commit(Seq((1L, 1, "a"), (2L, 1, "b")).toDF("url_hash", "attempt", "v"), Map.empty)
-    t.commitDelta(Seq((3L, 1, "c")).toDF("url_hash", "attempt", "v"),
-      Seq((1L, 1)).toDF("url_hash", "attempt"), Map.empty)
-    // compact: state should now be {(2,1),(3,1)} in a single base
+    t.commit(Seq((3L, 1, "c")).toDF("url_hash", "attempt", "v"), Map.empty)
+    // compact: state should now be {(1,1),(2,1),(3,1)} in a single base
     val state = t.read().get
     val base = t.commitBase(state, Map.empty, covers = Some(2L))
-    assert(base.rows == 2 && t.kindOf(base.id) == "base")
-    assert(t.read().get.count() == 2)
-    // pre-compaction deletes must NOT re-apply to the base rewrite
-    val got = t.read().get.select("url_hash").as[Long].collect().toSet
-    assert(got == Set(2L, 3L))
-    // a delta after the base applies on top of it
-    t.commitDelta(Seq((4L, 1, "d")).toDF("url_hash", "attempt", "v"),
-      Seq((2L, 1)).toDF("url_hash", "attempt"), Map.empty)
-    assert(t.read().get.select("url_hash").as[Long].collect().toSet == Set(3L, 4L))
+    assert(base.rows == 3 && t.kindOf(base.id) == "base")
+    assert(t.read().get.count() == 3)
+    // an append after the base applies on top of it
+    t.commit(Seq((4L, 1, "d")).toDF("url_hash", "attempt", "v"), Map.empty)
+    assert(t.read().get.select("url_hash").as[Long].collect().toSet == Set(1L, 2L, 3L, 4L))
     // time travel to snapshot 2 (pre-base) replays the original fold
-    assert(t.readAt(2).get.select("url_hash").as[Long].collect().toSet == Set(2L, 3L))
+    assert(t.readAt(2).get.select("url_hash").as[Long].collect().toSet == Set(1L, 2L, 3L))
   }
 
   test("footer-based lineage matches data for multi-file commits") {
@@ -91,9 +66,9 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("model check: random append/delta/base sequences always read back the model state") {
     // seeded-random op sequence against an in-memory set model — pins the
-    // merge-on-read fold (appends ∪, equality-deletes ∖, base anchors)
-    // beyond the handwritten cases. Keys are (url_hash, attempt) like the
-    // engine's pending rows: appended once, deleted at most once, after.
+    // read fold (appends ∪, base anchors, bin-pack supersession) beyond
+    // the handwritten cases. Keys are (url_hash, attempt) like the
+    // engine's pending rows.
     val spark = TestSpark.spark
     import spark.implicits._
     val t = new SnapshotTable(spark, tmpDir())
@@ -103,28 +78,18 @@ class SnapshotTableSpec extends AnyFunSuite {
     def freshRows(n: Int): Seq[(Long, Int, String)] =
       (1 to n).map { _ => nextKey += 1; (nextKey, 1 + rnd.nextInt(3), s"v$nextKey") }
         .map { case (h, a, v) => model((h, a)) = v; (h, a, v) }
-    def liveSample(n: Int): Seq[(Long, Int)] =
-      rnd.shuffle(model.keys.toSeq).take(n)
 
     freshRows(5) // initial append
     t.commit(model.toSeq.map { case ((h, a), v) => (h, a, v) }.toDF("url_hash", "attempt", "v"),
       Map.empty)
     for (step <- 1 to 12) {
-      rnd.nextInt(4) match {
+      rnd.nextInt(3) match {
         case 0 => // plain append
           val rows = freshRows(1 + rnd.nextInt(4))
           t.commit(rows.toDF("url_hash", "attempt", "v"), Map.empty)
-        case 1 => // delta: append fresh + delete a sample of live keys
-          val dels = liveSample(rnd.nextInt(3))
-          val rows = freshRows(1 + rnd.nextInt(3))
-          dels.foreach(model.remove)
-          t.commitDelta(rows.toDF("url_hash", "attempt", "v"),
-            if (dels.nonEmpty) dels.toDF("url_hash", "attempt")
-            else Seq.empty[(Long, Int)].toDF("url_hash", "attempt"),
-            Map.empty)
-        case 2 => // compaction
+        case 1 => // compaction
           t.commitBase(t.read().get, Map.empty)
-        case 3 => // bin-pack merges (all levels): must NEVER change content
+        case 2 => // bin-pack merges (all levels): must NEVER change content
           t.mergeAppends(2 + rnd.nextInt(3))
           t.mergeMerges(2) // fires only on a full level-1 batch
           t.mergeMerges(2, level = 3) // …and only on a full level-2 batch
@@ -235,46 +200,6 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(merges.size == 7, s"expected 4+2+1 merge commits, got ${merges.size}")
   }
 
-  test("partitioned layout: round-trip, partition pruning, lineage, scheme stickiness") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val t = new SnapshotTable(spark, tmpDir())
-    def rows(lo: Long, hi: Long) =
-      (lo to hi).map(i => (i, (i % 4).toInt, s"v$i")).toDF("seq", "bucket", "v")
-    t.commit(rows(1, 100), Map.empty, Some("seq"), partitionBy = Seq("bucket"))
-    t.commit(rows(101, 200), Map.empty, Some("seq"), partitionBy = Seq("bucket"))
-    assert(t.partitionScheme == Seq("bucket"))
-    // full read unions both partitioned commits and restores the column
-    val all = t.read().get
-    assert(all.count() == 200)
-    assert(all.columns.contains("bucket"))
-    assert(all.select("seq", "bucket").as[(Long, Int)].collect()
-      .forall { case (s, b) => b == (s % 4).toInt })
-    // a bucket restriction prunes PARTITIONS (not just row groups)
-    val plan = all.filter($"bucket".isin(1, 3)).queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      "PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).isDefined,
-      s"no partition filter in:\n$plan")
-    assert(all.filter($"bucket".isin(1, 3)).count() == 100)
-    // footer lineage walked the bucket=K subdirs: counts + seq range intact
-    val l = t.manifests().get.selectExpr("explode(lineage) as l")
-      .selectExpr("sum(l.n_rows) as n", "min(l.min_seq) as mn", "max(l.max_seq) as mx")
-      .collect().head
-    assert(l.getLong(0) == 200L && l.getLong(1) == 1L && l.getLong(2) == 200L)
-    // the layout is a TABLE property: a later commit requesting a
-    // DIFFERENT scheme (or none) still writes the established one —
-    // Spark cannot union flat and partitioned dirs in a single read
-    t.commit(rows(201, 220), Map.empty, Some("seq"))
-    assert(t.partitionScheme == Seq("bucket"))
-    assert(t.read().get.count() == 220)
-    // and a flat table ignores a late partitioning request the same way
-    val flat = new SnapshotTable(spark, tmpDir())
-    flat.commit(rows(1, 10), Map.empty, Some("seq"))
-    flat.commit(rows(11, 20), Map.empty, Some("seq"), partitionBy = Seq("bucket"))
-    assert(flat.partitionScheme.isEmpty)
-    assert(flat.read().get.count() == 20)
-  }
-
   test("manifests expose metrics and per-partition lineage") {
     val spark = TestSpark.spark
     import spark.implicits._
@@ -291,5 +216,46 @@ class SnapshotTableSpec extends AnyFunSuite {
     val total = m.selectExpr("explode(lineage) as l").selectExpr("sum(l.n_rows)")
       .collect().head.getLong(0)
     assert(total == 100L)
+  }
+
+  test("metrics named like manifest fields stay metrics: no covers marker, kind append") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val t = new SnapshotTable(spark, tmpDir())
+    val id = t.commit(Seq((1L, "a")).toDF("seq", "v"), Map("covers" -> 7.0, "kind" -> 3.0))
+    assert(t.latestCovers.isEmpty && t.coversOf(id).isEmpty)
+    assert(t.kindOf(id) == "append")
+    assert(t.metricOf(id, "covers").contains(7.0) && t.metricOf(id, "kind").contains(3.0))
+  }
+
+  test("legacy manifests: a missing kind reads append, a merge's missing level reads 1") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val root = tmpDir()
+    val t = new SnapshotTable(spark, root)
+    t.commit(Seq((1L, "a")).toDF("seq", "v"), Map.empty)
+    t.commit(Seq((2L, "b")).toDF("seq", "v"), Map.empty)
+    val commits = java.nio.file.Paths.get(root, "commits")
+    Files.write(commits.resolve("v000001.json"), ("""{"snapshot_id":1,"data_dir":"d",""" +
+      """"committed_at_ms":5,"metrics":{"n_rows":1.0},"lineage":[]}""").getBytes("UTF-8"))
+    Files.write(commits.resolve("v000003.json"), ("""{"snapshot_id":3,"kind":"merge",""" +
+      """"data_dir":"d","merges":[1,2],"committed_at_ms":6,"metrics":{"n_rows":2.0},""" +
+      """"lineage":[]}""").getBytes("UTF-8"))
+    assert(t.kindOf(1) == "append" && t.manifest(1).committedAtMs.contains(5L))
+    assert(t.mergeLevelOf(3) == 1 && t.dataSnapshots == Seq(1L, 2L) && t.totalRows == 2)
+  }
+
+  test("a legacy equality-delete manifest fails the read, naming the file") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val root = tmpDir()
+    val t = new SnapshotTable(spark, root)
+    t.commit(Seq((1L, "a")).toDF("seq", "v"), Map.empty)
+    // reading a delta commit as an append would return the deleted rows
+    val delta = Files.write(java.nio.file.Paths.get(root, "commits", "v000002.json"),
+      ("""{"snapshot_id":2,"kind":"delta","data_dir":"d","delete_dir":"e",""" +
+        """"committed_at_ms":7,"metrics":{"n_rows":0.0},"lineage":[]}""").getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](t.read())
+    assert(e.getMessage.contains(delta.toString))
   }
 }

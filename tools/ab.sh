@@ -4,9 +4,12 @@
 #   tools/ab.sh <rev> <workload> <seed...>
 #   tools/ab.sh HEAD~1 crawl-deep 21 22 23
 #
-# <rev> is exported (git archive) into $AB_DIR/base; the working tree,
-# uncommitted edits included, is the "head" side. Each side builds into its
-# own CARGO_TARGET_DIR ($AB_DIR/base-build, $AB_DIR/head-build), so neither
+# <rev> is exported (git archive) into $AB_DIR/base. The working tree is
+# exported into $AB_DIR/head: tracked files with their uncommitted edits,
+# plus untracked files that are not ignored; tracked files deleted in the
+# working tree are left out. Both sides thus run from a clean export, never
+# from the checkout with its build outputs. Each side builds into its own
+# CARGO_TARGET_DIR ($AB_DIR/base-build, $AB_DIR/head-build), so neither
 # recompiles the other's classes and each keeps its own history fixtures.
 # Per seed, both sides run `perfbench/run.py --trace 0` once, one after the
 # other; the side that goes first alternates from seed to seed, so slow
@@ -20,7 +23,7 @@
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
-  sed -n '2,19p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,22p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 rev=$1; workload=$2; shift 2
@@ -34,14 +37,20 @@ mkdir -p "$ab"
 rm -rf "$ab/base"
 mkdir "$ab/base"
 git -C "$repo" archive "$(git -C "$repo" rev-parse --verify "$rev^{commit}")" | tar -x -C "$ab/base"
+rm -rf "$ab/head"
+mkdir "$ab/head"
+git -C "$repo" ls-files -z --cached --others --exclude-standard \
+  | (cd "$repo" && while IFS= read -r -d '' f; do
+       if [ -e "$f" ] || [ -L "$f" ]; then printf '%s\0' "$f"; fi
+     done) \
+  | tar -C "$repo" --null -T - -cf - | tar -x -C "$ab/head"
 : > "$results"
 
 # run_side <side> <seed>: one invocation; prints its line, records its result
 run_side() {
-  local side=$1 seed=$2 root last log=$ab/$1-seed$2.log
-  if [ "$side" = base ]; then root=$ab/base; else root=$repo; fi
+  local side=$1 seed=$2 last log=$ab/$1-seed$2.log
   : > "$log"
-  if ! last=$(cd "$root" && CARGO_TARGET_DIR=$ab/$side-build \
+  if ! last=$(cd "$ab/$side" && CARGO_TARGET_DIR=$ab/$side-build \
       python3 perfbench/run.py --workload "$workload" --seed "$seed" \
         --seconds "$seconds" --trace 0 2>>"$log" | tee -a "$log" | tail -n 1); then
     echo "seed=$seed side=$side: run failed, see $log" >&2
