@@ -39,72 +39,17 @@ object CrawlDemo {
       new SyntheticFetcher(webCfg), web.robots)
 
     engine.seed(web.seeds)
-    // jobs-per-run counter: micro-run cadence means per-run fixed cost
-    // (mostly job count × scheduling floor) IS the e2e throughput
-    val jobCount = new java.util.concurrent.atomic.AtomicLong(0L)
-    val jobSites = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    val jobMillis = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    val inJobMillis = new java.util.concurrent.atomic.AtomicLong(0L)
-    val jobStartMs = new java.util.concurrent.ConcurrentHashMap[Int, (String, java.lang.Long)]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet()
-        val site = j.stageInfos.lastOption.map(_.name.takeWhile(_ != '+').trim).getOrElse("?")
-        jobSites.merge(site, 1L, (a, b) => a + b)
-        jobStartMs.put(j.jobId, (site, java.lang.Long.valueOf(j.time)))
-      }
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val st = jobStartMs.remove(j.jobId)
-        if (st != null) {
-          val d = j.time - st._2.longValue()
-          jobMillis.merge(st._1, d, (a, b) => a + b)
-          inJobMillis.addAndGet(d) // jobs are serial in this driver loop
-        }
-      }
-    })
+    // per-run wall via crawlAll's hook; `perfbench/run.py --trace 1`
+    // attributes a crawl's jobs per call site and layer
     val t0 = System.nanoTime()
-    def secsSoFar(t: Long): Double = (System.nanoTime() - t) / 1e9
-    // per-run wall + job counts via crawlAll's instrumentation hook (the
-    // engine keeps the one crawl loop: maxRuns cap + end-of-crawl Bloom
-    // checkpoint flush, so resuming the printed root skips the rebuild)
-    val stats = scala.collection.mutable.ArrayBuffer.empty[(graft.crawl.RunStats, Double, Long)]
-    var jPrev = jobCount.get()
-    engine.crawlAll { (s, wall) =>
-      val jNow = jobCount.get()
-      stats += ((s, wall, jNow - jPrev))
-      jPrev = jNow
-    }
+    val stats = scala.collection.mutable.ArrayBuffer.empty[(graft.crawl.RunStats, Double)]
+    engine.crawlAll((s, wall) => stats += ((s, wall)))
     val secs = (System.nanoTime() - t0) / 1e9
-    stats.foreach { case (s, w, j) =>
+    stats.foreach { case (s, w) =>
       println(f"run ${s.run}%2d: scheduled=${s.scheduled}%5d ok=${s.fetchedOk}%5d " +
         f"fail=${s.failed}%3d newImages=${s.newImages}%5d newCand=${s.newCandidates}%5d " +
-        f"dedupDropped=${s.dedupDropped}%5d delay=${s.delayMsAfter}%6.1fms " +
-        f"wall=${w}%5.2fs jobs=$j%3d")
+        f"dedupDropped=${s.dedupDropped}%5d delay=${s.delayMsAfter}%6.1fms wall=${w}%5.2fs")
     }
-    // the listener bus delivers job-end events asynchronously — drain it
-    // before reading the counters, or the last runs' jobs undercount
-    // inJobMillis and overstate the printed driver gap. The public API
-    // has no waitUntilEmpty, so poll until every observed job-start has
-    // its matching end AND the counters hold still, bounded at 5 s
-    // (ADVICE r04: a fixed 1 s sleep was best-effort on a slow bus)
-    locally {
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      var prev = -1L
-      var stable = 0
-      while (stable < 2 && System.nanoTime() < deadline) {
-        Thread.sleep(50)
-        val now = inJobMillis.get()
-        if (jobStartMs.isEmpty && now == prev) stable += 1 else stable = 0
-        prev = now
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    jobSites.asScala.toSeq.sortBy(-_._2).foreach { case (site, n) =>
-      val ms = Option(jobMillis.get(site)).map(_.longValue()).getOrElse(0L)
-      println(f"JOBSITE $n%4d  ${ms / 1000.0}%7.2fs  $site")
-    }
-    println(f"DRIVER-GAP ${secsSoFar(t0) - inJobMillis.get() / 1000.0}%.2fs of " +
-      f"${secsSoFar(t0)}%.2fs total is outside Spark jobs (planning, manifests, footers)")
     val fetched = stats.map(_._1.scheduled).sum
     println(f"TOTAL: $fetched fetches, ${engine.seenSet().size} distinct URLs, " +
       f"${engine.imageTable().map(_.count()).getOrElse(0L)} images in $secs%.1fs " +

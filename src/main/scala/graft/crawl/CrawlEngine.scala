@@ -53,10 +53,11 @@ final case class CrawlConfig(
       * fixed latency per exchange that runtime re-planning cannot repay
       * on politeness-bounded micro-batches (measured: −15-25% toy e2e
       * wall with AQE on, rep-wise interleaved A/B). The engine's plans
-      * size their exchanges explicitly (bucketSalted range partitioner,
-      * broadcast dims), so AQE has nothing load-bearing to decide per
-      * run. Re-enable for deployments whose per-run batches are large
-      * enough (≥ millions of rows) that skew/coalesce re-planning pays.
+      * size their exchanges explicitly (the table cluster spec's range
+      * partitioner, broadcast dims), so AQE has nothing load-bearing to
+      * decide per run. Re-enable for deployments whose per-run batches
+      * are large enough (≥ millions of rows) that skew/coalesce
+      * re-planning pays.
       *
       * It is one key of the engine's fixed per-run SQL conf overlay; the
       * other two turn code generation off (whole-stage codegen, and the
@@ -102,6 +103,30 @@ final case class CrawlConfig(
 }
 
 object CrawlEngine {
+  /** The frames one run persists and the cleanup thunks its dedups and
+    * checkpoints hand back, released together when the run ends — normally
+    * or by a throw, so a failed run leaves nothing cached in the session. */
+  private final class RunResources {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+
+    def persist(df: DataFrame): DataFrame = {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      held += (() => p.unpersist())
+      p
+    }
+
+    /** The frame of a (frame, cleanup) pair; the cleanup runs at release. */
+    def adopt(owned: (DataFrame, () => Unit)): DataFrame = {
+      held += owned._2
+      owned._1
+    }
+
+    def release(): Unit = {
+      held.foreach(f => try f() catch { case scala.util.control.NonFatal(_) => () })
+      held.clear()
+    }
+  }
+
   /** Shared pool for the per-run CONCURRENT commit prepares (≤3 data
     * writes per run, each an independent Spark job over persisted
     * inputs). Daemon threads: an exiting driver never hangs on it. */
@@ -139,7 +164,7 @@ final case class RunStats(
   *     (pendingMaterialized). A run reads O(live + deltas-since), NOT the
   *     full discovery/attempt history (VERDICT r01 #3), and writes
   *     nothing (VERDICT r03 #5). It is a derived accelerator: a root
-  *     without a usable base (fresh, or pre-upgrade per-run appends)
+  *     without a usable base (fresh, or stale after a crash)
   *     rebuilds it from `frontier ∖ seen ∪ retryable` — correctness
   *     never depends on it;
   *  - `fetchlog`: one row per attempt; the URL-seen set is its distinct
@@ -167,11 +192,14 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
   val pending = new SnapshotTable(spark, s"${cfg.tableRoot}/pending")
   // the two point-probed tables carry parquet Bloom filters on their
   // probe key (VERDICT r04 #3): IN(url_hash,…)/IN(image_id,…) lookups
-  // skip non-matching row groups without reading their page indexes
+  // skip non-matching row groups without reading their page indexes. Both
+  // declare their bucket layout on the probe hash (SnapshotTable.Cluster)
   val fetchlog = new SnapshotTable(spark, s"${cfg.tableRoot}/fetchlog",
-    SnapshotTable.bloomFilterFor("url_hash"))
+    SnapshotTable.bloomFilterFor("url_hash"),
+    Some(SnapshotTable.Cluster(col("url_hash"), cfg.bloomBuckets)))
   val images = new SnapshotTable(spark, s"${cfg.tableRoot}/images",
-    SnapshotTable.bloomFilterFor("image_id"))
+    SnapshotTable.bloomFilterFor("image_id"),
+    Some(SnapshotTable.Cluster(xxhash64(col("image_id")), cfg.bloomBuckets)))
   val bloomidx = new SnapshotTable(spark, s"${cfg.tableRoot}/bloomidx")
   val imgidx = new SnapshotTable(spark, s"${cfg.tableRoot}/imgidx")
 
@@ -183,16 +211,10 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
   // global politeness-window counter: the fetchlog `run` column carries
   // the WINDOW id (the reference-equivalent micro-run counter), not the
   // commit id — with windowsPerRun > 1 one commit spans several windows.
-  // Resumed from the last windows_total manifest metric; pre-window
-  // roots (no such metric anywhere) wrote run = snapshot id, so resuming
-  // past the latest snapshot id keeps new window ids unique + monotone.
-  private var windowCount: Long = {
-    val snaps = fetchlog.snapshots
-    snaps.reverseIterator
-      .flatMap(n => fetchlog.metricOf(n, "windows_total")).nextOption()
-      .map(_.toLong)
-      .getOrElse(snaps.lastOption.getOrElse(0L))
-  }
+  // Resumed from the latest data commit's windows_total manifest metric;
+  // 0 when no engine run has committed (history rows carry run = 0)
+  private var windowCount: Long = fetchlog.latestDataSnapshot
+    .flatMap(fetchlog.metricOf(_, "windows_total")).fold(0L)(_.toLong)
   // the two seen sets (see SeenSet). URL hashes are their own join key;
   // the payload table's image ids join exactly, prefiltered on
   // xxhash64(image_id) (VERDICT r02 "What's wrong" #4 — the image dedup
@@ -208,39 +230,6 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
   /** Hash-range slices the URL index broadcasts in (test/observability
     * hook). */
   def urlIndexSlices: Int = urlSeen.sliceCount
-
-  /** Bucket-clustered RANGE repartition (NOTES r02 #3): each written
-    * file then spans a narrow CONTIGUOUS bucket range (usually one
-    * bucket), so a pushed IN(bucket,…) filter skips whole files via
-    * footer min/max stats — hash-partitioning on (bucket, salt) would
-    * scatter arbitrary bucket sets into each file and widen every
-    * min/max span past usefulness. The secondary `hash` range key
-    * splits a hot bucket across several tasks (the within-bucket
-    * salting), and task count adapts to the batch size. Cost: the range
-    * partitioner's one sampling pass — the callers feed it cached
-    * frames, so nothing expensive recomputes.
-    *
-    * Rows are additionally SORTED within each file on (bucket, hash):
-    * parquet's per-page min/max column indexes then stay tight on the
-    * hash, which is what turns the point-lookup probe's pushed
-    * IN(url_hash,…) into page-level point reads (VERDICT r03 #3).
-    *
-    * Small batches (`targetTasks ≤ 1` — micro-run commits) skip the
-    * range partitioner entirely: its sampling pass is a whole extra job
-    * per commit, a measured slice of the micro-run fixed-cost floor
-    * (VERDICT r03 #5). One hash-sorted file is written instead; it spans
-    * all buckets (footer min/max won't skip it) but it is small and
-    * short-lived — the bin-pack merges re-cluster through the range path
-    * on the next compaction, exactly Iceberg's write-optimized-commit /
-    * read-optimized-after-rewrite split. */
-  private def bucketSalted(df: DataFrame, hash: org.apache.spark.sql.Column,
-                           targetTasks: Int): DataFrame =
-    if (targetTasks <= 1)
-      df.repartition(1).sortWithinPartitions(col("bucket"), hash)
-    else
-      df.repartitionByRange(math.max(cfg.bloomBuckets, targetTasks),
-        col("bucket"), hash)
-        .sortWithinPartitions(col("bucket"), hash)
 
   /** Seed the frontier (run 0 commit). Seed i gets seq = i+1, depth 0.
     * Runs under the per-run conf, like runOnce. */
@@ -345,20 +334,14 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
   }
 
   /** The live pending set: derived from the latest base + deltas when a
-    * usable base exists (covers ≤ the fetchlog head, carries the frontier
-    * watermark, and no stray appends follow it — a pre-upgrade root's
-    * per-run appends force the one-time rebuild below), else a rebuild
+    * usable base exists (covers ≤ the fetchlog head), else a rebuild
     * committed as a new compacted base so the next run is fast again.
     * Crash windows need no special case anymore: a run that committed
     * frontier rows but lost its fetchlog marker simply re-derives those
     * rows as unattempted and replays them. */
   private def pendingLive(): Option[DataFrame] = {
     val logHead = fetchlog.latestDataSnapshot.getOrElse(0L)
-    val fresh = pending.latestBase.exists { b =>
-      pending.coversOf(b).exists(_ <= logHead) &&
-        pending.metricOf(b, "frontier_covers").nonEmpty &&
-        !pending.snapshots.exists(id => id > b && pending.kindOf(id) != "merge")
-    }
+    val fresh = pending.latestBase.exists(pending.coversOf(_).exists(_ <= logHead))
     if (fresh) Some(pendingMaterialized(logHead))
     else {
       val fHead = frontier.latestDataSnapshot.getOrElse(0L)
@@ -422,17 +405,22 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
     * .adaptivePerRun. Plans, jobs and outputs are the same either way;
     * only how they execute changes. Each key is restored afterwards, so
     * queries, benches and dedupFrontier/seenSet callers keep the session
-    * default. */
-  def runOnce(): Option[RunStats] = underRunConf(runOnceInner())
+    * default.
+    *
+    * Every frame the run persists or checkpoints, and every dedup cleanup,
+    * is released when the run ends, also when it throws. */
+  def runOnce(): Option[RunStats] = underRunConf {
+    val res = new CrawlEngine.RunResources
+    try runOnceInner(res) finally res.release()
+  }
 
-  private def runOnceInner(): Option[RunStats] = {
+  private def runOnceInner(res: CrawlEngine.RunResources): Option[RunStats] = {
     // persist: the pending set is DERIVED now (base + deltas + two
     // anti-joins) and has several consumers per run — the first window's
     // schedule and every window's discovery anti-join — so caching saves
     // one full re-derivation per run. No isEmpty pre-check — the drain
     // test rides the fetch count.
-    val pend = pendingLive().getOrElse(return None)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val pend = res.persist(pendingLive().getOrElse(return None))
     val runId = fetchlog.latestSnapshot.getOrElse(0L) + 1
 
     // ---- politeness WINDOWS (waves), batched per engine run -----------
@@ -457,9 +445,6 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
     final case class WaveOut(results: DataFrame, newLinks: DataFrame,
                              nScheduled: Long, nOk: Long, links: Long)
     val waves = scala.collection.mutable.ArrayBuffer.empty[WaveOut]
-    val waveCleanups = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    persisted += pend
     var pendW: DataFrame = pend
     var attemptedCum: Option[DataFrame] = None
     var wave = 0
@@ -478,15 +463,13 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
         coalesce(sum(when(col("status") === 200,
           size(regexp_extract_all(col("body"), lit("<a href=\"([^\"]*)\""), lit(1))))
           .otherwise(0)).cast("long"), lit(0L)).as("links"))
-      val results = FetchStage.run(scheduled, fetcher, pol.hostSalts).toDF()
-        .observe(obs, aggs.head, aggs.tail: _*)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val results = res.persist(FetchStage.run(scheduled, fetcher, pol.hostSalts).toDF()
+        .observe(obs, aggs.head, aggs.tail: _*))
       results.count() // materializes the window; completes the observation
       val observed = obs.get
       val nSched = observed("n").asInstanceOf[Long]
-      if (nSched == 0) { results.unpersist(); drained = true }
+      if (nSched == 0) drained = true
       else {
-        persisted += results
         val nOkW = observed("ok").asInstanceOf[Long]
         val linksW = observed("links").asInstanceOf[Long]
         // outlinks of THIS window → candidate frontier rows, deduped
@@ -516,10 +499,7 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
           case Some(att) => vsPend.join(att, Seq("url_hash"), "left_anti")
           case None => vsPend
         }
-        val (dedupedCand, dcleanup) = urlSeen.dedup(vsAttempted)
-        waveCleanups += dcleanup
-        val newLinks = dedupedCand.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted += newLinks
+        val newLinks = res.persist(res.adopt(urlSeen.dedup(vsAttempted)))
         // roll the live pending view forward to the next window (the
         // in-memory twin of pendingMaterialized's between-run algebra).
         // Lineage MUST be truncated between waves: persist caches
@@ -534,12 +514,11 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
         val attemptedW = results.select(col("url_hash"), col("attempt"))
         val lastWave = wave + 1 >= math.max(1, cfg.windowsPerRun)
         if (!lastWave) {
-          pendW = pendW
+          pendW = res.adopt(BloomDedup.checkpointed(pendW
             .unionByName(newLinks.withColumn("attempt", lit(1))
               .select(PendingCols.map(col): _*))
             .unionByName(retryRows(results))
-            .join(attemptedW, Seq("url_hash", "attempt"), "left_anti")
-            .localCheckpoint() // eager; freed by the ContextCleaner on GC
+            .join(attemptedW, Seq("url_hash", "attempt"), "left_anti")))
           attemptedCum = Some(attemptedCum
             .map(_.unionByName(attemptedW.select("url_hash")))
             .getOrElse(attemptedW.select("url_hash")))
@@ -552,7 +531,7 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
       }
       wave += 1
     }
-    if (waves.isEmpty) { pend.unpersist(); return None }
+    if (waves.isEmpty) return None
 
     val nScheduled = waves.map(_.nScheduled).sum
     val nOk = waves.map(_.nOk).sum
@@ -560,19 +539,11 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
     val totalLinks = waves.map(_.links).sum
 
     // fetchlog rows: `run` carries the GLOBAL WINDOW id (the reference-
-    // equivalent micro-run counter — resumed from the windows_total
-    // manifest metric, falling back to the append-commit count for
-    // pre-window roots). `bucket` is a CLUSTERED DATA column
-    // (bucketSalted: each file spans 1-2 buckets), so the scan-probe's
-    // per-slice seen reads and touched-bucket restriction push a plain
-    // IN(bucket,…) filter that skips whole files via footer min/max
-    // stats — while the read stays ONE
-    // multi-path parquet relation (the dir-per-commit Hive layout
-    // measured ~2× e2e in per-run planning).
+    // equivalent micro-run counter, resumed from the windows_total
+    // manifest metric)
     val windowBase = windowCount
     val logRows = waves.zipWithIndex.map { case (wv, i) =>
       wv.results.drop("body").withColumn("run", lit(windowBase + i + 1))
-        .withColumn("bucket", pmod(col("url_hash"), lit(cfg.bloomBuckets)).cast("int"))
     }.reduce(_.unionByName(_))
     windowCount = windowBase + waves.size
 
@@ -599,34 +570,21 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
       .agg(min(struct(col("w"), col("seq"), col("caption"))).as("m"))
       .select(col("image_id"), col("m.caption").as("caption"))
     // payload dedup: never a shuffle of the payload history (imageSeen)
-    val (unseenIds, imgCleanup) = imageSeen.dedup(newIds)
+    val unseenIds = res.adopt(imageSeen.dedup(newIds))
 
     // payload fetch (the image GET of the fetch stage) + phash. Committed
     // BEFORE the fetchlog marker: a replay after a crash recomputes
     // unseenIds against the committed table, so the write is idempotent.
-    val imageRows = unseenIds.select("image_id", "caption")
+    // Persisted: the images table's range sampler must never regenerate
+    // the payloads
+    val imageRows = res.persist(unseenIds.select("image_id", "caption")
       .as[(String, String)]
       .mapPartitions { it =>
         it.map { case (id, caption) =>
           val p = ImageKit.payload(id)
           ImageCaptionRow(id, p.bytes, p.w, p.h, p.fmt, caption, p.phash)
         }
-      }.toDF()
-    // repartition, NOT a commit-side coalesce: coalesce would pull the
-    // payload fetch + codec + phash mapPartitions into the (few) write
-    // tasks and single-thread the most expensive per-row stage; the
-    // repartition keeps generation at full parallelism and only the
-    // written bytes cross the one exchange. `bucket` is a CLUSTERED DATA
-    // column, not a partition dir: bucketSalted gives each file a 1-2
-    // bucket min/max span, so the dedup probe's pushed IN(bucket,…)
-    // filter skips whole files via footer stats, while reads stay ONE
-    // multi-path relation (a Hive-partitioned dir-per-commit layout was
-    // measured to cost more in per-micro-run union planning than its
-    // partition pruning saved). Persisted: bucketSalted's range sampling
-    // pass must not regenerate the payloads.
-    val imageRowsB = imageRows.withColumn("bucket",
-      pmod(xxhash64(col("image_id")), lit(cfg.bloomBuckets)).cast("int"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      }.toDF())
     // new frontier rows: every window's deduped discoveries. Cross-wave
     // duplicates are structurally excluded — wave w's discoveries were
     // deduped against pend_w (which carries every earlier wave's) and
@@ -649,20 +607,16 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec = CrawlEngine.prepareEc
-    val imgPrep = Future(images.prepare(
-      bucketSalted(imageRowsB, xxhash64(col("image_id")), (nOk / 5000 + 1).toInt)))
+    val imgPrep = Future(images.prepare(imageRows, tasks = (nOk / 5000 + 1).toInt))
     val frontPrep = Future(frontier.prepare(
       newCandidates.select(PendingCols.filterNot(_ == "attempt").map(col): _*),
-      Some("seq"), coalesceTo = (nOk * 8 / 100000 + 1).toInt))
-    val logPrep = Future(fetchlog.prepare(
-      bucketSalted(logRows, col("url_hash"), (nScheduled / 50000 + 1).toInt),
-      Some("seq")))
+      Some("seq"), tasks = (nOk * 8 / 100000 + 1).toInt))
+    val logPrep = Future(fetchlog.prepare(logRows, Some("seq"),
+      tasks = (nScheduled / 50000 + 1).toInt))
 
     val nNewImages = images.commitPrepared(Await.result(imgPrep, Duration.Inf),
       Map("run" -> runId.toDouble), skipIfEmpty = true).rows // count via footers
     imageSeen.afterCommit(runId, nNewImages)
-    imageRowsB.unpersist()
-    imgCleanup()
 
     // frontier append: idempotent under replay (rebuild dedups by hash)
     val nNewCand = frontier.commitPrepared(Await.result(frontPrep, Duration.Inf),
@@ -701,9 +655,9 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
         covers = Some(runId))
       // bounded commit-dir growth (the Iceberg rewrite-data-files
       // analogue): bin-pack the oldest micro-run dirs into one merge
-      // commit, re-clustered by bucket; once a FULL batch of level-1
-      // merges has accumulated, pack those into one level-2 merge, and
-      // full level-2 batches into one level-3 merge. Each row is
+      // commit, laid out by the table's cluster spec; once a FULL batch
+      // of level-1 merges has accumulated, pack those into one level-2
+      // merge, and full level-2 batches into one level-3 merge. Each row is
       // rewritten at most three times over the crawl's lifetime and the
       // live dir count stays O(runs/K³ + 3K) — at K=16 a 10^8-run crawl
       // holds ~25k live dirs where two levels leave ~400k — without any
@@ -712,26 +666,15 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
       // against latestDataSnapshot).
       val mergeMetrics = Map("binpack" -> 1.0, "run" -> runId.toDouble)
       val packK = cfg.compactEvery * 2
-      // pre-upgrade roots: the oldest dirs a pack rewrites may predate
-      // the `bucket` data column — re-clustering needs it, so fall back
-      // to a plain rewrite for those batches (later packs of new-layout
-      // dirs re-cluster as usual)
-      def reclustered(hash: org.apache.spark.sql.Column)(df: DataFrame): DataFrame =
-        if (df.columns.contains("bucket")) bucketSalted(df, hash, cfg.bloomBuckets) else df
-      for ((table, cluster) <- Seq[(graft.table.SnapshotTable, DataFrame => DataFrame)](
-             (fetchlog, reclustered(col("url_hash"))),
-             (images, reclustered(xxhash64(col("image_id")))),
-             (frontier, _.coalesce(1)))) {
-        table.mergeAppends(packK, cluster, mergeMetrics)
-        table.mergeMerges(packK, cluster, mergeMetrics)
-        table.mergeMerges(packK, cluster, mergeMetrics, level = 3)
+      for (table <- Seq(fetchlog, images, frontier)) {
+        table.mergeAppends(packK, mergeMetrics)
+        table.mergeMerges(packK, mergeMetrics)
+        table.mergeMerges(packK, mergeMetrics, level = 3)
       }
     }
 
     // (the R2 adaptive controller already ran per window, inside the
     // wave loop — the reference's limiter updates per micro-run window)
-    persisted.foreach(_.unpersist())
-    waveCleanups.foreach(_.apply())
     Some(RunStats(runId, nScheduled, nOk, nFail, nNewImages, nNewCand,
       totalLinks - nNewCand, pol.clampedDelay))
   }
@@ -764,7 +707,7 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
       .getOrElse(Set.empty)
 
   /** Stored payload rows in the public `input_hint` schema (the internal
-    * bucket partition column is layout, not data — stripped here). */
+    * `bucket` column is layout, not data — stripped here). */
   def imageTable(): Option[DataFrame] = images.read().map(
     _.select("image_id", "bytes", "w", "h", "fmt", "caption", "phash"))
 }

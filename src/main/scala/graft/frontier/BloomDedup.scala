@@ -219,11 +219,10 @@ object BloomDedup {
     * index bucket count — the geometry schedule grows index buckets past
     * the fixed storage layout (BloomGeometry). Slice membership is
     * `hash ≡ s (mod numSlices)` either way; the seen-side restriction
-    * maps it onto pushable storage-bucket IN filters when one count
-    * divides the other (always true for the engine's power-of-two
-    * multiples; when numSlices > storageBuckets the IN is a superset —
-    * over-inclusion on the probe side is harmless), falling back to an
-    * exact non-pushed pmod filter otherwise.
+    * maps it onto pushable storage-bucket IN filters, so one of
+    * `storageBuckets` and `numSlices` must divide the other (always true
+    * for power-of-two counts; when numSlices > storageBuckets the IN is a
+    * superset — over-inclusion on the probe side is harmless).
     *
     * `sliceBlocks`: a STANDING per-slice handle provider
     * ([[SliceBlockCache.get]]). When it yields a handle, the per-pass
@@ -241,9 +240,8 @@ object BloomDedup {
     require(numSlices >= 1 && numBuckets % numSlices == 0,
       s"numSlices $numSlices must divide numBuckets $numBuckets")
     val storageB = if (storageBuckets > 0) storageBuckets else numBuckets
-    // the single-box IO cap is shared by the slices one action consumes:
-    // all of them when the caller unions the frames, one otherwise
-    val concurrentScans = if (scanProbe) numSlices else 1
+    require(storageB % numSlices == 0 || numSlices % storageB == 0,
+      s"numSlices $numSlices and storageBuckets $storageB must divide one another")
     val bucketOf = (df: DataFrame) => pmod(col("url_hash"), lit(numBuckets)).cast("int")
     val cleanups = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
     // on a mid-loop failure, release the checkpoints already accrued for
@@ -265,11 +263,7 @@ object BloomDedup {
       // when the seen table carries a materialized `bucket` column, the
       // slice restriction becomes a plain IN over concrete values — a
       // PUSHABLE parquet filter that prunes bucket-clustered files/row
-      // groups (a pmod() of url_hash never reaches the scan). Rows with a
-      // NULL bucket (pre-upgrade commits on an old root) are included in
-      // EVERY slice — Or(IsNull, In) still pushes, over-inclusion on the
-      // anti-join probe side is harmless, and excluding them would let
-      // their already-seen URLs re-enter as new
+      // groups (a pmod() of url_hash never reaches the scan)
       val seenS =
         if (seen.columns.contains("bucket")) {
           // slice membership is hash ≡ s (mod numSlices); when slices
@@ -277,21 +271,11 @@ object BloomDedup {
           // are exactly {r : r ≡ s (mod slices)}, and when the storage
           // count divides the slice count the single bucket s % storageB
           // is a SUPERSET of the slice (over-inclusion is fine on the
-          // probe side) — both stay pushable INs over concrete values
-          val storageSlice: Option[Seq[Integer]] =
-            if (storageB % numSlices == 0)
-              Some((s until storageB by numSlices).map(Integer.valueOf))
-            else if (numSlices % storageB == 0)
-              Some(Seq(Integer.valueOf(s % storageB)))
-            else None
-          storageSlice match {
-            case Some(bs) =>
-              seen.filter(col("bucket").isNull || col("bucket").isin(bs: _*))
-            case None =>
-              val h = if (seen.columns.contains("url_hash")) col("url_hash")
-                      else xxhash64(col(joinKey))
-              seen.filter(pmod(h, lit(numSlices)) === s)
-          }
+          // probe side)
+          val storageSlice: Seq[Integer] =
+            if (storageB % numSlices == 0) (s until storageB by numSlices).map(Integer.valueOf)
+            else Seq(Integer.valueOf(s % storageB))
+          seen.filter(col("bucket").isin(storageSlice: _*))
         } else if (seen.columns.contains("url_hash"))
           seen.filter(pmod(col("url_hash"), lit(numSlices)) === s)
         else // hash-less seen side (e.g. an image_id payload table)
@@ -299,10 +283,10 @@ object BloomDedup {
       val (out, cleanup) = sliceBlocks(s) match {
         case Some(standing) =>
           dedupScanWith(candS, seenS, standing, numBuckets,
-            maxProbeBroadcastRows, joinKey, storageB, concurrentScans = concurrentScans)
+            maxProbeBroadcastRows, joinKey, storageB)
         case None =>
           dedupScan(candS, seenS, collectBlocks(sliceIdx), numBuckets,
-            maxProbeBroadcastRows, joinKey, storageB, concurrentScans = concurrentScans)
+            maxProbeBroadcastRows, joinKey, storageB)
       }
       if (scanProbe) {
         cleanups += cleanup
@@ -357,7 +341,7 @@ object BloomDedup {
     *  1. zero → the seen set is not touched at all;
     *  2. ≤ `pointLookupMaxRows` → the survivor KEYS are collected and
     *     pushed INTO the seen scan as a literal IN — with the engine's
-    *     hash-sorted file layout (bucketSalted sorts within partitions)
+    *     hash-sorted file layout (a clustered table sorts each file)
     *     parquet's row-group stats + column-index page pruning turn the
     *     probe into page-level point lookups instead of a full column
     *     scan of the touched buckets (VERDICT r03 #3: the last residual
@@ -374,14 +358,13 @@ object BloomDedup {
   def dedupScan(candidates: DataFrame, seen: DataFrame, blocks: Map[Int, Array[Byte]],
                 numBuckets: Int, maxProbeBroadcastRows: Long = 4L << 20,
                 joinKey: String = "url_hash", storageBuckets: Int = -1,
-                pointLookupMaxRows: Long = 1024L, concurrentScans: Int = 1)
+                pointLookupMaxRows: Long = 1024L)
       : (DataFrame, () => Unit) = {
     val sc = candidates.sparkSession.sparkContext
     val handle = SliceBlocks(new java.security.SecureRandom().nextLong(),
       sc.broadcast(blocks))
     dedupScanWith(candidates, seen, handle, numBuckets, maxProbeBroadcastRows,
-      joinKey, storageBuckets, pointLookupMaxRows, ownsBroadcast = true,
-      concurrentScans = concurrentScans)
+      joinKey, storageBuckets, pointLookupMaxRows, ownsBroadcast = true)
   }
 
   /** [[dedupScan]] over a STANDING [[SliceBlocks]] handle: the caller
@@ -392,8 +375,7 @@ object BloomDedup {
                     numBuckets: Int, maxProbeBroadcastRows: Long = 4L << 20,
                     joinKey: String = "url_hash", storageBuckets: Int = -1,
                     pointLookupMaxRows: Long = 1024L,
-                    ownsBroadcast: Boolean = false,
-                    concurrentScans: Int = 1)
+                    ownsBroadcast: Boolean = false)
       : (DataFrame, () => Unit) = {
     val spark = candidates.sparkSession
     val sc = spark.sparkContext
@@ -402,23 +384,17 @@ object BloomDedup {
     val epoch = standing.epoch
     val bc = standing.bc
     val acc = sc.longAccumulator("bloom-survivors")
-    val before = sc.getPersistentRDDs.keySet
     // owned broadcasts (the per-call dedupScan path) are destroyed in a
     // finally: a task failure inside the eager checkpoint must not pin a
     // budget-sized (≤ maxBroadcastBytes) block broadcast. STANDING
     // handles outlive the call by design — only the bloom test inside
     // this checkpoint reads the broadcast, so the owner may destroy it
     // any time after this call returns, even with probe frames pending.
-    val flagged =
-      try candidates.withColumn("__maybe",
+    val (flagged, cleanup) =
+      try checkpointed(candidates.withColumn("__maybe",
           graft.functions.BloomMightContain.counting(epoch, bc, acc,
-            pmod(col("url_hash"), lit(numBuckets)).cast("int"), col("url_hash")))
-        .localCheckpoint()
+            pmod(col("url_hash"), lit(numBuckets)).cast("int"), col("url_hash"))))
       finally if (ownsBroadcast) bc.destroy()
-    val created = sc.getPersistentRDDs.keySet -- before
-    val cleanup = () => created.foreach { id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
-    }
     val keyCols = (Seq(joinKey, "url_hash").distinct).map(col)
     val maybeKeys = flagged.filter(col("__maybe")).select(keyCols: _*)
     val nMaybe = acc.value.longValue() // counted inside the checkpoint job
@@ -435,16 +411,12 @@ object BloomDedup {
         val keys = rows.map(_.get(0)).distinct
         val seenPruned =
           if (seen.columns.contains("bucket") && touched.length < storageB)
-            seen.filter(col("bucket").isNull ||
-              col("bucket").isin(touched.map(Integer.valueOf).toSeq: _*))
+            seen.filter(col("bucket").isin(touched.map(Integer.valueOf).toSeq: _*))
           else seen
         val dups = seenPruned.filter(col(joinKey).isin(keys.toSeq: _*)).select(joinKey)
         flagged.join(broadcast(dups), Seq(joinKey), "left_anti").select(outCols: _*)
       } else if (nMaybe <= maxProbeBroadcastRows) {
-        // single-box IO cap on the sequential-read-bound probe scan (see
-        // probeScanCap — a no-op on cluster masters and in-memory seens)
-        val dups = probeScanCap(prunedSeenKeys(seen, maybeKeys, storageB, joinKey),
-            concurrentScans)
+        val dups = prunedSeenKeys(seen, maybeKeys, storageB, joinKey)
           .join(broadcast(maybeKeys.select(joinKey)), Seq(joinKey), "left_semi")
         flagged.join(broadcast(dups), Seq(joinKey), "left_anti").select(outCols: _*)
       } else {
@@ -456,41 +428,22 @@ object BloomDedup {
     (out, cleanup)
   }
 
-  /** Single-machine IO throttle for DISK-BACKED broadcast-probe seen
-    * scans (VERDICT r04 #2): on a `local[*]` master every task shares ONE
-    * page cache and one storage path, and the probe scan is sequential-
-    * read-bound — 32 concurrent reader tasks thrash where ~8 stream
-    * (measured: the engine-true 10^9-key sliced pass read 544k cand/s at
-    * local[8] vs 296k at local[32]; the no-Spark alloc control shows the
-    * box itself scales 0.61 on that pair). The cap bounds the probe
-    * scan's CONCURRENT read tasks at `graft.probe.ioStreams` (default 8)
-    * TOTAL across the `concurrentScans` slices a pass consumes in one
-    * action. It applies ONLY when (a) the master is local — on a real
-    * cluster each executor brings its own disks + page cache, and capping
-    * a 1000-executor probe scan to 8 tasks would serialize it — and (b)
-    * the seen side is file-backed (an in-memory seen frame is CPU-bound;
-    * coalescing it would cap compute, not IO). Correctness is untouched
-    * either way: coalesce only merges scan partitions. */
-  private val ProbeIoStreams: Int =
-    sys.props.get("graft.probe.ioStreams").map(_.toInt).getOrElse(8)
-
-  private def isFileBacked(df: DataFrame): Boolean =
-    df.queryExecution.logical.collectFirst {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
-    }.nonEmpty
-
-  private def probeScanCap(df: DataFrame, concurrentScans: Int): DataFrame = {
+  /** Eager `localCheckpoint` of `df`, plus a thunk that unpersists the
+    * RDDs the checkpoint persisted (otherwise they live until the
+    * ContextCleaner collects them). */
+  private[graft] def checkpointed(df: DataFrame): (DataFrame, () => Unit) = {
     val sc = df.sparkSession.sparkContext
-    if (ProbeIoStreams <= 0 || !sc.master.startsWith("local") || !isFileBacked(df)) df
-    else df.coalesce(math.max(1, ProbeIoStreams / math.max(1, concurrentScans)))
+    val before = sc.getPersistentRDDs.keySet
+    val out = df.localCheckpoint()
+    val created = sc.getPersistentRDDs.keySet -- before
+    (out, () => created.foreach(id =>
+      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))))
   }
 
   /** Restrict the seen-key scan to the buckets the survivors touch — a
     * plain `IN` over concrete bucket values, which becomes PARTITION
     * pruning when the table is bucket-partitioned on disk (and row-group
-    * stats pruning when merely bucket-clustered). Null-bucket rows
-    * (pre-upgrade commits) are always included — dropping them would let
-    * their already-seen URLs re-enter as new. */
+    * stats pruning when merely bucket-clustered). */
   private def prunedSeenKeys(seen: DataFrame, maybeKeys: DataFrame,
                              storageBuckets: Int, joinKey: String = "url_hash"): DataFrame =
     if (!seen.columns.contains("bucket")) seen.select(joinKey)
@@ -499,8 +452,7 @@ object BloomDedup {
         .select(pmod(col("url_hash"), lit(storageBuckets)).cast("int").as("b"))
         .distinct().collect().map(_.getInt(0)).sorted
       if (touched.length >= storageBuckets) seen.select(joinKey)
-      else seen.filter(col("bucket").isNull ||
-          col("bucket").isin(touched.map(Integer.valueOf).toSeq: _*))
+      else seen.filter(col("bucket").isin(touched.map(Integer.valueOf).toSeq: _*))
         .select(joinKey)
     }
 

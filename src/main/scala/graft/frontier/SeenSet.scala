@@ -26,11 +26,17 @@ import org.apache.spark.sql.functions._
   *    in the `snapshotCol` column. Keys committed since ride an exact
   *    recent-delta anti-join, so the index is crash-safe by construction:
   *    an index whose latest commit has no usable marker (lost, ahead of
-  *    the table head, or a covers-less append) is rebuilt, never trusted. */
+  *    the table head, or a covers-less append) is rebuilt, never trusted.
+  *
+  * `table` must be clustered ([[SnapshotTable.Cluster]]): its bucket count
+  * is the index geometry's bucket floor and the granularity of the
+  * `bucket` column the probes restrict to. */
 final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
                     idx: SnapshotTable, key: String, snapshotCol: String) {
 
   private val keyIsHash = key == "url_hash"
+  private val storageBuckets: Int = table.cluster.map(_.buckets).getOrElse(
+    throw new IllegalArgumentException(s"seen set on $key needs a clustered table"))
   private val hash: Column = if (keyIsHash) col(key) else xxhash64(col(key))
 
   // manifest-derived cardinality estimate (read once at startup, then
@@ -48,14 +54,13 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
   private val maxBlockBytes: Long =
     math.min(128L * 1024 * 1024, math.max(1L, cfg.maxBroadcastBytes / 4))
   private def geomFor(rows: Long): BloomGeometry =
-    BloomGeometry.forEstimate(rows, cfg.bloomBuckets, maxBlockBytes, cfg.bloomCapacityFloor)
+    BloomGeometry.forEstimate(rows, storageBuckets, maxBlockBytes, cfg.bloomCapacityFloor)
+  // None when the latest index commit lacks either geometry metric: the
+  // index is then rebuilt (usableBase), never read at a guessed geometry
   private def storedGeom: Option[BloomGeometry] =
-    idx.latestSnapshot.map { n =>
-      BloomGeometry(
-        idx.metricOf(n, "index_buckets").map(_.toInt).getOrElse(cfg.bloomBuckets),
-        idx.metricOf(n, "expected_per_bucket").map(_.toLong)
-          .getOrElse(BloomGeometry.MinCapacity))
-    }
+    for (n <- idx.latestSnapshot; b <- idx.metricOf(n, "index_buckets");
+         c <- idx.metricOf(n, "expected_per_bucket"))
+      yield BloomGeometry(b.toInt, c.toLong)
   private def geomMetrics: Map[String, Double] = Map(
     "index_buckets" -> geom.indexBuckets.toDouble,
     "expected_per_bucket" -> geom.capacityPerBucket.toDouble)
@@ -121,10 +126,9 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
 
   // no distinct: every consumer is an anti-join probe (set semantics on
   // the probe side already) or a Bloom build (idempotent under dups).
-  // The materialized `bucket` column rides along so each slice's
-  // probe restriction pushes to the parquet scan as a plain IN filter.
-  private def seenKeys: Option[DataFrame] =
-    table.read().map(df => df.select((key +: Seq("bucket").filter(df.columns.contains)).map(col): _*))
+  // The table's `bucket` column rides along so each slice's probe
+  // restriction pushes to the parquet scan as a plain IN filter.
+  private def seenKeys: Option[DataFrame] = table.read().map(_.select(key, "bucket"))
 
   private def buildIndex(seen: DataFrame): DataFrame =
     BloomDedup.buildIndex(seen.select(hash.as("url_hash")), geom.indexBuckets,
@@ -176,7 +180,7 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val cleanup = BloomDedup.dedupSliced(cand, seen, idxRows,
       geom.indexBuckets, sliceCount, scanProbe = true, joinKey = key,
-      storageBuckets = cfg.bloomBuckets,
+      storageBuckets = storageBuckets,
       sliceBlocks = standingSlices(geom.indexBuckets, sliceCount)) {
       (_, out) => parts += out
     }

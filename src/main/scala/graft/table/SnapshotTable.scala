@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.core.json.JsonReadFeature
 import com.fasterxml.jackson.databind.json.JsonMapper
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.apache.spark.sql.types.StructType
 
 /** Snapshot-committed Parquet table: the offline stand-in for an Iceberg
@@ -39,9 +40,13 @@ import org.apache.spark.sql.types.StructType
   *    the commits after it. Bounds read cost to O(base + appends-since).
   *  - '''merge''' — a bin-pack: rewrites older data dirs into one without
   *    changing the table's content ([[mergeAppends]], [[mergeMerges]]).
+  *
+  * A table declared with a [[SnapshotTable.Cluster]] spec applies that
+  * bucket layout on every data write, commits and merges alike.
   */
 class SnapshotTable(spark: => SparkSession, root: String,
-                    writeOptions: Map[String, String] = Map.empty) {
+                    writeOptions: Map[String, String] = Map.empty,
+                    val cluster: Option[SnapshotTable.Cluster] = None) {
   // `spark` is BY-NAME: the manifest-metadata methods (snapshots, kindOf,
   // coversOf, metricOf, totalRows, …) are pure file reads, so metadata
   // tooling (graft.CrawlManager) can construct a table without a session.
@@ -163,12 +168,10 @@ class SnapshotTable(spark: => SparkSession, root: String,
     * appends stays O(M / maxDirs + maxDirs) instead of O(M) (a further
     * level — [[mergeMerges]] — packs full batches of level-1 merges to
     * O(M / maxDirs² + 2·maxDirs) at a rewrite bound of 2). Time travel to
-    * pre-merge snapshots still sees the original dirs; `transform`
-    * re-clusters the rewritten rows (e.g. by bucket). Returns the merge
+    * pre-merge snapshots still sees the original dirs. Returns the merge
     * snapshot id, or None when fewer than two dirs qualify. */
-  def mergeAppends(maxDirs: Int, transform: DataFrame => DataFrame = identity,
-                   metrics: Map[String, Double] = Map.empty): Option[Long] =
-    pack(1, 2, maxDirs, transform, metrics)
+  def mergeAppends(maxDirs: Int, metrics: Map[String, Double] = Map.empty): Option[Long] =
+    pack(1, 2, maxDirs, metrics)
 
   /** Bin-pack level of merge snapshot `n` (1 when the field is absent —
     * pre-level manifests; 0 for non-merge commits). */
@@ -187,18 +190,19 @@ class SnapshotTable(spark: => SparkSession, root: String,
     * dirs, whose own manifests supersede theirs, down to the original
     * appends), so reads/time-travel/readBetween need no changes.
     * Returns the merge snapshot id, or None below a full batch. */
-  def mergeMerges(maxDirs: Int, transform: DataFrame => DataFrame = identity,
-                  metrics: Map[String, Double] = Map.empty,
+  def mergeMerges(maxDirs: Int, metrics: Map[String, Double] = Map.empty,
                   level: Int = 2): Option[Long] = {
     require(maxDirs >= 2, s"maxDirs $maxDirs must be >= 2")
     require(level >= 2, s"level $level must be >= 2")
-    pack(level, maxDirs, maxDirs, transform, metrics)
+    pack(level, maxDirs, maxDirs, metrics)
   }
 
   /** Rewrite the oldest ≤ `maxDirs` un-packed dirs of the level below
     * `level` (appends for level 1) since the last base into one
-    * level-`level` merge commit, when at least `minDirs` qualify. */
-  private def pack(level: Int, minDirs: Int, maxDirs: Int, transform: DataFrame => DataFrame,
+    * level-`level` merge commit, when at least `minDirs` qualify. A
+    * clustered table re-clusters the rows at its bucket count; any other
+    * writes one file. */
+  private def pack(level: Int, minDirs: Int, maxDirs: Int,
                    metrics: Map[String, Double]): Option[Long] = {
     val ms = snapshots.map(manifest)
     val packed = mergedAway(ms)
@@ -207,17 +211,23 @@ class SnapshotTable(spark: => SparkSession, root: String,
     val candidates = sinceBase(ms).filter(m => !packed(m.id) && isSource(m)).map(_.id)
       .filter(id => Files.isDirectory(dataDir(id))).take(maxDirs)
     if (candidates.size < minDirs) return None
-    val df = transform(readDirs(candidates.map(dataDir(_).toString), ms.last.id))
-    Some(publish(prepare(df), metrics, "merge", None, merges = candidates, mergeLevel = level).id)
+    val df = readDirs(candidates.map(dataDir(_).toString), ms.last.id)
+    Some(publish(prepare(df, tasks = cluster.fold(1)(_.buckets)), metrics, "merge", None,
+      merges = candidates, mergeLevel = level).id)
   }
 
   /** Write `df`'s data files for the next snapshot id, without the
-    * manifest. Returns footer-derived row count + lineage; pair with
-    * [[commitPrepared]] to publish. */
-  def prepare(df: DataFrame, seqCol: Option[String] = None, coalesceTo: Int = 0): Prepared = {
+    * manifest. `tasks` is how many files the write targets: a clustered
+    * table lays the rows out by [[SnapshotTable.Cluster]]; any other
+    * coalesces to `tasks` when positive. Returns footer-derived row count
+    * + lineage; pair with [[commitPrepared]] to publish. */
+  def prepare(df: DataFrame, seqCol: Option[String] = None, tasks: Int = 0): Prepared = {
     val id = latestSnapshot.getOrElse(0L) + 1L
     val out = dataDir(id)
-    val toWrite = if (coalesceTo > 0) df.coalesce(coalesceTo) else df
+    val toWrite = cluster match {
+      case Some(c) => c.layout(df, tasks)
+      case None => if (tasks > 0) df.coalesce(tasks) else df
+    }
     // "overwrite": a dir at this id can only be a crashed run's orphan
     // (no manifest references it — see class doc), so reclaiming it is safe
     toWrite.write.options(writeOptions).mode("overwrite").parquet(out.toString)
@@ -324,6 +334,49 @@ class SnapshotTable(spark: => SparkSession, root: String,
 
 object SnapshotTable {
   final case class CommitResult(id: Long, rows: Long)
+
+  /** A table's bucket layout: every write sets the data column
+    * `bucket = pmod(hash, buckets)` and range-clusters on it (NOTES r02
+    * #3), so each written file spans a narrow CONTIGUOUS bucket range
+    * (usually one bucket) and a pushed IN(bucket,…) filter skips whole
+    * files via footer min/max stats — hash-partitioning on (bucket, salt)
+    * would scatter arbitrary bucket sets into each file and widen every
+    * min/max span past usefulness. The secondary `hash` range key splits
+    * a hot bucket across several tasks, and the task count adapts to the
+    * batch size. Cost: the range partitioner's one sampling pass — writers
+    * feed it cached frames, so nothing expensive recomputes. Reads stay
+    * ONE multi-path parquet relation (a dir-per-commit Hive layout was
+    * measured ~2× e2e in per-micro-run planning).
+    *
+    * Rows are additionally SORTED within each file on (bucket, hash):
+    * parquet's per-page min/max column indexes then stay tight on the
+    * hash, which is what turns the point-lookup probe's pushed
+    * IN(url_hash,…) into page-level point reads (VERDICT r03 #3).
+    *
+    * Small writes (`tasks ≤ 1` — micro-run commits) skip the range
+    * partitioner entirely: its sampling pass is a whole extra job per
+    * commit, a measured slice of the micro-run fixed-cost floor (VERDICT
+    * r03 #5). One hash-sorted file is written instead; it spans all
+    * buckets (footer min/max won't skip it) but it is small and
+    * short-lived — the bin-pack merges re-cluster through the range path
+    * at `buckets` tasks, exactly Iceberg's write-optimized-commit /
+    * read-optimized-after-rewrite split.
+    *
+    * `buckets` is a power of two, so it divides or is divided by every
+    * power-of-two slice and index-bucket count a probe restricts to. */
+  final case class Cluster(hash: Column, buckets: Int) {
+    require(buckets > 0 && Integer.bitCount(buckets) == 1,
+      s"bucket count $buckets must be a power of two")
+
+    private[table] def layout(df: DataFrame, tasks: Int): DataFrame = {
+      val keys = Seq(col("bucket"), hash)
+      val bucketed = df.withColumn("bucket", pmod(hash, lit(buckets)).cast("int"))
+      val parts =
+        if (tasks <= 1) bucketed.repartition(1)
+        else bucketed.repartitionByRange(math.max(buckets, tasks), keys: _*)
+      parts.sortWithinPartitions(keys: _*)
+    }
+  }
 
   /** A PREPARED snapshot: data files fully written under the allocated
     * id's dir, manifest NOT yet published — readers still ignore the dir

@@ -193,10 +193,10 @@ class CrawlEngineSpec extends AnyFunSuite {
       .as[(String, Long)].collect().toMap
     assert(imgs == ref, "sliced dedup changed the payload table")
     // the slice restriction must reach the parquet scan as a PUSHED
-    // filter — bucket is a clustered data column (bucketSalted: each
-    // file spans 1-2 bucket values), so the IN skips whole files via
-    // footer min/max stats while the read stays one multi-path relation
-    // (the dir-per-commit partitioned layout pruned harder but cost more
+    // filter — bucket is a clustered data column (the fetchlog's cluster
+    // spec: each file spans 1-2 bucket values), so the IN skips whole
+    // files via footer min/max stats while the read stays one multi-path
+    // relation (the dir-per-commit partitioned layout pruned harder but cost more
     // in per-micro-run union planning than it saved — measured e2e)
     val slicePlan = e.fetchlog.read().get
       .filter(org.apache.spark.sql.functions.col("bucket").isin(0, 2, 4, 6))
@@ -733,6 +733,25 @@ class CrawlEngineSpec extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  test("a throwing runOnce leaves none of its frames persisted in the session") {
+    val sc = TestSpark.spark.sparkContext
+    val failing = new Fetcher {
+      override def fetch(url: String, attempt: Int): FetchResponse =
+        throw new IllegalStateException("fetcher down")
+    }
+    val broken = new CrawlEngine(TestSpark.spark,
+      CrawlConfig(Files.createTempDirectory("crawl-leak").toString,
+        Politeness(perHostBudget = budget), maxRetries, bloomBuckets = 8),
+      failing, web.robots)
+    broken.seed(web.seeds)
+    val before = sc.getPersistentRDDs.keySet
+    intercept[Exception](broken.runOnce())
+    // no RDD the run persisted survives it (the ContextCleaner may free
+    // older, unrelated ones meanwhile, so only additions count)
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"the failed run left RDDs ${leaked.mkString(", ")} persisted")
   }
 
   test("resume from last committed snapshot equals uninterrupted run") {

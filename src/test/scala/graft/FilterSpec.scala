@@ -199,7 +199,7 @@ class FilterSpec extends AnyFunSuite {
     // is the one being exercised
     val candHashes = (seenHashes.take(60) ++ (1 to 4000).map(_ => rnd.nextLong())).distinct
     // the seen side lives ON DISK in the engine's layout: bucket-range
-    // clustered AND hash-sorted within files (bucketSalted), which is
+    // clustered AND hash-sorted within files (SnapshotTable.Cluster), which is
     // what makes page-level column indexes tight on url_hash
     val dir = java.nio.file.Files.createTempDirectory("pointlookup").toString
     seenHashes.toDF("url_hash")

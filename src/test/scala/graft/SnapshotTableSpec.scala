@@ -109,7 +109,7 @@ class SnapshotTableSpec extends AnyFunSuite {
       t.commit(Seq((i.toLong, s"v$i")).toDF("url_hash", "v"), Map.empty)
     val before = t.read().get.as[(Long, String)].collect().toSet
     val dataHead = t.latestSnapshot.get
-    val m1 = t.mergeAppends(3, _.coalesce(1), Map("binpack" -> 1.0))
+    val m1 = t.mergeAppends(3, Map("binpack" -> 1.0))
     assert(m1.nonEmpty && t.kindOf(m1.get) == "merge")
     assert(t.read().get.as[(Long, String)].collect().toSet == before,
       "merge changed table content")
@@ -120,7 +120,7 @@ class SnapshotTableSpec extends AnyFunSuite {
       "readBetween double-counted merged rows")
     assert(t.totalRows == 5, "totalRows double-counted the merge rewrite")
     // second pass packs the remainder; merge dirs are never re-merged
-    val m2 = t.mergeAppends(10, _.coalesce(1))
+    val m2 = t.mergeAppends(10)
     assert(m2.nonEmpty)
     assert(t.read().get.as[(Long, String)].collect().toSet == before)
     assert(t.mergeAppends(10).isEmpty, "re-merged already-packed dirs")
@@ -140,11 +140,11 @@ class SnapshotTableSpec extends AnyFunSuite {
       t.commit(Seq((i.toLong, s"v$i")).toDF("url_hash", "v"), Map.empty)
     val before = t.read().get.as[(Long, String)].collect().toSet
     // four level-1 packs of the 8 appends
-    val l1 = (1 to 4).flatMap(_ => t.mergeAppends(2, _.coalesce(1)))
+    val l1 = (1 to 4).flatMap(_ => t.mergeAppends(2))
     assert(l1.size == 4 && l1.forall(t.mergeLevelOf(_) == 1))
     // below a FULL batch nothing fires; at the batch size it packs all 4
     assert(t.mergeMerges(5).isEmpty, "level-2 fired below a full batch")
-    val l2 = t.mergeMerges(4, _.coalesce(1), Map("binpack" -> 2.0))
+    val l2 = t.mergeMerges(4, Map("binpack" -> 2.0))
     assert(l2.nonEmpty && t.kindOf(l2.get) == "merge" && t.mergeLevelOf(l2.get) == 2)
     assert(t.read().get.as[(Long, String)].collect().toSet == before,
       "level-2 merge changed table content")
@@ -174,13 +174,13 @@ class SnapshotTableSpec extends AnyFunSuite {
     for (i <- 1 to 8)
       t.commit(Seq((i.toLong, s"v$i")).toDF("url_hash", "v"), Map.empty)
     val before = t.read().get.as[(Long, String)].collect().toSet
-    val l1 = (1 to 4).flatMap(_ => t.mergeAppends(2, _.coalesce(1)))
+    val l1 = (1 to 4).flatMap(_ => t.mergeAppends(2))
     assert(l1.size == 4)
-    val l2 = (1 to 2).flatMap(_ => t.mergeMerges(2, _.coalesce(1)))
+    val l2 = (1 to 2).flatMap(_ => t.mergeMerges(2))
     assert(l2.size == 2 && l2.forall(t.mergeLevelOf(_) == 2))
     // below a full level-2 batch nothing fires; at the batch size it packs
     assert(t.mergeMerges(3, level = 3).isEmpty, "level-3 fired below a full batch")
-    val l3 = t.mergeMerges(2, _.coalesce(1), Map("binpack" -> 3.0), level = 3)
+    val l3 = t.mergeMerges(2, Map("binpack" -> 3.0), level = 3)
     assert(l3.nonEmpty && t.mergeLevelOf(l3.get) == 3)
     assert(t.read().get.as[(Long, String)].collect().toSet == before,
       "level-3 merge changed table content")
@@ -198,6 +198,66 @@ class SnapshotTableSpec extends AnyFunSuite {
     // 3 times (once per level) — count data dirs ever created
     val merges = (l1 ++ l2 ++ l3)
     assert(merges.size == 7, s"expected 4+2+1 merge commits, got ${merges.size}")
+  }
+
+  test("a clustered table writes bucket = pmod(hash, buckets) sorted on (bucket, hash); merges re-cluster") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    import scala.jdk.CollectionConverters._
+    val buckets = 4
+    val cluster = SnapshotTable.Cluster(col("h"), buckets)
+    assert(intercept[IllegalArgumentException](SnapshotTable.Cluster(col("h"), 12))
+      .getMessage.contains("power of two"))
+    val root = tmpDir()
+    def rows(from: Long, n: Long) =
+      spark.range(from, from + n).select(xxhash64(col("id")).as("h"), col("id").as("v"))
+    // two commits a plain table writes on the same root: no bucket column
+    val plain = new SnapshotTable(spark, root)
+    plain.commit(rows(0, 50).repartition(3), Map.empty)
+    plain.commit(rows(50, 50), Map.empty)
+    val t = new SnapshotTable(spark, root, cluster = Some(cluster))
+    val single = t.commitPrepared(t.prepare(rows(100, 200).repartition(4), tasks = 1), Map.empty)
+    val ranged = t.commitPrepared(t.prepare(rows(300, 400), tasks = 8), Map.empty)
+
+    // the (bucket, hash) keys of each data file of snapshot `id`, in file
+    // order; every row's bucket is pmod(hash, buckets) and every file is
+    // sorted on (bucket, hash)
+    def clusteredFiles(id: Long): Seq[Seq[(Int, Long)]] = {
+      val s = Files.list(java.nio.file.Paths.get(root, "data", f"commit-$id%06d"))
+      val files = try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
+        finally s.close()
+      val keys = files.map(f => spark.read.parquet(f.toString).select("bucket", "h")
+        .as[(Int, Long)].collect().toSeq).filter(_.nonEmpty)
+      keys.flatten.foreach { case (b, h) =>
+        assert(b == java.lang.Math.floorMod(h, buckets.toLong), s"v$id: bucket $b for hash $h")
+      }
+      keys.foreach(k => assert(k == k.sorted, s"v$id: a file is not sorted on (bucket, hash)"))
+      keys
+    }
+    def keyOrder = Ordering[(Int, Long)]
+    // range-clustered files hold disjoint, contiguous (bucket, hash) ranges
+    def assertRanged(files: Seq[Seq[(Int, Long)]]): Unit =
+      files.sortBy(_.head)(keyOrder).sliding(2).foreach {
+        case Seq(a, b) => assert(keyOrder.lt(a.last, b.head), "file key ranges overlap")
+        case _ =>
+      }
+
+    assert(clusteredFiles(single.id).size == 1)
+    assert(single.rows == 200)
+    val rangedFiles = clusteredFiles(ranged.id)
+    assert(rangedFiles.size > 1 && rangedFiles.size <= 8 && rangedFiles.map(_.size).sum == 400)
+    assertRanged(rangedFiles)
+
+    // a fresh clustered instance merges all four appends, the bucket-less
+    // ones included, into files laid out at `buckets` tasks
+    val t2 = new SnapshotTable(spark, root, cluster = Some(cluster))
+    val merged = t2.mergeAppends(10).get
+    val mergedFiles = clusteredFiles(merged)
+    assert(mergedFiles.size > 1 && mergedFiles.size <= buckets && mergedFiles.map(_.size).sum == 700)
+    assertRanged(mergedFiles)
+    assert(t2.read().get.select("h", "v").as[(Long, Long)].collect().toSet ==
+      rows(0, 700).as[(Long, Long)].collect().toSet)
   }
 
   test("manifests expose metrics and per-partition lineage") {

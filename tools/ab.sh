@@ -15,15 +15,18 @@
 # other; the side that goes first alternates from seed to seed, so slow
 # drift of a shared host does not favour either side.
 #
-# Prints one line per invocation and, at the end, the per-metric medians of
-# both sides with the relative change. Every invocation runs for
-# BENCHMARK.json's run_seconds. Work directory: $AB_DIR (default
-# ${TMPDIR:-/tmp}/graft-ab), reused, so unchanged builds and fixtures are
-# not redone.
+# Prints one line per invocation and, at the end, per metric: each side's
+# quartiles, the base IQR as a share of the base median, how many pairs the
+# head won (by the metric's `better` in BENCHMARK.json), the median change,
+# whether the head median is worse than the base median by more than the
+# metric's `bound`, and "unresolved" when the base IQR is wider than the
+# bound. Every invocation runs for BENCHMARK.json's run_seconds. Work
+# directory: $AB_DIR (default ${TMPDIR:-/tmp}/graft-ab), reused, so
+# unchanged builds and fixtures are not redone.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
-  sed -n '2,22p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,25p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 rev=$1; workload=$2; shift 2
@@ -76,15 +79,42 @@ for seed in "$@"; do
   i=$((i + 1))
 done
 
-python3 - "$results" "$rev" "$workload" <<'PY'
+python3 - "$results" "$rev" "$workload" "$repo/BENCHMARK.json" <<'PY'
 import json, statistics, sys
 rows = [json.loads(l) for l in open(sys.argv[1])]
+bench = json.load(open(sys.argv[4]))
+spec = {m["name"]: m for m in bench["end_to_end"] + bench.get("per_layer", [])}
 print(f"{sys.argv[3]}: base={sys.argv[2]} vs head=working tree, {len(rows) // 2} pair(s)")
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, med, q3
+
 for k in sorted(rows[0]["metrics"]):
-    med = {s: statistics.median(r["metrics"][k] for r in rows if r["side"] == s)
-           for s in ("base", "head")}
-    rel = (med["head"] / med["base"] - 1) * 100 if med["base"] else float("nan")
-    print(f"  {k}: median base {med['base']:.2f} head {med['head']:.2f} ({rel:+.1f}%)")
+    side = {s: {r["seed"]: r["metrics"][k] for r in rows if r["side"] == s}
+            for s in ("base", "head")}
+    (bq1, bmed, bq3), (hq1, hmed, hq3) = (quartiles(list(side[s].values()))
+                                          for s in ("base", "head"))
+    m = spec.get(k, {})
+    better, bound = m.get("better"), m.get("bound")
+    line = (f"  {k}: base q1/med/q3 {bq1:.2f}/{bmed:.2f}/{bq3:.2f}, "
+            f"head {hq1:.2f}/{hmed:.2f}/{hq3:.2f}")
+    iqr = (bq3 - bq1) / abs(bmed) if bmed else float("nan")
+    rel = (hmed / bmed - 1) if bmed else float("nan")
+    line += f"; base IQR {iqr * 100:.1f}% of median; median {rel * 100:+.1f}%"
+    if better in ("higher", "lower"):
+        sign = 1 if better == "higher" else -1
+        pairs = [sd for sd in side["base"] if sd in side["head"]]
+        won = sum(1 for sd in pairs if sign * (side["head"][sd] - side["base"][sd]) > 0)
+        line += f"; head won {won}/{len(pairs)} pairs ({better} is better)"
+        if bound is not None:
+            worse = -sign * rel > bound
+            line += (f"; {'WORSE than' if worse else 'within'} bound {bound * 100:.0f}%")
+            if iqr > bound:
+                line += "; unresolved (base IQR wider than bound)"
+    print(line)
 for s in ("base", "head"):
     print(f"  {s} failed/attempted: {sum(r['failed'] for r in rows if r['side'] == s)}"
           f"/{sum(r['attempted'] for r in rows if r['side'] == s)}")
