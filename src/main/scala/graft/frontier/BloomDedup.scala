@@ -129,17 +129,11 @@ object BloomDedup {
     private val rng = new java.security.SecureRandom()
     private var base = rng.nextLong()
     private val slices = scala.collection.mutable.HashMap.empty[Int, SliceBlocks]
-    // SplitMix64 finalizer: slice indexes are tiny ints — mixing keeps
-    // (epoch + bucket) executor-cache keys collision-free across slices
-    private def mix(z0: Long): Long = {
-      var z = z0 + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
+    // epochs base + s are distinct per slice; BloomRuntime.test mixes each
+    // before keying its executor cache
     def get(s: Int): Option[SliceBlocks] = Some(synchronized {
       slices.getOrElseUpdate(s,
-        SliceBlocks(mix(base + s), spark.sparkContext.broadcast(loadSlice(s))))
+        SliceBlocks(base + s, spark.sparkContext.broadcast(loadSlice(s))))
     })
     def invalidate(): Unit = synchronized {
       slices.valuesIterator.foreach(sb => sb.bc.destroy())

@@ -21,18 +21,18 @@ import org.apache.spark.sql.functions._
   *  - at or above it: the SCAN-PROBE plan over a TABLE-RESIDENT index in
   *    k ≥ 1 hash-range slices, k the fewest that fit the per-slice
   *    broadcast budget ([[BloomGeometry.slicesFitting]]). The index lives
-  *    in `idx` as bases only (`rebuild` / `compaction`), each carrying a
-  *    covers marker: the `table` snapshot it covers, also recorded per row
-  *    in the `snapshotCol` column. Keys committed since ride an exact
-  *    recent-delta anti-join, so the index is crash-safe by construction:
-  *    an index whose latest commit has no usable marker (lost, ahead of
-  *    the table head, or a covers-less append) is rebuilt, never trusted.
+  *    in `idx` as bases only (`rebuild` / `compaction`), each one block
+  *    per bucket and carrying a covers marker: the `table` snapshot it
+  *    covers. Keys committed since ride an exact recent-delta anti-join,
+  *    so the index is crash-safe by construction: an index whose latest
+  *    commit is not a base with a usable marker (lost, ahead of the table
+  *    head, or a covers-less append) is rebuilt, never trusted.
   *
   * `table` must be clustered ([[SnapshotTable.Cluster]]): its bucket count
   * is the index geometry's bucket floor and the granularity of the
   * `bucket` column the probes restrict to. */
 final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
-                    idx: SnapshotTable, key: String, snapshotCol: String) {
+                    idx: SnapshotTable, key: String) {
 
   private val keyIsHash = key == "url_hash"
   private val storageBuckets: Int = table.cluster.map(_.buckets).getOrElse(
@@ -83,7 +83,7 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
 
   /** STANDING per-slice block broadcasts for the table-resident index
     * (VERDICT r04 follow-up to r03 #1): without them, every micro-run
-    * re-read, re-shuffled (mergeIndex), re-collected and re-broadcast
+    * re-read, re-collected and re-broadcast
     * the UNCHANGED table-resident index — O(|index|) driver traffic per
     * run (~1.3 GB at 10^9 seen keys), dwarfing the probe it fed; the
     * point-lookup bench read a ~4x history-growth ratio on a pass whose
@@ -103,17 +103,16 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
       sliceCacheKey = now
       sliceCache = Some(new BloomDedup.SliceBlockCache(spark, s => {
         val bs = (s until indexBuckets by numSlices).map(Integer.valueOf)
-        BloomDedup.collectBlocks(BloomDedup.mergeIndex(
-          idx.read().get.select("bucket", "bloom")
-            .filter(col("bucket").isin(bs: _*))))
+        BloomDedup.collectBlocks(idx.read().get.select("bucket", "bloom")
+          .filter(col("bucket").isin(bs: _*)))
       }))
     }
     sliceCache.get.get
   }
 
   /** Slice-clustered FULL-index write (NOTES r3 #3): block rows grouped
-    * into files by the slice their bucket belongs to (range on
-    * pmod(bucket, slices), then bucket), so a slice's pushed
+    * into files by the slice their bucket belongs to (file
+    * pmod(bucket, slices)), so a slice's pushed
     * IN(bucket,…) read needs only its own files — parquet skips the
     * rest via dictionary/stats filtering on the bucket column (at 10^9+
     * scale each block is its own row group, making footer min/max exact
@@ -121,7 +120,7 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     * slices instead of one serial driver-sized file. */
   private def sliceClustered(df: DataFrame): DataFrame = {
     val slices = sliceCount
-    df.repartitionByRange(slices, pmod(col("bucket"), lit(slices)), col("bucket"))
+    df.repartitionById(slices, pmod(col("bucket"), lit(slices)))
   }
 
   // no distinct: every consumer is an anti-join probe (set semantics on
@@ -147,7 +146,7 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     val stored = storedGeom
     if (!usableBase(head, stored)) {
       geom = geomFor(rowsEst)
-      idx.commitBase(sliceClustered(buildIndex(seen).withColumn(snapshotCol, lit(head))),
+      idx.commitBase(sliceClustered(buildIndex(seen)),
         Map("rebuild" -> 1.0) ++ geomMetrics, covers = Some(head))
     } else stored.foreach(g => geom = g)
     idx.read().get.select("bucket", "bloom")
@@ -155,9 +154,11 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
 
   /** Whether the index's latest commit is a base the dedup may trust at
     * table head `head`: it covers a snapshot ≤ the head, and its `stored`
-    * geometry holds the current estimate. */
+    * geometry holds the current estimate. A base holds one block per
+    * bucket, so its rows are read as they are, never merged. */
   private def usableBase(head: Long, stored: => Option[BloomGeometry]): Boolean =
-    idx.latestCovers.exists(_ <= head) && stored.exists(_.totalCapacity >= rowsEst)
+    idx.latestSnapshot.exists(idx.kindOf(_) == "base") &&
+      idx.latestCovers.exists(_ <= head) && stored.exists(_.totalCapacity >= rowsEst)
 
   /** Scan-probe over the table-resident index: each hash-range slice's
     * standing blocks broadcast once per index version (peak index memory
@@ -225,10 +226,9 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     val head = table.latestDataSnapshot.getOrElse(0L)
     if (scanProbeRegime && runId % cfg.bloomCommitEvery == 0 && usableBase(head, storedGeom)) {
       table.readBetween(idx.latestCovers.get, head).foreach { recent =>
-        val folded = BloomDedup.foldHashes(
-          BloomDedup.mergeIndex(idx.read().get.select("bucket", "bloom")),
+        val folded = BloomDedup.foldHashes(idx.read().get.select("bucket", "bloom"),
           recent.select(hash.as("url_hash")), geom.indexBuckets, geom.capacityPerBucket)
-        idx.commitBase(sliceClustered(folded.withColumn(snapshotCol, lit(head))),
+        idx.commitBase(sliceClustered(folded),
           Map("compaction" -> 1.0, "run" -> runId.toDouble) ++ geomMetrics,
           covers = Some(head))
       }

@@ -92,8 +92,7 @@ object CrawlQueries {
       .select(concat(lit("http://host-"), lpad(col("hk").cast("string"), 3, "0"),
         lit(".test/page/"), col("o_orderkey").cast("string")).as("url"))
       .withColumn("url_hash", xxhash64(col("url")))
-    val idx = BloomDedup.buildIndex(seen, numBuckets = 16)
-    BloomDedup.dedup(cand, seen, Some(idx), numBuckets = 16)
+    BloomDedup.dedup(cand, seen, None, numBuckets = 16)
       .groupBy("host").agg(count(lit(1)).as("n_new"))
       .orderBy("host")
   }

@@ -8,7 +8,7 @@ import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.core.json.JsonReadFeature
 import com.fasterxml.jackson.databind.json.JsonMapper
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, pmod}
+import org.apache.spark.sql.functions.{col, lit, pmod, shiftright}
 import org.apache.spark.sql.types.StructType
 
 /** Snapshot-committed Parquet table: the offline stand-in for an Iceberg
@@ -336,31 +336,27 @@ object SnapshotTable {
   final case class CommitResult(id: Long, rows: Long)
 
   /** A table's bucket layout: every write sets the data column
-    * `bucket = pmod(hash, buckets)` and range-clusters on it (NOTES r02
-    * #3), so each written file spans a narrow CONTIGUOUS bucket range
-    * (usually one bucket) and a pushed IN(bucket,…) filter skips whole
-    * files via footer min/max stats — hash-partitioning on (bucket, salt)
-    * would scatter arbitrary bucket sets into each file and widen every
-    * min/max span past usefulness. The secondary `hash` range key splits
-    * a hot bucket across several tasks, and the task count adapts to the
-    * batch size. Cost: the range partitioner's one sampling pass — writers
-    * feed it cached frames, so nothing expensive recomputes. Reads stay
-    * ONE multi-path parquet relation (a dir-per-commit Hive layout was
-    * measured ~2× e2e in per-micro-run planning).
+    * `bucket = pmod(hash, buckets)` and clusters on it (NOTES r02 #3), so
+    * each written file spans a narrow CONTIGUOUS bucket range (usually
+    * one bucket) and a pushed IN(bucket,…) filter skips whole files via
+    * footer min/max stats. Reads stay ONE multi-path parquet relation (a
+    * dir-per-commit Hive layout was measured ~2× e2e in per-micro-run
+    * planning).
     *
-    * Rows are additionally SORTED within each file on (bucket, hash):
-    * parquet's per-page min/max column indexes then stay tight on the
-    * hash, which is what turns the point-lookup probe's pushed
+    * A row's file is COMPUTED, not sampled: `n` files cut the
+    * (bucket, signed hash) order into equal spans, so a hot bucket splits
+    * across files by its hashes. A uniform 64-bit hash fills every span
+    * alike, so range sampling bought nothing but a job per write and a
+    * layout that depended on the session's RDD history.
+    *
+    * Rows are SORTED within each file on (bucket, hash), so parquet's
+    * per-page column indexes turn the point-lookup probe's pushed
     * IN(url_hash,…) into page-level point reads (VERDICT r03 #3).
     *
-    * Small writes (`tasks ≤ 1` — micro-run commits) skip the range
-    * partitioner entirely: its sampling pass is a whole extra job per
-    * commit, a measured slice of the micro-run fixed-cost floor (VERDICT
-    * r03 #5). One hash-sorted file is written instead; it spans all
-    * buckets (footer min/max won't skip it) but it is small and
-    * short-lived — the bin-pack merges re-cluster through the range path
-    * at `buckets` tasks, exactly Iceberg's write-optimized-commit /
-    * read-optimized-after-rewrite split.
+    * Small writes (`tasks ≤ 1` — micro-run commits) write one file that
+    * spans all buckets; the bin-pack merges re-cluster at ≥ `buckets`
+    * files — Iceberg's write-optimized-commit / read-optimized-after-
+    * rewrite split.
     *
     * `buckets` is a power of two, so it divides or is divided by every
     * power-of-two slice and index-bucket count a probe restricts to. */
@@ -370,11 +366,16 @@ object SnapshotTable {
 
     private[table] def layout(df: DataFrame, tasks: Int): DataFrame = {
       val keys = Seq(col("bucket"), hash)
-      val bucketed = df.withColumn("bucket", pmod(hash, lit(buckets)).cast("int"))
-      val parts =
-        if (tasks <= 1) bucketed.repartition(1)
-        else bucketed.repartitionByRange(math.max(buckets, tasks), keys: _*)
-      parts.sortWithinPartitions(keys: _*)
+      val n = if (tasks <= 1) 1 else math.max(buckets, tasks)
+      // sub ∈ [0, n) scales the hash's top 32 bits (signed order), so
+      // (bucket·n + sub) / buckets ∈ [0, n) grows with (bucket, hash).
+      // Long arithmetic (< 2^63), so no rounding can reach n
+      val sub = shiftright((shiftright(hash, 32) + lit(1L << 31)) * lit(n.toLong), 32)
+      val id = shiftright(col("bucket").cast("long") * lit(n.toLong) + sub,
+        Integer.numberOfTrailingZeros(buckets)).cast("int")
+      df.withColumn("bucket", pmod(hash, lit(buckets)).cast("int"))
+        .repartitionById(n, id)
+        .sortWithinPartitions(keys: _*)
     }
   }
 

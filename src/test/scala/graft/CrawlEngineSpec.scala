@@ -271,11 +271,10 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(graft.tools.CrawlManager.status(root).contains(
       s"Dedup plan: Bloom scan-probe (URL index covers fetchlog v${covers.get})"))
     // plant a covers-less append shaped like an old block-map checkpoint:
-    // blocks tagged with the head snapshot, `covers_fetchlog_snapshot` and
-    // geometry as metrics, but no covers marker in the manifest
+    // the head snapshot as `covers_fetchlog_snapshot` and geometry as
+    // metrics, but no covers marker in the manifest
     val head = e1.fetchlog.latestDataSnapshot.get
     val planted = e1.bloomidx.read().get.select("bucket", "bloom")
-      .withColumn("fetchlog_snapshot", lit(head))
     e1.bloomidx.commit(planted.coalesce(1), Map("covers_fetchlog_snapshot" -> head.toDouble,
       "index_buckets" -> e1.urlIndexGeometry.indexBuckets.toDouble,
       "expected_per_bucket" -> e1.urlIndexGeometry.capacityPerBucket.toDouble))
@@ -452,12 +451,8 @@ class CrawlEngineSpec extends AnyFunSuite {
     // against the ENGINE-built blocks of the latest index base must read
     // "maybe seen" at ~the 1% build target, not ≈ 100%
     val idxBuckets = e.bloomidx.metricOf(lastIdx, "index_buckets").get.toInt
-    // the latest base is the standing index (it carries the max
-    // fetchlog_snapshot)
-    val idxAll = e.bloomidx.read().get
-    val lastSnap = idxAll.agg(org.apache.spark.sql.functions.max("fetchlog_snapshot"))
-      .as[Long].collect().head
-    val blocks = idxAll.filter(col("fetchlog_snapshot") === lastSnap)
+    // the latest base is the standing index, and the read anchors there
+    val blocks = e.bloomidx.read().get
       .select("bucket", "bloom").collect()
       .map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
     val filters = blocks.map { case (b, bytes) =>
@@ -668,10 +663,8 @@ class CrawlEngineSpec extends AnyFunSuite {
     import org.apache.spark.metrics.source.CodegenMetrics
     val root = Files.createTempDirectory("crawl-nocodegen").toString
     // one window per run: enough runs to see warm ones. compactEvery = 2:
-    // run 2 compacts, so by then every run path has run once — a first
-    // compaction compiles its range-partitioning orderings, which Spark
-    // generates whatever the factory mode — and the warm runs below
-    // include compacting and bin-packing ones
+    // run 2 compacts, so by then every run path has run once, and the
+    // warm runs below include compacting and bin-packing ones
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries, bloomBuckets = 8,
         windowsPerRun = 1, compactEvery = 2),
@@ -813,6 +806,48 @@ class CrawlEngineSpec extends AnyFunSuite {
     val imgs = e.imageTable().get.select("image_id", "caption")
       .as[(String, String)].collect().toMap
     assert(imgs == oracle.imagesCaptions.toMap, "window-batched payloads diverged")
+  }
+
+  test("resume right after a compacting run stays exact") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("crawl-compact-resume").toString
+    def mk() = new CrawlEngine(TestSpark.spark,
+      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
+        bloomBuckets = 8, compactEvery = 2, windowsPerRun = 3),
+      new SyntheticFetcher(webCfg), web.robots)
+    val e1 = mk()
+    e1.seed(web.seeds)
+    assert(e1.runOnce().isDefined && e1.runOnce().isDefined)
+    val head = e1.pending.latestSnapshot.get
+    assert(e1.pending.metricOf(head, "compaction").contains(1.0),
+      s"pending v$head after run 2 is not a compaction base")
+    // a fresh engine starts from that base alone and still has work
+    val e2 = mk()
+    assert(e2.crawlAll().nonEmpty, "nothing was pending after the compacting run")
+    assert(e2.seenSet() == oracle.seenSet, "resume after compaction diverged the seen set")
+    val engineWindows = e2.fetchlog.read().get
+      .select(col("run"), col("url"), col("seq").cast("string"))
+      .as[(Long, String, String)]
+      .collect().groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (_, rows) => rows.map(r => (r._2, BigInt(r._3))).sortBy(_._2).toSeq }
+    assert(engineWindows.size == oracle.runOrders.size)
+    engineWindows.zip(oracle.runOrders).zipWithIndex.foreach { case ((got, exp), i) =>
+      assert(got == exp, s"window $i order mismatch after the compaction resume")
+    }
+    val imgs = e2.imageTable().get.select("image_id", "caption")
+      .as[(String, String)].collect()
+    assert(imgs.length == imgs.map(_._1).distinct.length)
+    assert(imgs.toMap == oracle.imagesCaptions.toMap, "resume after compaction diverged payloads")
+    // the seed commit and every pending base are small: one file each
+    def parquetFiles(table: String, id: Long): Int = {
+      val st = Files.list(java.nio.file.Paths.get(root, table, "data", f"commit-$id%06d"))
+      try st.iterator().asScala.count(_.toString.endsWith(".parquet")) finally st.close()
+    }
+    assert(parquetFiles("frontier", e2.frontier.snapshots.head) == 1, "seed commit files")
+    e2.pending.snapshots.foreach(n =>
+      assert(parquetFiles("pending", n) == 1, s"pending base v$n files"))
   }
 
   test("window-batched resume (mixed batch sizes across restarts) stays exact, window ids monotone") {

@@ -260,6 +260,43 @@ class SnapshotTableSpec extends AnyFunSuite {
       rows(0, 700).as[(Long, Long)].collect().toSet)
   }
 
+  test("a clustered merge writes the same files whatever RDDs the session allocated before it") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, max, min, count, xxhash64}
+    import scala.jdk.CollectionConverters._
+    val cluster = SnapshotTable.Cluster(col("h"), 4)
+    val rootA = tmpDir()
+    val a = new SnapshotTable(spark, rootA, cluster = Some(cluster))
+    for (k <- 0 until 4)
+      a.commit(spark.range(k * 2000L, (k + 1) * 2000L)
+        .select(xxhash64(col("id")).as("h"), col("id").as("v")), Map.empty)
+    val rootB = tmpDir()
+    val src = java.nio.file.Paths.get(rootA)
+    val walk = Files.walk(src)
+    try walk.iterator().asScala.toSeq.foreach { p =>
+      val to = java.nio.file.Paths.get(rootB).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+    } finally walk.close()
+    // per written file: (rows, min/max bucket, min/max hash)
+    def mergedFiles(root: String): Seq[(Long, Int, Int, Long, Long)] = {
+      val t = new SnapshotTable(spark, root, cluster = Some(cluster))
+      val id = t.mergeAppends(10).get
+      val st = Files.list(java.nio.file.Paths.get(root, "data", f"commit-$id%06d"))
+      val files = try st.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
+        finally st.close()
+      files.map(f => spark.read.parquet(f.toString)
+          .agg(count(col("h")), min("bucket"), max("bucket"), min("h"), max("h"))
+          .as[(Long, Int, Int, Long, Long)].head())
+        .filter(_._1 > 0).sorted
+    }
+    val filesA = mergedFiles(rootA)
+    (1 to 5).foreach(i => spark.sparkContext.parallelize(1 to i).count())
+    val filesB = mergedFiles(rootB)
+    assert(filesA.map(_._1).sum == 8000 && filesA.size > 1)
+    assert(filesA == filesB, s"merge layout depends on the session: $filesA vs $filesB")
+  }
+
   test("manifests expose metrics and per-partition lineage") {
     val spark = TestSpark.spark
     import spark.implicits._
