@@ -101,6 +101,9 @@ object MiniDom {
       CommentRe.replaceAllIn(html, ""), ""), "")
     val root = new DomNode("root", Map.empty, null)
     var current = root
+    // open elements per tag on the path from the root to `current`, so a
+    // stray close is skipped in O(1) instead of walking to the root
+    val open = mutable.HashMap.empty[String, Int].withDefaultValue(0)
     var pos = 0
     for (m <- TagRe.findAllMatchIn(cleaned)) {
       if (m.start > pos) {
@@ -117,13 +120,15 @@ object MiniDom {
       val selfClosed = m.group(4) == "/" || VoidTags(tag)
       if (closing) {
         // strict markup: pop to the matching open tag if present
-        var n = current
-        while (n != root && n.tag != tag) n = n.parent
-        if (n != root) current = n.parent
+        if (open(tag) > 0) {
+          while (current.tag != tag) { open(current.tag) -= 1; current = current.parent }
+          open(tag) -= 1
+          current = current.parent
+        }
       } else {
         val node = new DomNode(tag, parseAttrs(m.group(3)), current)
         current.children += node
-        if (!selfClosed) current = node
+        if (!selfClosed) { open(tag) += 1; current = node }
       }
     }
     if (pos < cleaned.length) {

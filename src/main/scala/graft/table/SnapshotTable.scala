@@ -39,7 +39,7 @@ import org.apache.spark.sql.types.StructType
   *    anchor at the latest base ≤ the requested snapshot and union only
   *    the commits after it. Bounds read cost to O(base + appends-since).
   *  - '''merge''' — a bin-pack: rewrites older data dirs into one without
-  *    changing the table's content ([[mergeAppends]], [[mergeMerges]]).
+  *    changing the table's content ([[binpack]]).
   *
   * A table declared with a [[SnapshotTable.Cluster]] spec applies that
   * bucket layout on every data write, commits and merges alike.
@@ -159,43 +159,29 @@ class SnapshotTable(spark: => SparkSession, root: String,
                  covers: Option[Long] = None): CommitResult =
     publish(prepare(df, seqCol), metrics, "base", covers)
 
-  /** Bin-pack compaction (the Iceberg rewrite-data-files analogue): the
-    * OLDEST ≥2 (≤ maxDirs) unmerged append dirs since the last base are
-    * rewritten into ONE merge commit, which supersedes them for reads at
-    * or after it. Unlike a base commit this is INCREMENTAL — this method
-    * never re-merges a merge dir, so it alone rewrites every data row at
-    * most once over the table's lifetime, and the live dir count after M
-    * appends stays O(M / maxDirs + maxDirs) instead of O(M) (a further
-    * level — [[mergeMerges]] — packs full batches of level-1 merges to
-    * O(M / maxDirs² + 2·maxDirs) at a rewrite bound of 2). Time travel to
-    * pre-merge snapshots still sees the original dirs. Returns the merge
-    * snapshot id, or None when fewer than two dirs qualify. */
-  def mergeAppends(maxDirs: Int, metrics: Map[String, Double] = Map.empty): Option[Long] =
-    pack(1, 2, maxDirs, metrics)
+  /** Bin-pack compaction (the Iceberg rewrite-data-files analogue), one
+    * pass over every level: the OLDEST ≥2 (≤ `maxDirs`) unmerged append
+    * dirs since the last base are rewritten into ONE level-1 merge commit;
+    * then, level by level up to [[SnapshotTable.TopLevel]], a FULL batch
+    * of exactly `maxDirs` un-packed merges of the level below packs into
+    * one merge of the next level. A merge supersedes its sources for reads
+    * at or after it and is only ever consumed by the level above, so every
+    * data row is rewritten at most `TopLevel` times over the table's
+    * lifetime, and the live dir count after M appends packed K-at-a-time
+    * stays O(M/K^TopLevel + TopLevel·K) instead of O(M) (at K=16 a 10^8-
+    * append table holds ~25k live dirs where two levels leave ~400k).
+    * `mergedAway` is transitive, so reads, time travel to pre-merge
+    * snapshots and `readBetween` see the same rows. Returns the merge
+    * snapshot ids committed, lowest level first. */
+  def binpack(maxDirs: Int, metrics: Map[String, Double] = Map.empty): Seq[Long] = {
+    require(maxDirs >= 2, s"maxDirs $maxDirs must be >= 2")
+    (1 to SnapshotTable.TopLevel).flatMap(level =>
+      pack(level, if (level == 1) 2 else maxDirs, maxDirs, metrics))
+  }
 
   /** Bin-pack level of merge snapshot `n` (1 when the field is absent —
     * pre-level manifests; 0 for non-merge commits). */
   def mergeLevelOf(n: Long): Int = manifest(n).level
-
-  /** HIGHER-level bin-pack: rewrite the oldest `maxDirs` un-packed
-    * level-(`level`−1) merge dirs into ONE level-`level` merge commit.
-    * Fires only on a FULL batch (exactly `maxDirs` candidates qualify)
-    * and a level-L merge is only ever consumed by a level-(L+1) pack —
-    * so with a top level of L every data row is rewritten at most L
-    * times over the table's lifetime, and the live dir count after M
-    * appends packed K-at-a-time drops from O(M/K + K) to
-    * O(M/K^L + L·K) (at 10^8 micro-runs and K=16, L=3 holds the live
-    * dir count in the thousands where L=2 leaves ~24k). `mergedAway` is
-    * already transitive (a level-L manifest supersedes its level-(L−1)
-    * dirs, whose own manifests supersede theirs, down to the original
-    * appends), so reads/time-travel/readBetween need no changes.
-    * Returns the merge snapshot id, or None below a full batch. */
-  def mergeMerges(maxDirs: Int, metrics: Map[String, Double] = Map.empty,
-                  level: Int = 2): Option[Long] = {
-    require(maxDirs >= 2, s"maxDirs $maxDirs must be >= 2")
-    require(level >= 2, s"level $level must be >= 2")
-    pack(level, maxDirs, maxDirs, metrics)
-  }
 
   /** Rewrite the oldest ≤ `maxDirs` un-packed dirs of the level below
     * `level` (appends for level 1) since the last base into one
@@ -334,6 +320,9 @@ class SnapshotTable(spark: => SparkSession, root: String,
 
 object SnapshotTable {
   final case class CommitResult(id: Long, rows: Long)
+
+  /** The highest bin-pack level: a level-`TopLevel` merge is terminal. */
+  val TopLevel = 3
 
   /** A table's bucket layout: every write sets the data column
     * `bucket = pmod(hash, buckets)` and clusters on it (NOTES r02 #3), so

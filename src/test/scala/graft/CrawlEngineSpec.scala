@@ -5,6 +5,7 @@ import graft.fetch.{Fetcher, SyntheticFetcher}
 import graft.frontier.Politeness
 import graft.images.ImageKit
 import graft.oracle.OracleCrawler
+import graft.table.SnapshotTable
 import graft.web.{FetchResponse, SyntheticWeb, WebConfig}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, concat, lit, row_number, xxhash64}
@@ -326,14 +327,14 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   test("stale bloom index (crash between fetchlog and bloomidx commits) forces rebuild, state still exact") {
     val root = Files.createTempDirectory("crawl-stalebloom").toString
-    // bloomCommitEvery = 1 so run 2 definitely folded its keys into the
+    // compactEvery = 1 so run 2 definitely folded its keys into the
     // index — the crash we simulate is losing that fold commit; the
     // older base then covers an earlier snapshot and the lost keys ride
     // the exact recent-delta anti-join. scanProbeMinSeen = 0: only the
     // scan-probe regime keeps a Bloom index at all
     val e1 = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        bloomBuckets = 8, bloomCommitEvery = 1, scanProbeMinSeen = 0L),
+        bloomBuckets = 8, compactEvery = 1, scanProbeMinSeen = 0L),
       new SyntheticFetcher(webCfg), web.robots)
     e1.seed(web.seeds)
     assert(e1.runOnce().isDefined && e1.runOnce().isDefined)
@@ -534,7 +535,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("crawl-resize-sliced").toString
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
-        bloomBuckets = 4, bloomCommitEvery = 2,
+        bloomBuckets = 4, compactEvery = 2,
         scanProbeMinSeen = 0L, bloomCapacityFloor = 64L),
       new SyntheticFetcher(wideCfg), wideWeb.robots)
     e.seed(wideWeb.seeds)
@@ -549,13 +550,13 @@ class CrawlEngineSpec extends AnyFunSuite {
     // …and the recent-delta fold compaction ran (per-run appends are gone)
     assert(e.bloomidx.snapshots.exists(n =>
         e.bloomidx.metricOf(n, "compaction").contains(1.0)),
-      "no fold compaction commit — bloomCommitEvery cadence broken")
+      "no fold compaction commit — maintenance cadence broken")
     assert(!e.bloomidx.snapshots.exists(n => e.bloomidx.kindOf(n) == "append"),
       "sliced regime still appends per-run index deltas")
     // the image-id index runs the same schedule over ~1400 ids against
-    // the same 4 × 64-key floor: growth, no appends. (Its fold never
-    // fires here: each even run either outgrew the geometry or added no
-    // ids — the next test pins the image fold cadence.)
+    // the same 4 × 64-key floor: growth, no appends. (A maintaining run
+    // whose ids outgrew the geometry, or that added none, skips its fold —
+    // the next test pins the image fold cadence.)
     val imgGeoms = e.imgidx.snapshots.flatMap(n =>
       e.imgidx.metricOf(n, "expected_per_bucket").map(_.toLong))
     assert(imgGeoms.distinct.size >= 2,
@@ -568,12 +569,13 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(ids.toSet == o.imagesCaptions.keySet.toSet)
   }
 
-  test("image-id index in the SLICED regime: delta-fold compaction at bloomCommitEvery, no appends, payloads exact") {
+  test("image-id index in the SLICED regime: delta-fold compaction at the maintenance cadence, no appends, payloads exact") {
     val spark = TestSpark.spark
     import spark.implicits._
     // the resize test's web, with a floor (4 × 512 keys) that already
-    // holds its ~1400 ids: no resize pre-empts the fold, so every even
-    // run with new ids since the base's covers marker folds them in
+    // holds its ~1400 ids: no resize pre-empts the fold, so every
+    // maintaining run with new ids since the base's covers marker folds
+    // them in
     val wideCfg = WebConfig(nHosts = 2, pagesPerHost = 700, hotFactor = 1,
       failPct = 0, imagesPerPage = 1, linksPerPage = 6)
     val wideWeb = new SyntheticWeb(wideCfg)
@@ -584,7 +586,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("crawl-imgfold").toString
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
-        bloomBuckets = 4, bloomCommitEvery = 2,
+        bloomBuckets = 4, compactEvery = 2,
         scanProbeMinSeen = 0L, bloomCapacityFloor = 512L),
       new SyntheticFetcher(wideCfg), wideWeb.robots)
     e.seed(wideWeb.seeds)
@@ -594,10 +596,14 @@ class CrawlEngineSpec extends AnyFunSuite {
     val folds = e.imgidx.snapshots.filter(n =>
       e.imgidx.metricOf(n, "compaction").contains(1.0))
     assert(folds.nonEmpty, s"no imgidx fold compaction commit: $kinds")
-    // each fold is a covers-marked base at an even run
+    // each fold is a covers-marked base at a run after which the
+    // fetchlog's data-commit count is even
+    val evenRuns = e.fetchlog.dataSnapshots.zipWithIndex
+      .collect { case (r, i) if (i + 1) % 2 == 0 => r }.toSet
     folds.foreach { n =>
       assert(e.imgidx.kindOf(n) == "base" && e.imgidx.coversOf(n).nonEmpty, s"fold $n: $kinds")
-      assert(e.imgidx.metricOf(n, "run").exists(_.toLong % 2 == 0), s"fold $n off cadence: $kinds")
+      assert(e.imgidx.metricOf(n, "run").exists(r => evenRuns(r.toLong)),
+        s"fold $n off cadence: $kinds")
     }
     assert(!e.imgidx.snapshots.exists(n => e.imgidx.kindOf(n) == "append"),
       s"sliced image regime appends per-run index deltas: $kinds")
@@ -605,6 +611,52 @@ class CrawlEngineSpec extends AnyFunSuite {
       .as[(String, String)].collect()
     assert(imgs.length == imgs.map(_._1).distinct.length, "image fold duplicated rows")
     assert(imgs.toMap == o.imagesCaptions.toMap, "image fold diverged the payload table")
+  }
+
+  test("maintenance rewrites land together, on the run-count cadence") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val wideCfg = WebConfig(nHosts = 2, pagesPerHost = 700, hotFactor = 1,
+      failPct = 0, imagesPerPage = 1, linksPerPage = 6)
+    val wideWeb = new SyntheticWeb(wideCfg)
+    val wideBudget = 150
+    val o = new OracleCrawler(wideWeb, wideBudget, maxRetries)
+    o.seed(wideWeb.seeds)
+    o.crawlAll()
+    val root = Files.createTempDirectory("crawl-cadence").toString
+    val e = new CrawlEngine(TestSpark.spark,
+      CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
+        bloomBuckets = 4, compactEvery = 3, scanProbeMinSeen = 0L, windowsPerRun = 1),
+      new SyntheticFetcher(wideCfg), wideWeb.robots)
+    e.seed(wideWeb.seeds)
+    e.crawlAll()
+    // the runs at which the fetchlog's data-commit count is a multiple of 3
+    val due = e.fetchlog.dataSnapshots.zipWithIndex
+      .collect { case (r, i) if (i + 1) % 3 == 0 => r }.toSet
+    // the `run` metric of every commit `pick` selects; each must carry one
+    def runs(t: SnapshotTable, pick: Long => Boolean): Set[Long] =
+      t.snapshots.filter(pick).map { n =>
+        t.metricOf(n, "run").getOrElse(fail(s"maintenance commit v$n carries no run")).toLong
+      }.toSet
+    def compactions(t: SnapshotTable) =
+      runs(t, n => t.metricOf(n, "compaction").contains(1.0))
+    val pendingRuns = compactions(e.pending)
+    val foldRuns = compactions(e.bloomidx) ++ compactions(e.imgidx)
+    val mergeRuns = Seq(e.fetchlog, e.images, e.frontier)
+      .flatMap(t => runs(t, t.kindOf(_) == "merge")).toSet
+    assert(due.size >= 2, s"too short a crawl to see the cadence: ${e.fetchlog.dataSnapshots}")
+    assert(foldRuns.nonEmpty && mergeRuns.nonEmpty,
+      s"no fold ($foldRuns) or no merge ($mergeRuns) to check the cadence on")
+    // one set of runs: every maintaining run compacts the pending table,
+    // and no fold or merge lands at any other run
+    assert(pendingRuns == due, s"pending compactions at $pendingRuns, due at $due")
+    assert(foldRuns.subsetOf(due) && mergeRuns.subsetOf(due),
+      s"folds at $foldRuns, merges at $mergeRuns, due at $due")
+    assert(e.seenSet() == o.seenSet, "the maintenance cadence diverged the seen set")
+    val imgs = e.imageTable().get.select("image_id", "caption")
+      .as[(String, String)].collect()
+    assert(imgs.length == imgs.map(_._1).distinct.length)
+    assert(imgs.toMap == o.imagesCaptions.toMap, "the maintenance cadence diverged payloads")
   }
 
   test("image dedup entering the scan-probe regime at a commit stays exact") {
@@ -745,6 +797,30 @@ class CrawlEngineSpec extends AnyFunSuite {
     // older, unrelated ones meanwhile, so only additions count)
     val leaked = sc.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"the failed run left RDDs ${leaked.mkString(", ")} persisted")
+  }
+
+  test("a failed commit prepare returns only after the other prepares end; the repaired root drains exactly") {
+    val sc = TestSpark.spark.sparkContext
+    val root = Files.createTempDirectory("crawl-prepfail").toString
+    val e1 = newEngine(root)
+    e1.seed(web.seeds)
+    // a regular file where the images table keeps its data dirs: the
+    // images prepare throws while the frontier and fetchlog prepares run
+    val blocker = java.nio.file.Paths.get(root, "images", "data")
+    Files.createDirectories(blocker.getParent)
+    Files.write(blocker, Array[Byte](0))
+    intercept[Exception](e1.runOnce())
+    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+      s"the failed run left jobs ${sc.statusTracker.getActiveJobIds.mkString(", ")} running")
+    // nothing published, and the other two prepares ran to the end: their
+    // unpublished dirs are complete orphans
+    assert(e1.images.snapshots.isEmpty && e1.fetchlog.snapshots.isEmpty)
+    for (dir <- Seq("frontier/data/commit-000002", "fetchlog/data/commit-000001"))
+      assert(Files.exists(java.nio.file.Paths.get(root, dir, "_SUCCESS")), s"$dir unfinished")
+    Files.delete(blocker)
+    val e2 = newEngine(root)
+    assert(e2.crawlAll().nonEmpty)
+    assert(e2.seenSet() == oracle.seenSet, "the repaired root diverged the seen set")
   }
 
   test("resume from last committed snapshot equals uninterrupted run") {

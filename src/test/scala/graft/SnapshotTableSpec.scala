@@ -90,9 +90,7 @@ class SnapshotTableSpec extends AnyFunSuite {
         case 1 => // compaction
           t.commitBase(t.read().get, Map.empty)
         case 2 => // bin-pack merges (all levels): must NEVER change content
-          t.mergeAppends(2 + rnd.nextInt(3))
-          t.mergeMerges(2) // fires only on a full level-1 batch
-          t.mergeMerges(2, level = 3) // …and only on a full level-2 batch
+          t.binpack(2 + rnd.nextInt(3))
       }
       val got = t.read().get.select("url_hash", "attempt", "v")
         .as[(Long, Int, String)].collect().toSet
@@ -109,8 +107,10 @@ class SnapshotTableSpec extends AnyFunSuite {
       t.commit(Seq((i.toLong, s"v$i")).toDF("url_hash", "v"), Map.empty)
     val before = t.read().get.as[(Long, String)].collect().toSet
     val dataHead = t.latestSnapshot.get
-    val m1 = t.mergeAppends(3, Map("binpack" -> 1.0))
-    assert(m1.nonEmpty && t.kindOf(m1.get) == "merge")
+    // the oldest 3 appends pack; 1 level-1 merge is below a level-2 batch
+    val m1 = t.binpack(3, Map("binpack" -> 1.0))
+    assert(m1.size == 1 && t.kindOf(m1.head) == "merge" && t.mergeLevelOf(m1.head) == 1)
+    assert(t.metricOf(m1.head, "binpack").contains(1.0))
     assert(t.read().get.as[(Long, String)].collect().toSet == before,
       "merge changed table content")
     assert(t.latestDataSnapshot.contains(dataHead),
@@ -120,10 +120,10 @@ class SnapshotTableSpec extends AnyFunSuite {
       "readBetween double-counted merged rows")
     assert(t.totalRows == 5, "totalRows double-counted the merge rewrite")
     // second pass packs the remainder; merge dirs are never re-merged
-    val m2 = t.mergeAppends(10)
-    assert(m2.nonEmpty)
+    val m2 = t.binpack(10)
+    assert(m2.size == 1 && t.mergeLevelOf(m2.head) == 1)
     assert(t.read().get.as[(Long, String)].collect().toSet == before)
-    assert(t.mergeAppends(10).isEmpty, "re-merged already-packed dirs")
+    assert(t.binpack(10).isEmpty, "re-merged already-packed dirs")
     // appends after merges fold in normally
     t.commit(Seq((6L, "v6")).toDF("url_hash", "v"), Map.empty)
     assert(t.read().get.count() == 6)
@@ -132,72 +132,85 @@ class SnapshotTableSpec extends AnyFunSuite {
       "bin-packing did not shrink the read's file set")
   }
 
-  test("second-level bin-pack: level-1 merges pack into a terminal level-2 merge; content/time-travel intact") {
+  test("second-level bin-pack: a full batch of level-1 merges packs into level 2; content/time-travel intact") {
     val spark = TestSpark.spark
     import spark.implicits._
     val t = new SnapshotTable(spark, tmpDir())
-    for (i <- 1 to 8)
+    def append(i: Int): Unit =
       t.commit(Seq((i.toLong, s"v$i")).toDF("url_hash", "v"), Map.empty)
-    val before = t.read().get.as[(Long, String)].collect().toSet
-    // four level-1 packs of the 8 appends
-    val l1 = (1 to 4).flatMap(_ => t.mergeAppends(2))
-    assert(l1.size == 4 && l1.forall(t.mergeLevelOf(_) == 1))
-    // below a FULL batch nothing fires; at the batch size it packs all 4
-    assert(t.mergeMerges(5).isEmpty, "level-2 fired below a full batch")
-    val l2 = t.mergeMerges(4, Map("binpack" -> 2.0))
-    assert(l2.nonEmpty && t.kindOf(l2.get) == "merge" && t.mergeLevelOf(l2.get) == 2)
+    // four rounds of two appends, each bin-packed at a batch size of 4:
+    // every round packs its two appends into one level-1 merge, and level
+    // 2 stays idle until the fourth round completes a full batch
+    val rounds = (0 until 4).map { r =>
+      append(2 * r + 1); append(2 * r + 2)
+      t.binpack(4)
+    }
+    rounds.take(3).foreach(ids =>
+      assert(ids.map(t.mergeLevelOf) == Seq(1), s"level 2 fired below a full batch: $ids"))
+    val l1 = rounds.flatten.filter(t.mergeLevelOf(_) == 1)
+    val l2 = rounds.last.filter(t.mergeLevelOf(_) == 2)
+    assert(rounds.last.map(t.mergeLevelOf) == Seq(1, 2) && l1.size == 4,
+      "level 2 did not fire at a full batch")
+    assert(t.manifest(l2.head).merges == l1, "the level-2 merge did not pack the level-1 batch")
+    // time travel between the level-1 packs and the level-2 pack sees
+    // the level-1 dirs
+    val before = t.readAt(l1.last).get.as[(Long, String)].collect().toSet
+    assert(before == (1 to 8).map(i => (i.toLong, s"v$i")).toSet)
     assert(t.read().get.as[(Long, String)].collect().toSet == before,
       "level-2 merge changed table content")
     // the live read plans over ONE dir now
     assert(t.read().get.inputFiles.length == 1,
       "level-2 pack did not collapse the read's file set")
-    // level-2 merges are terminal: nothing left to pack at either level
-    assert(t.mergeAppends(10).isEmpty && t.mergeMerges(2).isEmpty,
-      "re-packed superseded or terminal dirs")
-    // time travel: before any merge sees the originals; between the
-    // level-1 packs and the level-2 pack sees level-1 dirs
-    assert(t.readAt(8).get.count() == 8)
-    assert(t.readAt(l1.last).get.as[(Long, String)].collect().toSet == before)
+    // nothing left to pack at any level; level 3 is below a full batch
+    assert(t.binpack(4).isEmpty, "re-packed superseded dirs")
+    // time travel before any merge sees the originals
+    assert(t.readAt(2).get.count() == 2)
     // incremental/cardinality contracts ignore rewrites at every level
     assert(t.readBetween(0, t.latestSnapshot.get).get.count() == 8)
     assert(t.totalRows == 8)
     // appends after a level-2 pack fold in and can start a new cycle
-    t.commit(Seq((9L, "v9")).toDF("url_hash", "v"), Map.empty)
+    append(9)
     assert(t.read().get.count() == 9)
-    assert(t.mergeAppends(10).isEmpty, "a single new append must not pack alone")
+    assert(t.binpack(4).isEmpty, "a single new append must not pack alone")
   }
 
   test("third-level bin-pack: full level-2 batches pack into level-3; rewrite bound and content hold") {
     val spark = TestSpark.spark
     import spark.implicits._
     val t = new SnapshotTable(spark, tmpDir())
-    for (i <- 1 to 8)
+    def append(i: Int): Unit =
       t.commit(Seq((i.toLong, s"v$i")).toDF("url_hash", "v"), Map.empty)
-    val before = t.read().get.as[(Long, String)].collect().toSet
-    val l1 = (1 to 4).flatMap(_ => t.mergeAppends(2))
-    assert(l1.size == 4)
-    val l2 = (1 to 2).flatMap(_ => t.mergeMerges(2))
-    assert(l2.size == 2 && l2.forall(t.mergeLevelOf(_) == 2))
-    // below a full level-2 batch nothing fires; at the batch size it packs
-    assert(t.mergeMerges(3, level = 3).isEmpty, "level-3 fired below a full batch")
-    val l3 = t.mergeMerges(2, Map("binpack" -> 3.0), level = 3)
-    assert(l3.nonEmpty && t.mergeLevelOf(l3.get) == 3)
+    // at a batch size of 2, every round of two appends makes one level-1
+    // merge, every second round a level-2 merge, every fourth a level-3
+    def round(r: Int): Seq[Long] = { append(2 * r + 1); append(2 * r + 2); t.binpack(2) }
+    val rounds = (0 until 4).map(round)
+    assert(rounds.map(_.map(t.mergeLevelOf)) == Seq(Seq(1), Seq(1, 2), Seq(1), Seq(1, 2, 3)),
+      s"level 3 fired below, or idled at, a full level-2 batch: $rounds")
+    val merges = rounds.flatten
+    val l3 = merges.filter(t.mergeLevelOf(_) == 3)
+    val l2 = merges.filter(t.mergeLevelOf(_) == 2)
+    assert(t.manifest(l3.head).merges == l2)
+    val before = (1 to 8).map(i => (i.toLong, s"v$i")).toSet
     assert(t.read().get.as[(Long, String)].collect().toSet == before,
       "level-3 merge changed table content")
     assert(t.read().get.inputFiles.length == 1,
       "level-3 pack did not collapse the read's file set")
-    // terminal at the configured top level: nothing repacks at any level
-    assert(t.mergeAppends(10).isEmpty && t.mergeMerges(2).isEmpty &&
-      t.mergeMerges(2, level = 3).isEmpty, "re-packed superseded or terminal dirs")
+    assert(t.binpack(2).isEmpty, "re-packed superseded dirs")
     // time-travel / incremental / cardinality contracts hold through 3 levels
-    assert(t.readAt(8).get.count() == 8)
     assert(t.readAt(l2.last).get.as[(Long, String)].collect().toSet == before)
+    assert(t.readAt(2).get.count() == 2)
     assert(t.readBetween(0, t.latestSnapshot.get).get.count() == 8)
     assert(t.totalRows == 8)
     // rewrite bound: every original row's bytes were rewritten exactly
     // 3 times (once per level) — count data dirs ever created
-    val merges = (l1 ++ l2 ++ l3)
     assert(merges.size == 7, s"expected 4+2+1 merge commits, got ${merges.size}")
+    // terminal at the top level: a second full batch of level-3 merges
+    // never packs further
+    val next = (4 until 8).map(round)
+    assert(next.last.map(t.mergeLevelOf) == Seq(1, 2, 3) && SnapshotTable.TopLevel == 3)
+    assert(t.binpack(2).isEmpty, "packed level-3 merges past the top level")
+    assert(t.snapshots.forall(n => t.mergeLevelOf(n) <= 3))
+    assert(t.read().get.count() == 16 && t.read().get.inputFiles.length == 2)
   }
 
   test("a clustered table writes bucket = pmod(hash, buckets) sorted on (bucket, hash); merges re-cluster") {
@@ -252,7 +265,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // a fresh clustered instance merges all four appends, the bucket-less
     // ones included, into files laid out at `buckets` tasks
     val t2 = new SnapshotTable(spark, root, cluster = Some(cluster))
-    val merged = t2.mergeAppends(10).get
+    val merged = t2.binpack(10).head
     val mergedFiles = clusteredFiles(merged)
     assert(mergedFiles.size > 1 && mergedFiles.size <= buckets && mergedFiles.map(_.size).sum == 700)
     assertRanged(mergedFiles)
@@ -281,7 +294,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // per written file: (rows, min/max bucket, min/max hash)
     def mergedFiles(root: String): Seq[(Long, Int, Int, Long, Long)] = {
       val t = new SnapshotTable(spark, root, cluster = Some(cluster))
-      val id = t.mergeAppends(10).get
+      val id = t.binpack(10).head
       val st = Files.list(java.nio.file.Paths.get(root, "data", f"commit-$id%06d"))
       val files = try st.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
         finally st.close()
