@@ -204,13 +204,6 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
 
   private val robotsDf = robotsRules.toDF()
   private var pol: Politeness = cfg.politeness
-  // global politeness-window counter: the fetchlog `run` column carries
-  // the WINDOW id (the reference-equivalent micro-run counter), not the
-  // commit id — with windowsPerRun > 1 one commit spans several windows.
-  // Resumed from the latest data commit's windows_total manifest metric;
-  // 0 when no engine run has committed (history rows carry run = 0)
-  private var windowCount: Long = fetchlog.latestDataSnapshot
-    .flatMap(fetchlog.metricOf(_, "windows_total")).fold(0L)(_.toLong)
   // the two seen sets (see SeenSet). URL hashes are their own join key;
   // the payload table's image ids join exactly, prefiltered on
   // xxhash64(image_id) (VERDICT r02 "What's wrong" #4 — the image dedup
@@ -319,12 +312,12 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
     * re-derives those rows as unattempted and replays them. */
   private def pendingLive(): Option[DataFrame] = {
     val logHead = fetchlog.latestDataSnapshot.getOrElse(0L)
-    pending.latestBase.filter(pending.coversOf(_).exists(_ <= logHead)) match {
+    pending.latestBase.filter(_.covers.exists(_ <= logHead)) match {
       case Some(b) =>
-        val f0 = pending.metricOf(b, "frontier_covers").fold(0L)(_.toLong)
+        val f0 = b.metrics.get("frontier_covers").fold(0L)(_.toLong)
         val fHead = frontier.latestDataSnapshot.getOrElse(0L)
         Some(advance(pending.read().get, frontier.readBetween(f0, fHead).map(minSeqPerHash),
-          fetchlog.readBetween(pending.coversOf(b).get, logHead)))
+          fetchlog.readBetween(b.covers.get, logHead)))
       case None =>
         rebuildPending().map { case (df, cleanup) =>
           try commitPendingBase(df, Map("rebuild" -> 1.0), covers = logHead)
@@ -410,6 +403,10 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
     // rides the fetch count.
     val pend = res.persist(pendingLive().getOrElse(return None))
     val runId = fetchlog.latestSnapshot.getOrElse(0L) + 1
+    // windows run so far, from the latest data commit (0 before the first
+    // engine run: history rows carry run = 0) — a failed run counts none
+    val windowBase = fetchlog.latestDataSnapshot
+      .flatMap(fetchlog.manifest(_).metrics.get("windows_total")).fold(0L)(_.toLong)
 
     // ---- politeness WINDOWS (waves), batched per engine run -----------
     // (VERDICT r04 #1 lever (b)): one engine run executes up to
@@ -511,14 +508,9 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
     val nFail = nScheduled - nOk
     val totalLinks = waves.map(_.links).sum
 
-    // fetchlog rows: `run` carries the GLOBAL WINDOW id (the reference-
-    // equivalent micro-run counter, resumed from the windows_total
-    // manifest metric)
-    val windowBase = windowCount
     val logRows = waves.zipWithIndex.map { case (wv, i) =>
       wv.results.drop("body").withColumn("run", lit(windowBase + i + 1))
     }.reduce(_.unionByName(_))
-    windowCount = windowBase + waves.size
 
     // ---- Catalyst parse stage: images (F7) ----------------------------
     // refs from every window; first discovery wins in (window, seq)
@@ -590,7 +582,6 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
 
     val nNewImages = images.commitPrepared(Await.result(imgPrep, Duration.Inf),
       Map("run" -> runId.toDouble), skipIfEmpty = true).rows // count via footers
-    imageSeen.added(nNewImages)
 
     // frontier append: idempotent under replay (rebuild dedups by hash)
     val nNewCand = frontier.commitPrepared(Await.result(frontPrep, Duration.Inf),
@@ -609,15 +600,13 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
       "links_seen" -> totalLinks.toDouble,
       "dedup_dropped" -> (totalLinks - nNewCand).toDouble,
       "delay_ms" -> pol.clampedDelay,
-      // window accounting: resumes the global window counter (the `run`
-      // column of this commit's rows spans (windows_total - windows,
-      // windows_total])
+      // window accounting: the next run's windowBase (the `run` column of
+      // this commit's rows spans (windows_total - windows, windows_total])
       "windows" -> waves.size.toDouble,
-      "windows_total" -> windowCount.toDouble)
+      "windows_total" -> (windowBase + waves.size).toDouble)
 
     // completion marker — LAST (see class doc)
     fetchlog.commitPrepared(Await.result(logPrep, Duration.Inf), baseMetrics)
-    urlSeen.added(nScheduled)
 
     if (fetchlog.dataSnapshots.size % cfg.compactEvery == 0) maintain(runId, live)
 

@@ -48,17 +48,17 @@ object BloomGeometry {
   def blockBytesFor(capacity: Long): Long =
     (capacity * 9.586).toLong / 8 + 24
 
-  /** Smallest doubling-schedule geometry holding `rowsEst` keys at the
+  /** Smallest doubling-schedule geometry holding `rows` keys at the
     * target fpp. `storageBuckets` is the floor (and factor) of the
     * bucket count; `maxBlockBytes` caps a single block so it always fits
     * a broadcast slice. `capacityFloor` exists so specs can exercise the
     * resize schedule at toy scale; production uses the legacy-compatible
     * [[MinCapacity]]. */
-  def forEstimate(rowsEst: Long, storageBuckets: Int, maxBlockBytes: Long,
+  def forEstimate(rows: Long, storageBuckets: Int, maxBlockBytes: Long,
                   capacityFloor: Long = MinCapacity): BloomGeometry = {
     var buckets = storageBuckets.toLong
     var cap = capacityFloor
-    while (buckets * cap < rowsEst) {
+    while (buckets * cap < rows) {
       if (blockBytesFor(cap * 2) <= maxBlockBytes) cap *= 2
       else buckets *= 2
     }

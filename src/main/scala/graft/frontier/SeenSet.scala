@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * any other key is prefiltered on `xxhash64(key)` and still joins on the
   * key itself, so a 64-bit collision can never drop a genuinely-new row.
   *
-  * Two plans, picked from the manifest row estimate alone:
+  * Two plans, picked from the table's manifest row count alone
+  * (`table.totalRows`, read from its parsed manifest log — never a job):
   *  - below `scanProbeMinSeen`: a plain exact anti-join and NO Bloom
   *    state — a prefilter saves no probe while the seen side is broadcast
   *    or sort-merged anyway;
@@ -40,15 +41,12 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     throw new IllegalArgumentException(s"seen set on $key needs a clustered table"))
   private val hash: Column = if (keyIsHash) col(key) else xxhash64(col(key))
 
-  // manifest-derived cardinality estimate (read once at startup, then
-  // maintained from the runs' own counts): the plan switch — an exact
-  // anti-join while the table is small, scan-probe once a history
-  // exchange would dominate
-  private var rowsEst: Long = table.totalRows
-  private def scanProbeRegime: Boolean = rowsEst >= cfg.scanProbeMinSeen
+  // the plan switch: an exact anti-join while the table is small,
+  // scan-probe once a history exchange would dominate
+  private def scanProbeRegime: Boolean = table.totalRows >= cfg.scanProbeMinSeen
 
   // ---- Bloom index GEOMETRY (VERDICT r03 #1/#2) -----------------------
-  // derived from the manifest-based estimate on BloomGeometry's doubling
+  // derived from the table's row count on BloomGeometry's doubling
   // schedule (why: see its scaladoc). The standing geometry persists in
   // the index manifests so a resumed engine probes with the blocks it
   // actually finds.
@@ -56,19 +54,16 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     math.min(128L * 1024 * 1024, math.max(1L, cfg.maxBroadcastBytes / 4))
   private def geomFor(rows: Long): BloomGeometry =
     BloomGeometry.forEstimate(rows, storageBuckets, maxBlockBytes, cfg.bloomCapacityFloor)
-  // None when the latest index commit lacks either geometry metric: the
-  // index is then rebuilt (usableBase), never read at a guessed geometry
-  private def storedGeom: Option[BloomGeometry] =
-    for (n <- idx.latestSnapshot; b <- idx.metricOf(n, "index_buckets");
-         c <- idx.metricOf(n, "expected_per_bucket"))
+  // None when an index commit lacks either geometry metric: the index is
+  // then rebuilt (usableBase), never read at a guessed geometry
+  private def geomOf(m: SnapshotTable.Manifest): Option[BloomGeometry] =
+    for (b <- m.metrics.get("index_buckets"); c <- m.metrics.get("expected_per_bucket"))
       yield BloomGeometry(b.toInt, c.toLong)
-  private def geomMetrics: Map[String, Double] = Map(
-    "index_buckets" -> geom.indexBuckets.toDouble,
-    "expected_per_bucket" -> geom.capacityPerBucket.toDouble)
-  private var geom: BloomGeometry = storedGeom.getOrElse(geomFor(rowsEst))
+  private def storedGeom: Option[BloomGeometry] = idx.log.lastOption.flatMap(geomOf)
 
-  /** The index geometry in force (test/observability hook). */
-  def geometry: BloomGeometry = geom
+  /** The index geometry in force: the stored one, else the one the next
+    * rebuild would build (test/observability hook). */
+  def geometry: BloomGeometry = storedGeom.getOrElse(geomFor(table.totalRows))
 
   /** Slice count of the index at the current geometry, ADAPTIVE in its
     * ESTIMATED size: 1 while the whole index fits maxBroadcastBytes, else
@@ -80,7 +75,7 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     * subdivide). A fixed cap (the old autoSlices ≤8) silently
     * reintroduced the broadcast memory bound as the seen set kept
     * growing. Also a test/observability hook. */
-  def sliceCount: Int = BloomGeometry.slicesFitting(geom, cfg.maxBroadcastBytes)
+  def sliceCount: Int = BloomGeometry.slicesFitting(geometry, cfg.maxBroadcastBytes)
 
   /** STANDING per-slice block broadcasts for the table-resident index
     * (VERDICT r04 follow-up to r03 #1): without them, every micro-run
@@ -97,8 +92,9 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     * via the executor cache budget. */
   private var sliceCache: Option[BloomDedup.SliceBlockCache] = None
   private var sliceCacheKey: (Long, Int, Int) = (-2L, 0, 0)
-  private def standingSlices(indexBuckets: Int, numSlices: Int): Int => Option[BloomDedup.SliceBlocks] = {
-    val now = (idx.latestSnapshot.getOrElse(-1L), indexBuckets, numSlices)
+  private def standingSlices(snapshot: Long, indexBuckets: Int,
+                             numSlices: Int): Int => Option[BloomDedup.SliceBlocks] = {
+    val now = (snapshot, indexBuckets, numSlices)
     if (sliceCache.isEmpty || sliceCacheKey != now) {
       sliceCache.foreach(_.invalidate())
       sliceCacheKey = now
@@ -111,7 +107,7 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     sliceCache.get.get
   }
 
-  /** Commit index `blocks` at the current geometry as a base covering
+  /** Commit index `blocks` built at geometry `g` as a base covering
     * table snapshot `covers` — the one index write, shared by the rebuild
     * and the fold. Slice-clustered (NOTES r3 #3): block rows are grouped
     * into files by the slice their bucket belongs to (file
@@ -120,10 +116,12 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     * filtering on the bucket column (at 10^9+ scale each block is its own
     * row group, making footer min/max exact per row) — and the write
     * parallelizes across slices instead of one serial driver-sized file. */
-  private def commitIndex(blocks: DataFrame, metrics: Map[String, Double], covers: Long): Unit = {
-    val slices = sliceCount
+  private def commitIndex(blocks: DataFrame, g: BloomGeometry, metrics: Map[String, Double],
+                          covers: Long): Unit = {
+    val slices = BloomGeometry.slicesFitting(g, cfg.maxBroadcastBytes)
     idx.commitBase(blocks.repartitionById(slices, pmod(col("bucket"), lit(slices))),
-      metrics ++ geomMetrics, covers = Some(covers))
+      metrics ++ Map("index_buckets" -> g.indexBuckets.toDouble,
+        "expected_per_bucket" -> g.capacityPerBucket.toDouble), covers = Some(covers))
   }
 
   // no distinct: every consumer is an anti-join probe (set semantics on
@@ -132,32 +130,33 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
   // restriction pushes to the parquet scan as a plain IN filter.
   private def seenKeys: Option[DataFrame] = table.read().map(_.select(key, "bucket"))
 
-  /** The index rows `(bucket, bloom)`. The base need only cover SOME
-    * table snapshot ≤ the head — keys committed since are caught exactly
-    * by the recent-delta anti-join in [[slicedDedup]].
+  /** The index base to probe. It need only cover SOME table snapshot ≤
+    * the head — keys committed since are caught exactly by the
+    * recent-delta anti-join in [[slicedDedup]].
     * Rebuild (DISTRIBUTED — the index never transits the driver whole)
     * fires only when no usable base exists (first use; covers > head
     * after a lost table manifest; a latest commit without a covers
-    * marker) or the estimate outgrew the stored geometry (the doubling
+    * marker) or the table outgrew the stored geometry (the doubling
     * schedule). */
-  private def indexRows(seen: DataFrame): DataFrame = {
+  private def usableIndex(seen: DataFrame): SnapshotTable.Manifest = {
     val head = table.latestDataSnapshot.getOrElse(0L)
-    val stored = storedGeom
-    if (!usableBase(head, stored)) {
-      geom = geomFor(rowsEst)
-      commitIndex(BloomDedup.buildIndex(seen.select(hash.as("url_hash")), geom.indexBuckets,
-        geom.capacityPerBucket), Map("rebuild" -> 1.0), head)
-    } else stored.foreach(g => geom = g)
-    idx.read().get.select("bucket", "bloom")
+    usableBase(head).getOrElse {
+      val g = geomFor(table.totalRows)
+      commitIndex(BloomDedup.buildIndex(seen.select(hash.as("url_hash")), g.indexBuckets,
+        g.capacityPerBucket), g, Map("rebuild" -> 1.0), head)
+      idx.log.last
+    }
   }
 
-  /** Whether the index's latest commit is a base the dedup may trust at
-    * table head `head`: it covers a snapshot ≤ the head, and its `stored`
-    * geometry holds the current estimate. A base holds one block per
-    * bucket, so its rows are read as they are, never merged. */
-  private def usableBase(head: Long, stored: => Option[BloomGeometry]): Boolean =
-    idx.latestSnapshot.exists(idx.kindOf(_) == "base") &&
-      idx.latestCovers.exists(_ <= head) && stored.exists(_.totalCapacity >= rowsEst)
+  /** The index's latest commit, when it is a base the dedup may trust at
+    * table head `head`: it covers a snapshot ≤ the head, and its stored
+    * geometry holds the table's rows. A base holds one block per bucket,
+    * so its rows are read as they are, never merged. */
+  private def usableBase(head: Long): Option[SnapshotTable.Manifest] = {
+    val rows = table.totalRows
+    idx.log.lastOption.filter(m => m.kind == "base" && m.covers.exists(_ <= head) &&
+      geomOf(m).exists(_.totalCapacity >= rows))
+  }
 
   /** Scan-probe over the table-resident index: each hash-range slice's
     * standing blocks broadcast once per index version (peak index memory
@@ -170,18 +169,19 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     * gone (VERDICT r03 #5: one fewer commit per run, and no mergeInPlace
     * between geometry-sized base blocks and batch-sized deltas). */
   private def slicedDedup(df: DataFrame, seen: DataFrame): (DataFrame, () => Unit) = {
-    val idxRows = indexRows(seen)
-    val c0 = idx.latestCovers.getOrElse(0L)
+    val base = usableIndex(seen)
+    val g = geomOf(base).get
+    val slices = BloomGeometry.slicesFitting(g, cfg.maxBroadcastBytes)
     val head = table.latestDataSnapshot.getOrElse(0L)
-    val cand = table.readBetween(c0, head) match {
+    val cand = table.readBetween(base.covers.get, head) match {
       case Some(recent) => df.join(recent.select(key), Seq(key), "left_anti")
       case None => df
     }
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val cleanup = BloomDedup.dedupSliced(cand, seen, idxRows,
-      geom.indexBuckets, sliceCount, scanProbe = true, joinKey = key,
+    val cleanup = BloomDedup.dedupSliced(cand, seen, idx.read().get.select("bucket", "bloom"),
+      g.indexBuckets, slices, scanProbe = true, joinKey = key,
       storageBuckets = storageBuckets,
-      sliceBlocks = standingSlices(geom.indexBuckets, sliceCount)) {
+      sliceBlocks = standingSlices(base.id, g.indexBuckets, slices)) {
       (_, out) => parts += out
     }
     (parts.reduce(_.unionByName(_)), cleanup)
@@ -208,11 +208,6 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
       (if (keyIsHash) out else out.drop("url_hash"), cleanup)
   }
 
-  /** Count `n` rows `table` just committed into the estimate, right after
-    * every commit: a stale estimate let a fold pack keys into blocks the
-    * very next dedup's geometry check would discard. */
-  def added(n: Long): Unit = rowsEst += n
-
   /** The engine's maintenance step for this index: fold the keys
     * committed since the base's covers marker into a new base covering
     * the table head, tagged with run `runId`. Never needed for
@@ -224,11 +219,10 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     * usable base exists — the next dedup's rebuild subsumes it. */
   def fold(runId: Long): Unit = {
     val head = table.latestDataSnapshot.getOrElse(0L)
-    if (scanProbeRegime && usableBase(head, storedGeom))
-      table.readBetween(idx.latestCovers.get, head).foreach { recent =>
-        commitIndex(BloomDedup.foldHashes(idx.read().get.select("bucket", "bloom"),
-            recent.select(hash.as("url_hash")), geom.indexBuckets, geom.capacityPerBucket),
-          Map("compaction" -> 1.0, "run" -> runId.toDouble), head)
-      }
+    if (scanProbeRegime) for (base <- usableBase(head); g <- geomOf(base);
+                              recent <- table.readBetween(base.covers.get, head))
+      commitIndex(BloomDedup.foldHashes(idx.read().get.select("bucket", "bloom"),
+          recent.select(hash.as("url_hash")), g.indexBuckets, g.capacityPerBucket),
+        g, Map("compaction" -> 1.0, "run" -> runId.toDouble), head)
   }
 }

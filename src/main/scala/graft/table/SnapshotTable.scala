@@ -1,7 +1,10 @@
 package graft.table
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
+import java.util.UUID
+import java.util.concurrent.atomic.AtomicReference
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.core.JsonProcessingException
@@ -17,21 +20,22 @@ import org.apache.spark.sql.types.StructType
   * Layout:
   * {{{
   *   <root>/data/commit-<N>/part-*.parquet     // data files per commit
-  *   <root>/commits/v<N>.json                  // manifest (atomic rename)
+  *   <root>/commits/v<N>.json                  // manifest (create-if-absent)
   * }}}
   *
   * Commit protocol: data files are fully written first, then the manifest
-  * is staged to `commits/.tmp-v<N>.json` and atomically renamed to
-  * `v<N>.json`. A crash between the two leaves orphan data dirs that no
-  * manifest references — readers only union data dirs of committed
-  * manifests, so reads are snapshot-isolated and resume is "read the last
-  * committed snapshot" (north rule: resumable from checkpoint). Each
-  * manifest carries per-partition lineage rows plus the run's metrics
+  * is staged under a unique `commits/.tmp-v<N>-*.json` name and hard-linked
+  * to `v<N>.json`, which fails when the id is taken, so a published
+  * manifest is never replaced. A crash between the two leaves orphan data
+  * dirs that no manifest references — readers only union data dirs of
+  * committed manifests, so reads are snapshot-isolated and resume is "read
+  * the last committed snapshot" (north rule: resumable from checkpoint).
+  * Each manifest carries per-partition lineage rows plus the run's metrics
   * (north rule: per-partition lineage + metrics per commit), computed from
   * the written files' parquet FOOTERS on the driver — a metadata-only read,
   * no Spark job per commit (real Iceberg records the same stats in its
-  * manifests the same way). Every metadata method reads a manifest back
-  * as one [[SnapshotTable.Manifest]] record.
+  * manifests the same way). Every metadata method is a view over one
+  * [[log]] read, which parses a manifest again only when its file changed.
   *
   * Three commit kinds:
   *  - '''append''' — adds rows; a snapshot is the union of appends.
@@ -47,38 +51,58 @@ import org.apache.spark.sql.types.StructType
 class SnapshotTable(spark: => SparkSession, root: String,
                     writeOptions: Map[String, String] = Map.empty,
                     val cluster: Option[SnapshotTable.Cluster] = None) {
-  // `spark` is BY-NAME: the manifest-metadata methods (snapshots, kindOf,
-  // coversOf, metricOf, totalRows, …) are pure file reads, so metadata
-  // tooling (graft.CrawlManager) can construct a table without a session.
+  // `spark` is BY-NAME: the manifest-metadata methods (log, snapshots,
+  // manifest, totalRows, …) are pure file reads, so metadata tooling
+  // (graft.CrawlManager) can construct a table without a session.
   // `writeOptions` ride every data write (e.g. parquet column bloom
   // filters for point-probed key columns — SnapshotTable.bloomFilterFor)
 
-  import SnapshotTable.{CommitResult, Manifest, Prepared}
+  import SnapshotTable.{CommitResult, Manifest, Prepared, sinceBase}
 
   private def commitsDir: Path = Paths.get(root, "commits")
   private def dataDir(n: Long): Path = Paths.get(root, "data", f"commit-$n%06d")
 
   private val ManifestRe = "^v([0-9]{6})\\.json$".r
 
-  /** Ids of committed snapshots, ascending. */
-  def snapshots: Seq[Long] = {
+  // snapshot id -> ((size, mtime, file key), its parsed manifest), swapped
+  // whole per `log` call, so a racing caller costs a re-parse, never a
+  // stale record
+  private val parsed = new AtomicReference(Map.empty[Long, ((Long, FileTime, AnyRef), Manifest)])
+
+  /** The committed manifests, ascending by id, from one listing of
+    * `commits/`. A manifest is parsed again only when its file's size,
+    * last-modified time or file key changed, so another instance's commit,
+    * a deleted manifest and one rewritten in place all show up. */
+  def log: Seq[Manifest] = {
     if (!Files.isDirectory(commitsDir)) return Seq.empty
     val stream = Files.list(commitsDir)
-    try {
+    val files = try {
       stream.iterator().asScala
-        .flatMap(p => ManifestRe.findFirstMatchIn(p.getFileName.toString).map(_.group(1).toLong))
-        .toSeq.sorted
+        .flatMap(p => ManifestRe.findFirstMatchIn(p.getFileName.toString)
+          .map(_.group(1).toLong -> p))
+        .toSeq.sortBy(_._1)
     } finally stream.close()
+    val cache = parsed.get
+    val next = files.map { case (n, p) =>
+      val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+      val stamp = (a.size, a.lastModifiedTime, a.fileKey)
+      n -> cache.get(n).filter(_._1 == stamp).getOrElse(stamp -> SnapshotTable.readManifest(n, p))
+    }
+    parsed.set(next.toMap)
+    next.map(_._2._2)
   }
 
-  def latestSnapshot: Option[Long] = snapshots.lastOption
+  /** Ids of committed snapshots, ascending. */
+  def snapshots: Seq[Long] = log.map(_.id)
 
-  /** Snapshot `n`'s manifest, read from `commits/v<N>.json`. */
-  def manifest(n: Long): Manifest =
-    SnapshotTable.readManifest(n, commitsDir.resolve(f"v$n%06d.json"))
+  def latestSnapshot: Option[Long] = log.lastOption.map(_.id)
+
+  /** Snapshot `n`'s manifest. */
+  def manifest(n: Long): Manifest = log.find(_.id == n)
+    .getOrElse(throw new NoSuchElementException(s"table $root has no snapshot $n"))
 
   /** Ids of the snapshots that ADDED data (append commits), ascending. */
-  def dataSnapshots: Seq[Long] = snapshots.filter(kindOf(_) == "append")
+  def dataSnapshots: Seq[Long] = log.filter(_.kind == "append").map(_.id)
 
   /** Latest snapshot that ADDED data — merge and base commits rewrite
     * existing rows without changing table content, so staleness markers
@@ -93,26 +117,8 @@ class SnapshotTable(spark: => SparkSession, root: String,
   private def mergedAway(ms: Seq[Manifest]): Set[Long] =
     ms.filter(_.kind == "merge").flatMap(_.merges).toSet
 
-  /** The manifests from the latest base among `ms` on (all of them when
-    * there is no base): the commits a read at the last of `ms` unions. */
-  private def sinceBase(ms: Seq[Manifest]): Seq[Manifest] =
-    ms.drop(math.max(0, ms.lastIndexWhere(_.kind == "base")))
-
-  /** Commit kind of snapshot `n`: append, base or merge. */
-  def kindOf(n: Long): String = manifest(n).kind
-
-  /** The `covers` staleness marker of snapshot `n`, when recorded. */
-  def coversOf(n: Long): Option[Long] = manifest(n).covers
-
-  /** `covers` of the latest snapshot (None when the table is empty or the
-    * latest commit carries no marker). */
-  def latestCovers: Option[Long] = latestSnapshot.flatMap(coversOf)
-
-  /** A metric recorded in snapshot `n`'s manifest (None when absent). */
-  def metricOf(n: Long, key: String): Option[Double] = manifest(n).metrics.get(key)
-
   /** Read the table at the latest committed snapshot (None when empty). */
-  def read(): Option[DataFrame] = readAt(latestSnapshot.getOrElse(-1L))
+  def read(): Option[DataFrame] = readAt(Long.MaxValue)
 
   // known data schema (from the last write or first read): passing it to
   // the reader skips parquet's footer-sampling SCHEMA-INFERENCE JOB — at
@@ -139,9 +145,9 @@ class SnapshotTable(spark: => SparkSession, root: String,
   /** Read the table as of snapshot `n` (time travel): anchor at the latest
     * base ≤ n and union the live data dirs in [anchor, n]. */
   def readAt(n: Long): Option[DataFrame] = {
-    val all = snapshots
-    val head = all.lastOption.getOrElse(-1L)
-    val ms = all.filter(_ <= n).map(manifest)
+    val all = log
+    val head = all.lastOption.fold(-1L)(_.id)
+    val ms = all.filter(_.id <= n)
     // bin-packed dirs are replaced by their merge commit's dir as of the
     // merge; reading at an earlier snapshot still sees the originals
     val packed = mergedAway(ms)
@@ -179,10 +185,6 @@ class SnapshotTable(spark: => SparkSession, root: String,
       pack(level, if (level == 1) 2 else maxDirs, maxDirs, metrics))
   }
 
-  /** Bin-pack level of merge snapshot `n` (1 when the field is absent —
-    * pre-level manifests; 0 for non-merge commits). */
-  def mergeLevelOf(n: Long): Int = manifest(n).level
-
   /** Rewrite the oldest ≤ `maxDirs` un-packed dirs of the level below
     * `level` (appends for level 1) since the last base into one
     * level-`level` merge commit, when at least `minDirs` qualify. A
@@ -190,7 +192,7 @@ class SnapshotTable(spark: => SparkSession, root: String,
     * writes one file. */
   private def pack(level: Int, minDirs: Int, maxDirs: Int,
                    metrics: Map[String, Double]): Option[Long] = {
-    val ms = snapshots.map(manifest)
+    val ms = log
     val packed = mergedAway(ms)
     def isSource(m: Manifest): Boolean =
       if (level == 1) m.kind == "append" else m.kind == "merge" && m.level == level - 1
@@ -206,7 +208,11 @@ class SnapshotTable(spark: => SparkSession, root: String,
     * manifest. `tasks` is how many files the write targets: a clustered
     * table lays the rows out by [[SnapshotTable.Cluster]]; any other
     * coalesces to `tasks` when positive. Returns footer-derived row count
-    * + lineage; pair with [[commitPrepared]] to publish. */
+    * + lineage; pair with [[commitPrepared]] to publish. The write
+    * "overwrite"s the id's dir: a crashed run's orphan (no manifest
+    * references it — see class doc), or a second writer's prepare at the
+    * same id. Only the publish is fenced against a second writer; fencing
+    * the prepare needs one writer per root (ROADMAP direction 1). */
   def prepare(df: DataFrame, seqCol: Option[String] = None, tasks: Int = 0): Prepared = {
     val id = latestSnapshot.getOrElse(0L) + 1L
     val out = dataDir(id)
@@ -214,8 +220,6 @@ class SnapshotTable(spark: => SparkSession, root: String,
       case Some(c) => c.layout(df, tasks)
       case None => if (tasks > 0) df.coalesce(tasks) else df
     }
-    // "overwrite": a dir at this id can only be a crashed run's orphan
-    // (no manifest references it — see class doc), so reclaiming it is safe
     toWrite.write.options(writeOptions).mode("overwrite").parquet(out.toString)
     // lineage from the committed files' footers (metadata only — no job)
     val stats = ParquetFooters.stats(out, seqCol)
@@ -238,10 +242,6 @@ class SnapshotTable(spark: => SparkSession, root: String,
       deleteRecursively(out)
       return CommitResult(latestSnapshot.getOrElse(0L), 0L)
     }
-    // the write defines the current shape — cached only once the
-    // manifest is certain to land (a SKIPPED empty commit must not key
-    // the cache to an id that never becomes the head)
-    cachedSchema = Some((id, p.schema))
     val lineage = p.stats.zipWithIndex.map { case (s, i) =>
       val mn = s.minSeq.map(_.toString).getOrElse("null")
       val mx = s.maxSeq.map(_.toString).getOrElse("null")
@@ -263,10 +263,18 @@ class SnapshotTable(spark: => SparkSession, root: String,
          |"lineage":[${lineage.mkString(",")}]}""".stripMargin
 
     Files.createDirectories(commitsDir)
-    val tmp = commitsDir.resolve(f".tmp-v$id%06d.json")
-    Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, commitsDir.resolve(f"v$id%06d.json"),
-      StandardCopyOption.ATOMIC_MOVE)
+    val tmp = commitsDir.resolve(f".tmp-v$id%06d-${UUID.randomUUID}.json")
+    try {
+      Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
+      try Files.createLink(commitsDir.resolve(f"v$id%06d.json"), tmp)
+      catch { case e: FileAlreadyExistsException =>
+        throw new IllegalStateException(
+          s"table $root: snapshot $id was already published by another writer", e)
+      }
+    } finally Files.deleteIfExists(tmp)
+    // the write defines the current shape — cached only once the manifest
+    // landed (a skipped or lost commit must not key the cache to its id)
+    cachedSchema = Some((id, p.schema))
     CommitResult(id, rows)
   }
 
@@ -285,21 +293,18 @@ class SnapshotTable(spark: => SparkSession, root: String,
     * incremental contract is unaffected by bin-packing. None when no
     * data dirs exist in the range. */
   def readBetween(a: Long, b: Long): Option[DataFrame] = {
-    val dirs = dataSnapshots.filter(id => id > a && id <= b)
-      .map(dataDir).filter(Files.isDirectory(_)).map(_.toString)
+    val ms = log
+    val dirs = ms.filter(m => m.kind == "append" && m.id > a && m.id <= b)
+      .map(m => dataDir(m.id)).filter(Files.isDirectory(_)).map(_.toString)
     if (dirs.isEmpty) None
-    else Some(readDirs(dirs, latestSnapshot.getOrElse(-1L)))
+    else Some(readDirs(dirs, ms.last.id))
   }
 
-  /** Latest base (compaction) snapshot id ≤ the head, when one exists. */
-  def latestBase: Option[Long] = snapshots.filter(kindOf(_) == "base").lastOption
+  /** Latest base (compaction) manifest, when one exists. */
+  def latestBase: Option[Manifest] = log.filter(_.kind == "base").lastOption
 
-  /** Total committed rows since the last base — a manifest-derived
-    * cardinality estimate (metadata only, no job). Merge commits rewrite
-    * rows already counted by their sources, so they are skipped. */
-  def totalRows: Long =
-    sinceBase(snapshots.map(manifest)).filter(_.kind != "merge")
-      .map(_.metrics.get("n_rows").fold(0L)(_.toLong)).sum
+  /** [[SnapshotTable.totalRows]] of this table's log. */
+  def totalRows: Long = SnapshotTable.totalRows(log)
 
   private def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) {
@@ -323,6 +328,18 @@ object SnapshotTable {
 
   /** The highest bin-pack level: a level-`TopLevel` merge is terminal. */
   val TopLevel = 3
+
+  /** The manifests from the latest base among `ms` on (all of them when
+    * there is no base): the commits a read at the last of `ms` unions. */
+  private def sinceBase(ms: Seq[Manifest]): Seq[Manifest] =
+    ms.drop(math.max(0, ms.lastIndexWhere(_.kind == "base")))
+
+  /** Total committed rows since the last base of `log` — a manifest-
+    * derived cardinality estimate (metadata only, no job). Merge commits
+    * rewrite rows already counted by their sources, so they are skipped. */
+  def totalRows(log: Seq[Manifest]): Long =
+    sinceBase(log).filter(_.kind != "merge")
+      .map(_.metrics.get("n_rows").fold(0L)(_.toLong)).sum
 
   /** A table's bucket layout: every write sets the data column
     * `bucket = pmod(hash, buckets)` and clusters on it (NOTES r02 #3), so

@@ -22,8 +22,12 @@ object CrawlManager {
 
   private val Tables = Seq("frontier", "pending", "fetchlog", "images", "bloomidx", "imgidx")
 
-  private def table(root: String, name: String): SnapshotTable =
-    new SnapshotTable(sys.error("CrawlManager is metadata-only"), s"$root/$name")
+  /** Table `name`'s manifest log, read once per report. */
+  private def log(root: String, name: String): Seq[SnapshotTable.Manifest] =
+    new SnapshotTable(sys.error("CrawlManager is metadata-only"), s"$root/$name").log
+
+  private def appends(root: String): Seq[SnapshotTable.Manifest] =
+    log(root, "fetchlog").filter(_.kind == "append")
 
   private def dirBytes(p: Path): Long =
     if (!Files.exists(p)) 0L
@@ -40,33 +44,32 @@ object CrawlManager {
     val sb = new StringBuilder
     sb ++= s"=== Crawl status: $root ===\n"
     if (!Files.isDirectory(Paths.get(root))) return sb.append("no such root\n").toString
-    val log = table(root, "fetchlog")
-    val runs = log.dataSnapshots
+    val logs = Tables.map(t => t -> log(root, t)).toMap
+    val runs = logs("fetchlog").filter(_.kind == "append")
     val state =
       if (runs.isEmpty) "seeded (no completed run)"
       else "idle/crashed-or-drained (resume-safe: last committed snapshot is the checkpoint)"
     sb ++= s"State: $state\n"
     runs.lastOption.foreach { last =>
-      sb ++= s"Completed runs: ${runs.size} (last snapshot $last" + log.manifest(last).committedAtMs
+      sb ++= s"Completed runs: ${runs.size} (last snapshot ${last.id}" + last.committedAtMs
         .map(t => s", committed at ${java.time.Instant.ofEpochMilli(t)}").getOrElse("") + ")\n"
     }
-    val bloomidx = table(root, "bloomidx")
+    val bloomHead = logs("bloomidx").lastOption
     // only covers-marked bases are a usable index; below scanProbeMinSeen
     // the URL set writes none
-    val plan = bloomidx.latestCovers
+    val plan = bloomHead.flatMap(_.covers)
       .map(c => s"Bloom scan-probe (URL index covers fetchlog v$c)")
       .getOrElse("exact anti-join (no URL index)")
     sb ++= s"Dedup plan: $plan\n"
-    val geometry = for (n <- bloomidx.latestSnapshot; b <- bloomidx.metricOf(n, "index_buckets");
-                        c <- bloomidx.metricOf(n, "expected_per_bucket"))
+    val geometry = for (m <- bloomHead; b <- m.metrics.get("index_buckets");
+                        c <- m.metrics.get("expected_per_bucket"))
       yield f"${b.toLong} buckets x ${c.toLong} keys (capacity ${b.toLong * c.toLong}%,d)"
     sb ++= s"URL index geometry: ${geometry.getOrElse("none")}\n"
     Tables.foreach { t =>
-      val st = table(root, t)
-      val head = st.latestSnapshot.map(_.toString).getOrElse("-")
-      val kind = st.latestSnapshot.map(st.kindOf).getOrElse("-")
-      val covers = st.latestCovers.map(c => s" covers=$c").getOrElse("")
-      sb ++= f"  $t%-9s head=$head%-6s kind=$kind$covers rows~${st.totalRows}%,d " +
+      val head = logs(t).lastOption
+      val covers = head.flatMap(_.covers).map(c => s" covers=$c").getOrElse("")
+      sb ++= f"  $t%-9s head=${head.fold("-")(_.id.toString)}%-6s " +
+        f"kind=${head.fold("-")(_.kind)}$covers rows~${SnapshotTable.totalRows(logs(t))}%,d " +
         s"size=${mb(dirBytes(Paths.get(root, t, "data")))}\n"
     }
     sb.toString
@@ -77,11 +80,9 @@ object CrawlManager {
   def metrics(root: String): String = {
     val sb = new StringBuilder
     sb ++= s"=== Crawl metrics: $root ===\n"
-    val log = table(root, "fetchlog")
-    val runs = log.dataSnapshots
+    val runs = appends(root)
     if (runs.isEmpty) return sb.append("no completed runs\n").toString
-    def sumMetric(key: String): Double =
-      runs.flatMap(n => log.metricOf(n, key)).sum
+    def sumMetric(key: String): Double = runs.flatMap(_.metrics.get(key)).sum
     val scheduled = sumMetric("scheduled")
     val ok = sumMetric("fetched_ok")
     val failed = sumMetric("failed")
@@ -90,7 +91,7 @@ object CrawlManager {
     sb ++= f"New images: ${sumMetric("new_images").toLong}%,d\n"
     sb ++= f"New candidates: ${sumMetric("new_candidates").toLong}%,d  " +
       f"(links seen ${sumMetric("links_seen").toLong}%,d, dedup-dropped ${sumMetric("dedup_dropped").toLong}%,d)\n"
-    val times = runs.flatMap(log.manifest(_).committedAtMs)
+    val times = runs.flatMap(_.committedAtMs)
     if (times.size >= 2) {
       val secs = (times.max - times.min) / 1000.0
       if (secs > 0)
@@ -102,17 +103,14 @@ object CrawlManager {
   }
 
   /** `journalctl -n` analogue: the last `n` runs' metric lines. */
-  def logs(root: String, n: Int): String = {
-    val log = table(root, "fetchlog")
-    val runs = log.dataSnapshots
-    runs.takeRight(n).map { id =>
+  def logs(root: String, n: Int): String =
+    appends(root).takeRight(n).map { m =>
       val line = Seq("scheduled", "fetched_ok", "failed", "new_images",
         "new_candidates", "delay_ms")
-        .flatMap(k => log.metricOf(id, k).map(v => f"$k=${v}%.0f"))
+        .flatMap(k => m.metrics.get(k).map(v => f"$k=${v}%.0f"))
         .mkString(" ")
-      f"run $id%-5d $line"
+      f"run ${m.id}%-5d $line"
     }.mkString("\n") + "\n"
-  }
 
   def main(args: Array[String]): Unit = args.toList match {
     case "status" :: root :: Nil => print(status(root))

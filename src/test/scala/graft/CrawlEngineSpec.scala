@@ -235,14 +235,14 @@ class CrawlEngineSpec extends AnyFunSuite {
     // both indexes live in their tables as covers-marked bases only
     for (idx <- Seq(e.bloomidx, e.imgidx)) {
       val head = idx.latestSnapshot.get
-      assert(idx.kindOf(head) == "base" && idx.coversOf(head).nonEmpty,
+      assert(idx.manifest(head).kind == "base" && idx.manifest(head).covers.nonEmpty,
         s"index head v$head is not a covers-marked base")
     }
     // a FRESH engine on the crawled root trusts both bases: it drains
     // without refetching and without rebuilding either index
     val before = e.fetchlog.read().get.count()
     val rebuilds = () => Seq(e.bloomidx, e.imgidx).map(idx =>
-      idx.snapshots.count(n => idx.metricOf(n, "rebuild").contains(1.0)))
+      idx.snapshots.count(n => idx.manifest(n).metrics.get("rebuild").contains(1.0)))
     val rebuildsBefore = rebuilds()
     val resumed = new CrawlEngine(TestSpark.spark, cfg, new SyntheticFetcher(webCfg), web.robots)
     resumed.crawlAll()
@@ -266,8 +266,8 @@ class CrawlEngineSpec extends AnyFunSuite {
     // index's first use and writes it as a covers-marked base
     assert(e1.runOnce().isDefined && e1.runOnce().isDefined)
     val first = e1.bloomidx.latestSnapshot.get
-    assert(e1.bloomidx.kindOf(first) == "base", s"bloomidx v$first is not a base")
-    val covers = e1.bloomidx.coversOf(first)
+    assert(e1.bloomidx.manifest(first).kind == "base", s"bloomidx v$first is not a base")
+    val covers = e1.bloomidx.manifest(first).covers
     assert(covers.isDefined, s"bloomidx v$first has no covers marker")
     assert(graft.tools.CrawlManager.status(root).contains(
       s"Dedup plan: Bloom scan-probe (URL index covers fetchlog v${covers.get})"))
@@ -279,7 +279,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     e1.bloomidx.commit(planted.coalesce(1), Map("covers_fetchlog_snapshot" -> head.toDouble,
       "index_buckets" -> e1.urlIndexGeometry.indexBuckets.toDouble,
       "expected_per_bucket" -> e1.urlIndexGeometry.capacityPerBucket.toDouble))
-    assert(e1.bloomidx.latestCovers.isEmpty)
+    assert(e1.bloomidx.log.lastOption.flatMap(_.covers).isEmpty)
     assert(graft.tools.CrawlManager.status(root).contains(
       "Dedup plan: exact anti-join (no URL index)"))
     val plantedV = e1.bloomidx.latestSnapshot.get
@@ -287,10 +287,10 @@ class CrawlEngineSpec extends AnyFunSuite {
     val e2 = newEngine(root, scanProbeMinSeen = 0L)
     e2.crawlAll()
     val rebuilt = e2.bloomidx.snapshots.filter(n => n > plantedV &&
-      e2.bloomidx.metricOf(n, "rebuild").contains(1.0))
+      e2.bloomidx.manifest(n).metrics.get("rebuild").contains(1.0))
     assert(rebuilt.nonEmpty, s"no rebuild after the covers-less snapshot v$plantedV")
     rebuilt.foreach(n =>
-      assert(e2.bloomidx.kindOf(n) == "base" && e2.bloomidx.coversOf(n).nonEmpty))
+      assert(e2.bloomidx.manifest(n).kind == "base" && e2.bloomidx.manifest(n).covers.nonEmpty))
     assert(e2.seenSet() == oracle.seenSet, "covers-less index resume diverged")
   }
 
@@ -308,7 +308,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     e.seed(web.seeds)
     e.crawlAll()
     assert(e.urlIndexSlices == 2)
-    assert(e.fetchlog.snapshots.exists(id => e.fetchlog.kindOf(id) == "merge"),
+    assert(e.fetchlog.snapshots.exists(id => e.fetchlog.manifest(id).kind == "merge"),
       "no merge commit ever happened — cadence broken")
     assert(e.seenSet() == engine.seenSet(), "bin-packing diverged the seen set")
     val imgs = e.imageTable().get.select("image_id", "phash")
@@ -445,13 +445,13 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(e.urlIndexGeometry.totalCapacity >= attempts,
       s"geometry ${e.urlIndexGeometry} never resized past $attempts attempts")
     val lastIdx = e.bloomidx.latestSnapshot.get
-    val storedCap = e.bloomidx.metricOf(lastIdx, "expected_per_bucket").get.toLong
+    val storedCap = e.bloomidx.manifest(lastIdx).metrics.get("expected_per_bucket").get.toLong
     assert(storedCap > floor, s"persisted capacity $storedCap never grew past the floor")
 
     // fpp evidence (the saturation this fixes was fpp→1): fresh keys
     // against the ENGINE-built blocks of the latest index base must read
     // "maybe seen" at ~the 1% build target, not ≈ 100%
-    val idxBuckets = e.bloomidx.metricOf(lastIdx, "index_buckets").get.toInt
+    val idxBuckets = e.bloomidx.manifest(lastIdx).metrics.get("index_buckets").get.toInt
     // the latest base is the standing index, and the read anchors there
     val blocks = e.bloomidx.read().get
       .select("bucket", "bloom").collect()
@@ -542,26 +542,26 @@ class CrawlEngineSpec extends AnyFunSuite {
     e.crawlAll()
     assert(e.seenSet() == o.seenSet, "sliced resize diverged the seen set")
     val manifests = e.bloomidx.snapshots.map(n =>
-      (e.bloomidx.metricOf(n, "expected_per_bucket").map(_.toLong),
-        e.bloomidx.kindOf(n)))
+      (e.bloomidx.manifest(n).metrics.get("expected_per_bucket").map(_.toLong),
+        e.bloomidx.manifest(n).kind))
     // growth visible in the persisted geometry trail…
     assert(manifests.flatMap(_._1).distinct.size >= 2,
       s"no geometry growth across bloomidx commits: $manifests")
     // …and the recent-delta fold compaction ran (per-run appends are gone)
     assert(e.bloomidx.snapshots.exists(n =>
-        e.bloomidx.metricOf(n, "compaction").contains(1.0)),
+        e.bloomidx.manifest(n).metrics.get("compaction").contains(1.0)),
       "no fold compaction commit — maintenance cadence broken")
-    assert(!e.bloomidx.snapshots.exists(n => e.bloomidx.kindOf(n) == "append"),
+    assert(!e.bloomidx.snapshots.exists(n => e.bloomidx.manifest(n).kind == "append"),
       "sliced regime still appends per-run index deltas")
     // the image-id index runs the same schedule over ~1400 ids against
     // the same 4 × 64-key floor: growth, no appends. (A maintaining run
     // whose ids outgrew the geometry, or that added none, skips its fold —
     // the next test pins the image fold cadence.)
     val imgGeoms = e.imgidx.snapshots.flatMap(n =>
-      e.imgidx.metricOf(n, "expected_per_bucket").map(_.toLong))
+      e.imgidx.manifest(n).metrics.get("expected_per_bucket").map(_.toLong))
     assert(imgGeoms.distinct.size >= 2,
       s"no geometry growth across imgidx commits: $imgGeoms")
-    assert(!e.imgidx.snapshots.exists(n => e.imgidx.kindOf(n) == "append"),
+    assert(!e.imgidx.snapshots.exists(n => e.imgidx.manifest(n).kind == "append"),
       "sliced image regime appends per-run index deltas")
     // image payload table exact under the sliced image index too
     val ids = e.imageTable().get.select("image_id").as[String].collect()
@@ -592,20 +592,22 @@ class CrawlEngineSpec extends AnyFunSuite {
     e.seed(wideWeb.seeds)
     e.crawlAll()
     val kinds = e.imgidx.snapshots.map(n =>
-      (e.imgidx.kindOf(n), e.imgidx.metricOf(n, "compaction"), e.imgidx.coversOf(n)))
+      (e.imgidx.manifest(n).kind, e.imgidx.manifest(n).metrics.get("compaction"),
+        e.imgidx.manifest(n).covers))
     val folds = e.imgidx.snapshots.filter(n =>
-      e.imgidx.metricOf(n, "compaction").contains(1.0))
+      e.imgidx.manifest(n).metrics.get("compaction").contains(1.0))
     assert(folds.nonEmpty, s"no imgidx fold compaction commit: $kinds")
     // each fold is a covers-marked base at a run after which the
     // fetchlog's data-commit count is even
     val evenRuns = e.fetchlog.dataSnapshots.zipWithIndex
       .collect { case (r, i) if (i + 1) % 2 == 0 => r }.toSet
     folds.foreach { n =>
-      assert(e.imgidx.kindOf(n) == "base" && e.imgidx.coversOf(n).nonEmpty, s"fold $n: $kinds")
-      assert(e.imgidx.metricOf(n, "run").exists(r => evenRuns(r.toLong)),
+      assert(e.imgidx.manifest(n).kind == "base" && e.imgidx.manifest(n).covers.nonEmpty,
+        s"fold $n: $kinds")
+      assert(e.imgidx.manifest(n).metrics.get("run").exists(r => evenRuns(r.toLong)),
         s"fold $n off cadence: $kinds")
     }
-    assert(!e.imgidx.snapshots.exists(n => e.imgidx.kindOf(n) == "append"),
+    assert(!e.imgidx.snapshots.exists(n => e.imgidx.manifest(n).kind == "append"),
       s"sliced image regime appends per-run index deltas: $kinds")
     val imgs = e.imageTable().get.select("image_id", "caption")
       .as[(String, String)].collect()
@@ -636,14 +638,15 @@ class CrawlEngineSpec extends AnyFunSuite {
     // the `run` metric of every commit `pick` selects; each must carry one
     def runs(t: SnapshotTable, pick: Long => Boolean): Set[Long] =
       t.snapshots.filter(pick).map { n =>
-        t.metricOf(n, "run").getOrElse(fail(s"maintenance commit v$n carries no run")).toLong
+        t.manifest(n).metrics.get("run")
+          .getOrElse(fail(s"maintenance commit v$n carries no run")).toLong
       }.toSet
     def compactions(t: SnapshotTable) =
-      runs(t, n => t.metricOf(n, "compaction").contains(1.0))
+      runs(t, n => t.manifest(n).metrics.get("compaction").contains(1.0))
     val pendingRuns = compactions(e.pending)
     val foldRuns = compactions(e.bloomidx) ++ compactions(e.imgidx)
     val mergeRuns = Seq(e.fetchlog, e.images, e.frontier)
-      .flatMap(t => runs(t, t.kindOf(_) == "merge")).toSet
+      .flatMap(t => runs(t, t.manifest(_).kind == "merge")).toSet
     assert(due.size >= 2, s"too short a crawl to see the cadence: ${e.fetchlog.dataSnapshots}")
     assert(foldRuns.nonEmpty && mergeRuns.nonEmpty,
       s"no fold ($foldRuns) or no merge ($mergeRuns) to check the cadence on")
@@ -702,7 +705,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     }
     val e2 = newEngine(root)
     e2.crawlAll()
-    assert(e2.pending.snapshots.exists(e2.pending.metricOf(_, "rebuild").contains(1.0)),
+    assert(e2.pending.snapshots.exists(e2.pending.manifest(_).metrics.get("rebuild").contains(1.0)),
       "no rebuild base was committed")
     assert(e2.seenSet() == oracle.seenSet, "rebuilt pending set diverged from the oracle")
     def maxAttempts(e: CrawlEngine): Map[String, Int] =
@@ -730,7 +733,8 @@ class CrawlEngineSpec extends AnyFunSuite {
     val compiledAtDrain = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     assert(compiledAtDrain == compiledAfterRun2,
       s"runs 3..$runs compiled ${compiledAtDrain - compiledAfterRun2} classes")
-    assert(e.pending.snapshots.count(e.pending.metricOf(_, "compaction").contains(1.0)) >= 2,
+    assert(e.pending.snapshots.count(
+        e.pending.manifest(_).metrics.get("compaction").contains(1.0)) >= 2,
       "no compacting run among the warm ones")
     assert(e.seenSet() == oracle.seenSet)
   }
@@ -823,6 +827,33 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(e2.seenSet() == oracle.seenSet, "the repaired root diverged the seen set")
   }
 
+  test("retrying runOnce on the same engine after a failed commit keeps window ids 1..K") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val root = Files.createTempDirectory("crawl-retry").toString
+    val e = newEngine(root)
+    e.seed(web.seeds)
+    // the images prepare throws after the run's windows have executed
+    val blocker = java.nio.file.Paths.get(root, "images", "data")
+    Files.createDirectories(blocker.getParent)
+    Files.write(blocker, Array[Byte](0))
+    intercept[Exception](e.runOnce())
+    Files.delete(blocker)
+    assert(e.crawlAll().nonEmpty)
+    val log = e.fetchlog.read().get
+    val windowIds = log.select("run").distinct().as[Long].collect().sorted
+    assert(windowIds.toSeq == (1L to oracle.runOrders.size),
+      s"window ids after the retry: ${windowIds.take(6).toSeq}")
+    val engineWindows = log.select(col("run"), col("url"), col("seq").cast("string"))
+      .as[(Long, String, String)]
+      .collect().groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (_, rows) => rows.map(r => (r._2, BigInt(r._3))).sortBy(_._2).toSeq }
+    engineWindows.zip(oracle.runOrders).zipWithIndex.foreach { case ((got, exp), i) =>
+      assert(got == exp, s"window $i order mismatch after the retry")
+    }
+    assert(e.seenSet() == oracle.seenSet, "the retried engine diverged the seen set")
+  }
+
   test("resume from last committed snapshot equals uninterrupted run") {
     val spark = TestSpark.spark
     import spark.implicits._
@@ -897,7 +928,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     e1.seed(web.seeds)
     assert(e1.runOnce().isDefined && e1.runOnce().isDefined)
     val head = e1.pending.latestSnapshot.get
-    assert(e1.pending.metricOf(head, "compaction").contains(1.0),
+    assert(e1.pending.manifest(head).metrics.get("compaction").contains(1.0),
       s"pending v$head after run 2 is not a compaction base")
     // a fresh engine starts from that base alone and still has work
     val e2 = mk()
@@ -937,8 +968,8 @@ class CrawlEngineSpec extends AnyFunSuite {
     val e1 = mk(2)
     e1.seed(web.seeds)
     assert(e1.runOnce().isDefined) // windows 1-2 in one commit
-    // restart with a DIFFERENT batch size: windowCount resumes from the
-    // windows_total manifest metric, so ids stay contiguous + monotone
+    // restart with a DIFFERENT batch size: each run's window ids start at
+    // the windows_total manifest metric, so ids stay contiguous + monotone
     val e2 = mk(3)
     e2.crawlAll()
     val log = e2.fetchlog.read().get

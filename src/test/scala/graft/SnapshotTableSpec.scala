@@ -41,7 +41,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // compact: state should now be {(1,1),(2,1),(3,1)} in a single base
     val state = t.read().get
     val base = t.commitBase(state, Map.empty, covers = Some(2L))
-    assert(base.rows == 3 && t.kindOf(base.id) == "base")
+    assert(base.rows == 3 && t.manifest(base.id).kind == "base")
     assert(t.read().get.count() == 3)
     // an append after the base applies on top of it
     t.commit(Seq((4L, 1, "d")).toDF("url_hash", "attempt", "v"), Map.empty)
@@ -109,8 +109,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     val dataHead = t.latestSnapshot.get
     // the oldest 3 appends pack; 1 level-1 merge is below a level-2 batch
     val m1 = t.binpack(3, Map("binpack" -> 1.0))
-    assert(m1.size == 1 && t.kindOf(m1.head) == "merge" && t.mergeLevelOf(m1.head) == 1)
-    assert(t.metricOf(m1.head, "binpack").contains(1.0))
+    assert(m1.size == 1 && t.manifest(m1.head).kind == "merge" && t.manifest(m1.head).level == 1)
+    assert(t.manifest(m1.head).metrics.get("binpack").contains(1.0))
     assert(t.read().get.as[(Long, String)].collect().toSet == before,
       "merge changed table content")
     assert(t.latestDataSnapshot.contains(dataHead),
@@ -121,7 +121,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(t.totalRows == 5, "totalRows double-counted the merge rewrite")
     // second pass packs the remainder; merge dirs are never re-merged
     val m2 = t.binpack(10)
-    assert(m2.size == 1 && t.mergeLevelOf(m2.head) == 1)
+    assert(m2.size == 1 && t.manifest(m2.head).level == 1)
     assert(t.read().get.as[(Long, String)].collect().toSet == before)
     assert(t.binpack(10).isEmpty, "re-merged already-packed dirs")
     // appends after merges fold in normally
@@ -146,10 +146,10 @@ class SnapshotTableSpec extends AnyFunSuite {
       t.binpack(4)
     }
     rounds.take(3).foreach(ids =>
-      assert(ids.map(t.mergeLevelOf) == Seq(1), s"level 2 fired below a full batch: $ids"))
-    val l1 = rounds.flatten.filter(t.mergeLevelOf(_) == 1)
-    val l2 = rounds.last.filter(t.mergeLevelOf(_) == 2)
-    assert(rounds.last.map(t.mergeLevelOf) == Seq(1, 2) && l1.size == 4,
+      assert(ids.map(t.manifest(_).level) == Seq(1), s"level 2 fired below a full batch: $ids"))
+    val l1 = rounds.flatten.filter(t.manifest(_).level == 1)
+    val l2 = rounds.last.filter(t.manifest(_).level == 2)
+    assert(rounds.last.map(t.manifest(_).level) == Seq(1, 2) && l1.size == 4,
       "level 2 did not fire at a full batch")
     assert(t.manifest(l2.head).merges == l1, "the level-2 merge did not pack the level-1 batch")
     // time travel between the level-1 packs and the level-2 pack sees
@@ -184,11 +184,11 @@ class SnapshotTableSpec extends AnyFunSuite {
     // merge, every second round a level-2 merge, every fourth a level-3
     def round(r: Int): Seq[Long] = { append(2 * r + 1); append(2 * r + 2); t.binpack(2) }
     val rounds = (0 until 4).map(round)
-    assert(rounds.map(_.map(t.mergeLevelOf)) == Seq(Seq(1), Seq(1, 2), Seq(1), Seq(1, 2, 3)),
+    assert(rounds.map(_.map(t.manifest(_).level)) == Seq(Seq(1), Seq(1, 2), Seq(1), Seq(1, 2, 3)),
       s"level 3 fired below, or idled at, a full level-2 batch: $rounds")
     val merges = rounds.flatten
-    val l3 = merges.filter(t.mergeLevelOf(_) == 3)
-    val l2 = merges.filter(t.mergeLevelOf(_) == 2)
+    val l3 = merges.filter(t.manifest(_).level == 3)
+    val l2 = merges.filter(t.manifest(_).level == 2)
     assert(t.manifest(l3.head).merges == l2)
     val before = (1 to 8).map(i => (i.toLong, s"v$i")).toSet
     assert(t.read().get.as[(Long, String)].collect().toSet == before,
@@ -207,9 +207,9 @@ class SnapshotTableSpec extends AnyFunSuite {
     // terminal at the top level: a second full batch of level-3 merges
     // never packs further
     val next = (4 until 8).map(round)
-    assert(next.last.map(t.mergeLevelOf) == Seq(1, 2, 3) && SnapshotTable.TopLevel == 3)
+    assert(next.last.map(t.manifest(_).level) == Seq(1, 2, 3) && SnapshotTable.TopLevel == 3)
     assert(t.binpack(2).isEmpty, "packed level-3 merges past the top level")
-    assert(t.snapshots.forall(n => t.mergeLevelOf(n) <= 3))
+    assert(t.snapshots.forall(n => t.manifest(n).level <= 3))
     assert(t.read().get.count() == 16 && t.read().get.inputFiles.length == 2)
   }
 
@@ -333,9 +333,10 @@ class SnapshotTableSpec extends AnyFunSuite {
     import spark.implicits._
     val t = new SnapshotTable(spark, tmpDir())
     val id = t.commit(Seq((1L, "a")).toDF("seq", "v"), Map("covers" -> 7.0, "kind" -> 3.0))
-    assert(t.latestCovers.isEmpty && t.coversOf(id).isEmpty)
-    assert(t.kindOf(id) == "append")
-    assert(t.metricOf(id, "covers").contains(7.0) && t.metricOf(id, "kind").contains(3.0))
+    assert(t.log.lastOption.flatMap(_.covers).isEmpty && t.manifest(id).covers.isEmpty)
+    assert(t.manifest(id).kind == "append")
+    assert(t.manifest(id).metrics.get("covers").contains(7.0) &&
+      t.manifest(id).metrics.get("kind").contains(3.0))
   }
 
   test("legacy manifests: a missing kind reads append, a merge's missing level reads 1") {
@@ -351,8 +352,67 @@ class SnapshotTableSpec extends AnyFunSuite {
     Files.write(commits.resolve("v000003.json"), ("""{"snapshot_id":3,"kind":"merge",""" +
       """"data_dir":"d","merges":[1,2],"committed_at_ms":6,"metrics":{"n_rows":2.0},""" +
       """"lineage":[]}""").getBytes("UTF-8"))
-    assert(t.kindOf(1) == "append" && t.manifest(1).committedAtMs.contains(5L))
-    assert(t.mergeLevelOf(3) == 1 && t.dataSnapshots == Seq(1L, 2L) && t.totalRows == 2)
+    assert(t.manifest(1).kind == "append" && t.manifest(1).committedAtMs.contains(5L))
+    assert(t.manifest(3).level == 1 && t.dataSnapshots == Seq(1L, 2L) && t.totalRows == 2)
+  }
+
+  test("each manifest is parsed once: an unchanged file is never read again") {
+    val spark = TestSpark.spark
+    val root = tmpDir()
+    val commits = java.nio.file.Paths.get(root, "commits")
+    Files.createDirectories(commits)
+    (1 to 5).foreach(n => Files.write(commits.resolve(f"v$n%06d.json"),
+      (s"""{"snapshot_id":$n,"kind":"append","data_dir":"d","committed_at_ms":$n,""" +
+        s""""metrics":{"n_rows":$n.0},"lineage":[]}""").getBytes("UTF-8")))
+    val t = new SnapshotTable(spark, root)
+    assert(t.dataSnapshots == (1L to 5L) && t.totalRows == 15)
+    // same length, same last-modified time, same file: the cached record
+    // stands, so the invalid bytes are never parsed
+    val v3 = commits.resolve("v000003.json")
+    val mtime = Files.getLastModifiedTime(v3)
+    Files.write(v3, Array.fill(Files.size(v3).toInt)('x'.toByte))
+    Files.setLastModifiedTime(v3, mtime)
+    assert(t.dataSnapshots == (1L to 5L) && t.totalRows == 15)
+    assert(t.manifest(3).metrics.get("n_rows").contains(3.0))
+  }
+
+  test("the log shows another instance's commit and a manifest deleted by hand") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val root = tmpDir()
+    val a = new SnapshotTable(spark, root)
+    val b = new SnapshotTable(spark, root)
+    a.commit(Seq((1L, "a")).toDF("seq", "v"), Map.empty)
+    a.commit(Seq((2L, "b")).toDF("seq", "v"), Map.empty)
+    assert(a.log.map(_.id) == Seq(1L, 2L))
+    b.commit(Seq((3L, "c")).toDF("seq", "v"), Map("by" -> 2.0))
+    assert(a.log.map(_.id) == Seq(1L, 2L, 3L) && a.manifest(3).metrics.get("by").contains(2.0))
+    Files.delete(java.nio.file.Paths.get(root, "commits", "v000002.json"))
+    assert(a.log.map(_.id) == Seq(1L, 3L) && a.totalRows == 2)
+  }
+
+  test("a second writer cannot replace a published manifest") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val root = tmpDir()
+    val a = new SnapshotTable(spark, root)
+    val b = new SnapshotTable(spark, root)
+    val pa = a.prepare(Seq((1L, "a")).toDF("seq", "v"))
+    val pb = b.prepare(Seq((2L, "b")).toDF("seq", "v"))
+    assert(pa.id == 1 && pb.id == 1)
+    a.commitPrepared(pa, Map("writer" -> 1.0))
+    val commits = java.nio.file.Paths.get(root, "commits")
+    val published = Files.readAllBytes(commits.resolve("v000001.json"))
+    val e = intercept[IllegalStateException](b.commitPrepared(pb, Map("writer" -> 2.0)))
+    assert(e.getMessage.contains(root) && e.getMessage.contains("snapshot 1"), e.getMessage)
+    assert(Files.readAllBytes(commits.resolve("v000001.json")).sameElements(published))
+    val names = {
+      val st = Files.list(commits)
+      try st.iterator().asScala.map(_.getFileName.toString).toSeq finally st.close()
+    }
+    assert(names == Seq("v000001.json"), s"left in commits/: $names")
+    assert(b.manifest(1).metrics.get("writer").contains(1.0))
   }
 
   test("a legacy equality-delete manifest fails the read, naming the file") {
