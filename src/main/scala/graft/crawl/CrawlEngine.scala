@@ -1,7 +1,7 @@
 package graft.crawl
 
 import graft.fetch.{FetchStage, Fetcher}
-import graft.frontier.{BloomDedup, BloomGeometry, Politeness, Scheduler, SeenSet}
+import graft.frontier.{BloomDedup, Politeness, Scheduler, SeenSet}
 import graft.functions.UrlFunctions._
 import graft.images.ImageKit
 import graft.model._
@@ -210,13 +210,6 @@ class CrawlEngine(spark: SparkSession, cfg: CrawlConfig, fetcher: Fetcher,
   // was the last per-run O(history) scan).
   private val urlSeen = new SeenSet(spark, cfg, fetchlog, bloomidx, "url_hash")
   private val imageSeen = new SeenSet(spark, cfg, images, imgidx, "image_id")
-
-  /** The URL index geometry in force (test/observability hook). */
-  def urlIndexGeometry: BloomGeometry = urlSeen.geometry
-
-  /** Hash-range slices the URL index broadcasts in (test/observability
-    * hook). */
-  def urlIndexSlices: Int = urlSeen.sliceCount
 
   /** Seed the frontier (run 0 commit). Seed i gets seq = i+1, depth 0.
     * Runs under the per-run conf, like runOnce. */

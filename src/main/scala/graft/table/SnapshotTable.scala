@@ -229,8 +229,8 @@ class SnapshotTable(spark: => SparkSession, root: String,
   /** Publish the manifest of a [[prepare]]d snapshot. `skipIfEmpty` with
     * zero rows reclaims the data dir and commits nothing. */
   def commitPrepared(p: Prepared, metrics: Map[String, Double],
-                     covers: Option[Long] = None, skipIfEmpty: Boolean = false): CommitResult =
-    publish(p, metrics, "append", covers, skipIfEmpty)
+                     skipIfEmpty: Boolean = false): CommitResult =
+    publish(p, metrics, "append", None, skipIfEmpty)
 
   private def publish(p: Prepared, metrics: Map[String, Double], kind: String,
                       covers: Option[Long], skipIfEmpty: Boolean = false,
@@ -313,13 +313,6 @@ class SnapshotTable(spark: => SparkSession, root: String,
       finally s.close()
     }
     Files.deleteIfExists(p)
-  }
-
-  /** Simulate a crash: write data files for a would-be snapshot but no
-    * manifest (test hook for resume semantics). */
-  def writeOrphan(df: DataFrame): Unit = {
-    val id = latestSnapshot.getOrElse(0L) + 1L
-    df.write.mode("overwrite").parquet(dataDir(id).toString)
   }
 }
 

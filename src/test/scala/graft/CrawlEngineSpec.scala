@@ -5,7 +5,6 @@ import graft.fetch.{Fetcher, SyntheticFetcher}
 import graft.frontier.Politeness
 import graft.images.ImageKit
 import graft.oracle.OracleCrawler
-import graft.table.SnapshotTable
 import graft.web.{FetchResponse, SyntheticWeb, WebConfig}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, concat, lit, row_number, xxhash64}
@@ -31,14 +30,24 @@ class CrawlEngineSpec extends AnyFunSuite {
         scanProbeMinSeen = scanProbeMinSeen),
       new SyntheticFetcher(webCfg), web.robots)
 
-  private def runOracle(): OracleCrawler = {
-    val o = new OracleCrawler(web, budget, maxRetries)
-    o.seed(web.seeds)
+  private def runOracle(w: SyntheticWeb, budget: Int): OracleCrawler = {
+    val o = new OracleCrawler(w, budget, maxRetries)
+    o.seed(w.seeds)
     o.crawlAll()
     o
   }
 
-  private lazy val oracle = runOracle()
+  private lazy val oracle = runOracle(web, budget)
+
+  // the index-geometry specs' web: ~1,400 attempts cross toy-scale
+  // capacity floors several times
+  private val wideCfg = WebConfig(nHosts = 2, pagesPerHost = 700, hotFactor = 1,
+    failPct = 0, imagesPerPage = 1, linksPerPage = 6)
+  private val wideWeb = new SyntheticWeb(wideCfg)
+  private val wideBudget = 400
+  private lazy val wideOracle = runOracle(wideWeb, wideBudget)
+  private def wideEngine(cfg: CrawlConfig): CrawlEngine =
+    new CrawlEngine(TestSpark.spark, cfg, new SyntheticFetcher(wideCfg), wideWeb.robots)
 
   private lazy val engineRoot: String = {
     val root = Files.createTempDirectory("crawl-e2e").toString
@@ -60,18 +69,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   test("per-run canonical order matches the oracle (same politeness budget)") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val log = engine.fetchlog.read().get
-    val engineRuns = log.select(col("run"), col("url"), col("seq").cast("string"))
-      .as[(Long, String, String)]
-      .collect().groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (_, rows) => rows.map(r => (r._2, BigInt(r._3))).sortBy(_._2).toSeq }
-    assert(engineRuns.size == oracle.runOrders.size,
-      s"run count: engine=${engineRuns.size} oracle=${oracle.runOrders.size}")
-    engineRuns.zip(oracle.runOrders).zipWithIndex.foreach { case ((got, exp), i) =>
-      assert(got == exp, s"run $i order mismatch: got=${got.take(3)} exp=${exp.take(3)}")
-    }
+    CrawlChecks.assertWindowOrders(CrawlChecks.windowRows(engine.fetchlog.read().get), oracle)
   }
 
   test("payload table matches the oracle: ids, captions byte-equal, phash, PSNR>=40") {
@@ -123,141 +121,6 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(maxAttempt >= 2, "no retry ever happened — failPct too low to exercise R6")
   }
 
-  test("host-salted fetch (hostSalts=4, hot-host skew split) produces identical state") {
-    val root = Files.createTempDirectory("crawl-salted").toString
-    val e = new CrawlEngine(TestSpark.spark,
-      CrawlConfig(root, Politeness(perHostBudget = budget, hostSalts = 4),
-        maxRetries, bloomBuckets = 8),
-      new SyntheticFetcher(webCfg), web.robots)
-    e.seed(web.seeds)
-    e.crawlAll()
-    assert(e.seenSet() == engine.seenSet(), "salting changed the seen set")
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val imgs = e.imageTable().get.select("image_id", "phash")
-      .as[(String, Long)].collect().toMap
-    val ref = engine.imageTable().get.select("image_id", "phash")
-      .as[(String, Long)].collect().toMap
-    assert(imgs == ref, "salting changed the payload table")
-  }
-
-  test("engine state is invariant to shuffle-partition count (N vs 4N determinism proxy)") {
-    // same job at a different parallelism must produce the identical
-    // seen set and payload table (north rule: same results at N and 4N
-    // executors; here the session-level shuffle partitioning changes)
-    val spark2 = TestSpark.spark.newSession()
-    spark2.conf.set("spark.sql.shuffle.partitions", "7")
-    val root = Files.createTempDirectory("crawl-partinv").toString
-    val e = new CrawlEngine(spark2,
-      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries, bloomBuckets = 8),
-      new SyntheticFetcher(webCfg), web.robots)
-    e.seed(web.seeds)
-    e.crawlAll()
-    assert(e.seenSet() == engine.seenSet(), "partitioning changed the seen set")
-  }
-
-  test("below scanProbeMinSeen both seen sets hold no Bloom state: no index snapshots, state exact") {
-    // the toy crawl never leaves the small regime at the default
-    // threshold: its exact anti-join needs no blocks, so neither index
-    // table may be written
-    assert(engine.bloomidx.snapshots.isEmpty,
-      s"bloomidx written below scanProbeMinSeen: ${engine.bloomidx.snapshots}")
-    assert(engine.imgidx.snapshots.isEmpty,
-      s"imgidx written below scanProbeMinSeen: ${engine.imgidx.snapshots}")
-    assert(engine.seenSet() == oracle.seenSet)
-  }
-
-  test("bloom and exact-only dedup paths produce identical state") {
-    val root2 = Files.createTempDirectory("crawl-nobloom").toString
-    val e2 = newEngine(root2, scanProbeMinSeen = 0L)
-    e2.seed(web.seeds)
-    e2.crawlAll()
-    assert(e2.seenSet() == engine.seenSet())
-  }
-
-  test("sliced (beyond-broadcast) dedup regime produces identical state") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val root = Files.createTempDirectory("crawl-sliced").toString
-    val e = new CrawlEngine(TestSpark.spark,
-      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        bloomBuckets = 8, maxBroadcastBytes = 400L * 1024, scanProbeMinSeen = 0L),
-      new SyntheticFetcher(webCfg), web.robots)
-    e.seed(web.seeds)
-    e.crawlAll()
-    // 8 × 65,536-key blocks (~78.5 KB each) need 2 slices of a 400 KB budget
-    assert(e.urlIndexSlices == 2)
-    assert(e.seenSet() == engine.seenSet(), "sliced dedup changed the seen set")
-    val imgs = e.imageTable().get.select("image_id", "phash")
-      .as[(String, Long)].collect().toMap
-    val ref = engine.imageTable().get.select("image_id", "phash")
-      .as[(String, Long)].collect().toMap
-    assert(imgs == ref, "sliced dedup changed the payload table")
-    // the slice restriction must reach the parquet scan as a PUSHED
-    // filter — bucket is a clustered data column (the fetchlog's cluster
-    // spec: each file spans 1-2 bucket values), so the IN skips whole
-    // files via footer min/max stats while the read stays one multi-path
-    // relation (the dir-per-commit partitioned layout pruned harder but cost more
-    // in per-micro-run union planning than it saved — measured e2e)
-    val slicePlan = e.fetchlog.read().get
-      .filter(org.apache.spark.sql.functions.col("bucket").isin(0, 2, 4, 6))
-      .queryExecution.executedPlan.toString
-    assert("PushedFilters: \\[[^\\]]*In\\(bucket".r.findFirstIn(slicePlan).isDefined,
-      s"bucket restriction not pushed to the scan:\n$slicePlan")
-    // resume inside the sliced regime (fresh engine, same root) drains
-    // cleanly without refetching
-    val before = e.fetchlog.read().get.count()
-    val e2 = new CrawlEngine(TestSpark.spark,
-      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        bloomBuckets = 8, maxBroadcastBytes = 400L * 1024, scanProbeMinSeen = 0L),
-      new SyntheticFetcher(webCfg), web.robots)
-    e2.crawlAll()
-    assert(e2.fetchlog.read().get.count() == before, "sliced resume refetched")
-  }
-
-  test("one bucket per slice (1 KB budget): URL and image indexes exact, resume clean") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val root = Files.createTempDirectory("crawl-tinybudget").toString
-    // a 1 KB budget no ~78 KB block fits: both indexes broadcast one
-    // bucket per slice. scanProbeMinSeen = 0 puts the URL frontier and
-    // the image-id payload dedup on the scan-probe plan from first use
-    def cfg = CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-      bloomBuckets = 8, maxBroadcastBytes = 1024L, scanProbeMinSeen = 0L)
-    val e = new CrawlEngine(TestSpark.spark, cfg, new SyntheticFetcher(webCfg), web.robots)
-    e.seed(web.seeds)
-    e.crawlAll()
-    assert(e.urlIndexSlices == 8)
-    assert(e.seenSet() == engine.seenSet(), "auto-flip diverged the seen set")
-    val ids = e.imageTable().get.select("image_id").as[String].collect()
-    assert(ids.length == ids.distinct.length, "sliced image dedup duplicated rows")
-    assert(ids.toSet == oracle.imagesCaptions.keySet.toSet)
-    // both indexes live in their tables as covers-marked bases only
-    for (idx <- Seq(e.bloomidx, e.imgidx)) {
-      val head = idx.latestSnapshot.get
-      assert(idx.manifest(head).kind == "base" && idx.manifest(head).covers.nonEmpty,
-        s"index head v$head is not a covers-marked base")
-    }
-    // a FRESH engine on the crawled root trusts both bases: it drains
-    // without refetching and without rebuilding either index
-    val before = e.fetchlog.read().get.count()
-    val rebuilds = () => Seq(e.bloomidx, e.imgidx).map(idx =>
-      idx.snapshots.count(n => idx.manifest(n).metrics.get("rebuild").contains(1.0)))
-    val rebuildsBefore = rebuilds()
-    val resumed = new CrawlEngine(TestSpark.spark, cfg, new SyntheticFetcher(webCfg), web.robots)
-    resumed.crawlAll()
-    assert(resumed.fetchlog.read().get.count() == before, "resume refetched")
-    // a dedup pass reads the URL index whatever the drain derived
-    val probe = spark.range(16)
-      .select(concat(lit("http://fresh.test/"), col("id").cast("string")).as("url"))
-      .withColumn("url_hash", xxhash64(col("url")))
-    val (out, cleanup) = resumed.dedupFrontier(probe)
-    assert(out.count() == 16, "fresh keys dropped by the resumed dedup")
-    cleanup()
-    assert(rebuilds() == rebuildsBefore, "resume rebuilt an index it should have trusted")
-    assert(resumed.seenSet() == engine.seenSet(), "flipped-root resume diverged")
-  }
-
   test("the URL index is table-resident from first use; covers-less index snapshots are never trusted") {
     val root = Files.createTempDirectory("crawl-idxbase").toString
     val e1 = newEngine(root, scanProbeMinSeen = 0L)
@@ -276,9 +139,11 @@ class CrawlEngineSpec extends AnyFunSuite {
     // metrics, but no covers marker in the manifest
     val head = e1.fetchlog.latestDataSnapshot.get
     val planted = e1.bloomidx.read().get.select("bucket", "bloom")
-    e1.bloomidx.commit(planted.coalesce(1), Map("covers_fetchlog_snapshot" -> head.toDouble,
-      "index_buckets" -> e1.urlIndexGeometry.indexBuckets.toDouble,
-      "expected_per_bucket" -> e1.urlIndexGeometry.capacityPerBucket.toDouble))
+    val geometry = e1.bloomidx.log.last.metrics
+      .filter { case (k, _) => k == "index_buckets" || k == "expected_per_bucket" }
+    assert(geometry.size == 2, s"bloomidx v$first stores no geometry")
+    e1.bloomidx.commit(planted.coalesce(1),
+      geometry + ("covers_fetchlog_snapshot" -> head.toDouble))
     assert(e1.bloomidx.log.lastOption.flatMap(_.covers).isEmpty)
     assert(graft.tools.CrawlManager.status(root).contains(
       "Dedup plan: exact anti-join (no URL index)"))
@@ -292,37 +157,6 @@ class CrawlEngineSpec extends AnyFunSuite {
     rebuilt.foreach(n =>
       assert(e2.bloomidx.manifest(n).kind == "base" && e2.bloomidx.manifest(n).covers.nonEmpty))
     assert(e2.seenSet() == oracle.seenSet, "covers-less index resume diverged")
-  }
-
-  test("bin-pack merges during the crawl: state exact, sliced covers survive, resume clean") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val root = Files.createTempDirectory("crawl-binpack").toString
-    // compactEvery = 2 → several merge passes over a short crawl, in the
-    // sliced regime (covers markers must survive merge commits because
-    // they compare against latestDataSnapshot, not latestSnapshot)
-    def cfg = CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-      bloomBuckets = 8, maxBroadcastBytes = 400L * 1024, compactEvery = 2,
-      scanProbeMinSeen = 0L)
-    val e = new CrawlEngine(TestSpark.spark, cfg, new SyntheticFetcher(webCfg), web.robots)
-    e.seed(web.seeds)
-    e.crawlAll()
-    assert(e.urlIndexSlices == 2)
-    assert(e.fetchlog.snapshots.exists(id => e.fetchlog.manifest(id).kind == "merge"),
-      "no merge commit ever happened — cadence broken")
-    assert(e.seenSet() == engine.seenSet(), "bin-packing diverged the seen set")
-    val imgs = e.imageTable().get.select("image_id", "phash")
-      .as[(String, Long)].collect().toMap
-    val ref = engine.imageTable().get.select("image_id", "phash")
-      .as[(String, Long)].collect().toMap
-    assert(imgs == ref, "bin-packing diverged the payload table")
-    // fresh engine on the merged root: drains without refetching — the
-    // index covers markers must still match the (data) head
-    val before = e.fetchlog.read().get.count()
-    val e2 = new CrawlEngine(TestSpark.spark, cfg, new SyntheticFetcher(webCfg), web.robots)
-    e2.crawlAll()
-    assert(e2.fetchlog.read().get.count() == before, "merged-root resume refetched")
-    assert(e2.seenSet() == engine.seenSet())
   }
 
   test("stale bloom index (crash between fetchlog and bloomidx commits) forces rebuild, state still exact") {
@@ -379,9 +213,7 @@ class CrawlEngineSpec extends AnyFunSuite {
       failPct = 2, imagesPerPage = 1, linksPerPage = 2)
     val deepWeb = new SyntheticWeb(deepCfg)
     val deepBudget = 4000
-    val o = new OracleCrawler(deepWeb, deepBudget, maxRetries)
-    o.seed(deepWeb.seeds)
-    o.crawlAll()
+    val o = runOracle(deepWeb, deepBudget)
     val root = Files.createTempDirectory("crawl-deep").toString
     val e = new CrawlEngine(TestSpark.spark,
       CrawlConfig(root, Politeness(perHostBudget = deepBudget), maxRetries,
@@ -400,12 +232,7 @@ class CrawlEngineSpec extends AnyFunSuite {
       s"seq $maxSeq never exceeded long range — the widening is untested")
 
     assert(e.seenSet() == o.seenSet, "deep crawl seen-set diverged from oracle")
-    val engineRuns = e.fetchlog.read().get
-      .select(col("run"), col("url"), col("seq").cast("string"))
-      .as[(Long, String, String)].collect().groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (_, rows) => rows.map(r => (r._2, BigInt(r._3))).sortBy(_._2).toSeq }
-    assert(engineRuns.size == o.runOrders.size)
-    engineRuns.zip(o.runOrders).foreach { case (got, exp) => assert(got == exp) }
+    CrawlChecks.assertWindowOrders(CrawlChecks.windowRows(e.fetchlog.read().get), o)
   }
 
   test("geometry resize: crawling past the index capacity rebuilds bigger blocks, fpp stays at target, state exact (VERDICT r03 #1)") {
@@ -416,34 +243,27 @@ class CrawlEngineSpec extends AnyFunSuite {
     // first runs of a ~1400-attempt crawl → several doubling rebuilds
     val floor = 64L
     val buckets = 4
-    val wideCfg = WebConfig(nHosts = 2, pagesPerHost = 700, hotFactor = 1,
-      failPct = 0, imagesPerPage = 1, linksPerPage = 6)
-    val wideWeb = new SyntheticWeb(wideCfg)
-    val wideBudget = 400
-    val o = new OracleCrawler(wideWeb, wideBudget, maxRetries)
-    o.seed(wideWeb.seeds)
-    o.crawlAll()
     val root = Files.createTempDirectory("crawl-resize").toString
     // windowsPerRun = 1 pins the per-run resize SCHEDULE the assertions
     // below are calibrated on: resize fires at the next run's geometry
     // check, so end-of-crawl capacity covers the history within ONE
     // window's intake. Batched windows widen that (documented) lag to
     // one batch — the catch-up contract under batching has its own test.
-    val e = new CrawlEngine(TestSpark.spark,
+    val e = wideEngine(
       CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
         bloomBuckets = buckets, scanProbeMinSeen = 0L,
-        bloomCapacityFloor = floor, windowsPerRun = 1),
-      new SyntheticFetcher(wideCfg), wideWeb.robots)
+        bloomCapacityFloor = floor, windowsPerRun = 1))
     e.seed(wideWeb.seeds)
     e.crawlAll()
 
-    assert(e.seenSet() == o.seenSet, "resize diverged the seen set")
+    assert(e.seenSet() == wideOracle.seenSet, "resize diverged the seen set")
     val attempts = e.fetchlog.read().get.count()
     assert(attempts > buckets * floor * 2,
       s"crawl too small ($attempts attempts) to cross the resize point — widen the web")
     // the standing geometry grew past the floor and covers the history
-    assert(e.urlIndexGeometry.totalCapacity >= attempts,
-      s"geometry ${e.urlIndexGeometry} never resized past $attempts attempts")
+    val geometry = CrawlChecks.storedGeometry(e.bloomidx).get
+    assert(geometry.totalCapacity >= attempts,
+      s"geometry $geometry never resized past $attempts attempts")
     val lastIdx = e.bloomidx.latestSnapshot.get
     val storedCap = e.bloomidx.manifest(lastIdx).metrics.get("expected_per_bucket").get.toLong
     assert(storedCap > floor, s"persisted capacity $storedCap never grew past the floor")
@@ -471,16 +291,21 @@ class CrawlEngineSpec extends AnyFunSuite {
       f"observed fpp $fppObserved%.3f — blocks saturated despite $attempts attempts " +
         f"(capacity $storedCap×$idxBuckets)")
 
-    // a fresh engine resumes with the persisted geometry and drains clean
-    val e2 = new CrawlEngine(TestSpark.spark,
+    // a fresh engine drains clean and probes the persisted blocks: their
+    // capacity covers the rows, so its dedup commits no rebuild
+    val e2 = wideEngine(
       CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
         bloomBuckets = buckets, scanProbeMinSeen = 0L,
-        bloomCapacityFloor = floor),
-      new SyntheticFetcher(wideCfg), wideWeb.robots)
-    assert(e2.urlIndexGeometry.capacityPerBucket == storedCap,
-      "resume did not read the persisted geometry back")
+        bloomCapacityFloor = floor))
     e2.crawlAll()
-    assert(e2.seenSet() == o.seenSet, "post-resize resume diverged")
+    val (out, cleanup) = e2.dedupFrontier(CrawlChecks.freshUrls(spark, 16))
+    assert(out.count() == 16, "fresh keys dropped by the resumed dedup")
+    cleanup()
+    val rebuilt = e2.bloomidx.log.filter(m =>
+      m.id > lastIdx && m.metrics.get("rebuild").contains(1.0)).map(_.id)
+    assert(rebuilt.isEmpty, s"resume rebuilt the index (v${rebuilt.mkString(", v")}) " +
+      s"though $geometry holds ${e2.fetchlog.totalRows} rows")
+    assert(e2.seenSet() == wideOracle.seenSet, "post-resize resume diverged")
   }
 
   test("geometry resize under BATCHED windows: lag bounded by one batch, next dedup catches up") {
@@ -492,55 +317,41 @@ class CrawlEngineSpec extends AnyFunSuite {
     // next dedup pass's geometry check must resize to cover everything
     val floor = 64L
     val buckets = 4
-    val wideCfg = WebConfig(nHosts = 2, pagesPerHost = 700, hotFactor = 1,
-      failPct = 0, imagesPerPage = 1, linksPerPage = 6)
-    val wideWeb = new SyntheticWeb(wideCfg)
-    val wideBudget = 400
     val root = Files.createTempDirectory("crawl-resize-batched").toString
-    val e = new CrawlEngine(TestSpark.spark,
+    val e = wideEngine(
       CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
         bloomBuckets = buckets, scanProbeMinSeen = 0L,
-        bloomCapacityFloor = floor, windowsPerRun = 3),
-      new SyntheticFetcher(wideCfg), wideWeb.robots)
+        bloomCapacityFloor = floor, windowsPerRun = 3))
     e.seed(wideWeb.seeds)
     e.crawlAll()
     val attempts = e.fetchlog.read().get.count()
     assert(attempts > buckets * floor * 2, s"crawl too small ($attempts)")
     // lag bound: one batch = windowsPerRun × (hosts × budget) schedulable
     val maxBatch = 3L * 2 * wideBudget
-    assert(e.urlIndexGeometry.totalCapacity + maxBatch >= attempts,
-      s"geometry ${e.urlIndexGeometry} lags $attempts attempts by more than one batch")
+    val lagging = CrawlChecks.storedGeometry(e.bloomidx).get
+    assert(lagging.totalCapacity + maxBatch >= attempts,
+      s"geometry $lagging lags $attempts attempts by more than one batch")
     // catch-up: the next dedup pass re-derives geometry from the
     // post-crawl estimate and rebuilds — capacity then covers history
-    val probe = spark.range(64)
-      .select(concat(lit("http://fresh.test/"), col("id").cast("string")).as("url"))
-      .withColumn("url_hash", xxhash64(col("url")))
-    val (out, cleanup) = e.dedupFrontier(probe)
+    val (out, cleanup) = e.dedupFrontier(CrawlChecks.freshUrls(spark, 64))
     assert(out.count() == 64, "fresh keys dropped by the catch-up dedup")
     cleanup()
-    assert(e.urlIndexGeometry.totalCapacity >= attempts,
-      s"post-crawl dedup left geometry ${e.urlIndexGeometry} below $attempts attempts")
+    val caughtUp = CrawlChecks.storedGeometry(e.bloomidx).get
+    assert(caughtUp.totalCapacity >= attempts,
+      s"post-crawl dedup left geometry $caughtUp below $attempts attempts")
   }
 
   test("geometry resize in the SLICED regime: distributed rebuild + delta-fold compaction, state exact") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val wideCfg = WebConfig(nHosts = 2, pagesPerHost = 700, hotFactor = 1,
-      failPct = 0, imagesPerPage = 1, linksPerPage = 6)
-    val wideWeb = new SyntheticWeb(wideCfg)
-    val wideBudget = 400
-    val o = new OracleCrawler(wideWeb, wideBudget, maxRetries)
-    o.seed(wideWeb.seeds)
-    o.crawlAll()
     val root = Files.createTempDirectory("crawl-resize-sliced").toString
-    val e = new CrawlEngine(TestSpark.spark,
+    val e = wideEngine(
       CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
         bloomBuckets = 4, compactEvery = 2,
-        scanProbeMinSeen = 0L, bloomCapacityFloor = 64L),
-      new SyntheticFetcher(wideCfg), wideWeb.robots)
+        scanProbeMinSeen = 0L, bloomCapacityFloor = 64L))
     e.seed(wideWeb.seeds)
     e.crawlAll()
-    assert(e.seenSet() == o.seenSet, "sliced resize diverged the seen set")
+    assert(e.seenSet() == wideOracle.seenSet, "sliced resize diverged the seen set")
     val manifests = e.bloomidx.snapshots.map(n =>
       (e.bloomidx.manifest(n).metrics.get("expected_per_bucket").map(_.toLong),
         e.bloomidx.manifest(n).kind))
@@ -566,7 +377,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     // image payload table exact under the sliced image index too
     val ids = e.imageTable().get.select("image_id").as[String].collect()
     assert(ids.length == ids.distinct.length)
-    assert(ids.toSet == o.imagesCaptions.keySet.toSet)
+    assert(ids.toSet == wideOracle.imagesCaptions.keySet.toSet)
   }
 
   test("image-id index in the SLICED regime: delta-fold compaction at the maintenance cadence, no appends, payloads exact") {
@@ -576,19 +387,11 @@ class CrawlEngineSpec extends AnyFunSuite {
     // holds its ~1400 ids: no resize pre-empts the fold, so every
     // maintaining run with new ids since the base's covers marker folds
     // them in
-    val wideCfg = WebConfig(nHosts = 2, pagesPerHost = 700, hotFactor = 1,
-      failPct = 0, imagesPerPage = 1, linksPerPage = 6)
-    val wideWeb = new SyntheticWeb(wideCfg)
-    val wideBudget = 400
-    val o = new OracleCrawler(wideWeb, wideBudget, maxRetries)
-    o.seed(wideWeb.seeds)
-    o.crawlAll()
     val root = Files.createTempDirectory("crawl-imgfold").toString
-    val e = new CrawlEngine(TestSpark.spark,
+    val e = wideEngine(
       CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
         bloomBuckets = 4, compactEvery = 2,
-        scanProbeMinSeen = 0L, bloomCapacityFloor = 512L),
-      new SyntheticFetcher(wideCfg), wideWeb.robots)
+        scanProbeMinSeen = 0L, bloomCapacityFloor = 512L))
     e.seed(wideWeb.seeds)
     e.crawlAll()
     val kinds = e.imgidx.snapshots.map(n =>
@@ -612,77 +415,36 @@ class CrawlEngineSpec extends AnyFunSuite {
     val imgs = e.imageTable().get.select("image_id", "caption")
       .as[(String, String)].collect()
     assert(imgs.length == imgs.map(_._1).distinct.length, "image fold duplicated rows")
-    assert(imgs.toMap == o.imagesCaptions.toMap, "image fold diverged the payload table")
+    assert(imgs.toMap == wideOracle.imagesCaptions.toMap, "image fold diverged the payload table")
   }
 
-  test("maintenance rewrites land together, on the run-count cadence") {
+  test("a history exactly at a capacity step rebuilds no index in run 2") {
     val spark = TestSpark.spark
-    import spark.implicits._
-    val wideCfg = WebConfig(nHosts = 2, pagesPerHost = 700, hotFactor = 1,
-      failPct = 0, imagesPerPage = 1, linksPerPage = 6)
-    val wideWeb = new SyntheticWeb(wideCfg)
-    val wideBudget = 150
-    val o = new OracleCrawler(wideWeb, wideBudget, maxRetries)
-    o.seed(wideWeb.seeds)
-    o.crawlAll()
-    val root = Files.createTempDirectory("crawl-cadence").toString
-    val e = new CrawlEngine(TestSpark.spark,
-      CrawlConfig(root, Politeness(perHostBudget = wideBudget), maxRetries,
-        bloomBuckets = 4, compactEvery = 3, scanProbeMinSeen = 0L, windowsPerRun = 1),
-      new SyntheticFetcher(wideCfg), wideWeb.robots)
-    e.seed(wideWeb.seeds)
-    e.crawlAll()
-    // the runs at which the fetchlog's data-commit count is a multiple of 3
-    val due = e.fetchlog.dataSnapshots.zipWithIndex
-      .collect { case (r, i) if (i + 1) % 3 == 0 => r }.toSet
-    // the `run` metric of every commit `pick` selects; each must carry one
-    def runs(t: SnapshotTable, pick: Long => Boolean): Set[Long] =
-      t.snapshots.filter(pick).map { n =>
-        t.manifest(n).metrics.get("run")
-          .getOrElse(fail(s"maintenance commit v$n carries no run")).toLong
-      }.toSet
-    def compactions(t: SnapshotTable) =
-      runs(t, n => t.manifest(n).metrics.get("compaction").contains(1.0))
-    val pendingRuns = compactions(e.pending)
-    val foldRuns = compactions(e.bloomidx) ++ compactions(e.imgidx)
-    val mergeRuns = Seq(e.fetchlog, e.images, e.frontier)
-      .flatMap(t => runs(t, t.manifest(_).kind == "merge")).toSet
-    assert(due.size >= 2, s"too short a crawl to see the cadence: ${e.fetchlog.dataSnapshots}")
-    assert(foldRuns.nonEmpty && mergeRuns.nonEmpty,
-      s"no fold ($foldRuns) or no merge ($mergeRuns) to check the cadence on")
-    // one set of runs: every maintaining run compacts the pending table,
-    // and no fold or merge lands at any other run
-    assert(pendingRuns == due, s"pending compactions at $pendingRuns, due at $due")
-    assert(foldRuns.subsetOf(due) && mergeRuns.subsetOf(due),
-      s"folds at $foldRuns, merges at $mergeRuns, due at $due")
-    assert(e.seenSet() == o.seenSet, "the maintenance cadence diverged the seen set")
-    val imgs = e.imageTable().get.select("image_id", "caption")
-      .as[(String, String)].collect()
-    assert(imgs.length == imgs.map(_._1).distinct.length)
-    assert(imgs.toMap == o.imagesCaptions.toMap, "the maintenance cadence diverged payloads")
-  }
-
-  test("image dedup entering the scan-probe regime at a commit stays exact") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    // scanProbeMinSeen = 1: the first payload commit moves the image-id
-    // set from the plain anti-join into the Bloom regime with no index
-    // yet. The next dedup must build its index from the committed table —
-    // an index missing those ids would call them definitely-new, and ids
-    // reused across pages would be stored twice. The URL set crosses the
-    // same way at the first fetchlog commit.
-    val root = Files.createTempDirectory("crawl-imgcross").toString
-    val e = new CrawlEngine(TestSpark.spark,
-      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        bloomBuckets = 8, scanProbeMinSeen = 1L),
+    // 4 buckets × 64 keys: the floor geometry holds exactly the history
+    val (buckets, floor) = (4, 64L)
+    val root = Files.createTempDirectory("crawl-capstep").toString
+    val e = new CrawlEngine(spark,
+      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries, bloomBuckets = buckets,
+        scanProbeMinSeen = 0L, bloomCapacityFloor = floor, windowsPerRun = 1),
       new SyntheticFetcher(webCfg), web.robots)
+    // buckets × floor fetched attempts on a host the web never links to
+    e.fetchlog.commit(spark.range(buckets * floor).select(
+        concat(lit("http://history.test/u/"), col("id").cast("string")).as("url"),
+        col("id").cast("decimal(38,0)").as("seq"))
+      .select(col("url"), xxhash64(col("url")).as("url_hash"), lit("history.test").as("host"),
+        col("seq"), lit(0).as("depth"), lit(1).as("attempt"), lit(200).as("status"),
+        lit(null).cast("string").as("error"), lit(0L).as("run")), Map.empty)
     e.seed(web.seeds)
-    e.crawlAll()
-    val ids = e.imageTable().get.select("image_id").as[String].collect()
-    val dups = ids.length - ids.distinct.length
-    assert(dups == 0, s"regime crossover stored $dups image rows twice")
-    assert(ids.toSet == oracle.imagesCaptions.keySet.toSet)
-    assert(e.seenSet() == oracle.seenSet, "URL regime crossover diverged the seen set")
+    def rebuilds = e.bloomidx.log.filter(_.metrics.get("rebuild").contains(1.0)).map(_.id)
+    // run 1's pending rebuild builds the index over the history
+    assert(e.runOnce().isDefined)
+    assert(rebuilds.size == 1, s"run 1 built the URL index ${rebuilds.size} times")
+    val afterRun1 = e.bloomidx.latestSnapshot.get
+    // run 2 adds run 1's attempts to the history: the index must still hold them
+    assert(e.runOnce().isDefined)
+    val run2 = rebuilds.filter(_ > afterRun1)
+    assert(run2.isEmpty, s"run 2 rebuilt the URL index (v${run2.mkString(", v")}): " +
+      s"${CrawlChecks.storedGeometry(e.bloomidx)} for ${e.fetchlog.totalRows} rows")
   }
 
   test("pending rebuild over a history with retryable latest attempts stays exact") {
@@ -828,8 +590,6 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   test("retrying runOnce on the same engine after a failed commit keeps window ids 1..K") {
-    val spark = TestSpark.spark
-    import spark.implicits._
     val root = Files.createTempDirectory("crawl-retry").toString
     val e = newEngine(root)
     e.seed(web.seeds)
@@ -840,153 +600,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     intercept[Exception](e.runOnce())
     Files.delete(blocker)
     assert(e.crawlAll().nonEmpty)
-    val log = e.fetchlog.read().get
-    val windowIds = log.select("run").distinct().as[Long].collect().sorted
-    assert(windowIds.toSeq == (1L to oracle.runOrders.size),
-      s"window ids after the retry: ${windowIds.take(6).toSeq}")
-    val engineWindows = log.select(col("run"), col("url"), col("seq").cast("string"))
-      .as[(Long, String, String)]
-      .collect().groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (_, rows) => rows.map(r => (r._2, BigInt(r._3))).sortBy(_._2).toSeq }
-    engineWindows.zip(oracle.runOrders).zipWithIndex.foreach { case ((got, exp), i) =>
-      assert(got == exp, s"window $i order mismatch after the retry")
-    }
+    CrawlChecks.assertWindowOrders(CrawlChecks.windowRows(e.fetchlog.read().get), oracle)
     assert(e.seenSet() == oracle.seenSet, "the retried engine diverged the seen set")
-  }
-
-  test("resume from last committed snapshot equals uninterrupted run") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val root = Files.createTempDirectory("crawl-resume").toString
-    val e1 = newEngine(root)
-    e1.seed(web.seeds)
-    // partial crawl: 2 runs, then "crash" (also leave an orphan data dir)
-    assert(e1.runOnce().isDefined && e1.runOnce().isDefined)
-    e1.fetchlog.writeOrphan(Seq(("ghost", 0L, "h", 0L, 0, 1, 200, "", 99L))
-      .toDF("url", "url_hash", "host", "seq", "depth", "attempt", "status", "error", "run"))
-    // fresh engine on the same root (restart) — delay controller state is
-    // recomputed, so re-derive it the same way the crashed run did
-    val e2 = newEngine(root)
-    e2.crawlAll()
-    assert(e2.seenSet() == engine.seenSet(), "resumed seen-set differs")
-    val imgsResumed = e2.imageTable().get.select("image_id", "phash")
-      .as[(String, Long)].collect().toMap
-    val imgsFull = engine.imageTable().get.select("image_id", "phash")
-      .as[(String, Long)].collect().toMap
-    assert(imgsResumed == imgsFull, "resumed payload table differs")
-  }
-
-  test("window-batched runs (windowsPerRun=3) ≡ oracle: seen set, per-WINDOW order, payloads, budget") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val root = Files.createTempDirectory("crawl-waves").toString
-    val e = new CrawlEngine(TestSpark.spark,
-      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        bloomBuckets = 8, windowsPerRun = 3),
-      new SyntheticFetcher(webCfg), web.robots)
-    e.seed(web.seeds)
-    val stats = e.crawlAll()
-    assert(stats.nonEmpty)
-    // batching amortized the per-run commit machinery: strictly fewer
-    // fetchlog commits than politeness windows executed
-    val log = e.fetchlog.read().get
-    val windowIds = log.select("run").distinct().as[Long].collect().sorted
-    assert(e.fetchlog.snapshots.size < windowIds.size,
-      "windowsPerRun=3 produced one commit per window — batching inert")
-    // the fetchlog `run` column carries the GLOBAL WINDOW id: the oracle's
-    // per-run canonical order must match 1:1, window for window
-    assert(windowIds.toSeq == (1L to windowIds.size), "window ids not contiguous")
-    val engineWindows = log.select(col("run"), col("url"), col("seq").cast("string"))
-      .as[(Long, String, String)]
-      .collect().groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (_, rows) => rows.map(r => (r._2, BigInt(r._3))).sortBy(_._2).toSeq }
-    assert(engineWindows.size == oracle.runOrders.size,
-      s"window count: engine=${engineWindows.size} oracle=${oracle.runOrders.size}")
-    engineWindows.zip(oracle.runOrders).zipWithIndex.foreach { case ((got, exp), i) =>
-      assert(got == exp, s"window $i order mismatch: got=${got.take(3)} exp=${exp.take(3)}")
-    }
-    // per-host politeness budget holds PER WINDOW, not per commit
-    val maxPerHostWindow = log.groupBy("run", "host").count()
-      .agg(org.apache.spark.sql.functions.max("count")).as[Long].collect().head
-    assert(maxPerHostWindow <= budget, s"window host budget exceeded: $maxPerHostWindow")
-    assert(e.seenSet() == oracle.seenSet, "window-batched seen set diverged")
-    val imgs = e.imageTable().get.select("image_id", "caption")
-      .as[(String, String)].collect().toMap
-    assert(imgs == oracle.imagesCaptions.toMap, "window-batched payloads diverged")
-  }
-
-  test("resume right after a compacting run stays exact") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val root = Files.createTempDirectory("crawl-compact-resume").toString
-    def mk() = new CrawlEngine(TestSpark.spark,
-      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        bloomBuckets = 8, compactEvery = 2, windowsPerRun = 3),
-      new SyntheticFetcher(webCfg), web.robots)
-    val e1 = mk()
-    e1.seed(web.seeds)
-    assert(e1.runOnce().isDefined && e1.runOnce().isDefined)
-    val head = e1.pending.latestSnapshot.get
-    assert(e1.pending.manifest(head).metrics.get("compaction").contains(1.0),
-      s"pending v$head after run 2 is not a compaction base")
-    // a fresh engine starts from that base alone and still has work
-    val e2 = mk()
-    assert(e2.crawlAll().nonEmpty, "nothing was pending after the compacting run")
-    assert(e2.seenSet() == oracle.seenSet, "resume after compaction diverged the seen set")
-    val engineWindows = e2.fetchlog.read().get
-      .select(col("run"), col("url"), col("seq").cast("string"))
-      .as[(Long, String, String)]
-      .collect().groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (_, rows) => rows.map(r => (r._2, BigInt(r._3))).sortBy(_._2).toSeq }
-    assert(engineWindows.size == oracle.runOrders.size)
-    engineWindows.zip(oracle.runOrders).zipWithIndex.foreach { case ((got, exp), i) =>
-      assert(got == exp, s"window $i order mismatch after the compaction resume")
-    }
-    val imgs = e2.imageTable().get.select("image_id", "caption")
-      .as[(String, String)].collect()
-    assert(imgs.length == imgs.map(_._1).distinct.length)
-    assert(imgs.toMap == oracle.imagesCaptions.toMap, "resume after compaction diverged payloads")
-    // the seed commit and every pending base are small: one file each
-    def parquetFiles(table: String, id: Long): Int = {
-      val st = Files.list(java.nio.file.Paths.get(root, table, "data", f"commit-$id%06d"))
-      try st.iterator().asScala.count(_.toString.endsWith(".parquet")) finally st.close()
-    }
-    assert(parquetFiles("frontier", e2.frontier.snapshots.head) == 1, "seed commit files")
-    e2.pending.snapshots.foreach(n =>
-      assert(parquetFiles("pending", n) == 1, s"pending base v$n files"))
-  }
-
-  test("window-batched resume (mixed batch sizes across restarts) stays exact, window ids monotone") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val root = Files.createTempDirectory("crawl-waves-resume").toString
-    def mk(k: Int) = new CrawlEngine(TestSpark.spark,
-      CrawlConfig(root, Politeness(perHostBudget = budget), maxRetries,
-        bloomBuckets = 8, windowsPerRun = k),
-      new SyntheticFetcher(webCfg), web.robots)
-    val e1 = mk(2)
-    e1.seed(web.seeds)
-    assert(e1.runOnce().isDefined) // windows 1-2 in one commit
-    // restart with a DIFFERENT batch size: each run's window ids start at
-    // the windows_total manifest metric, so ids stay contiguous + monotone
-    val e2 = mk(3)
-    e2.crawlAll()
-    val log = e2.fetchlog.read().get
-    val windowIds = log.select("run").distinct().as[Long].collect().sorted
-    assert(windowIds.toSeq == (1L to windowIds.size),
-      s"resumed window ids not contiguous: ${windowIds.take(6).toSeq}")
-    assert(windowIds.size.toLong == oracle.runOrders.size)
-    val engineWindows = log.select(col("run"), col("url"), col("seq").cast("string"))
-      .as[(Long, String, String)]
-      .collect().groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (_, rows) => rows.map(r => (r._2, BigInt(r._3))).sortBy(_._2).toSeq }
-    engineWindows.zip(oracle.runOrders).zipWithIndex.foreach { case ((got, exp), i) =>
-      assert(got == exp, s"resumed window $i order mismatch")
-    }
-    assert(e2.seenSet() == oracle.seenSet, "mixed-batch resume seen set diverged")
-    val imgs = e2.imageTable().get.select("image_id").as[String].collect()
-    assert(imgs.length == imgs.distinct.length, "batched resume duplicated image rows")
-    assert(imgs.toSet == oracle.imagesCaptions.keySet.toSet)
   }
 }

@@ -20,13 +20,18 @@
 # head won (by the metric's `better` in BENCHMARK.json), the median change,
 # whether the head median is worse than the base median by more than the
 # metric's `bound`, and "unresolved" when the base IQR is wider than the
-# bound. Every invocation runs for BENCHMARK.json's run_seconds. Work
+# bound. An invocation's `attempted` is the number of crawls it ran in its
+# run_seconds; the summary prints how many invocations per side ran each
+# crawl count and, per metric, each side's median within each count, and
+# marks a metric "bimodal" when the two sides ran different mixes of
+# counts (a warm second crawl moves urls_per_s and heap_live_mb on its
+# own). Every invocation runs for BENCHMARK.json's run_seconds. Work
 # directory: $AB_DIR (default ${TMPDIR:-/tmp}/graft-ab), reused, so
 # unchanged builds and fixtures are not redone.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
-  sed -n '2,25p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,30p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 rev=$1; workload=$2; shift 2
@@ -81,10 +86,17 @@ done
 
 python3 - "$results" "$rev" "$workload" "$repo/BENCHMARK.json" <<'PY'
 import json, statistics, sys
+from collections import Counter
 rows = [json.loads(l) for l in open(sys.argv[1])]
 bench = json.load(open(sys.argv[4]))
 spec = {m["name"]: m for m in bench["end_to_end"] + bench.get("per_layer", [])}
 print(f"{sys.argv[3]}: base={sys.argv[2]} vs head=working tree, {len(rows) // 2} pair(s)")
+# crawl-count modes: an invocation's `attempted` is how many crawls it ran
+modes = {s: Counter(r["attempted"] for r in rows if r["side"] == s) for s in ("base", "head")}
+for s in ("base", "head"):
+    print(f"  {s} crawls per invocation: " +
+          ", ".join(f"{n} ran {m}" for m, n in sorted(modes[s].items())))
+bimodal = modes["base"] != modes["head"]
 
 def quartiles(xs):
     if len(xs) < 2:
@@ -114,7 +126,16 @@ for k in sorted(rows[0]["metrics"]):
             line += (f"; {'WORSE than' if worse else 'within'} bound {bound * 100:.0f}%")
             if iqr > bound:
                 line += "; unresolved (base IQR wider than bound)"
+    if bimodal:
+        line += "; bimodal (the sides ran different crawl-count mixes)"
     print(line)
+    per_mode = []
+    for m in sorted(set(modes["base"]) | set(modes["head"])):
+        meds = [[r["metrics"][k] for r in rows if r["side"] == s and r["attempted"] == m]
+                for s in ("base", "head")]
+        per_mode.append(f"{m} crawl(s) base " + " head ".join(
+            f"{statistics.median(xs):.2f} (n={len(xs)})" if xs else "- (n=0)" for xs in meds))
+    print("    median per crawl count: " + "; ".join(per_mode))
 for s in ("base", "head"):
     print(f"  {s} failed/attempted: {sum(r['failed'] for r in rows if r['side'] == s)}"
           f"/{sum(r['attempted'] for r in rows if r['side'] == s)}")
