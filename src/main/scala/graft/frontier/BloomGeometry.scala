@@ -32,6 +32,9 @@ final case class BloomGeometry(indexBuckets: Int, capacityPerBucket: Long) {
   def blockBytes: Long = BloomGeometry.blockBytesFor(capacityPerBucket)
   /** Estimated full-index size — the broadcast/slice planning input. */
   def totalBytes: Long = indexBuckets.toLong * blockBytes
+  /** The index-manifest metrics that persist this geometry. */
+  def metrics: Map[String, Double] =
+    Map("index_buckets" -> indexBuckets.toDouble, "expected_per_bucket" -> capacityPerBucket.toDouble)
 }
 
 object BloomGeometry {
@@ -39,6 +42,13 @@ object BloomGeometry {
     * resumed old root reads back with the matching default. */
   val MinCapacity: Long = 1L << 16
   val TargetFpp: Double = 0.01
+
+  /** The geometry an index manifest's `metrics` persist; None when either
+    * metric is missing, so the index is rebuilt, never read at a guessed
+    * geometry. */
+  def stored(metrics: Map[String, Double]): Option[BloomGeometry] =
+    for (b <- metrics.get("index_buckets"); c <- metrics.get("expected_per_bucket"))
+      yield BloomGeometry(b.toInt, c.toLong)
 
   /** spark-sketch BloomFilter at fpp 0.01: optimal bits = -n·ln(p)/ln²2
     * ≈ 9.5851 n, rounded up to a whole word; +12 B stream header. The

@@ -52,11 +52,6 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
   // actually finds.
   private val maxBlockBytes: Long =
     math.min(128L * 1024 * 1024, math.max(1L, cfg.maxBroadcastBytes / 4))
-  // None when an index commit lacks either geometry metric: the index is
-  // then rebuilt (usableBase), never read at a guessed geometry
-  private def geomOf(m: SnapshotTable.Manifest): Option[BloomGeometry] =
-    for (b <- m.metrics.get("index_buckets"); c <- m.metrics.get("expected_per_bucket"))
-      yield BloomGeometry(b.toInt, c.toLong)
 
   /** STANDING per-slice block broadcasts for the table-resident index
     * (VERDICT r04 follow-up to r03 #1): without them, every micro-run
@@ -101,8 +96,7 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
                           covers: Long): Unit = {
     val slices = BloomGeometry.slicesFitting(g, cfg.maxBroadcastBytes)
     idx.commitBase(blocks.repartitionById(slices, pmod(col("bucket"), lit(slices))),
-      metrics ++ Map("index_buckets" -> g.indexBuckets.toDouble,
-        "expected_per_bucket" -> g.capacityPerBucket.toDouble), covers = Some(covers))
+      metrics ++ g.metrics, covers = Some(covers))
   }
 
   // no distinct: every consumer is an anti-join probe (set semantics on
@@ -140,7 +134,7 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
   private def usableBase(head: Long): Option[SnapshotTable.Manifest] = {
     val rows = table.totalRows
     idx.log.lastOption.filter(m => m.kind == "base" && m.covers.exists(_ <= head) &&
-      geomOf(m).exists(_.totalCapacity >= rows))
+      BloomGeometry.stored(m.metrics).exists(_.totalCapacity >= rows))
   }
 
   /** Scan-probe over the table-resident index: each hash-range slice's
@@ -155,7 +149,7 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     * between geometry-sized base blocks and batch-sized deltas). */
   private def slicedDedup(df: DataFrame, seen: DataFrame): (DataFrame, () => Unit) = {
     val base = usableIndex(seen)
-    val g = geomOf(base).get
+    val g = BloomGeometry.stored(base.metrics).get
     // slices ADAPT to the index's estimated size: 1 while the whole index
     // fits maxBroadcastBytes, else the smallest divisor of the bucket
     // count whose per-slice block share fits, bottoming out at one bucket
@@ -213,7 +207,7 @@ final class SeenSet(spark: SparkSession, cfg: CrawlConfig, table: SnapshotTable,
     * usable base exists — the next dedup's rebuild subsumes it. */
   def fold(runId: Long): Unit = {
     val head = table.latestDataSnapshot.getOrElse(0L)
-    if (scanProbeRegime) for (base <- usableBase(head); g <- geomOf(base);
+    if (scanProbeRegime) for (base <- usableBase(head); g <- BloomGeometry.stored(base.metrics);
                               recent <- table.readBetween(base.covers.get, head))
       commitIndex(BloomDedup.foldHashes(idx.read().get.select("bucket", "bloom"),
           recent.select(hash.as("url_hash")), g.indexBuckets, g.capacityPerBucket),

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.frontier.BloomGeometry
 import graft.table.SnapshotTable
 
 import java.nio.file.{Files, Path, Paths}
@@ -61,9 +62,8 @@ object CrawlManager {
       .map(c => s"Bloom scan-probe (URL index covers fetchlog v$c)")
       .getOrElse("exact anti-join (no URL index)")
     sb ++= s"Dedup plan: $plan\n"
-    val geometry = for (m <- bloomHead; b <- m.metrics.get("index_buckets");
-                        c <- m.metrics.get("expected_per_bucket"))
-      yield f"${b.toLong} buckets x ${c.toLong} keys (capacity ${b.toLong * c.toLong}%,d)"
+    val geometry = bloomHead.flatMap(m => BloomGeometry.stored(m.metrics)).map(g =>
+      f"${g.indexBuckets} buckets x ${g.capacityPerBucket} keys (capacity ${g.totalCapacity}%,d)")
     sb ++= s"URL index geometry: ${geometry.getOrElse("none")}\n"
     Tables.foreach { t =>
       val head = logs(t).lastOption

@@ -41,7 +41,5 @@ object CrawlChecks extends Assertions {
 
   /** The geometry stored with an index table's latest commit. */
   def storedGeometry(idx: SnapshotTable): Option[BloomGeometry] =
-    idx.log.lastOption.flatMap(m =>
-      for (b <- m.metrics.get("index_buckets"); c <- m.metrics.get("expected_per_bucket"))
-        yield BloomGeometry(b.toInt, c.toLong))
+    idx.log.lastOption.flatMap(m => BloomGeometry.stored(m.metrics))
 }

@@ -139,11 +139,10 @@ class CrawlEngineSpec extends AnyFunSuite {
     // metrics, but no covers marker in the manifest
     val head = e1.fetchlog.latestDataSnapshot.get
     val planted = e1.bloomidx.read().get.select("bucket", "bloom")
-    val geometry = e1.bloomidx.log.last.metrics
-      .filter { case (k, _) => k == "index_buckets" || k == "expected_per_bucket" }
-    assert(geometry.size == 2, s"bloomidx v$first stores no geometry")
+    val geometry = CrawlChecks.storedGeometry(e1.bloomidx)
+      .getOrElse(fail(s"bloomidx v$first stores no geometry"))
     e1.bloomidx.commit(planted.coalesce(1),
-      geometry + ("covers_fetchlog_snapshot" -> head.toDouble))
+      geometry.metrics + ("covers_fetchlog_snapshot" -> head.toDouble))
     assert(e1.bloomidx.log.lastOption.flatMap(_.covers).isEmpty)
     assert(graft.tools.CrawlManager.status(root).contains(
       "Dedup plan: exact anti-join (no URL index)"))
@@ -265,13 +264,13 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(geometry.totalCapacity >= attempts,
       s"geometry $geometry never resized past $attempts attempts")
     val lastIdx = e.bloomidx.latestSnapshot.get
-    val storedCap = e.bloomidx.manifest(lastIdx).metrics.get("expected_per_bucket").get.toLong
+    val storedCap = geometry.capacityPerBucket
     assert(storedCap > floor, s"persisted capacity $storedCap never grew past the floor")
 
     // fpp evidence (the saturation this fixes was fpp→1): fresh keys
     // against the ENGINE-built blocks of the latest index base must read
     // "maybe seen" at ~the 1% build target, not ≈ 100%
-    val idxBuckets = e.bloomidx.manifest(lastIdx).metrics.get("index_buckets").get.toInt
+    val idxBuckets = geometry.indexBuckets
     // the latest base is the standing index, and the read anchors there
     val blocks = e.bloomidx.read().get
       .select("bucket", "bloom").collect()
