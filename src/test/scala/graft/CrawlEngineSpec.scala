@@ -1,5 +1,6 @@
 package graft
 
+import graft.CrawlInvarianceSpec.{Outcome, SpecWeb, example, isCompaction, urlSlices}
 import graft.crawl.{CrawlConfig, CrawlEngine}
 import graft.fetch.{Fetcher, SyntheticFetcher}
 import graft.frontier.Politeness
@@ -10,6 +11,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, concat, lit, row_number, xxhash64}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.util.Try
 
 /** End-to-end engine ⇄ oracle equality (FIXTURES.md §4, SURVEY.md §5):
   * same seed list + politeness budget ⇒ identical URL-seen set, identical
@@ -119,6 +121,88 @@ class CrawlEngineSpec extends AnyFunSuite {
     val maxAttempt = log.agg(org.apache.spark.sql.functions.max("attempt")).as[Int].collect().head
     assert(maxAttempt <= maxRetries)
     assert(maxAttempt >= 2, "no retry ever happened — failPct too low to exercise R6")
+  }
+
+  // ---- config invariance at listed examples ---------------------------
+  // Each crawl below is one CrawlInvarianceSpec example: the property's
+  // oracle checks (seen set, per-window order, payloads, politeness,
+  // index state, cadence, a drained-root resume) at one config off the
+  // defaults. The tests after them assert the regime each config pins,
+  // from the manifests. A failed crawl fails every test that shares it.
+  private lazy val oneBucketSalted = Try(example(SpecWeb.copy(maxBroadcastBytes = 1024L,
+    scanProbeMinSeen = 0L, compactEvery = 2, bloomBuckets = 8, hostSalts = 4, restartAfter = Some(2))))
+  private lazy val twoSlices = Try(example(SpecWeb.copy(maxBroadcastBytes = 400L * 1024,
+    scanProbeMinSeen = 0L, compactEvery = 2, bloomBuckets = 8, shufflePartitions = 7)))
+  private lazy val scanProbeMixedBatches = Try(example(SpecWeb.copy(windowsPerRun = 2,
+    scanProbeMinSeen = 1L, restartAfter = Some(1), restartWindows = 3)))
+  private lazy val compactingResume = Try(example(SpecWeb.copy(compactEvery = 2,
+    restartAfter = Some(2))))
+  private def indexesBuilt(o: Outcome): Boolean =
+    o.engine.bloomidx.log.nonEmpty && o.engine.imgidx.log.nonEmpty
+
+  test("host-salted fetch (hostSalts=4, hot-host skew split) produces identical state") {
+    assert(oneBucketSalted.get.c.hostSalts == 4)
+  }
+
+  test("engine state is invariant to shuffle-partition count (N vs 4N determinism proxy)") {
+    assert(twoSlices.get.c.shufflePartitions == 7)
+  }
+
+  test("below scanProbeMinSeen both seen sets hold no Bloom state: no index snapshots, state exact") {
+    val e = compactingResume.get.engine
+    assert(e.bloomidx.log.isEmpty && e.imgidx.log.isEmpty)
+  }
+
+  test("bloom and exact-only dedup paths produce identical state") {
+    // scan-probe from first use vs the default threshold's anti-join
+    assert(indexesBuilt(oneBucketSalted.get), "an index never built")
+    assert(!indexesBuilt(compactingResume.get), "an index built below the threshold")
+  }
+
+  test("sliced (beyond-broadcast) dedup regime produces identical state") {
+    // 8 × 65,536-key blocks (~78.5 KB each) need 2 slices of 400 KB
+    assert(urlSlices(twoSlices.get) == 2)
+  }
+
+  test("one bucket per slice (1 KB budget): URL and image indexes exact, resume clean") {
+    val o = oneBucketSalted.get
+    assert(urlSlices(o) == 8)
+    assert(indexesBuilt(o), "an index never built")
+    assert(!o.resumeRebuilt, "a fresh engine rebuilt the URL index")
+  }
+
+  test("bin-pack merges during the crawl: state exact, sliced covers survive, resume clean") {
+    for (o <- Seq(oneBucketSalted.get, twoSlices.get)) {
+      assert(urlSlices(o) >= 2)
+      assert(o.engine.fetchlog.log.exists(_.kind == "merge"), s"no fetchlog merge: ${o.c}")
+    }
+  }
+
+  test("image dedup entering the scan-probe regime at a commit stays exact") {
+    assert(indexesBuilt(scanProbeMixedBatches.get), "an index never built")
+  }
+
+  test("resume from last committed snapshot equals uninterrupted run") {
+    // restarted after run 2 over an unpublished fetchlog prepare
+    assert(oneBucketSalted.get.resumedRuns > 0, "nothing was left after run 2")
+  }
+
+  test("window-batched runs (windowsPerRun=3) ≡ oracle: seen set, per-WINDOW order, payloads, budget") {
+    val log = compactingResume.get.engine.fetchlog
+    assert(log.dataSnapshots.size < log.log.filter(_.kind == "append").map(_.metrics("windows")).sum,
+      "windowsPerRun = 3 produced one fetchlog commit per window")
+  }
+
+  test("resume right after a compacting run stays exact") {
+    val o = compactingResume.get
+    assert(o.pendingAtRestart.exists(isCompaction), s"pending head ${o.pendingAtRestart}")
+    assert(o.resumedRuns > 0, "nothing was pending after the compacting run")
+  }
+
+  test("window-batched resume (mixed batch sizes across restarts) stays exact, window ids monotone") {
+    val o = scanProbeMixedBatches.get
+    assert(o.engine.fetchlog.log.head.metrics.get("windows").contains(2.0))
+    assert(o.resumedRuns > 0, "nothing was left after run 1")
   }
 
   test("the URL index is table-resident from first use; covers-less index snapshots are never trusted") {

@@ -10,6 +10,7 @@ import graft.urlkit.UrlKit
 import graft.web.{SyntheticWeb, WebConfig}
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalacheck.{Gen, Prop, Shrink, Test}
+import org.scalatest.Assertions
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -21,16 +22,38 @@ import scala.jdk.CollectionConverters._
   * property over small webs, run through `Test.check` with a fixed seed
   * and case count.
   *
-  * The listed [[examples]] run first and count toward the cases. Each
-  * pins a regime (a sliced index, the maintenance cadence, a restart
+  * Listed examples run first and count toward the cases: the one here and
+  * the CrawlEngineSpec tests built on [[CrawlInvarianceSpec.example]].
+  * Each pins a regime (a sliced index, the maintenance cadence, a restart
   * right after a compaction, …) and asserts from the manifests that its
   * crawl reached it. A failing case shrinks by resetting one knob at a
   * time to its default, and the failure prints the shrunk case as a
-  * `Case(...)` expression: add it to [[examples]] to re-run it alone. */
+  * `Case(...)` expression: pass it to `example` to re-run it alone. */
 class CrawlInvarianceSpec extends AnyFunSuite {
   import CrawlInvarianceSpec._
 
-  private val isCompaction = (m: SnapshotTable.Manifest) => m.metrics.get("compaction").contains(1.0)
+  test("example: one window per run, maintenance every 3 runs, adaptive execution") {
+    val e = example(SpecWeb.copy(windowsPerRun = 1, compactEvery = 3, scanProbeMinSeen = 0L,
+      bloomBuckets = 4, adaptivePerRun = true)).engine
+    assert(e.fetchlog.dataSnapshots.size >= 6, "too short a crawl to see the cadence")
+    assert(Seq(e.bloomidx, e.imgidx).exists(_.log.exists(isCompaction)), "no index fold")
+    assert(Seq(e.fetchlog, e.images, e.frontier).exists(_.log.exists(_.kind == "merge")),
+      "no merge")
+  }
+
+  test(s"$DrawnCases drawn configs and restart points equal the oracle") {
+    check(gen, DrawnCases)(_ => _ => ())
+  }
+}
+
+object CrawlInvarianceSpec extends Assertions {
+  val MaxRetries = 3
+  val PropertySeed = 16L
+  /** With the examples, 16 cases. */
+  val DrawnCases = 11
+  private val Defaults = CrawlConfig("")
+
+  val isCompaction = (m: SnapshotTable.Manifest) => m.metrics.get("compaction").contains(1.0)
 
   /** Crawl `c` and check it against the oracle. */
   private def verify(c: Case): Outcome = {
@@ -144,13 +167,15 @@ class CrawlInvarianceSpec extends AnyFunSuite {
     Outcome(c, e, restart.flatMap(_._2), resumedRuns, rebuilt)
   }
 
-  private def urlSlices(o: Outcome): Int = BloomGeometry.slicesFitting(
+  /** The slices the URL index's stored geometry needs at the case's
+    * broadcast budget. */
+  def urlSlices(o: Outcome): Int = BloomGeometry.slicesFitting(
     CrawlChecks.storedGeometry(o.engine.bloomidx).getOrElse(fail("no URL index")),
     o.c.maxBroadcastBytes)
 
   /** `cases` cases of `gen` through `Test.check`; `extra` adds a case's
     * regime assertions. */
-  private def check(gen: Gen[Case], cases: Int)(extra: Case => Outcome => Unit): Unit = {
+  def check(gen: Gen[Case], cases: Int)(extra: Case => Outcome => Unit): Unit = {
     implicit val shrink: Shrink[Case] = Shrink.withLazyList(_.shrinks)
     val params = Test.Parameters.default.withMinSuccessfulTests(cases).withWorkers(1)
       .withInitialSeed(PropertySeed)
@@ -165,74 +190,17 @@ class CrawlInvarianceSpec extends AnyFunSuite {
     }
   }
 
-  /** The web CrawlEngineSpec crawls. */
-  private val specWeb = Case(webSeed = 42L, hosts = 6, hotFactor = 4, failPct = 5, budget = 8)
-
-  /** Example configs: (name, case, the regime its crawl must reach). */
-  private val examples: Seq[(String, Case, Outcome => Unit)] = Seq(
-    ("one bucket per slice, bin-packed, salted, resumed over an orphan",
-      specWeb.copy(maxBroadcastBytes = 1024L, scanProbeMinSeen = 0L, compactEvery = 2,
-        bloomBuckets = 8, hostSalts = 4, restartAfter = Some(2)),
-      o => {
-        assert(urlSlices(o) == 8)
-        assert(o.engine.bloomidx.log.nonEmpty && o.engine.imgidx.log.nonEmpty, "an index never built")
-        assert(o.engine.fetchlog.log.exists(_.kind == "merge"), "no fetchlog merge")
-        assert(o.resumedRuns > 0 && !o.resumeRebuilt)
-      }),
-    ("two slices, bin-packed, at 7 shuffle partitions",
-      specWeb.copy(maxBroadcastBytes = 400L * 1024, scanProbeMinSeen = 0L, compactEvery = 2,
-        bloomBuckets = 8, shufflePartitions = 7),
-      o => {
-        // 8 × 65,536-key blocks (~78.5 KB each) need 2 slices of 400 KB
-        assert(urlSlices(o) == 2)
-        assert(o.engine.fetchlog.log.exists(_.kind == "merge"), "no fetchlog merge")
-      }),
-    ("one window per run, maintenance every 3 runs, adaptive execution",
-      specWeb.copy(windowsPerRun = 1, compactEvery = 3, scanProbeMinSeen = 0L, bloomBuckets = 4,
-        adaptivePerRun = true),
-      o => {
-        val e = o.engine
-        assert(e.fetchlog.dataSnapshots.size >= 6, "too short a crawl to see the cadence")
-        assert(Seq(e.bloomidx, e.imgidx).exists(_.log.exists(isCompaction)), "no index fold")
-        assert(Seq(e.fetchlog, e.images, e.frontier).exists(_.log.exists(_.kind == "merge")),
-          "no merge")
-      }),
-    ("scan-probe from the first commit, 2 then 3 windows per run",
-      specWeb.copy(windowsPerRun = 2, scanProbeMinSeen = 1L, restartAfter = Some(1),
-        restartWindows = 3),
-      o => {
-        assert(o.engine.bloomidx.log.nonEmpty && o.engine.imgidx.log.nonEmpty, "an index never built")
-        assert(o.engine.fetchlog.log.head.metrics.get("windows").contains(2.0))
-        assert(o.resumedRuns > 0)
-      }),
-    ("3 windows per run, resumed after a compacting run, no index state",
-      specWeb.copy(compactEvery = 2, restartAfter = Some(2)),
-      o => {
-        val e = o.engine
-        assert(o.pendingAtRestart.exists(isCompaction), s"pending head ${o.pendingAtRestart}")
-        assert(o.resumedRuns > 0, "nothing was pending after the compacting run")
-        assert(e.fetchlog.dataSnapshots.size < e.fetchlog.log.filter(_.kind == "append")
-          .map(_.metrics("windows")).sum, "one fetchlog commit per window")
-        assert(e.bloomidx.log.isEmpty && e.imgidx.log.isEmpty)
-      }))
-
-  for ((name, ex, regime) <- examples)
-    test(s"example: $name") {
-      // mapped, so shrinking is not sieved to the constant itself
-      check(Gen.const(()).map(_ => ex), 1)(c => if (c == ex) regime else _ => ())
-    }
-
-  test(s"$DrawnCases drawn configs and restart points equal the oracle") {
-    check(gen, DrawnCases)(_ => _ => ())
+  /** `ex` through the property as a one-case check: the outcome of its
+    * crawl, or a failure naming the case it shrank to. */
+  def example(ex: Case): Outcome = {
+    var out = Option.empty[Outcome]
+    // mapped, so shrinking is not sieved to the constant itself
+    check(Gen.const(()).map(_ => ex), 1)(c => o => if (c == ex) out = Some(o))
+    out.getOrElse(fail(s"$ex was never crawled"))
   }
-}
 
-object CrawlInvarianceSpec {
-  val MaxRetries = 3
-  val PropertySeed = 16L
-  /** With the examples, 16 cases. */
-  val DrawnCases = 11
-  private val Defaults = CrawlConfig("")
+  /** The web CrawlEngineSpec crawls. */
+  val SpecWeb = Case(webSeed = 42L, hosts = 6, hotFactor = 4, failPct = 5, budget = 8)
 
   /** A crawled case: the engine that finished it, the pending head at the
     * restart, the runs after the restart, and whether a fresh engine on
